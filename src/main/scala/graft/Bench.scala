@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   /** Queries whose hot path runs a custom codegen'd Catalyst expression
@@ -73,31 +72,7 @@ object Bench {
     // later 1-min loadavg includes our own local[N] saturation)
     val loadEntry = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing for cached plans (see Sessions.local): without it
-      // every cached base pins 32 output partitions and each warm scan
-      // pays the per-task floor 32-64x on kilobyte frames
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle files on the fastest local scratch (tmpfs when present;
-      // see core.Scratch.sparkLocalDir) — transient by definition
-      .config("spark.local.dir", graft.core.Scratch.sparkLocalDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // state-store provider knob for the streaming queries (experiment:
-    // RocksDB vs the default HDFS-backed in-memory store). Unset = default.
-    sys.env.get("SPARK_GRAFT_STATESTORE").foreach {
-      case "rocksdb" => spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case other => System.err.println(s"unknown SPARK_GRAFT_STATESTORE: $other")
-    }
+    val spark = Sessions.local()
     // warm the session once (JIT, codegen cache, FS/footer caches) so the
     // first timed query isn't charged session startup
     // through the Tables loader, not a raw read: events.parquet is

@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory: UTC-pinned, AQE on, shuffle partitions sized for the
-  * local core count instead of the 200 default (the one local-mode knob
-  * that matters; on a real cluster this comes from the submitter).
+/** The one session builder: Bench, Verify, the cron mains, the test
+  * suites and the dev probes all call it, so every timed or verified run
+  * uses the same engine config. UTC-pinned, AQE on, shuffle partitions
+  * sized for the local core count instead of the 200 default (the one
+  * local-mode knob that matters; on a real cluster this comes from the
+  * submitter).
   */
 object Sessions {
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {

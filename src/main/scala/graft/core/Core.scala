@@ -151,72 +151,86 @@ object BucketCumsum {
   }
 }
 
-/** Generation-bounded cache registry. Query builders that `.cache()`
-  * intermediate frames register them here under a stable key; the NEXT
-  * invocation of the same builder (bench reps, repeated verify runs)
-  * unpersists the previous generation before caching its own. Bounds
-  * cached-block accumulation to one live generation per key without
-  * unpersisting a frame the returned (lazy) plan still needs.
-  */
-/** One scratch root per JVM for operators that persist lake-shaped
-  * artifacts (stored indexes, chunk-digest tables): STABLE per-name
-  * paths so bench reps overwrite in place, removed on JVM exit — the
-  * Extra.scratchRoot discipline, shared.
+/** The JVM's one scratch policy: every transient path — stored indexes,
+  * staged round-trip files, version stores, streaming checkpoints and
+  * symlink staging dirs, Spark's own local dir — lives under ONE root on
+  * the fastest local scratch (tmpfs /dev/shm when present, else
+  * java.io.tmpdir), swept by the JVM's one shutdown hook. Everything
+  * written here is transient BY CONSTRUCTION (recreated from the parquet
+  * inputs on every invocation), so durability buys nothing and
+  * disk-journal latency is pure overhead (guide §6: put scratch I/O on
+  * the fastest storage; a real deployment points this root at local SSD
+  * / ramdisk the same way). tmpfs is RAM, so anything left behind would
+  * outlive the JVM as leaked memory — hence the sweep.
   */
 object Scratch {
-  /** Temp dir on the fastest local scratch available: tmpfs (/dev/shm)
-    * when present, else java.io.tmpdir. Everything written here is
-    * transient BY CONSTRUCTION — per-run store generations, shuffle
-    * spill, staged index artifacts — recreated from the parquet inputs
-    * on every invocation and swept at JVM exit, so durability buys
-    * nothing and disk-journal latency is pure overhead (guide §6: put
-    * scratch I/O on the fastest storage; a real deployment points these
-    * roots at local SSD / ramdisk the same way). The StreamOps replay
-    * checkpoints established this discipline; this extends it to every
-    * scratch root.
-    */
-  private[graft] def tmpDir(prefix: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix)
-    else java.nio.file.Files.createTempDirectory(prefix)
-  }
+  import java.nio.file.{Files, Path, Paths}
 
-  private lazy val root: java.nio.file.Path = {
-    val p = tmpDir("graft_lake")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
+  private lazy val root: Path = {
+    val shm = Paths.get("/dev/shm")
+    val p =
+      if (Files.isDirectory(shm) && Files.isWritable(shm))
+        Files.createTempDirectory(shm, "graft_lake")
+      else Files.createTempDirectory("graft_lake")
+    sys.addShutdownHook(rmTree(p))
     p
   }
+
+  /** Recursive delete that never follows symlinks (walkFileTree's
+    * default): streaming staging dirs hold symlinks to lake input files,
+    * and a link is removed as a link, never its target. Missing paths
+    * and races are fine — at JVM exit Spark's own hook deletes its local
+    * dirs concurrently with this sweep, so a vanished entry is skipped
+    * instead of aborting the walk.
+    */
+  def rmTree(p: Path): Unit = {
+    import java.nio.file.{FileVisitResult, SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
+    def del(q: Path): FileVisitResult = {
+      try Files.deleteIfExists(q) catch { case _: java.io.IOException => }
+      FileVisitResult.CONTINUE
+    }
+    Files.walkFileTree(p, new SimpleFileVisitor[Path] {
+      override def visitFile(f: Path, a: BasicFileAttributes) = del(f)
+      override def visitFileFailed(f: Path, e: java.io.IOException) = del(f)
+      override def postVisitDirectory(d: Path, e: java.io.IOException) = del(d)
+    })
+    ()
+  }
+
+  /** STABLE per-name path: bench reps overwrite in place (stored
+    * indexes, chunk-digest tables, sink round-trips).
+    */
   def path(name: String): String = s"$root/$name"
 
-  /** Spark local dir (shuffle files, block-manager spill) on the same
-    * fast scratch; lives under [[root]] so the JVM-exit sweep removes
-    * whatever Spark's own cleanup leaves behind. Shuffle data is
-    * transient by definition — on a real cluster this is the
-    * local-SSD/ramdisk mount the submitter passes as spark.local.dir.
+  /** Session-keyed stable path: two concurrent sessions in one JVM —
+    * parallel bench and verify — must not overwrite each other's staged
+    * files between a query's write and its audit re-read. Within ONE
+    * session, bench reps still rewrite in place rather than leaking a
+    * fresh dir per rep.
+    */
+  def path(s: SparkSession, name: String): String =
+    s"$root/s${System.identityHashCode(s)}/$name"
+
+  /** Spark local dir (shuffle files, block-manager spill) under [[root]],
+    * so the JVM-exit sweep removes whatever Spark's own cleanup leaves
+    * behind. On a real cluster this is the local-SSD/ramdisk mount the
+    * submitter passes as spark.local.dir.
     */
   lazy val sparkLocalDir: String = {
     val p = root.resolve("spark_local")
-    java.nio.file.Files.createDirectories(p)
+    Files.createDirectories(p)
     p.toString
   }
 
-  /** A fresh directory per invocation under the SAME swept root, for
-    * stores that accumulate state and must not be reused in place
-    * (version stores, standing indexes). One JVM-wide shutdown hook
-    * total (round-12 advice: a hook registered per invocation
-    * accumulates hooks across bench reps); disk still grows per
-    * invocation by design — a build's returned DataFrame reads its
-    * store lazily, so an eager delete would race the driver's re-read.
+  /** A fresh directory per invocation, for stores that accumulate state
+    * and must not be reused in place (version stores, standing indexes,
+    * streaming checkpoints). Disk grows per invocation by design — a
+    * build's returned DataFrame reads its store lazily, so an eager
+    * delete would race the driver's re-read; callers that know their
+    * dir is dead (a terminated replay's checkpoint) [[rmTree]] it.
     */
-  def fresh(prefix: String): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory(root, prefix)
+  def fresh(prefix: String): Path = Files.createTempDirectory(root, prefix)
 }
 
 /** Per-query phase walls for composite builds (round-14 verdict ask 6):
@@ -260,6 +274,13 @@ object PhaseTiming {
   def clear(): Unit = m.clear()
 }
 
+/** Generation-bounded cache registry. Query builders that `.cache()`
+  * intermediate frames register them here under a stable key; the NEXT
+  * invocation of the same builder (bench reps, repeated verify runs)
+  * unpersists the previous generation before caching its own. Bounds
+  * cached-block accumulation to one live generation per key without
+  * unpersisting a frame the returned (lazy) plan still needs.
+  */
 object CacheBin {
   private val live =
     scala.collection.concurrent.TrieMap.empty[String, Seq[DataFrame]]

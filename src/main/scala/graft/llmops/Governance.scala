@@ -1,7 +1,7 @@
 package graft.llmops
 
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, Scratch, Tables => T}
 
 /** Dataset-governance audits — the release checks a training-data
   * pipeline runs before a corpus (or an annotation batch, or a model's
@@ -466,17 +466,6 @@ object Governance {
     */
   val FORGET_SLICE = 10000L
 
-  private def freshScratch(): java.nio.file.Path = {
-    val p = graft.core.Scratch.tmpDir("graft_forget")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p
-  }
-
   /** X — right-to-be-forgotten erasure audit (the GDPR/CCPA deletion a
     * lake must prove, not just perform): users on the tombstone list
     * (user_id % 37 = 0 — the deterministic stand-in for a deletion
@@ -505,7 +494,7 @@ object Governance {
               rows_before - rows_erased AS rows_after, rows_erased,
               CAST(0 AS BIGINT) AS leftover
        FROM a ORDER BY event_type""") { (s, dir) =>
-    val store = s"${freshScratch()}/events"
+    val store = s"${Scratch.fresh("graft_forget")}/events"
     T(s, dir, "events")
       .filter(col("event_id") < FORGET_SLICE)
       .select(col("event_type"), col("user_id"), col("event_id"))

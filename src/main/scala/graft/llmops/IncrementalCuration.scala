@@ -3,7 +3,7 @@ package graft.llmops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, Scratch, Tables => T}
 import graft.functions.ArrayOps
 
 /** X — INCREMENTAL curation: the per-batch admission pipeline a
@@ -91,17 +91,6 @@ object IncrementalCuration {
 
   import FullCuration.{K_GRAM, MIN_TOKENS, REP_MAX, STOP_MAX, MAX_BUCKET, gramSql}
   import TextStats.{sqlList, stopEn}
-
-  /** Fresh per-invocation index root under graft.core.Scratch's single
-    * swept parent (round-12 advice: the previous per-invocation
-    * shutdown-hook registration accumulated one hook + one on-disk index
-    * copy per bench rep until JVM exit; the shared parent bounds hooks
-    * at one — disk still grows per invocation by design, since a build's
-    * returned DataFrame reads the index lazily and an eager delete would
-    * race the driver's re-read).
-    */
-  private def freshScratch(): java.nio.file.Path =
-    graft.core.Scratch.fresh("graft_inccur")
 
   /** Bootstrap the standing lake's persisted indexes: the distinct
     * digest index and the (doc_id, band, bh, hs, c) band index. In
@@ -336,7 +325,7 @@ object IncrementalCuration {
        ORDER BY v.lang, v.verdict""") { (s, dir) =>
     val docs = T(s, dir, "documents")
     val cut = Incremental.cutoffValue(docs)
-    val scratch = freshScratch().toString
+    val scratch = Scratch.fresh("graft_inccur").toString
 
     // standing-state bootstrap (in production: already on disk, grown by
     // every prior batch's append — the cost amortizes to zero per batch)

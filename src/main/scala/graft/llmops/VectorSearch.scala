@@ -3,7 +3,7 @@ package graft.llmops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, Scratch, Tables => T}
 
 /** Similarity search over an embedding column (SURVEY.md §2b Q34 + the
   * training-data-ops extensions).
@@ -444,8 +444,8 @@ object VectorSearch {
     * nprobe is the recall/SLO knob: this corpus is a near-uniform sphere
     * (no planted neighbor structure — measured max cosine ≈ 0.5), the
     * hardest regime for IVF, so meeting the recall SLO costs a larger
-    * nprobe than a clustered corpus would. Measured (RecallProbe, all
-    * three SFs): nprobe=2 dips to 0.7; nprobe=6 holds ≥ 0.9 everywhere.
+    * nprobe than a clustered corpus would. Measured at all three SFs:
+    * nprobe=2 dips to 0.7; nprobe=6 holds ≥ 0.9 everywhere.
     * The bar is 0.85 — "at most one of the true top-10 missed" — leaving
     * one-hit slack under the measured 0.9 floor so last-ulp centroid
     * noise (float sums are partition-order-dependent) can't flip the
@@ -474,7 +474,7 @@ object VectorSearch {
     // iteration, and the exact twin re-scans them once more
     val e = embeddingsBase(s, dir).select("vec_id", "label", "n_emb")
     // 2 Lloyd iterations: quantizer quality only moves recall (measured
-    // unchanged at nprobe=6 by RecallProbe), and each iteration costs two
+    // unchanged at nprobe=6), and each iteration costs two
     // driver-synchronized jobs; the centroid table is shared with
     // x_embed_cluster (sharedCentroids) — one quantizer per data dir
     val centLit = typedLit(sharedCentroids(s, dir).map(_.toSeq).toSeq)
@@ -548,7 +548,7 @@ object VectorSearch {
   }
 
   /** argmax over a scored frame: (vec_id, cid, own_sim), lowest cid wins
-    * ties — THE assignment spelling (x_embed_cluster, ClusterProbe, and
+    * ties — THE assignment spelling (x_embed_cluster and
     * clusterAssignments all go through here; a tie-break drift between
     * private copies would silently invalidate the probe-calibrated gate
     * bars).
@@ -605,7 +605,7 @@ object VectorSearch {
     * are): every cluster floor, no cluster above half the corpus
     * (quantizer collapse), and mean own-centroid similarity beating the
     * mean all-centroid similarity by a real margin (clustering actually
-    * separates the sphere). Measured at the three SFs (ClusterProbe):
+    * separates the sphere). Measured at the three SFs:
     * nonempty 16/16, max share 0.070–0.084, cohesion margin 0.262–0.319
     * vs bars 10, 0.5, 0.05.
     */
@@ -703,7 +703,7 @@ object VectorSearch {
   // cluster RAM. Search is ADC (asymmetric distance): the probe stays
   // exact, dot(p, v) ~ dot(p, coarseCent[v]) + sum_b dot(p_b,
   // codebook[b, code_b(v)]) — per-probe lookup tables, never a
-  // decompression of the corpus. Measured on this corpus (PqDebug):
+  // decompression of the corpus. Measured on this corpus:
   // 4-bit codebooks leave ~0.07 per-block reconstruction error on these
   // wide-cluster synthetic embeddings (ADC noise swamps the ~0.01-0.05
   // top-10 similarity gaps — recall 0.3-0.7); 8-bit residual codebooks
@@ -726,7 +726,7 @@ object VectorSearch {
   val PQ_RECALL_BAR = 0.8
   /** Lloyd iterations for codebook training — one melted job per
     * iteration regardless of PQ_BLOCKS, so this is cheap to raise;
-    * reconstruction error stops improving around here (PqDebug).
+    * reconstruction error stops improving around here.
     */
   val PQ_ITERS = 6
 
@@ -839,7 +839,7 @@ object VectorSearch {
     * L2-normalized (cosine k-means), so v − c keeps ~0.7 of a unit
     * vector's energy at the observed ~0.65 within-cluster cosine — the
     * residual layer is kept for the layout, and the recall win comes
-    * from the 8-bit codebooks (PqDebug: 0.088 per-block residual error
+    * from the 8-bit codebooks (measured: 0.088 per-block residual error
     * at K=16 vs 0.018 at K=256).
     */
   def coarseResiduals(s: SparkSession, dir: String, e: DataFrame)
@@ -1012,7 +1012,7 @@ object VectorSearch {
     * error sources (coarse prune can drop a list holding a true
     * neighbor; ADC mis-ranks near-ties, repaired only within the
     * shortlist), so recall was re-measured for the composed path, not
-    * assumed from the halves. Measured (IvfPqProbe, all three SFs):
+    * assumed from the halves. Measured (all three SFs):
     * nprobe=2 dips to 0.7, nprobe=4 to 0.7–0.8; nprobe=6 holds
     * worst-probe 0.9 everywhere — the same floor as bare PQ (0.9–1.0),
     * i.e. the prune costs at most nothing measurable once the shortlist
@@ -1091,22 +1091,11 @@ object VectorSearch {
   // the expensive pass) and wrong (stored codes become stale against
   // new codebooks; the whole corpus would need re-coding).
 
-  /** Per-JVM scratch root standing in for the lake's index prefix (the
-    * Extra.scratchRoot discipline: stable per-dir paths, overwrite-mode
-    * writers, removed on JVM exit).
+  /** Stable per-lake path standing in for the lake's index prefix
+    * (overwrite-mode writers, removed on JVM exit with the scratch root).
     */
-  private lazy val indexRoot: java.nio.file.Path = {
-    val p = graft.core.Scratch.tmpDir("graft_pqindex")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p
-  }
   def indexPath(dir: String): String =
-    s"$indexRoot/${new java.io.File(dir).getName}"
+    Scratch.path(s"pqindex/${new java.io.File(dir).getName}")
 
   /** vec_id offset for the incremental batch (disjoint id space). */
   val INCR_OFFSET = 10000000L
@@ -1200,7 +1189,7 @@ object VectorSearch {
   /** nprobe for the incremental search: the merged corpus pairs every
     * base vector with a near-duplicate, so every pruned list that held
     * ONE true neighbor of some probe now hides TWO — the recall cost of
-    * a coarse miss doubles. Measured (IncrProbe): nprobe=6/8 dip to 0.8
+    * a coarse miss doubles. Measured: nprobe=6/8 dip to 0.8
     * (probe 3 at sf0.01 has its #9/#10 neighbors in a list ranked 10th
     * by csim — an intrinsic far-cluster neighbor, not a storage bug);
     * nprobe=10 plus the doubled shortlist below measures recall 1.0 on
@@ -1210,7 +1199,7 @@ object VectorSearch {
     */
   val IVFPQ_INCR_NPROBE = 10
   /** Recall bar for the incremental search. Measured floor on the
-    * merged corpus is 1.0 on every probe at every SF (IncrProbe); 0.8
+    * merged corpus is 1.0 on every probe at every SF; 0.8
     * leaves two-hit slack under the measurement.
     */
   val IVFPQ_INCR_RECALL_BAR = 0.8

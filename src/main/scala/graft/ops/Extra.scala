@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Exact => E, Q, Tables => T}
+import graft.core.{Exact => E, Q, Scratch, Tables => T}
 
 /** Round-2 coverage extensions: sessionization, reproducible sampling,
   * ordered string aggregation, masking, and regression aggregates.
@@ -300,31 +300,6 @@ object Extra {
       .orderBy("c_custkey")
   }
 
-  /** One scratch root per JVM, removed on exit: sink round-trip queries
-    * write to a STABLE per-query path (their writers use overwrite mode),
-    * so bench reps rewrite in place instead of leaking a fresh temp
-    * directory per invocation.
-    */
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val p = graft.core.Scratch.tmpDir("graft_scratch")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p
-  }
-  /** Session-keyed scratch path (the round-10 advice discipline, applied
-    * here too): two concurrent sessions in one JVM — parallel bench and
-    * verify — must not overwrite each other's staged files between a
-    * query's write and its audit re-read. Within ONE session, bench reps
-    * still rewrite in place rather than leaking a fresh dir per rep.
-    */
-  private[graft] def scratch(s: org.apache.spark.sql.SparkSession,
-      name: String): String =
-    s"$scratchRoot/s${System.identityHashCode(s)}/$name"
-
   /** X — CSV sink + source round-trip: write orders as headered CSV,
     * read it back with the original schema, aggregate. The oracle runs
     * the same aggregate over the parquet table — green iff the text
@@ -336,7 +311,7 @@ object Extra {
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
        FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""") { (s, dir) =>
     val orders = T(s, dir, "orders")
-    val out = scratch(s, "csvrt/orders")
+    val out = Scratch.path(s, "csvrt/orders")
     graft.sources.Lake.writeAs(orders, "csv", out)
     graft.sources.Lake.readAs(s, "csv", out, Some(orders.schema))
       .groupBy(col("o_orderpriority"))
@@ -359,7 +334,7 @@ object Extra {
        FROM lineitem GROUP BY l_returnflag, l_linestatus
        ORDER BY l_returnflag, l_linestatus""") { (s, dir) =>
     val li = T(s, dir, "lineitem")
-    val out = scratch(s, "orcrt/lineitem")
+    val out = Scratch.path(s, "orcrt/lineitem")
     graft.sources.Lake.writeAs(li, "orc", out)
     graft.sources.Lake.readAs(s, "orc", out)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -405,7 +380,7 @@ object Extra {
        ORDER BY o_orderkey""") { (s, dir) =>
     val orders = T(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    val stage = scratch(s, "upsert/orders")
+    val stage = Scratch.path(s, "upsert/orders")
     orders.write.mode("overwrite").parquet(stage)
     val updates = orders.filter(col("o_orderkey") % 97 === 0)
       .select(col("o_orderkey"), lit("U").as("o_orderstatus"),
@@ -429,7 +404,7 @@ object Extra {
        FROM orders WHERE o_custkey BETWEEN 40 AND 70
        GROUP BY o_orderpriority ORDER BY o_orderpriority""") { (s, dir) =>
     val orders = T(s, dir, "orders")
-    val stage = scratch(s, "clustered/orders")
+    val stage = Scratch.path(s, "clustered/orders")
     graft.sources.Lake.writeClusteredWithManifest(orders, stage, 8, "o_custkey")
     graft.sources.Lake.readPruned(s, stage, "o_custkey", 40L, 70L)
       .groupBy(col("o_orderpriority"))
@@ -456,7 +431,7 @@ object Extra {
          AND CAST(floor(o_totalprice) AS BIGINT) BETWEEN 20000 AND 120000
        GROUP BY o_orderpriority ORDER BY o_orderpriority""") { (s, dir) =>
     val orders = T(s, dir, "orders")
-    val stage = scratch(s, "zorder/orders")
+    val stage = Scratch.path(s, "zorder/orders")
     graft.sources.Lake.writeZOrdered(orders, stage, 16,
       "o_custkey", "o_totalprice")
     graft.sources.Lake.readZPruned(s, stage,
@@ -486,7 +461,7 @@ object Extra {
          AND CAST(floor(o_totalprice) AS BIGINT) BETWEEN 150000 AND 300000
        GROUP BY o_orderpriority ORDER BY o_orderpriority""") { (s, dir) =>
     val orders = T(s, dir, "orders")
-    val stage = scratch(s, "hilbert/orders")
+    val stage = Scratch.path(s, "hilbert/orders")
     graft.sources.Lake.writeHilbertOrdered(orders, stage, 16,
       "o_custkey", "o_totalprice")
     graft.sources.Lake.readHPruned(s, stage,
@@ -524,7 +499,7 @@ object Extra {
        FROM orders WHERE o_orderkey IN (7, 777, 1477)
        GROUP BY o_orderpriority ORDER BY o_orderpriority""") { (s, dir) =>
     val orders = T(s, dir, "orders")
-    val stage = scratch(s, "pqbloom/orders")
+    val stage = Scratch.path(s, "pqbloom/orders")
     graft.sources.Lake.writeClusteredParquetNative(orders, stage, 8,
       "o_custkey", Seq("o_orderkey" -> 200000L))
     s.read.parquet(stage)
@@ -555,7 +530,7 @@ object Extra {
        FROM orders WHERE o_custkey BETWEEN 25 AND 60
        GROUP BY o_orderpriority ORDER BY o_orderpriority""") { (s, dir) =>
     val orders = T(s, dir, "orders")
-    val stage = scratch(s, "pqpage/orders")
+    val stage = Scratch.path(s, "pqpage/orders")
     graft.sources.Lake.writeClusteredParquetNative(orders, stage, 1,
       "o_custkey", Seq.empty, pageRows = 500)
     s.read.parquet(stage)
@@ -759,7 +734,7 @@ object Extra {
        GROUP BY o_orderstatus
        ORDER BY o_orderstatus NULLS FIRST""") { (s, dir) =>
     val orders = T(s, dir, "orders")
-    val root = scratch(s, "schevo/orders")
+    val root = Scratch.path(s, "schevo/orders")
     orders.filter(col("o_orderkey") % 3 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
       .write.mode("overwrite").parquet(s"$root/batch=1")
@@ -941,7 +916,7 @@ object Extra {
          max(c_name) AS last_name
        FROM customer GROUP BY 1 ORDER BY nation""") { (s, dir) =>
     val cust = T(s, dir, "customer")
-    val out = scratch(s, "jsonrt/customer")
+    val out = Scratch.path(s, "jsonrt/customer")
     graft.sources.Lake.writeAs(cust, "json", out)
     graft.sources.Lake.readAs(s, "json", out, Some(cust.schema))
       .groupBy(col("c_nationkey").cast("long").as("nation"))

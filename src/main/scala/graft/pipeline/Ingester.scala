@@ -89,19 +89,8 @@ object RunIngest {
     val date = BatchKeys.parseArg(args, BatchKeys.previousHour())
     val base = args.sliding(2).collectFirst { case Array("--source-url", v) => v }
       .getOrElse("http://data.gharchive.org")
-    val sink = new Ingester(ConfigFromArgsIngest(args), sourceBaseUrl = base)
+    val sink = new Ingester(ConfigFromArgs(args), sourceBaseUrl = base)
       .ingestHourlyGharchive(date)
     println(s"bronze written: $sink")
-  }
-
-  private object ConfigFromArgsIngest {
-    def apply(args: Array[String]): LakeConfig =
-      args.sliding(2).collectFirst { case Array("--config", v) => v } match {
-        case Some(ini) => LakeConfig.fromIni(ini)
-        case None =>
-          val root = args.sliding(2).collectFirst { case Array("--lake-root", v) => v }
-            .getOrElse(sys.error("pass --config <ini> or --lake-root <path>"))
-          LakeConfig(s"$root/bronze", s"$root/silver", s"$root/gold")
-      }
   }
 }

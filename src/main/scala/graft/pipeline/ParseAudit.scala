@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, Scratch, Tables => T}
 
 /** Parse-health accounting for the error-tolerant JSON ingest (SURVEY.md
   * §2a R3). The silver path maps the reference's `ignore_errors = true`
@@ -69,7 +69,7 @@ object ParseAudit {
               TRUE AS drop_matches
        FROM orders""") { (s, dir) =>
     val orders = T(s, dir, "orders")
-    val out = graft.ops.Extra.scratch(s, "parseaudit/raw")
+    val out = Scratch.path(s, "parseaudit/raw")
     jsonLines(orders).write.mode("overwrite").text(out)
 
     // production arm: the silver path's semantics (rows vanish)
@@ -127,10 +127,10 @@ object ParseAudit {
               CAST(sum(o_orderkey) AS BIGINT) AS silver_id_sum
        FROM orders""") { (s, dir) =>
     val orders = T(s, dir, "orders")
-    val raw = graft.ops.Extra.scratch(s, "quarantine/raw")
-    val silver = graft.ops.Extra.scratch(s, "quarantine/silver")
-    val quarantine = graft.ops.Extra.scratch(s, "quarantine/dead")
-    val resend = graft.ops.Extra.scratch(s, "quarantine/resend")
+    val raw = Scratch.path(s, "quarantine/raw")
+    val silver = Scratch.path(s, "quarantine/silver")
+    val quarantine = Scratch.path(s, "quarantine/dead")
+    val resend = Scratch.path(s, "quarantine/resend")
     jsonLines(orders).write.mode("overwrite").text(raw)
 
     // silver (production DROPMALFORMED path), quarantine (PERMISSIVE

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, Scratch, Tables => T}
 
 /** Schema DRIFT at the ingest boundary: an UNEXPECTED field appears in
   * the raw JSON. The schema-pinned production read (SURVEY.md §2a R3)
@@ -34,7 +34,7 @@ object SchemaOps {
               TRUE AS pinned_reads_all
        FROM orders""") { (s, dir) =>
     val orders = T(s, dir, "orders")
-    val raw = graft.ops.Extra.scratch(s, "schemadrift/raw")
+    val raw = Scratch.path(s, "schemadrift/raw")
     val base = ParseAudit.jsonLines(orders, corrupt = false)
     // inject the unexpected field before the closing brace
     base.select(

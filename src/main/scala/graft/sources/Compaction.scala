@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, Scratch, Tables => T}
 
 /** Small-file compaction — the lake-maintenance operator every
   * long-lived 100 TB table needs (a streaming or per-batch writer
@@ -53,25 +53,6 @@ object Compaction {
     */
   val SLICE = 10000L
 
-  /** Fresh scratch directory PER INVOCATION (never a JVM-wide lazy
-    * singleton): two concurrent invocations — parallel bench/verify
-    * sessions in one JVM — must not overwrite each other's staged
-    * files between the write and the audit re-read. Each dir is
-    * removed by a shutdown hook (the audit DataFrame reads the
-    * compacted output lazily, so eager deletion inside the query body
-    * would race evaluation).
-    */
-  private def freshScratch(): java.nio.file.Path = {
-    val p = graft.core.Scratch.tmpDir("graft_compact")
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }
-    p
-  }
-
   val xCompactionPlan = Q(
     "x_compaction_plan",
     s"""WITH t AS (SELECT event_type AS part, CAST(count(*) AS BIGINT) AS n
@@ -91,7 +72,10 @@ object Compaction {
               CAST(sum(rows_f) AS BIGINT) AS n_rows,
               CAST(1 AS BIGINT) AS n_files_out
        FROM o GROUP BY 1, 2 ORDER BY part, grp""") { (s, dir) =>
-    val scratch = freshScratch()
+    // fresh per invocation: concurrent sessions in one JVM must not
+    // overwrite each other's staged files before the audit re-read, and
+    // the audit reads the compacted output lazily, so no eager delete
+    val scratch = Scratch.fresh("graft_compact")
     val stage = s"$scratch/stage"
     val out = s"$scratch/compacted"
 
@@ -214,7 +198,7 @@ object Compaction {
               band.band_n, band.band_val
        FROM t JOIN band ON t.part = band.part
        ORDER BY t.part""") { (s, dir) =>
-    val scratch = freshScratch()
+    val scratch = Scratch.fresh("graft_compact")
     val stage = s"$scratch/stage"
     val out = s"$scratch/optimized"
 

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, Scratch, Tables => T}
 import graft.core.Exact.dec
 
 /** Structured Streaming operators (SURVEY.md §2b Q28–Q30).
@@ -20,48 +20,6 @@ import graft.core.Exact.dec
   * by watermarks; AvailableNow here just replays the history in one go.
   */
 object StreamOps {
-
-  /** Scratch space for replay checkpoints/symlinks: tmpfs when present.
-    * The replay harness re-creates state from scratch every run, so
-    * checkpoint durability buys nothing here and the fsync cost is pure
-    * overhead — a REAL deployment points checkpointLocation at durable
-    * shared storage instead.
-    */
-  private val liveScratch =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-
-  /** Recursive delete; missing paths and races are fine. The walk stream
-    * is closed after materializing the paths — each open Files.walk holds
-    * a directory file descriptor, and the shutdown hook sweeps many dirs.
-    */
-  private[graft] def rmTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(p)
-      val paths = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      paths.foreach(q => try Files.deleteIfExists(q) catch { case _: Exception => })
-    }
-
-  // tmpfs is RAM: anything this harness leaves behind in /dev/shm is
-  // leaked memory that outlives the JVM. Checkpoints are deleted as soon
-  // as their replay terminates (see runToMemory); source-symlink/stage
-  // dirs live until JVM exit because their streams' plans may be re-run
-  // lazily — the shutdown hook sweeps whatever remains.
-  private lazy val sweepOnExit: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var p = liveScratch.poll()
-      while (p != null) { rmTree(p); p = liveScratch.poll() }
-    }))
-
-  private[graft] def scratchDir(prefix: String): java.nio.file.Path = {
-    sweepOnExit
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val p = if (Files.isDirectory(shm) && Files.isWritable(shm))
-      Files.createTempDirectory(shm, prefix)
-    else Files.createTempDirectory(prefix)
-    liveScratch.add(p)
-    p
-  }
 
   /** Streaming view of the events table (nanos ts → micros timestamp,
     * same normalization as the batch loader). `copies` > 1 exposes the
@@ -89,7 +47,7 @@ object StreamOps {
 
   private def fileStream(s: SparkSession, path: String, prefix: String,
       copies: Int = 1): DataFrame = {
-    val streamDir = scratchDir(prefix)
+    val streamDir = Scratch.fresh(prefix)
     val src = new java.io.File(path)
     // the table may be a single parquet FILE (the driver's fixture
     // lakes) or a DIRECTORY of part files (every real lake generation —
@@ -175,7 +133,7 @@ object StreamOps {
   private def withPinnedReplay[T](spark: SparkSession, ckptPrefix: String,
       keepNoDataBatches: Boolean = false)(
       body: String => T): T = replayLock.synchronized {
-    val ckpt = scratchDir(ckptPrefix)
+    val ckpt = Scratch.fresh(ckptPrefix)
     val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val oldNoData = spark.conf.getOption(noDataKey)
@@ -192,8 +150,7 @@ object StreamOps {
         case Some(v) => spark.conf.set(noDataKey, v)
         case None => spark.conf.unset(noDataKey)
       }
-      rmTree(ckpt)
-      liveScratch.remove(ckpt)
+      Scratch.rmTree(ckpt)
     }
   }
 
@@ -510,7 +467,7 @@ object StreamOps {
     scala.collection.concurrent.TrieMap.empty[String, String]
   private def upsertStage(dir: String): String =
     upsertStages.getOrElseUpdate(dir,
-      scratchDir("graft_upsert_stage").toString + "/latest")
+      Scratch.fresh("graft_upsert_stage").toString + "/latest")
 
   /** X — streaming drift gate: the per-ingest dataset-QA check
     * (x_psi_drift's PSI) run against a STREAM. The streaming leg is one
@@ -649,7 +606,7 @@ object StreamOps {
     */
   private def stageLateFile(root: java.nio.file.Path, df: DataFrame,
       name: String): Unit = {
-    val tmp = scratchDir(s"graft_late_tmp_$name")
+    val tmp = Scratch.fresh(s"graft_late_tmp_$name")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = new java.io.File(tmp.toString).listFiles()
       .find(f => f.getName.startsWith("part-") &&
@@ -720,7 +677,7 @@ object StreamOps {
     val ev = T(s, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"))
     val lateC = isLateRow(col("ts"), col("event_id"))
-    val stage = scratchDir("graft_stream_late")
+    val stage = Scratch.fresh("graft_stream_late")
     stageLateFile(stage, ev.filter(!lateC), "ontime")
     val sch = s.read.parquet(stage.toString).schema
     def agg = {
@@ -732,7 +689,7 @@ object StreamOps {
           col("n"))
     }
     var dropped = 0L
-    val out = scratchDir("graft_stream_late_out").toString + "/emitted"
+    val out = Scratch.fresh("graft_stream_late_out").toString + "/emitted"
     withPinnedReplay(s, "graft_ckpt_late", keepNoDataBatches = true) { ckpt =>
       // memory sinks can't resume a checkpoint; foreachBatch can, and
       // appending each emitted micro-batch to parquet is the real
@@ -848,9 +805,9 @@ object StreamOps {
       .unionByName(b1.filter(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
 
-    val stage = scratchDir("graft_stream_cur")
-    val idxPath = scratchDir("graft_stream_cur_idx").toString + "/digests"
-    val logPath = scratchDir("graft_stream_cur_log").toString + "/log"
+    val stage = Scratch.fresh("graft_stream_cur")
+    val idxPath = Scratch.fresh("graft_stream_cur_idx").toString + "/digests"
+    val logPath = Scratch.fresh("graft_stream_cur_log").toString + "/log"
     // bootstrap: the standing lake's digest index (persisted, like
     // IncrementalCuration.bootstrapIndexes — digest half only: the
     // streaming story here is the index-append loop, not stage count)
@@ -995,8 +952,8 @@ object StreamOps {
        FROM events GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
     val stream = eventsStream(s, dir)
       .select(col("event_type"), col("value"))
-    val mvDir = scratchDir("graft_addmv").toString + "/mv"
-    val b0Dir = scratchDir("graft_addmv_b0").toString + "/b0"
+    val mvDir = Scratch.fresh("graft_addmv").toString + "/mv"
+    val b0Dir = Scratch.fresh("graft_addmv_b0").toString + "/b0"
     withPinnedReplay(s, "graft_ckpt_addmv") { ckpt =>
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>

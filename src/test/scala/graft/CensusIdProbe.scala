@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -16,14 +15,7 @@ object CensusIdProbe {
     val q = sys.env("SPARK_GRAFT_ID_QUERY")
     val sf = sys.env.getOrElse("SPARK_GRAFT_ID_SF", "/root/testdata/sf0.1")
     val node = sys.env.getOrElse("SPARK_GRAFT_ID_NODE", "CartesianProduct")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("32")
     var n = 0
     spark.listenerManager.register(new QueryExecutionListener {
       def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = {

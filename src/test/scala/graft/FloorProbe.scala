@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe (Test/runMain graft.FloorProbe): decompose the fixed
   * per-query bench floor on sub-second queries (round-13 verdict ask 7).
   * For each probe query, run N warm invocations and split the wall into
@@ -15,14 +13,7 @@ import org.apache.spark.sql.SparkSession
 object FloorProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     graft.core.Tables.names.foreach { t =>
       try graft.core.Tables(spark, dir, t).count()

@@ -39,14 +39,7 @@ object InventoryCensus {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val k = sys.env.getOrElse("SPARK_GRAFT_CENSUS_K", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val only = sys.env.get("SPARK_GRAFT_CENSUS_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.llmops.{MinHashLSH, Shingles}
 
@@ -15,13 +14,7 @@ import graft.llmops.{MinHashLSH, Shingles}
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     // comma-separated section filter for re-measuring one family without
     // paying the whole probe:
     // neardup,setsim,nn,km,inc,lm,bpe,contam,pr,qc,evt,cn,cnskew,budget,

@@ -1,38 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe (Test/runMain graft.StreamFloorProbe): dissect where the
   * per-query wall time of a streaming replay goes, using the engine's own
   * q28 via SparkEntry (so the measured path IS the bench path) plus the
   * StreamingQueryProgress breakdown of a hand-rolled copy.
   */
 object StreamFloorProbe {
-  // tmpfs is RAM: scratch dirs come from StreamOps' shared harness
-  // (tmpfs-with-fallback + shutdown-hook sweep as backstop) and are also
-  // deleted eagerly in the finally below — no private copy to drift
+  // tmpfs is RAM: scratch dirs come from core.Scratch (its JVM-exit
+  // sweep is the backstop) and are also deleted eagerly in the finally
+  // below
   private val scratch =
     scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
 
   private def tmpDir(prefix: String): java.nio.file.Path = {
-    val p = graft.streaming.StreamOps.scratchDir(prefix)
+    val p = graft.core.Scratch.fresh(prefix)
     scratch += p
     p
   }
 
   private def sweep(): Unit =
-    scratch.foreach(graft.streaming.StreamOps.rmTree)
+    scratch.foreach(graft.core.Scratch.rmTree)
 
   def main(args: Array[String]): Unit = try {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     // warm: one full replay (codegen, state-store classes, sink machinery)

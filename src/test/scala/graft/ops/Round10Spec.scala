@@ -209,7 +209,7 @@ class Round10Spec extends AnyFunSuite {
     assert(bcodes.count() == nBatch * V.PQ_BLOCKS)
 
     // the end-to-end gate: every probe clears the bar on the merged
-    // corpus after the storage round trip (measured floor 1.0, IncrProbe)
+    // corpus after the storage round trip (measured floor 1.0)
     val rec = V.ivfpqIncrementalRecall(spark, dir).collect()
     assert(rec.length == 5 && rec.forall(_.getBoolean(2)),
       s"recalls: ${rec.map(r => s"${r.getLong(0)}:${r.getDouble(1)}").mkString(" ")}")

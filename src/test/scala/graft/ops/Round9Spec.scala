@@ -20,7 +20,7 @@ class Round9Spec extends AnyFunSuite {
 
       // the IVF-PQ claim itself: the ADC stage reads ~nprobe/nlists of
       // the code table per probe, not all of it (measured 0.363-0.388 vs
-      // ideal 0.375 across SFs — IvfPqProbe; generous slack here so an
+      // ideal 0.375 across SFs; generous slack here so an
       // unlucky quantizer re-train can't flake the suite)
       val total = V.pqIndex(spark, dir)._2.count()
       val scanned = V.ivfpqScannedCodes(spark, dir, V.IVFPQ_NPROBE).count()
