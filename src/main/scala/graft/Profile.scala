@@ -1,91 +1,204 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import scala.collection.mutable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graft.shims
+import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Dev tool (round-16 optimization): per-JOB wall-clock attribution for a
-  * query build. Every eager action inside a composite build (localCheckpoint,
-  * store write, driver count, the final count) is a separate Spark job; a
-  * listener keyed on the job's call site maps each job's wall to the code
-  * line that launched it. Usage:
+/** The repo's one measurement tool: a [[Profile.Recorder]] attaches one
+  * SparkListener and one QueryExecutionListener to a session and returns,
+  * per labelled run, where the wall went — the driver's build / plan /
+  * exec split, every job with the call site that launched it, the task
+  * counters (run and CPU time, shuffle bytes, spill) and a census of the
+  * plan nodes that mark a shape that will not scale. Usage:
   *
   *   sbt "runMain graft.Profile <sfDir> <name> [<name> ...]"
   *
-  * Each query runs twice; both runs are broken down (run 1 shows cold
-  * first-execution costs the bench's min-of-reps hides, run 2 is the
-  * warm rep the bench actually scores).
+  * Each query runs twice: rep 1 shows the cold first-execution costs a
+  * min-of-reps wall hides, rep 2 the warm rep.
   */
 object Profile {
+
+  /** Plan nodes whose presence in any execution of a run is recorded: a
+    * cross product, a nested-loop join or a sort-based aggregate is
+    * load-independent evidence of a plan that will not survive growth.
+    */
+  val TrackedNodes: Seq[String] =
+    Seq("CartesianProduct", "BroadcastNestedLoopJoin", "SortAggregate")
+
+  /** One Spark job: its id, the call site that launched it, its wall. */
+  final case class Job(id: Int, site: String, wallS: Double)
+
+  /** One labelled run. `wallS = buildS + planS + execS`: build is the
+    * builder call (DataFrame construction plus any eager action it runs,
+    * less that action's Catalyst time), plan is the Catalyst time
+    * (analysis, optimization, planning) summed over every execution in
+    * the run, exec is the noop sink's wall less its own Catalyst time.
+    * Run and CPU seconds are summed over tasks.
+    */
+  final case class Record(
+      label: String,
+      wallS: Double, buildS: Double, planS: Double, execS: Double,
+      jobs: Seq[Job], tasks: Long, runS: Double, cpuS: Double,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
+      nodes: Set[String], error: Option[String]) {
+
+    def show: String = {
+      val head = f"== $label wall=$wallS%.3f s (build=$buildS%.3f " +
+        f"plan=$planS%.3f exec=$execS%.3f) jobs=${jobs.size} tasks=$tasks " +
+        f"run=$runS%.3f s cpu=$cpuS%.3f s shuffle r/w=$shuffleReadBytes/" +
+        s"$shuffleWriteBytes B spill=$spillBytes B nodes=" +
+        (if (nodes.isEmpty) "-" else nodes.toSeq.sorted.mkString(","))
+      val lines = error.map(e => s"  ERROR $e").toSeq ++
+        jobs.map(j => f"  job${j.id}%5d ${j.wallS}%8.3f s  ${j.site}")
+      (head +: lines).mkString("\n")
+    }
+  }
+
+  /** Materialise every row and column of `df` without collecting it. */
+  def materialise(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Records labelled runs on `spark`, one at a time. Listener events are
+    * delivered asynchronously, so each run drains the bus before it opens
+    * and before it closes: every event a run causes is charged to it, and
+    * none to the run after it.
+    */
+  final class Recorder(spark: SparkSession) {
+    private final class Acc {
+      val execSite = mutable.Map.empty[String, String]
+      val jobStart = mutable.LinkedHashMap.empty[Int, (String, Long)]
+      val jobs = mutable.ArrayBuffer.empty[Job]
+      var tasks, runMs, cpuNs, shRead, shWrite, spill, planMs = 0L
+      val nodes = mutable.Set.empty[String]
+    }
+    // the open run's counters; null between runs, when events are dropped
+    @volatile private var acc: Acc = null
+
+    private def open(f: Acc => Any): Unit = {
+      val a = acc
+      if (a != null) a.synchronized { f(a); () }
+    }
+
+    private val jobs = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          open(_.execSite(s.executionId.toString) = s.description)
+        case _ =>
+      }
+      // a job an adaptive query stage submits from Spark's own thread pool
+      // carries the pool's call site; the SQL execution it belongs to
+      // carries the site of the action that started it
+      override def onJobStart(e: SparkListenerJobStart): Unit = open { a =>
+        val props = Option(e.properties)
+        val site = props
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(a.execSite.get)
+          .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
+          .orElse(e.stageInfos.lastOption.map(_.name)).getOrElse("?")
+        a.jobStart(e.jobId) = (site, e.time)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = open { a =>
+        a.jobStart.remove(e.jobId).foreach { case (site, t0) =>
+          a.jobs += Job(e.jobId, site, (e.time - t0) / 1e3)
+        }
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = open { a =>
+        a.tasks += 1
+        Option(e.taskMetrics).foreach { m =>
+          a.runMs += m.executorRunTime
+          a.cpuNs += m.executorCpuTime
+          a.shRead += m.shuffleReadMetrics.totalBytesRead
+          a.shWrite += m.shuffleWriteMetrics.bytesWritten
+          a.spill += m.memoryBytesSpilled + m.diskBytesSpilled
+        }
+      }
+    }
+
+    private val executions = new QueryExecutionListener {
+      private def census(qe: QueryExecution): Unit = {
+        val plan = qe.executedPlan.toString
+        val ms = qe.tracker.phases.values.map(p => p.endTimeMs - p.startTimeMs).sum
+        open { a =>
+          a.planMs += ms
+          TrackedNodes.foreach(n => if (plan.contains(n)) a.nodes += n)
+        }
+      }
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = census(qe)
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
+        census(qe)
+    }
+
+    spark.sparkContext.addSparkListener(jobs)
+    spark.listenerManager.register(executions)
+
+    /** Build the query, then materialise it through the noop sink. A
+      * failure is recorded, not thrown.
+      */
+    def run(label: String)(build: => DataFrame): Record = {
+      shims.drainListenerBus(spark)
+      val a = new Acc
+      acc = a
+      val t0 = System.nanoTime()
+      var buildNs = 0L
+      var buildPlanMs = 0L
+      val error =
+        try {
+          val df = build
+          buildNs = System.nanoTime() - t0
+          shims.drainListenerBus(spark)
+          buildPlanMs = a.synchronized(a.planMs)
+          materialise(df)
+          None
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            if (buildNs == 0L) buildNs = System.nanoTime() - t0
+            Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
+        }
+      val wallNs = System.nanoTime() - t0
+      shims.drainListenerBus(spark)
+      acc = null
+      a.synchronized {
+        val planS = a.planMs / 1e3
+        val buildS = math.max(0.0, buildNs / 1e9 - buildPlanMs / 1e3)
+        Record(label, wallNs / 1e9, buildS, planS,
+          math.max(0.0, wallNs / 1e9 - buildS - planS),
+          a.jobs.sortBy(_.id).toSeq, a.tasks, a.runMs / 1e3, a.cpuNs / 1e9,
+          a.shRead, a.shWrite, a.spill, a.nodes.toSet, error)
+      }
+    }
+
+    /** Detach both listeners. */
+    def close(): Unit = {
+      shims.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(jobs)
+      spark.listenerManager.unregister(executions)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val names = args.drop(1).toSeq
+    if (args.length < 2) {
+      System.err.println("usage: graft.Profile <sfDir> <name> [<name> ...]")
+      sys.exit(2)
+    }
+    val sfDir = args(0)
     val spark = Sessions.local()
-    // warm the session the way the bench does
+    // warm the session's table reads before the first timed run
     graft.core.Tables.names.foreach { t =>
-      try graft.core.Tables(spark, sfDir, t).count()
+      try materialise(graft.core.Tables(spark, sfDir, t))
       catch { case scala.util.control.NonFatal(_) => }
     }
-
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-    val done = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val site = Option(js.properties.getProperty("callSite.short"))
-          .orElse(js.stageInfos.lastOption.map(_.name))
-          .getOrElse("?")
-        jobs.put(js.jobId, (site, js.time))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(jobs.remove(je.jobId)).foreach { case (site, t0) =>
-          done.synchronized { done += site -> ((je.time - t0) / 1e3); () }
-        }
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val ms = (for {a <- si.completionTime; b <- si.submissionTime}
-          yield a - b).getOrElse(0L)
-        if (ms > 300) done.synchronized {
-          val tm = si.taskMetrics
-          val run = if (tm == null) -1L else tm.executorRunTime
-          val cpu = if (tm == null) -1L else tm.executorCpuTime / 1000000
-          val deser = if (tm == null) -1L else tm.executorDeserializeTime
-          done += s"    [stage ${si.stageId} ${si.numTasks}t wall=${ms / 1e3}s run=${run / 1e3}s cpu=${cpu / 1e3}s deser=${deser / 1e3}s] ${si.name.take(70)}" -> 0.0
-          ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    names.foreach { name =>
+    val rec = new Recorder(spark)
+    args.drop(1).foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to 2).foreach { rep =>
-        done.synchronized(done.clear())
-        // decompose the per-query driver floor (round-17 verdict ask 1):
-        // build (plan construction) / plan (analysis+optimization+physical
-        // planning, from the QueryPlanningTracker) / execute (jobs + AQE
-        // re-optimization + scheduling, where gap = wall − jobSum)
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val cnt = df.groupBy().count()
-        cnt.queryExecution.executedPlan // force analysis/opt/planning
-        val tPlan = (System.nanoTime() - t1) / 1e9
-        val phases = cnt.queryExecution.tracker.phases
-          .map { case (p, s) => s"$p=${(s.endTimeMs - s.startTimeMs)}ms" }
-          .mkString(" ")
-        val t2 = System.nanoTime()
-        cnt.collect()
-        val tExec = (System.nanoTime() - t2) / 1e9
-        val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let the async listener bus drain
-        val lines = done.synchronized(done.toSeq)
-        val jobSum = lines.map(_._2).sum
-        println(f"\n== $name rep $rep wall=$wall%.3f s (build=$tBuild%.3f plan=$tPlan%.3f exec=$tExec%.3f) jobs=${lines.count(_._2 > 0)} jobSum=$jobSum%.3f s execGap=${tExec - jobSum}%.3f s [$phases]")
-        lines.zipWithIndex.foreach { case ((site, sec), i) =>
-          println(f"  job$i%3d $sec%8.3f s  $site")
-        }
+        println(rec.run(s"$name rep $rep")(fn(spark, sfDir)).show)
       }
     }
+    rec.close()
     spark.stop()
   }
 }

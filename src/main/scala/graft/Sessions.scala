@@ -7,11 +7,14 @@ import org.apache.spark.sql.SparkSession
   * uses the same engine config. UTC-pinned, AQE on, shuffle partitions
   * sized for the local core count instead of the 200 default (the one
   * local-mode knob that matters; on a real cluster this comes from the
-  * submitter).
+  * submitter). Every session it builds, and every `newSession()` of one,
+  * carries graft's SQL functions and the as-of join strategy
+  * (`graft.functions.GraftExtensions`).
   */
 object Sessions {
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val spark = SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores)

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SQL registration for graft's native expressions, so the Spark SQL
@@ -11,9 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   *   SELECT array_dot(a, b) FROM ...
   *
-  * Two entry points: `register(spark)` for an existing session, and
-  * `GraftExtensions` for spark.sql.extensions / withExtensions wiring at
-  * session build time.
+  * Installed at session build time by `GraftExtensions`, which
+  * `graft.Sessions.local` passes to `withExtensions`.
   */
 object GraftFunctions {
 
@@ -44,12 +41,6 @@ object GraftFunctions {
       WinnowFingerprints(exprs(0), litInt(exprs(1), "winnow_fingerprints"),
         litInt(exprs(2), "winnow_fingerprints")) })
 
-  def register(spark: SparkSession): Unit =
-    fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
-
   private[functions] def injections
       : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     fns.map { case (name, builder) =>
@@ -59,12 +50,16 @@ object GraftFunctions {
     }
 }
 
-/** Use via `.withExtensions(new GraftExtensions)` or
+/** graft's engine extensions: the SQL functions above and the as-of
+  * join's planner strategy. `graft.Sessions.local` installs them with
+  * `.withExtensions(new GraftExtensions)`; another deployment sets
   * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(extensions: SparkSessionExtensions): Unit =
+  override def apply(extensions: SparkSessionExtensions): Unit = {
     GraftFunctions.injections.foreach { case (id, info, builder) =>
       extensions.injectFunction((id, info, builder))
     }
+    extensions.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
+  }
 }

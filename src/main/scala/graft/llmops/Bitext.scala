@@ -141,7 +141,7 @@ object Bitext {
     // normalizer re-shuffles it by tgt_id — 2 full-grid shuffles that
     // spill once the grid outgrows memory, while the dot grid itself is
     // an embarrassingly parallel BNLJ scan that costs seconds to
-    // re-evaluate. Same-window A/B on replicated lakes (BtK probe):
+    // re-evaluate. Same-window A/B on replicated lakes:
     // 2M pairs share 7.2 s vs re-eval 6.2 (tie; idle round-14 bracket
     // 3.7-4.1 vs 4.9-5.5 — share wins), 50M pairs 22.8 vs 35.9 (share
     // wins), 200M pairs 224 vs 82 (share LOSES 2.7x — the 6 GB exchange

@@ -164,7 +164,7 @@ object Graph {
     * the cap would slot in as one `filter` on a degree frame before the
     * self-join. Counts and ranks are integers; no float crosses engines.
     *
-    * Shape notes (measured, CnTime A/B at sf0.1):
+    * Shape notes (measured, A/B at sf0.1):
     *   - The "no-join" spelling — groupBy(c).collect_set + positional
     *     explode over slice() — is ~1.5x SLOWER than the self-join:
     *     slice() copies the array tail per position (O(k²) allocation
@@ -182,7 +182,7 @@ object Graph {
     *     are hash-uniform (no hot (s1,s2) key — a group's size is
     *     bounded by the co-purchase count), so a salt only multiplies
     *     the group space and strictly increases shuffle volume.
-    *   - BOUND-PRUNING the agg (round-9 negative result, CnBound probe):
+    *   - BOUND-PRUNING the agg (round-9 negative result, measured):
     *     the idea — drop pairs whose count provably can't reach the
     *     top-20, using common(s1,s2) ≤ min(deg(s1), deg(s2)) against
     *     L = the capped variant's 20th count (a valid lower bound on
@@ -217,7 +217,7 @@ object Graph {
     // and the self-join key (c) are both satisfied by hashpartitioning(c)
     // (clustering by a SUBSET of the grouping keys co-locates every
     // group), so neither the dropDuplicates nor the join adds a shuffle —
-    // CnTime A/B: this beats distinct + self-join (2 extra exchanges)
+    // measured A/B: this beats distinct + self-join (2 extra exchanges)
     val e = li.join(o, col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
       .repartition(col("c"))
@@ -267,7 +267,7 @@ object Graph {
     * worst-case instead of Σk² (SCALE-CN-SKEW in docs/SCALING.md
     * measures exactly this on a hub-injected replica).
     *
-    * Plan shape (CnTime A/B: fastest spelling measured, ~1.2-1.4 s vs
+    * Plan shape (A/B: fastest spelling measured, ~1.2-1.4 s vs
     * 1.7-2.0 s for the self-join at sf0.1): one exchange by customer;
     * collect_set dedupes and bounds each row at CAP ids; a custom
     * codegen'd expression (SortedLongArrayPackedPairs) emits all

@@ -66,7 +66,7 @@ object SetSim {
     * dictionary + per-doc re-sort), shared by every prefix-filtered
     * operator regardless of threshold.
     */
-  def orderedSets(el: DataFrame): DataFrame =
+  private def orderedSets(el: DataFrame): DataFrame =
     el.join(el.groupBy("h").agg(count(lit(1)).as("df")), "h")
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("ot"))
@@ -123,15 +123,8 @@ object SetSim {
   private def prefixes(el: DataFrame, num: Int, den: Int): DataFrame =
     prefixesFromOrdered(orderedSets(el), num, den)
 
-  /** Positional prefix stream of a wordSets-shaped frame — exposed for
-    * the SCALE-SETSIM probe to count candidates with and without the
-    * PPJoin filters.
-    */
-  def prefixStream(sets: DataFrame, num: Int, den: Int): DataFrame =
-    prefixes(elements(sets), num, den)
-
   /** PPJoin candidate pairs (a < b) for Jaccard ≥ num/den: prefix match
-    * plus, when `ppFilters` (the production path), the LENGTH filter —
+    * plus the LENGTH filter —
     * J ≥ t forces den·min(ca,cb) ≥ num·max(ca,cb) — and the POSITIONAL
     * filter — overlap ≤ 1 + min(ca−pa, cb−pb) for the pair's FIRST
     * shared element in global df-order, which must reach
@@ -140,13 +133,10 @@ object SetSim {
     * prefixes (if it didn't, fewer than ⌈t·L⌉ ≤ α shared elements could
     * remain past the prefix) and its row satisfies the bound, so every
     * true pair survives the OR-over-matching-rows semantics of the
-    * distinct. The unfiltered variant exists only for the SCALE-SETSIM
-    * probe to measure what the filters save.
+    * distinct.
     */
-  def candidatePairs(pre: DataFrame, num: Int, den: Int,
-      ppFilters: Boolean = true): DataFrame = {
-    val base = col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id")
-    val cond = if (!ppFilters) base else base &&
+  private def candidatePairs(pre: DataFrame, num: Int, den: Int): DataFrame = {
+    val cond = col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
       lit(den) * col("a.c") >= lit(num) * col("b.c") &&
       lit(den) * col("b.c") >= lit(num) * col("a.c") &&
       lit(num + den) * (lit(1L) +
@@ -207,7 +197,7 @@ object SetSim {
   }
 
   /** PPJoin candidates for containment |A∩B|/|A| ≥ num/den: A-prefix ×
-    * B-full-set match plus, when `ppFilters`, the LENGTH filter —
+    * B-full-set match plus the LENGTH filter —
     * overlap ≤ |B| must reach α = ⌈num·ca/den⌉, so den·cb ≥ num·ca —
     * and the POSITIONAL filter — 1 + min(ca−pa, cb−pb) ≥ α, i.e.
     * den·(1 + min) ≥ num·ca. Necessary conditions again: the first
@@ -215,10 +205,9 @@ object SetSim {
     * ⌈t·ca⌉, the exact bound the prefix length is built from) and
     * trivially in B's full stream, and its row passes the bound.
     */
-  def containmentCandidates(pre: DataFrame, el: DataFrame, num: Int,
-      den: Int, ppFilters: Boolean = true): DataFrame = {
-    val base = col("a.h") === col("b.h") && col("a.doc_id") =!= col("b.doc_id")
-    val cond = if (!ppFilters) base else base &&
+  private def containmentCandidates(pre: DataFrame, el: DataFrame, num: Int,
+      den: Int): DataFrame = {
+    val cond = col("a.h") === col("b.h") && col("a.doc_id") =!= col("b.doc_id") &&
       lit(den) * col("b.c") >= lit(num) * col("a.c") &&
       lit(den) * (lit(1L) +
         least(col("a.c") - col("a.p"), col("b.c") - col("b.p"))) >=

@@ -1440,7 +1440,7 @@ object VectorSearch {
   //     shortlist and filters afterwards; no index change needed, but
   //     recall decays when k′ × selectivity < k (the shortlist fills
   //     with non-matching near neighbors). Measured on this corpus
-  //     (FannProbe, docs/SCALING.md): at 10% selectivity the unfiltered
+  //     (docs/SCALING.md): at 10% selectivity the unfiltered
   //     k′ = 64 shortlist collapses to worst-probe 0.2 at sf0.1;
   //     k′ ≈ 2.5 × k/selectivity = 256 restores ≥ 0.8.
 
@@ -1456,11 +1456,10 @@ object VectorSearch {
     * contract under a per-probe predicate: ground truth = exact cosine
     * top-10 among label-matching vectors; recall denominator
     * k_true = min(10, #matching) (a 5-matching corpus slice can only
-    * ever yield 5 hits). Returns (probe_id, strategy, hits, k_true) so
-    * the FANN sweep (FannProbe) can print the recall surface; the graded
-    * query reduces it to the integer cross-multiplied bar.
+    * ever yield 5 hits). Returns (probe_id, strategy, hits, k_true); the
+    * graded query reduces it to the integer cross-multiplied bar.
     */
-  private[llmops] def filteredRecallStats(e: DataFrame, short: DataFrame,
+  private def filteredRecallStats(e: DataFrame, short: DataFrame,
       strategy: String): DataFrame = {
     val probes = probeConstraints(e)
     val w = Window.partitionBy(col("probe_id"))
@@ -1512,7 +1511,7 @@ object VectorSearch {
     * label joins in from the corpus here; a production index stores it
     * as a code-table column (one narrow attribute beside 8 code bytes).
     */
-  private[llmops] def filteredScannedCodes(
+  private def filteredScannedCodes(
       s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     val e = embeddingsBase(s, dir)
     val (_, codes) = pqIndex(s, dir)
@@ -1523,12 +1522,12 @@ object VectorSearch {
       .join(broadcast(probedL), Seq("ccid", "label"))
   }
 
-  /** ADC shortlist for the filtered-search arms, parameterized so the
-    * FANN sweep can walk the (nprobe, k′, strategy) surface: scan the
-    * probed lists' codes — label-pre-filtered or not — score by ADC,
-    * keep the top `shortK` per probe.
+  /** ADC shortlist for the filtered-search arms, one point of the
+    * (nprobe, k′, strategy) surface: scan the probed lists' codes —
+    * label-pre-filtered or not — score by ADC, keep the top `shortK` per
+    * probe.
     */
-  private[llmops] def fannShortlist(s: SparkSession, dir: String,
+  private def fannShortlist(s: SparkSession, dir: String,
       nprobe: Int, shortK: Int, prefiltered: Boolean): DataFrame = {
     val e = embeddingsBase(s, dir).select("vec_id", "n_emb")
     val (cb, _) = pqIndex(s, dir)
@@ -1550,7 +1549,7 @@ object VectorSearch {
     * operator exists to surface: the filtered ground truth is the
     * top-10 of a 10%-selective slice whose TAIL members are not near
     * the probe overall and live in lists the unfiltered nprobe = 6
-    * budget never reads. Measured (FannProbe, all three SFs): at
+    * budget never reads. Measured (all three SFs): at
     * nprobe = 6 worst-probe filtered recall dips to 0.5–0.6 pre-filter
     * and 0.2 post-filter; widening helps monotonically but only
     * nprobe = nlists closes it — so for a predicate this selective the
@@ -1565,8 +1564,8 @@ object VectorSearch {
   /** Post-filter needs BOTH the full probe budget and a k/selectivity-
     * scaled over-fetch: k′ = 256 ≈ 2.5 × k/selectivity holds worst-probe
     * 0.8–1.0 (at k′ = 64 it collapses to 0.2 at sf0.1 — the shortlist
-    * fills with non-matching near neighbors; the FannProbe table prices
-    * the decay).
+    * fills with non-matching near neighbors; the docs/SCALING.md
+    * filtered-ANN table prices the decay).
     */
   val FANN_OVERFETCH = 256
   /** Bars with the sibling queries' slack discipline: pre-filter 0.8

@@ -149,8 +149,8 @@ case class AsOfJoinExec(
 
 /** Public API: `AsOf.join(left, right, key, time)` — key columns must be
   * integral, time columns timestamp or long (compared on their internal
-  * long encoding). The strategy self-registers into the session's
-  * experimental strategies (idempotent).
+  * long encoding). The planner strategy comes with every session
+  * `graft.Sessions.local` builds (`graft.functions.GraftExtensions`).
   */
 object AsOf {
   def join(
@@ -159,10 +159,6 @@ object AsOf {
       leftKeyCol: String, leftTimeCol: String,
       rightKeyCol: String, rightTimeCol: String): DataFrame = {
     val spark = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
-
     def keyed(df: DataFrame, keyCol: String, timeCol: String): DataFrame = {
       val kt = df.schema(keyCol).dataType
       val tt = df.schema(timeCol).dataType

@@ -35,16 +35,8 @@ object Catalog {
     df.write.mode("overwrite").parquet(s"$root/tables/$table/v=$v")
 
   /** Committed catalog versions, oldest first. */
-  def versions(spark: SparkSession, root: String): Seq[Long] = {
-    val dir = new HPath(s"$root/catalog")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .flatMap(st => st.getPath.getName.stripPrefix("v=").toLongOption
-        .filter(_ => fs.exists(new HPath(st.getPath, "_SUCCESS"))))
-      .sorted
-  }
+  def versions(spark: SparkSession, root: String): Seq[Long] =
+    Lake.versions(spark, s"$root/catalog")
 
   /** Atomically publish a new catalog version mapping table → version.
     * `base` is the catalog version the transaction READ (−1 for an

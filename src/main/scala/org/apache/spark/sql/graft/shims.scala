@@ -27,10 +27,9 @@ object shims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Drain the async listener bus (private[spark]): a probe that tags
-    * QueryExecutionListener events per query must wait for delivery
-    * before reading/advancing the tag, or events attribute to the NEXT
-    * query (round-15 advice on InventoryCensus).
+  /** Drain the async listener bus (private[spark]): a recorder that
+    * charges listener events to the open run must wait for delivery
+    * before closing the run, or events attribute to the NEXT one.
     */
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()

@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 import graft.core.Exact
+import graft.core.Scratch
 
 /** Property-based laws (SURVEY.md §5.3): round-trip identity, dedup
   * idempotence, streaming/batch window equivalence, decimal-sum order
@@ -28,7 +28,7 @@ object GraftProps extends Properties("graft") {
 
   property("parquet round-trip identity") = forAll(rowGen) { rows =>
     val df = rows.toDF("id", "user_id", "value", "event_type")
-    val path = Files.createTempDirectory("graft_prop").toString + "/t"
+    val path = Scratch.fresh("graft_prop").toString + "/t"
     df.write.mode("overwrite").parquet(path)
     val back = spark.read.parquet(path)
     back.count() == rows.length &&

@@ -1,22 +1,19 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Dev probe (Test/runMain graft.InventoryCensus): the round-14 verdict's
-  * ask 4 — the decade probes cover the 4 heaviest queries, but the other
-  * ~355 had never run above sf0.1. This runs the ENTIRE SparkEntry
-  * inventory once against a k×-replicated lake (all ten tables, k=5 by
-  * default) with a QueryExecutionListener census on every execution each
-  * build triggers, and reports SHAPE FLIPS — a plan node class (
-  * CartesianProduct, BroadcastNestedLoopJoin, SortAggregate) that
-  * appears at k=5 but not in the same query's k=1 baseline — plus any
-  * query that errors at scale. Flips, not walls: the box's load phases
-  * make one-shot walls unciteable, but a lost broadcast or a new
-  * nested-loop join is load-independent evidence of a plan that will
-  * not survive 100 TB.
+/** Dev probe (Test/runMain graft.InventoryCensus): runs the SparkEntry
+  * inventory once against sf0.1 and once against a k×-replicated lake
+  * (all ten tables, k=5 by default), each query under a
+  * [[Profile.Recorder]], and prints every query's record (wall, build /
+  * plan / exec split, jobs, task counters, node census). It then reports
+  * SHAPE FLIPS — a tracked plan node ([[Profile.TrackedNodes]]) that
+  * appears at k but not in the same query's k=1 baseline — plus any
+  * query that errors at scale. Flips are load-independent evidence of a
+  * plan that will not survive 100 TB; the walls grow a decade table when
+  * the probe is rerun once per k with SPARK_GRAFT_CENSUS_ONLY naming the
+  * queries.
   *
   * Replication preserves each table's referential arithmetic:
   *   - region/nation: kept as-is (genuinely fixed-size dimensions —
@@ -43,47 +40,23 @@ object InventoryCensus {
     val only = sys.env.get("SPARK_GRAFT_CENSUS_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
-    val nodes = Seq("CartesianProduct", "BroadcastNestedLoopJoin", "SortAggregate")
-    val hits = scala.collection.mutable.Map
-      .empty[(String, String), Int].withDefaultValue(0) // (tag, node) -> n
-    @volatile var tag = ""
-    spark.listenerManager.register(new QueryExecutionListener {
-      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = {
-        val p = qe.executedPlan.toString
-        nodes.foreach(n => if (p.contains(n)) hits.synchronized {
-          hits((tag, n)) += 1
-        })
-      }
-      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
-    })
+    val rec = new Profile.Recorder(spark)
 
     val src = "/root/testdata/sf0.1"
     val dir = s"/tmp/graft_census/k$k"
     materialize(spark, src, dir, k)
 
     def sweep(label: String, sfDir: String): Map[String, Set[String]] = {
-      val errors = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      SparkEntry.queries.toSeq.sortBy(_._1)
+      val records = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-        .foreach { case (name, fn) =>
-          tag = name
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count(); () }
-          catch { case scala.util.control.NonFatal(e) =>
-            errors += ((name, String.valueOf(e.getMessage).take(160))) }
-          // QueryExecutionListener events are delivered asynchronously;
-          // drain the bus BEFORE advancing the tag or an execution's
-          // hits mis-attribute to the next query (round-15 advice)
-          org.apache.spark.sql.graft.shims.drainListenerBus(spark)
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (sec > 20) println(f"CENSUS $label $name%-28s $sec%7.1f s")
+        .map { case (name, fn) =>
+          val r = rec.run(s"$label $name")(fn(spark, sfDir))
+          println(r.show)
+          name -> r
         }
-      errors.foreach { case (n, m) => println(s"CENSUS $label ERROR $n: $m") }
-      val byQuery = hits.synchronized {
-        hits.keys.groupBy(_._1).map { case (q, ks) => q -> ks.map(_._2).toSet }
-      }
-      hits.synchronized(hits.clear())
-      byQuery
+      records.foreach { case (n, r) =>
+        r.error.foreach(m => println(s"CENSUS $label ERROR $n: $m")) }
+      records.collect { case (n, r) if r.nodes.nonEmpty => n -> r.nodes }.toMap
     }
 
     println(s"=== k=1 baseline sweep ($src) ===")
@@ -106,6 +79,7 @@ object InventoryCensus {
     println(s"queries with any tracked node at k=$k: ${scaled.size}; " +
       s"shape flips k1->k$k: $flips")
     if (flips == 0) println("NO FLIPS: every broadcast/hash-agg shape held at scale")
+    rec.close()
     spark.stop()
   }
 

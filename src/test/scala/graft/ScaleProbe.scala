@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.Scratch
 import graft.llmops.{MinHashLSH, Shingles}
 
 /** Dev probe (Test/runMain graft.ScaleProbe): measure the near-dup LSH
@@ -67,16 +68,8 @@ object ScaleProbe {
       val sets = MinHashLSH.wordSets(corpus(k), 3).cache()
       val pairs = SetSim.similarPairs(sets, SetSim.T_NUM, SetSim.T_DEN).count()
       val sec = (System.nanoTime() - t0) / 1e9
-      // candidate volumes OUTSIDE the timed window: prefix-match-only vs
-      // after PPJoin's length+positional filters — the filters' cut at
-      // provably identical output (both paths verify to `pairs`)
-      val pre = SetSim.prefixStream(sets, SetSim.T_NUM, SetSim.T_DEN).cache()
-      val candRaw = SetSim
-        .candidatePairs(pre, SetSim.T_NUM, SetSim.T_DEN, ppFilters = false).count()
-      val cand = SetSim.candidatePairs(pre, SetSim.T_NUM, SetSim.T_DEN).count()
-      pre.unpersist(); sets.unpersist()
-      println(f"SCALE-SETSIM k=$k%2d docs=${baseN * k}%6d candRaw=$candRaw%6d " +
-        f"cand=$cand%6d pairs=$pairs%5d sec=$sec%7.2f")
+      sets.unpersist()
+      println(f"SCALE-SETSIM k=$k%2d docs=${baseN * k}%6d pairs=$pairs%5d sec=$sec%7.2f")
     }
 
     // ---- domain cap: partial top-k agg vs the window plan ----
@@ -1009,8 +1002,7 @@ object ScaleProbe {
                       ELSE array_join(transform(split(text, ' '),
                                       w -> concat('r', rep, w)), ' ')
                       END""").as("text"))
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft_inccur_probe").toString
+        val scratch = Scratch.fresh("graft_inccur_probe").toString
         val t0 = System.nanoTime()
         graft.llmops.IncrementalCuration.bootstrapIndexes(standingK, scratch)
         val tBuild = (System.nanoTime() - t0) / 1e9

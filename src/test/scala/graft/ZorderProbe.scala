@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.Lake
+import graft.core.Scratch
 
 /** Dev probe (Test/runMain graft.ZorderProbe): measure file skipping of
   * the z-order layout vs linear clustering at sf0.1, across band widths
@@ -17,8 +17,8 @@ object ZorderProbe {
     val orders = graft.core.Tables(spark, "/root/testdata/sf0.1", "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val files = 64
-    val zdir = Files.createTempDirectory("zprobe_z").toString + "/orders"
-    val ldir = Files.createTempDirectory("zprobe_l").toString + "/orders"
+    val zdir = Scratch.fresh("zprobe_z").toString + "/orders"
+    val ldir = Scratch.fresh("zprobe_l").toString + "/orders"
     Lake.writeZOrdered(orders, zdir, files, "o_custkey", "o_totalprice")
     Lake.writeClustered(orders, ldir, files, "o_custkey", "o_totalprice")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(

@@ -5,10 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
-/** The one scratch policy (core.Scratch) and the one session builder
-  * (Sessions.local): every transient path hangs off one swept root, and
-  * no other source file builds a session, picks a tmpfs path or
-  * registers a shutdown hook.
+/** The one scratch policy (core.Scratch), the one session builder
+  * (Sessions.local) and the one measurement tool (graft.Profile): every
+  * transient path hangs off one swept root, and no other source file
+  * builds a session, creates a temp dir, picks a tmpfs path, registers a
+  * shutdown hook or attaches a listener.
   */
 class ScratchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -47,23 +48,33 @@ class ScratchSpec extends AnyFunSuite {
     Scratch.rmTree(outside) // a missing path is fine
   }
 
+  // the source lint's view: every .scala file, and per pattern the files
+  // that contain it with their occurrence counts
+  private lazy val sources = Seq("src/main", "src/test").flatMap { root =>
+    val w = Files.walk(Paths.get(root))
+    try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally w.close()
+  }
+  private def where(pattern: String): Map[String, Int] =
+    sources.map(f => f.toString -> (Files.readString(f)
+      .split(java.util.regex.Pattern.quote(pattern), -1).length - 1))
+      .filter(_._2 > 0).toMap
+
+  // patterns are split so this file does not match them
   test("only Sessions builds a session and only core.Scratch owns tmpfs and exit hooks") {
-    // split so this file does not match its own patterns
-    val builder = "SparkSession" + ".builder"
-    val shm = "\"/dev/" + "shm\""
-    val hook = "addShutdown" + "Hook"
-    val files = Seq("src/main", "src/test").flatMap { root =>
-      val w = Files.walk(Paths.get(root))
-      try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally w.close()
-    }
-    assert(files.nonEmpty)
-    def where(pattern: String): Map[String, Int] =
-      files.map(f => f.toString -> (Files.readString(f)
-        .split(java.util.regex.Pattern.quote(pattern), -1).length - 1))
-        .filter(_._2 > 0).toMap
-    assert(where(builder) == Map("src/main/scala/graft/Sessions.scala" -> 1))
-    assert(where(shm) == Map("src/main/scala/graft/core/Core.scala" -> 1))
-    assert(where(hook) == Map("src/main/scala/graft/core/Core.scala" -> 1))
+    assert(sources.nonEmpty)
+    assert(where("SparkSession" + ".builder") ==
+      Map("src/main/scala/graft/Sessions.scala" -> 1))
+    assert(where("\"/dev/" + "shm\"") == Map("src/main/scala/graft/core/Core.scala" -> 1))
+    assert(where("addShutdown" + "Hook") == Map("src/main/scala/graft/core/Core.scala" -> 1))
+  }
+
+  test("only core.Scratch creates temp dirs and only Profile attaches listeners") {
+    assert(where("createTemp" + "Directory").keySet ==
+      Set("src/main/scala/graft/core/Core.scala"))
+    assert(where("listenerManager" + ".register") ==
+      Map("src/main/scala/graft/Profile.scala" -> 1))
+    assert(where("addSpark" + "Listener") ==
+      Map("src/main/scala/graft/Profile.scala" -> 1))
   }
 }

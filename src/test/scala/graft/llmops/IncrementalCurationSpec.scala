@@ -3,6 +3,7 @@ package graft.llmops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** x_incremental_curation: every verdict class proven on a synthetic
   * lake — the sf fixtures never fire 'exact_dup' (no cross-watermark
@@ -38,8 +39,7 @@ class IncrementalCurationSpec extends AnyFunSuite {
     ).toDF("doc_id", "lang", "text")
     val bench = Seq((900L, "en", bench1)).toDF("doc_id", "lang", "text")
 
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-inccur-spec").toString
+    val scratch = Scratch.fresh("graft-inccur-spec").toString
     IncrementalCuration.bootstrapIndexes(standing, scratch)
 
     val benchGrams = bench.select(
@@ -70,8 +70,7 @@ class IncrementalCurationSpec extends AnyFunSuite {
     val b1Clean = words("b1w", 25)
     val standing = Seq((1L, "en", words("s1w", 25)))
       .toDF("doc_id", "lang", "text")
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-inccur-spec3").toString
+    val scratch = Scratch.fresh("graft-inccur-spec3").toString
     IncrementalCuration.bootstrapIndexes(standing, scratch)
     val benchGrams = Seq.empty[Long].toDF("g")
     val eb = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "emb")
@@ -111,8 +110,7 @@ class IncrementalCurationSpec extends AnyFunSuite {
     val shortText = "tiny shared text"
     val standing = Seq((1L, "en", shortText)).toDF("doc_id", "lang", "text")
     val batch = Seq((101L, "en", shortText)).toDF("doc_id", "lang", "text")
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-inccur-spec2").toString
+    val scratch = Scratch.fresh("graft-inccur-spec2").toString
     IncrementalCuration.bootstrapIndexes(standing, scratch)
     val benchGrams = Seq.empty[Long].toDF("g")
     val eb = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "emb")

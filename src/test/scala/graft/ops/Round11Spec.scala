@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** Round-11 additions beyond the per-operator specs. */
 class Round11Spec extends AnyFunSuite {
@@ -293,7 +294,7 @@ class Round11Spec extends AnyFunSuite {
     import org.apache.hadoop.fs.Path
     val dir = "/root/testdata/sf0.01"
     val orders = graft.core.Tables(spark, dir, "orders")
-    val root = java.nio.file.Files.createTempDirectory("hvz").toString
+    val root = Scratch.fresh("hvz").toString
     graft.sources.Lake.writeZOrdered(orders, s"$root/z", 16,
       "o_custkey", "o_totalprice")
     graft.sources.Lake.writeHilbertOrdered(orders, s"$root/h", 16,

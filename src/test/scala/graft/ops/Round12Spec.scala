@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** Round-12 additions beyond the per-operator specs: the right-outer
   * Q11 spelling's null side, the GDPR-erasure audit's fully-tombstoned
@@ -40,8 +41,7 @@ class Round12Spec extends AnyFunSuite {
   test("x_forget_user: an event_type whose rows are ALL tombstoned " +
     "still reports rows_after = 0 (left join, not inner)") {
     val G = graft.llmops.Governance
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-forget-spec").toString
+    val scratch = Scratch.fresh("graft-forget-spec").toString
     val rows = (0L until 100L).map { i =>
       // type "gone": every row erased (user_id multiple of 37);
       // type "stay": none erased

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 import graft.functions.TextNormalize
 import graft.llmops.{HeavyHitters, WebClean}
+import graft.core.Scratch
 
 /** Round-5 additions: SCD2 + point-in-time join, Unicode normalization,
   * web cleaning, Misra-Gries heavy hitters, ORC round-trip.
@@ -182,7 +183,7 @@ class Round5Spec extends AnyFunSuite {
 
   test("ORC round-trip is lossless for lineitem") {
     val li = graft.core.Tables(spark, sf, "lineitem")
-    val out = java.nio.file.Files.createTempDirectory("orc_spec").toString
+    val out = Scratch.fresh("orc_spec").toString
     try {
       graft.sources.Lake.writeAs(li, "orc", s"$out/li")
       val back = graft.sources.Lake.readAs(spark, "orc", s"$out/li")

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
-import graft.functions.GraftFunctions
 
 class SkewAndFunctionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -82,7 +81,6 @@ class SkewAndFunctionsSpec extends AnyFunSuite {
   }
 
   test("array_dot is callable from SQL after registration") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT array_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d")
       .as[Double].head()
@@ -90,7 +88,6 @@ class SkewAndFunctionsSpec extends AnyFunSuite {
   }
 
   test("shingle-hash and minhash expressions are callable from SQL") {
-    GraftFunctions.register(spark)
     // parity with the column function on the same text
     val viaSql = spark.sql(
       "SELECT word_shingle_hashes('a b c d', 3) AS hs")
@@ -115,7 +112,6 @@ class SkewAndFunctionsSpec extends AnyFunSuite {
   }
 
   test("winnow_fingerprints is callable from SQL and matches the column form") {
-    GraftFunctions.register(spark)
     val text = "a b c d e f g h i j"
     val viaSql = spark.sql(
       s"SELECT winnow_fingerprints('$text', 3, 4) AS fps")
@@ -134,7 +130,6 @@ class SkewAndFunctionsSpec extends AnyFunSuite {
   }
 
   test("jaro_winkler_similarity and sorted_intersect_count from SQL") {
-    GraftFunctions.register(spark)
     val jw = spark.sql(
       "SELECT round(jaro_winkler_similarity('MARTHA', 'MARHTA'), 6) AS s")
       .as[Double].head()

@@ -3,11 +3,12 @@ package graft.pipeline
 import java.nio.file.Files
 import java.time.LocalDateTime
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.Scratch
 
 class ConfigAndKeysSpec extends AnyFunSuite {
 
   test("INI loader parses the reference config shape") {
-    val ini = Files.createTempDirectory("graft_ini").resolve("config.ini")
+    val ini = Scratch.fresh("graft_ini").resolve("config.ini")
     Files.writeString(ini,
       """[aws]
         |aws_access_key_id = AKIA123
@@ -25,7 +26,7 @@ class ConfigAndKeysSpec extends AnyFunSuite {
   }
 
   test("INI loader fails fast on a missing key (reference swallows this)") {
-    val ini = Files.createTempDirectory("graft_ini2").resolve("config.ini")
+    val ini = Scratch.fresh("graft_ini2").resolve("config.ini")
     Files.writeString(ini, "[datalake]\nbronze_bucket = only-one\n")
     val e = intercept[RuntimeException](LakeConfig.fromIni(ini.toString))
     assert(e.getMessage.contains("silver_bucket"))

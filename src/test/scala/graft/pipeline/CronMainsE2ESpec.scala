@@ -2,11 +2,11 @@ package graft.pipeline
 
 import java.io.ByteArrayOutputStream
 import java.net.InetSocketAddress
-import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 import com.sun.net.httpserver.HttpServer
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** Round-15 (verdict ask 7): the three cron ENTRY POINTS — RunIngest,
   * RunSerialise, RunAggregate — driven end to end as binaries (their
@@ -45,7 +45,7 @@ class CronMainsE2ESpec extends AnyFunSuite {
       try ex.getResponseBody.write(payload) finally ex.close()
     })
     server.start()
-    val root = Files.createTempDirectory("graft_cron_e2e").toString
+    val root = Scratch.fresh("graft_cron_e2e").toString
     try {
       // hour 7 on 2023-01-01 — exercises the reference's unpadded-%-H
       // source URL vs zero-padded %H partition-path quirk end to end

@@ -7,6 +7,7 @@ import java.time.LocalDateTime
 import java.util.zip.GZIPOutputStream
 import com.sun.net.httpserver.HttpServer
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.Scratch
 
 /** Bronze ingestion (R1/R2) against a local HTTP server — covers what the
   * reference leaves untested: URL construction, streaming download, key
@@ -33,7 +34,7 @@ class IngesterSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val root = Files.createTempDirectory("graft_ingest").toString
+      val root = Scratch.fresh("graft_ingest").toString
       val config = LakeConfig(s"$root/bronze", s"$root/silver", s"$root/gold")
       val ingester = new Ingester(config,
         sourceBaseUrl = s"http://localhost:${server.getAddress.getPort}")
@@ -52,7 +53,7 @@ class IngesterSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val root = Files.createTempDirectory("graft_ingest2").toString
+      val root = Scratch.fresh("graft_ingest2").toString
       val config = LakeConfig(s"$root/bronze", s"$root/silver", s"$root/gold")
       val ingester = new Ingester(config,
         sourceBaseUrl = s"http://localhost:${server.getAddress.getPort}")

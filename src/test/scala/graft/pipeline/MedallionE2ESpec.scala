@@ -1,11 +1,11 @@
 package graft.pipeline
 
 import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
-import java.nio.file.Files
 import java.time.LocalDateTime
 import java.util.zip.GZIPOutputStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** End-to-end medallion smoke (SURVEY.md §5 t1): gzipped JSON-lines bronze
   * fixture (with one malformed line → DROPMALFORMED) → silver → gold.
@@ -14,7 +14,7 @@ class MedallionE2ESpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("bronze json.gz → silver parquet → gold parquet") {
-    val root = Files.createTempDirectory("graft_lake").toString
+    val root = Scratch.fresh("graft_lake").toString
     val config = LakeConfig(s"$root/bronze", s"$root/silver", s"$root/gold")
     val date = LocalDateTime.of(2023, 1, 1, 7, 0)
 

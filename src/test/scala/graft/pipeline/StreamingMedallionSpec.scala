@@ -1,10 +1,10 @@
 package graft.pipeline
 
 import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
-import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 class StreamingMedallionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -22,7 +22,7 @@ class StreamingMedallionSpec extends AnyFunSuite {
   }
 
   test("streaming silver discovers bronze files incrementally, resumes from checkpoint") {
-    val root = Files.createTempDirectory("graft_slake").toString
+    val root = Scratch.fresh("graft_slake").toString
     val config = LakeConfig(s"$root/bronze", s"$root/silver", s"$root/gold")
     val ckpt = s"$root/ckpt"
 
@@ -55,7 +55,7 @@ class StreamingMedallionSpec extends AnyFunSuite {
 
   test("PERMISSIVE mode surfaces malformed rows instead of dropping them") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_perm").toString
+    val dir = Scratch.fresh("graft_perm").toString
     writeGz(s"$dir/h.json.gz", Seq(event(1, 9), "not json at all"))
     val schema = GhArchive.rawSchema
       .add("_corrupt_record", org.apache.spark.sql.types.StringType)

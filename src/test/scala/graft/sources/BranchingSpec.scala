@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** Round-13: lake branching/merge semantics + the multiprobe twin. */
 class BranchingSpec extends AnyFunSuite {
@@ -11,7 +11,7 @@ class BranchingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def store(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/s"
+    Scratch.fresh(prefix).toString + "/s"
 
   test("merge fast-forwards when main has not moved") {
     val root = store("graft_br_ff")

@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** Round-13 lake additions: merge-on-read equality deletes and the
   * multi-table catalog transaction.
@@ -13,7 +13,7 @@ class DeleteCatalogSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("equality deletes: merge-on-read excludes keys; data files untouched") {
-    val root = Files.createTempDirectory("graft_eqdel_spec").toString + "/s"
+    val root = Scratch.fresh("graft_eqdel_spec").toString + "/s"
     val data = (1L to 100L).map(k => (k, s"v$k")).toDF("k", "v")
     ConcurrentCommit.commitAppend(spark, root, data.repartition(4), "w0")
     DeleteVectors.commitDelete(Seq(3L, 5L).toDF("k"), root)
@@ -25,7 +25,7 @@ class DeleteCatalogSpec extends AnyFunSuite {
   }
 
   test("equality deletes: compaction folds + retires; idempotent re-apply") {
-    val root = Files.createTempDirectory("graft_eqdel_spec2").toString + "/s"
+    val root = Scratch.fresh("graft_eqdel_spec2").toString + "/s"
     val data = (1L to 50L).map(k => (k, k * 10)).toDF("k", "x")
     ConcurrentCommit.commitAppend(spark, root, data, "w0")
     DeleteVectors.commitDelete(Seq(2L, 4L).toDF("k"), root)
@@ -45,7 +45,7 @@ class DeleteCatalogSpec extends AnyFunSuite {
   }
 
   test("catalog: versions resolve atomically; a stale publisher loses") {
-    val root = Files.createTempDirectory("graft_cat_spec").toString + "/lake"
+    val root = Scratch.fresh("graft_cat_spec").toString + "/lake"
     Catalog.writeTable(Seq((1L, "a")).toDF("k", "v"), root, "t1", 0L)
     Catalog.writeTable(Seq((1L, "x")).toDF("k", "w"), root, "t2", 0L)
     val v0 = Catalog.publish(spark, root, Map("t1" -> 0L, "t2" -> 0L),

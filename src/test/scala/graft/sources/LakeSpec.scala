@@ -1,16 +1,16 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 class LakeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("date-partitioned write produces hive dirs and prunes on read") {
-    val out = Files.createTempDirectory("graft_part").toString + "/events"
+    val out = Scratch.fresh("graft_part").toString + "/events"
     val events = graft.core.Tables(spark, sf, "events")
     Lake.writeDatePartitioned(events, "ts", out)
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
@@ -43,7 +43,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("compact merges small files, preserves rows, and is idempotent") {
     val events = graft.core.Tables(spark, sf, "events")
-    val dir = Files.createTempDirectory("graft_compact").toString + "/events"
+    val dir = Scratch.fresh("graft_compact").toString + "/events"
     events.repartition(40).write.parquet(dir) // simulate micro-batch litter
     def nFiles = new java.io.File(dir).listFiles()
       .count(f => f.getName.endsWith(".parquet"))
@@ -58,7 +58,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("compact recovers a half-swapped directory from a prior crash") {
     val events = graft.core.Tables(spark, sf, "events")
-    val dir = Files.createTempDirectory("graft_compact_rec").toString + "/events"
+    val dir = Scratch.fresh("graft_compact_rec").toString + "/events"
     events.repartition(8).write.parquet(dir)
     val n = events.count()
     // simulate a crash between the two swap renames: source gone,
@@ -75,7 +75,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("upsert replaces same-key rows and appends new keys") {
     val nation = graft.core.Tables(spark, sf, "nation")
-    val dir = Files.createTempDirectory("graft_upsert").toString + "/nation"
+    val dir = Scratch.fresh("graft_upsert").toString + "/nation"
     nation.write.parquet(dir)
     val updates = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(
@@ -95,7 +95,7 @@ class LakeSpec extends AnyFunSuite {
   test("clustered write narrows per-file min/max bands for pruning") {
     val orders = graft.core.Tables(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
-    val dir = Files.createTempDirectory("graft_cluster").toString + "/orders"
+    val dir = Scratch.fresh("graft_cluster").toString + "/orders"
     Lake.writeClustered(orders, dir, numFiles = 4, "o_custkey")
     // each output file must cover a disjoint o_custkey range
     val files = new java.io.File(dir).listFiles()
@@ -116,7 +116,7 @@ class LakeSpec extends AnyFunSuite {
   test("versioned dataset: compact publishes a new version while a reader " +
       "of the old version is undisturbed") {
     val events = graft.core.Tables(spark, sf, "events")
-    val root = Files.createTempDirectory("graft_versioned").toString + "/events"
+    val root = Scratch.fresh("graft_versioned").toString + "/events"
     val n = events.count()
     val v0 = Lake.writeVersioned(events.repartition(40), root)
     assert(v0 == 0)
@@ -155,7 +155,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("versioned reader ignores an uncommitted (no _SUCCESS) version") {
     val nation = graft.core.Tables(spark, sf, "nation")
-    val root = Files.createTempDirectory("graft_versioned2").toString + "/nation"
+    val root = Scratch.fresh("graft_versioned2").toString + "/nation"
     Lake.writeVersioned(nation, root)
     // simulate a writer that died mid-publish: v=1 exists without _SUCCESS
     val half = new java.io.File(s"$root/v=1")
@@ -181,7 +181,7 @@ class LakeSpec extends AnyFunSuite {
   test("manifest-pruned read skips non-overlapping files and loses no rows") {
     val orders = graft.core.Tables(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
-    val dir = Files.createTempDirectory("graft_manifest").toString + "/orders"
+    val dir = Scratch.fresh("graft_manifest").toString + "/orders"
     Lake.writeClusteredWithManifest(orders, dir, 8, "o_custkey")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
@@ -209,7 +209,7 @@ class LakeSpec extends AnyFunSuite {
     val orders = graft.core.Tables(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val files = 16
-    val zdir = Files.createTempDirectory("graft_z").toString + "/orders"
+    val zdir = Scratch.fresh("graft_z").toString + "/orders"
     Lake.writeZOrdered(orders, zdir, files, "o_custkey", "o_totalprice")
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
@@ -228,7 +228,7 @@ class LakeSpec extends AnyFunSuite {
     assert(byBoth <= math.min(byCust, byPrice))
     // linear clustering on (custkey, price) gives price NO locality:
     // the same price band touches every linearly-clustered file
-    val ldir = Files.createTempDirectory("graft_lin").toString + "/orders"
+    val ldir = Scratch.fresh("graft_lin").toString + "/orders"
     Lake.writeClustered(orders, ldir, files, "o_custkey", "o_totalprice")
     val linTouched = spark.read.parquet(ldir)
       .groupBy(input_file_name())
@@ -248,7 +248,7 @@ class LakeSpec extends AnyFunSuite {
     // plain readers are unaffected by the underscore manifest
     assert(spark.read.parquet(zdir).count() == orders.count())
     // an EMPTY input writes a readable plain layout (no manifest, no NPE)
-    val edir = Files.createTempDirectory("graft_zempty").toString + "/orders"
+    val edir = Scratch.fresh("graft_zempty").toString + "/orders"
     Lake.writeZOrdered(orders.limit(0), edir, files, "o_custkey", "o_totalprice")
     assert(Lake.readZPruned(spark, edir, Seq(ck, tp)).count() == 0)
     // a band on a column the manifest doesn't carry degrades to a full
@@ -263,7 +263,7 @@ class LakeSpec extends AnyFunSuite {
     val nation = graft.core.Tables(spark, sf, "nation")
     val n = nation.count()
     Seq("csv", "json", "orc").foreach { fmt =>
-      val out = Files.createTempDirectory(s"graft_$fmt").toString + "/nation"
+      val out = Scratch.fresh(s"graft_$fmt").toString + "/nation"
       Lake.writeAs(nation, fmt, out)
       val back = Lake.readAs(spark, fmt, out, Some(nation.schema))
       assert(back.count() == n, s"$fmt round-trip lost rows")
@@ -336,7 +336,7 @@ class LakeSpec extends AnyFunSuite {
     val sfDir = "/root/testdata/sf0.01"
     val orders = graft.core.Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
-    val dir = Files.createTempDirectory("graft_pqbloom").toString + "/orders"
+    val dir = Scratch.fresh("graft_pqbloom").toString + "/orders"
     Lake.writeClusteredParquetNative(orders, dir, 8, "o_custkey",
       Seq("o_orderkey" -> 200000L))
     // 1) the filter is physically in every footer (parquet-mr skips
@@ -399,7 +399,7 @@ class LakeSpec extends AnyFunSuite {
     val sfDir = "/root/testdata/sf0.01"
     val orders = graft.core.Tables(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
-    val dir = Files.createTempDirectory("graft_pqpage").toString + "/orders"
+    val dir = Scratch.fresh("graft_pqpage").toString + "/orders"
     Lake.writeClusteredParquetNative(orders, dir, 1, "o_custkey",
       Seq.empty, pageRows = 500)
     val files = new java.io.File(dir).listFiles()

@@ -1,10 +1,10 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** Round-13: orphan-file GC semantics. */
 class OrphanGcSpec extends AnyFunSuite {
@@ -12,7 +12,7 @@ class OrphanGcSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("orphan GC removes only unreferenced paths; claims survive") {
-    val root = Files.createTempDirectory("graft_ogc_spec").toString + "/s"
+    val root = Scratch.fresh("graft_ogc_spec").toString + "/s"
     val fs = new HPath(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     ConcurrentCommit.commitAppend(spark, root,

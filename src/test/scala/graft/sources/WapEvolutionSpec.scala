@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** Round-13 lake additions: the WAP gate and partition-spec evolution. */
 class WapEvolutionSpec extends AnyFunSuite {
@@ -14,7 +14,7 @@ class WapEvolutionSpec extends AnyFunSuite {
 
   test("WAP: a failing audit never publishes; main state is untouched") {
     val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
-    val root = Files.createTempDirectory("graft_wap_spec").toString + "/store"
+    val root = Scratch.fresh("graft_wap_spec").toString + "/store"
     ConcurrentCommit.commitAppend(spark, root, base, "w0")
 
     // candidate with one null key and one duplicated key
@@ -31,7 +31,7 @@ class WapEvolutionSpec extends AnyFunSuite {
 
   test("WAP: a row-floor regression fails the audit even with clean keys") {
     val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
-    val root = Files.createTempDirectory("graft_wap_spec2").toString + "/store"
+    val root = Scratch.fresh("graft_wap_spec2").toString + "/store"
     ConcurrentCommit.commitAppend(spark, root, base, "w0")
     // a "merged" candidate that silently LOST a base row
     val staged = Wap.stage(base.filter(col("k") =!= 2), root, "shrunk")
@@ -41,7 +41,7 @@ class WapEvolutionSpec extends AnyFunSuite {
 
   test("WAP: publish is CAS-guarded — a stale publisher loses, state stays consistent") {
     val base = Seq((1L, "a")).toDF("k", "v")
-    val root = Files.createTempDirectory("graft_wap_spec3").toString + "/store"
+    val root = Scratch.fresh("graft_wap_spec3").toString + "/store"
     ConcurrentCommit.commitAppend(spark, root, base, "w0")
     val s1 = Wap.stage(Lake.readCurrent(spark, root)
       .unionByName(Seq((2L, "b")).toDF("k", "v")), root, "c1")
@@ -72,7 +72,7 @@ class WapEvolutionSpec extends AnyFunSuite {
 
   test("partition evolution: both generations dir-prune; union is exact") {
     import PartitionEvolution._
-    val root = Files.createTempDirectory("graft_pevo_spec").toString + "/lake"
+    val root = Scratch.fresh("graft_pevo_spec").toString + "/lake"
     writeLayouts(spark, SF, root)
 
     // Catalyst prunes the week layout to the partition-filter dirs: the

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** Round-13: the transactional additive foreachBatch sink + the sampled
   * dup-rate estimator.
@@ -13,7 +13,7 @@ class AdditiveSinkSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def mv(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/mv"
+    Scratch.fresh(prefix).toString + "/mv"
 
   private def batchDf(rows: (String, Double)*) =
     rows.toDF("event_type", "value")

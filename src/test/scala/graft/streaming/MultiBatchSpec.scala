@@ -1,10 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** Cross-micro-batch state: split the events table into 4 files, force one
   * file per micro-batch, and check stateful streaming results still equal
@@ -57,7 +57,7 @@ class MultiBatchSpec extends AnyFunSuite {
 
   test("windowed aggregation state carries across micro-batches") {
     val src = graft.core.Tables(spark, "/root/testdata/sf0.001", "events")
-    val dir = Files.createTempDirectory("graft_multibatch").toString
+    val dir = Scratch.fresh("graft_multibatch").toString
     // 4 roughly-equal files; rows of one hour may span several batches
     src.repartition(4).write.mode("overwrite").parquet(dir)
 
@@ -71,7 +71,7 @@ class MultiBatchSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("ws"), col("event_type"), col("n"))
 
-    val ckpt = Files.createTempDirectory("graft_mb_ckpt").toString
+    val ckpt = Scratch.fresh("graft_mb_ckpt").toString
     val q = agg.writeStream.format("memory").queryName("mb_out")
       .outputMode(OutputMode.Complete())
       .option("checkpointLocation", ckpt)
@@ -99,7 +99,7 @@ class MultiBatchSpec extends AnyFunSuite {
     // batch is what a 100 TB deployment pays per increment, the first
     // batch plus query-start wall is what the bench measures.
     val src = graft.core.Tables(spark, "/root/testdata/sf0.001", "events")
-    val dir = Files.createTempDirectory("graft_marginal").toString
+    val dir = Scratch.fresh("graft_marginal").toString
     src.repartition(12).write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream
@@ -111,7 +111,7 @@ class MultiBatchSpec extends AnyFunSuite {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
 
-    val ckpt = Files.createTempDirectory("graft_marg_ckpt").toString
+    val ckpt = Scratch.fresh("graft_marg_ckpt").toString
     val t0 = System.nanoTime()
     val q = agg.writeStream.format("memory").queryName("marg_out")
       .outputMode(OutputMode.Complete())

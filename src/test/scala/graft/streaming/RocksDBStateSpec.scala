@@ -1,10 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
+import graft.core.Scratch
 
 /** The at-scale state backend: the same windowed aggregation with the
   * RocksDB state store provider (what a real deployment uses once keyed
@@ -31,7 +31,7 @@ class RocksDBStateSpec extends AnyFunSuite {
       val q = agg.writeStream.format("memory").queryName("rocks_out")
         .outputMode(OutputMode.Complete())
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_rocks_ckpt").toString)
+          Scratch.fresh("graft_rocks_ckpt").toString)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
@@ -50,7 +50,7 @@ class RocksDBStateSpec extends AnyFunSuite {
   }
 
   private def writeDir(df: org.apache.spark.sql.DataFrame): String = {
-    val dir = Files.createTempDirectory("graft_rocks_src").toString
+    val dir = Scratch.fresh("graft_rocks_src").toString
     df.write.mode("overwrite").parquet(dir)
     dir
   }
