@@ -1,5 +1,15 @@
 package graft
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
+/** The inventory bench: every registered query timed through
+  * [[Profile.Recorder]] (built, then materialised in full through the
+  * noop sink), one JSON line per full sweep appended to
+  * bench_history.jsonl and compared against earlier lines of the same SF
+  * and harness.
+  */
 object Bench {
   /** Queries whose hot path runs a custom codegen'd Catalyst expression
     * (ArrayDotProduct / SortedLongArrayIntersect). Janino compilation of
@@ -8,29 +18,25 @@ object Bench {
     */
   private val codegenWarmup = Seq("q34_vector_topk", "x_char_ngram_jaccard")
 
-  /** Canary gate (round-14 capture discipline, baked in per verdict-r14
-    * ask 2): the box enters multi-minute slow phases where EVERY query on
-    * every engine runs ~2x while all three loadavg samples read idle and
-    * /proc/stat steal is 0.0 — loadavg alone cannot flag them. Two cheap
-    * control queries are therefore timed immediately BEFORE and AFTER the
-    * sweep; the bands below are ~1.5x their idle sf0.1/32cpu ceilings
-    * (q01_clean 0.11-0.14 s, q05_tpch_q1 0.25-0.31 s across rounds 13-14).
+  /** Canary gate: the box enters multi-minute slow phases where EVERY
+    * query on every engine runs ~2x while all three loadavg samples read
+    * idle — loadavg alone cannot flag them. Two cheap control queries are
+    * therefore timed immediately BEFORE and AFTER the sweep, each against
+    * a band derived from this SF's own clean history ([[canaryBands]]).
     * `canary_in_band=false` in the artifact means "this capture ran in a
     * degraded window — don't trust its totals or flags for the record";
-    * it pre-flags a contaminated BENCH_rNN.json instead of requiring a
-    * post-hoc adjudication every round (r13 landed at loadavg 3.34, r14
-    * at 7.42). Bands are calibrated at sf0.1 / 32 cpus and the VERDICT
-    * is only applied at that calibrated SF dir (round-15 advice: a
-    * legitimate capture at a larger SF or smaller box would trip the
-    * one-sided gate and permanently brand a clean run untrustworthy);
-    * other SF dirs still emit the raw canary_entry_s/canary_exit_s
-    * times, with canary_in_band null.
+    * null means no clean reference line exists yet, and the raw
+    * canary_entry_s/canary_exit_s times are still recorded.
     */
-  private[graft] val canaryBands: Seq[(String, Double)] =
-    Seq("q01_clean" -> 0.20, "q05_tpch_q1" -> 0.40)
+  private[graft] val canaries: Seq[String] = Seq("q01_clean", "q05_tpch_q1")
 
-  /** The SF dir the canary bands were calibrated against. */
-  private[graft] val canaryCalibratedSf = "/root/testdata/sf0.1"
+  /** The timing harness, tagged on every history line: each rep builds
+    * the query and materialises every row and column through the noop
+    * sink. Untagged lines were timed by `count()`, which lets Catalyst
+    * prune columns and drop sorts, so the gates never compare against
+    * them.
+    */
+  private[graft] val harness = "noop"
 
   /** Queries whose build performs REAL store writes in-query — multi-
     * generation commit/merge/replay sequences, staged prune layouts,
@@ -72,95 +78,80 @@ object Bench {
     // later 1-min loadavg includes our own local[N] saturation)
     val loadEntry = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val lines = historyLines()
+    val hist = history(sfDir, lines)
     val spark = Sessions.local()
-    // warm the session once (JIT, codegen cache, FS/footer caches) so the
-    // first timed query isn't charged session startup
-    // through the Tables loader, not a raw read: events.parquet is
-    // TIMESTAMP(NANOS) and a raw vectorized read fails the task (so the
-    // events footer/JIT warm-up silently never happened before)
-    graft.core.Tables.names.foreach { t =>
-      try graft.core.Tables(spark, sfDir, t).count()
-      catch { case scala.util.control.NonFatal(_) => }
-    }
+    Profile.warm(spark, sfDir)
+    val rec = new Profile.Recorder(spark)
+    val queries = SparkEntry.queries
+    // the one timed call: build, then materialise through the noop sink
+    def time(name: String): Profile.Record =
+      rec.run(name)(queries(name)(spark, sfDir))
+    def wall(r: Profile.Record): Double = if (r.error.isEmpty) r.wallS else -1.0
     // compile the custom-expression codegen paths before timing starts;
     // the canary queries warm too — the ENTRY canary probe must measure
-    // the box, not this JVM's first-execution codegen of q01/q05 (run 78
-    // measured the unwarmed entry canary 2.5-3x its in-band ceiling in a
-    // window the external gate had just cleared)
-    (codegenWarmup ++ canaryBands.map(_._1)).foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        try fn(spark, sfDir).count()
-        catch { case scala.util.control.NonFatal(_) => }
-      }
-    }
+    // the box, not this JVM's first-execution codegen of q01/q05
+    (codegenWarmup ++ canaries).filter(queries.contains).foreach(time)
     // min of N reps per query: single-machine timings here vary ±50%
     // run-to-run; the min is the stable estimate of the data-path cost
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     // canary probe: min of 2 reps on each control query, warm session
-    def canaryProbe(): Seq[(String, Double)] = canaryBands.map { case (name, _) =>
-      val fn = SparkEntry.queries(name)
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
-        catch { case scala.util.control.NonFatal(_) => }
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> times.min
-    }
+    def canaryProbe(): Seq[(String, Double)] =
+      canaries.map(name => name -> (1 to 2).map(_ => wall(time(name))).min)
     val canaryEntry = canaryProbe()
     // comma-separated name-prefix filter for quick iteration on a subset;
     // filtered runs never overwrite the full-run history
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val errors = scala.collection.mutable.ArrayBuffer.empty[String]
+    val errors = mutable.ArrayBuffer.empty[String]
     // 1-min loadavg at sweep start/end too: the box gets EXTERNAL load
     // spikes that double-to-quadruple timings, and without the record the
     // permanent bench artifact can't distinguish a spike from a
-    // regression (round 5's record overstated the total 1.6x). These two
-    // samples INCLUDE the bench's own load (warm-up/sweep saturate the
-    // JVM) — they contextualize the sweep; only loadEntry judges the box.
+    // regression. These two samples INCLUDE the bench's own load — they
+    // contextualize the sweep; only loadEntry judges the box.
     val loadStart = loadavg()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .map { case (name, fn) =>
-      var ok = true
-      // Sub-second queries get up to 2 extra reps: on a shared box a
-      // single descheduling blip doubles a 0.15 s measurement and
-      // min-of-2 still keeps the blip one run in four — exactly the
-      // noise the round-4 driver run flagged as eight false
-      // "regressions". Extra reps cost ~0.15 s each on the queries that
-      // get them; heavy queries keep the configured rep count.
-      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
-      while (times.length < reps ||
-          (ok && times.length < reps + 2 && times.min < 0.5)) {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case scala.util.control.NonFatal(e) => ok = false; System.err.println(s"BENCH ERROR $name: ${e.getMessage}") }
-        times += (System.nanoTime() - t0) / 1e9
+    // per query: the first rep's wall and the min-wall successful rep
+    val records = mutable.Map.empty[String, (Double, Profile.Record)]
+    val results = queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.exists(name.startsWith)))
+      .map { name =>
+        // Sub-second queries get up to 2 extra reps: on a shared box a
+        // single descheduling blip doubles a 0.15 s measurement and
+        // min-of-2 still keeps the blip one run in four. Heavy queries
+        // keep the configured rep count.
+        val runs = mutable.ArrayBuffer.empty[Profile.Record]
+        def ok = runs.forall(_.error.isEmpty)
+        while (runs.length < reps ||
+            (ok && runs.length < reps + 2 && runs.map(_.wallS).min < 0.5)) {
+          val r = time(name)
+          r.error.foreach(e => System.err.println(s"BENCH ERROR $name: $e"))
+          runs += r
+        }
+        // a crashed query must not deflate the total: report it as -1
+        if (!ok) { errors += name; name -> -1.0 }
+        else {
+          val best = runs.minBy(_.wallS)
+          records(name) = (runs.head.wallS, best)
+          name -> best.wallS
+        }
       }
-      if (!ok) errors += name
-      // a crashed query must not deflate the total: report it as -1
-      name -> (if (ok) times.min else -1.0)
-    }
     // regression check vs the previous bench run at the same SF, if any
-    val prev = previousBench(sfDir)
+    val prev = previousBench(hist)
     val flagged = results.collect {
       case (n, t) if prev.get(n).exists(p => isRegression(t, p)) => n
     }
     // Confirmation rep: an external load spike on this box inflates a
-    // contiguous alphabetical block of queries 3-15x (round-5's driver run
-    // flagged 18 phantom regressions that way). Re-measure each flagged
-    // query once, after the full sweep, and keep the better time — a real
-    // regression reproduces, a spike doesn't.
+    // contiguous alphabetical block of queries 3-15x. Re-measure each
+    // flagged query once, after the full sweep, and keep the better time
+    // — a real regression reproduces, a spike doesn't.
     val (confirmedTimes, regressions) = confirmRegressions(
       flagged, results.toMap, prev,
       name => {
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        // NonFatal only: an OOM/fatal JVM error must abort the sweep, not
-        // be recorded as a quiet -1 on a possibly-broken JVM
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case scala.util.control.NonFatal(_) => -1.0 }
+        val r = time(name)
+        records.get(name).foreach { case (first, best) =>
+          if (r.error.isEmpty && r.wallS < best.wallS) records(name) = (first, r)
+        }
+        wall(r)
       })
     val dismissed = flagged.filterNot(regressions.contains)
     if (dismissed.nonEmpty)
@@ -168,115 +159,78 @@ object Bench {
     val results2 = results.map { case (n, t) => n -> confirmedTimes.getOrElse(n, t) }
     val vsPrev = results2.flatMap { case (name, t) =>
       prev.get(name).collect { case p if p > 0 && t > 0 =>
-        name -> BigDecimal(t / p).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
+        name -> BigDecimal(t / p).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
       }
     }
     regressions.foreach(n => System.err.println(s"BENCH REGRESSION >2x vs prev round (survived confirmation rep): $n"))
     val canaryExit = canaryProbe()
-    // verdict only at the calibrated SF (null elsewhere — raw probe
-    // times still recorded for the reader). Paths are NORMALIZED before
-    // comparing (round-16 advice): a trailing slash, relative spelling or
-    // symlink of the calibrated dir must not silently disable the gate
-    // exactly where it applies.
-    def normPath(p: String): String =
-      try java.nio.file.Paths.get(p).toRealPath().toString
-      catch { case _: Exception =>
-        java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString }
-    val canaryInBand: Option[Boolean] =
-      if (normPath(sfDir) != normPath(canaryCalibratedSf)) None
-      else Some(canaryBands.forall { case (name, bar) =>
-        canaryEntry.exists { case (n, t) => n == name && t > 0 && t <= bar } &&
-          canaryExit.exists { case (n, t) => n == name && t > 0 && t <= bar }
-      })
-    if (canaryInBand.contains(false))
+    rec.close()
+    val clean = cleanRuns(hist, 3)
+    val canaryOk = for {
+      entry <- inBand(canaryBands(clean.map(_.canaryEntry)), canaryEntry.toMap)
+      exit <- inBand(canaryBands(clean.map(_.canaryExit)), canaryExit.toMap)
+    } yield entry && exit
+    if (canaryOk.contains(false))
       System.err.println(s"BENCH CANARY OUT OF BAND (degraded window; totals/flags unreliable): entry=$canaryEntry exit=$canaryExit")
-    // mid-sweep contamination verdict (round-16 verdict ask 2): the
-    // entry/exit canary bounds the sweep but is blind to load that starts
-    // AND ends between the probes (runs 80/81/85 precedent). Score every
-    // query's time against the min of the last 3 CLEAN same-SF runs and
-    // take the max windowed-median ratio over the alphabetical sweep
-    // order — an external spike inflates a contiguous block, which no
-    // per-query confirmation rep (run under the same load) can clear.
-    val sweepDev = sweepDeviation(results2.sortBy(_._1), cleanRuns(sfDir, 3))
+    // mid-sweep contamination verdict: the entry/exit canary bounds the
+    // sweep but is blind to load that starts AND ends between the probes.
+    // Score every query's time against the min of the last 3 CLEAN
+    // same-SF runs and take the max windowed-median ratio over the
+    // alphabetical sweep order — an external spike inflates a contiguous
+    // block, which no per-query confirmation rep (run under the same
+    // load) can clear.
+    val sweepDev = sweepDeviation(results2.sortBy(_._1), clean.map(_.queries))
     val sweepInBand: Option[Boolean] = sweepDev.map { case (_, _, maxWin) =>
       maxWin <= sweepBandMax &&
-        canaryInBand.forall(identity) && loadEntry <= 1.5
+        canaryOk.forall(identity) && loadEntry <= 1.5
     }
     if (sweepInBand.contains(false))
       System.err.println(s"BENCH SWEEP OUT OF BAND (deviation vs clean band; adjudicate before trusting): $sweepDev")
     val loadEnd = loadavg()
-    def fmt(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results2.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    // The driver captures only the LAST 2000 chars of stdout; a 144-query
-    // map is ~4 KB, so printing it inline guarantees the driver's parse
-    // fails (BENCH_r01..r04 all have "parsed": null). The stdout line
-    // carries the total plus a headline subset that fits the window; the
-    // complete per-query map goes to stderr and bench_history.jsonl.
-    val headQs = results2.filter { case (k, _) => headline(k) }
-      .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val vp = vsPrev.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errs = errors.map(e => s"\"$e\"").mkString("[", ",", "]")
-    val regs = regressions.map(r => s"\"$r\"").mkString("[", ",", "]")
-    val dism = dismissed.map(r => s"\"$r\"").mkString("[", ",", "]")
+    val qs = secs(results2)
+    // Only the LAST 2000 chars of stdout are kept by the run record, and
+    // the full per-query map is ~4 KB: the stdout line carries the total
+    // plus a headline subset that fits the window; the complete
+    // per-query map goes to stderr and bench_history.jsonl.
+    val headQs = secs(results2.filter { case (k, _) => headlineNames(k) })
+    val errs = strs(errors.toSeq)
+    val dism = strs(dismissed)
     // pre-annotate every FLAGGED query with its class so the artifact
-    // explains its own flags (verdict-r13 ask 6); kept to the flagged set
-    // on stdout — the driver stores only the last 2000 chars — with the
+    // explains its own flags; kept to the flagged set on stdout, with the
     // full class map on the history line below
-    val flagClasses = (regressions ++ dismissed).distinct
-      .filter(storeRwClass.contains)
-      .map(n => s"\"$n\":\"store_rw\"").mkString("{", ",", "}")
-    val loads = s"[${fmt(loadEntry)},${fmt(loadStart)},${fmt(loadEnd)}]"
-    def canaryJson(c: Seq[(String, Double)]): String =
-      c.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val canaries = s""""canary_entry_s":${canaryJson(canaryEntry)},"canary_exit_s":${canaryJson(canaryExit)},"canary_in_band":${canaryInBand.map(_.toString).getOrElse("null")}"""
+    def classes(names: Seq[String]): String =
+      obj(names.filter(storeRwClass.contains).map(_ -> "\"store_rw\""))
+    val flagClasses = classes((regressions ++ dismissed).distinct)
+    val loads = Seq(loadEntry, loadStart, loadEnd).map(fmt).mkString("[", ",", "]")
+    val canaryJson = s""""canary_entry_s":${secs(canaryEntry)},"canary_exit_s":${secs(canaryExit)},"canary_in_band":${json(canaryOk)}"""
     val sweepJson = sweepDev match {
       case Some((n, med, maxWin)) =>
-        s""""sweep_dev":{"n_scored":$n,"median":${fmt(med)},"max_window_median":${fmt(maxWin)},"band_max":$sweepBandMax},"sweep_in_band":${sweepInBand.map(_.toString).getOrElse("null")}"""
+        s""""sweep_dev":${obj(Seq("n_scored" -> n.toString, "median" -> fmt(med), "max_window_median" -> fmt(maxWin), "band_max" -> sweepBandMax.toString))},"sweep_in_band":${json(sweepInBand)}"""
       case None =>
         s""""sweep_dev":null,"sweep_in_band":null"""
     }
-    // per-phase walls recorded by composite builds (index build vs
-    // search pricing — PhaseTiming scaladoc); small by construction
-    val phases = graft.core.PhaseTiming.snapshot().toSeq.sortBy(_._1)
-      .map { case (q, ps) =>
-        s"\"" + q + "\":" + ps.toSeq.sortBy(_._1)
-          .map { case (p, (lo, hi)) =>
-            s"""\"$p\":{\"min\":${fmt(lo)},\"max\":${fmt(hi)}}""" }
-          .mkString("{", ",", "}")
-      }.mkString("{", ",", "}")
     // sustained external load inflates every timing AND survives the
     // confirmation rep (which runs under the same load) — mark the run so
     // the permanent record says "don't trust regressions/totals here" in
     // its own words. Judged on the ENTRY sample only: start/end loadavg
     // include the bench's own local[N] saturation and would flag every
-    // run (run 16 proved it: normal timings, self-load 2.8). Known blind
-    // spots, accepted because loadavg cannot separate self from external
-    // load mid-sweep: external load STARTING after entry is missed (the
-    // [entry,start,end] triple is the record for a reader to judge), and
-    // a bench launched <2 min after another saturating JVM exits reads
-    // that JVM's decaying load and flags a clean run — conservative.
+    // run. Known blind spots: external load STARTING after entry is
+    // missed (the [entry,start,end] triple is the record for a reader to
+    // judge), and a bench launched <2 min after another saturating JVM
+    // exits reads that JVM's decaying load and flags a clean run.
     val loadHigh = loadEntry > 1.5
-    val total = results2.map(_._2).filter(_ > 0) match {
-      case s if s.nonEmpty => s.sum
-      case _ => 0.0
-    }
-    System.err.println(s"""BENCH FULL {"queries":$qs,"vs_prev":$vp}""")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results2.size},"queries":$headQs,"errors":$errs,"regressions":$regs,"flag_classes":$flagClasses,"spikes_dismissed":$dism,"loadavg":$loads,"load_high":$loadHigh,$canaries,$sweepJson,"phase_s":$phases,"sf":"$sfDir"}""")
+    val total = results2.map(_._2).filter(_ > 0).sum
+    System.err.println(s"""BENCH FULL {"queries":$qs,"vs_prev":${obj(vsPrev)}}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results2.size},"queries":$headQs,"errors":$errs,"regressions":${strs(regressions)},"flag_classes":$flagClasses,"spikes_dismissed":$dism,"loadavg":$loads,"load_high":$loadHigh,$canaryJson,$sweepJson,"sf":"$sfDir"}""")
     // persist this run APPEND-ONLY: one JSONL line per full run, so every
-    // round's per-query numbers stay auditable on disk (the pre-round-4
-    // overwrite destroyed round N-1's numbers each run; the driver's
-    // truncated tail capture was the only — lossy — record)
+    // run's per-query numbers stay auditable on disk
     if (only.isEmpty) try {
       val w = new java.io.FileWriter(historyFile, true) // append
       try {
-        val allClasses = results2.collect {
-          case (n, _) if storeRwClass.contains(n) => s"\"$n\":\"store_rw\""
-        }.mkString("{", ",", "}")
-        w.write(s"""{"run":${runCount() + 1},"sf":"$sfDir","loadavg":$loads,"load_high":$loadHigh,$canaries,$sweepJson,"phase_s":$phases,"spikes_dismissed":$dism,"classes":$allClasses,"queries":$qs}""" + "\n")
+        val recs = obj(results2.flatMap { case (n, _) =>
+          records.get(n).map { case (first, r) => n -> recordJson(first, r) }
+        })
+        w.write(s"""{"run":${lines.count(_.trim.nonEmpty) + 1},"sf":"$sfDir","harness":"$harness","loadavg":$loads,"load_high":$loadHigh,$canaryJson,$sweepJson,"spikes_dismissed":$dism,"classes":${classes(results2.map(_._1))},"queries":$qs,"records":$recs}""" + "\n")
       }
       finally w.close()
     } catch { case _: Exception => } // read-only checkout: skip, don't fail
@@ -329,10 +283,7 @@ object Bench {
       window: Int = 40): Option[(Int, Double, Double)] = {
     if (refs.isEmpty) return None
     val ratios = resultsSorted.flatMap { case (name, cur) =>
-      val ref = refs.flatMap(_.get(name)).filter(_ > 0) match {
-        case s if s.nonEmpty => Some(s.min)
-        case _ => None
-      }
+      val ref = refs.flatMap(_.get(name)).filter(_ > 0).minOption
       ref.collect { case r if cur > 0 && math.max(cur, r) >= 0.15 => cur / r }
     }
     if (ratios.isEmpty) return None
@@ -347,34 +298,82 @@ object Bench {
     Some((ratios.size, median(ratios), maxWin))
   }
 
-  /** Per-query times of the last `n` CLEAN full runs at `sfDir` from
-    * bench_history.jsonl: canary in band, entry loadavg ≤ 1.5 (the
-    * leading element of the recorded loadavg triple), sweep flag (when
-    * present on the line) not false.
+  /** One bench_history.jsonl line as the gates read it. `loadEntry` is
+    * the leading element of the recorded loadavg triple (NaN if absent);
+    * `records` maps a query to its per-query record ([[recordJson]]).
     */
-  private def cleanRuns(sfDir: String, n: Int): Seq[Map[String, Double]] = {
-    val f = new java.io.File(historyFile)
-    if (!f.exists()) return Seq.empty
-    def parse(text: String): Option[Map[String, Double]] = {
-      val sfOk = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(text)
-        .exists(_.group(1) == sfDir)
-      val canaryOk = "\"canary_in_band\"\\s*:\\s*true".r
-        .findFirstIn(text).isDefined
-      val sweepOk = "\"sweep_in_band\"\\s*:\\s*false".r
-        .findFirstIn(text).isEmpty
-      val loadOk = "\"loadavg\"\\s*:\\s*\\[\\s*(-?[0-9.]+)".r
-        .findFirstMatchIn(text).exists(_.group(1).toDouble <= 1.5)
-      if (!sfOk || !canaryOk || !sweepOk || !loadOk) None
-      else Some {
-        val inner = "\"queries\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(text)
-          .map(_.group(1)).getOrElse("")
-        "\"([^\"]+)\"\\s*:\\s*(-?[0-9.eE+-]+)".r.findAllMatchIn(inner)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }
-    scala.io.Source.fromFile(f).getLines().toSeq.reverse
-      .flatMap(parse).take(n)
+  private[graft] final case class Run(
+      sf: String, harness: Option[String], loadEntry: Double,
+      canaryInBand: Option[Boolean], sweepInBand: Option[Boolean],
+      canaryEntry: Map[String, Double], canaryExit: Map[String, Double],
+      queries: Map[String, Double],
+      records: Map[String, Map[String, Double]]) {
+
+    /** Entry loadavg ≤ 1.5 and neither the canary nor the sweep flag
+      * false (null — no reference yet — does not disqualify a line).
+      */
+    def clean: Boolean = loadEntry <= 1.5 &&
+      !canaryInBand.contains(false) && !sweepInBand.contains(false)
   }
+
+  private val mapper = new ObjectMapper()
+
+  /** Parse one history line; None for a blank or malformed line. */
+  private[graft] def parseRun(line: String): Option[Run] = {
+    val n = try mapper.readTree(line) catch { case _: Exception => null }
+    Option(n).filter(_.isObject).map { n =>
+      def entries(node: JsonNode): Seq[(String, JsonNode)] =
+        node.properties().asScala.toSeq.map(e => e.getKey -> e.getValue)
+      def nums(node: JsonNode): Map[String, Double] =
+        entries(node).collect { case (k, v) if v.isNumber => k -> v.asDouble }.toMap
+      def flag(f: String): Option[Boolean] =
+        Option(n.get(f)).filter(_.isBoolean).map(_.asBoolean)
+      val load = n.path("loadavg").path(0)
+      Run(n.path("sf").asText(""), Option(n.get("harness")).map(_.asText),
+        if (load.isNumber) load.asDouble else Double.NaN,
+        flag("canary_in_band"), flag("sweep_in_band"),
+        nums(n.path("canary_entry_s")), nums(n.path("canary_exit_s")),
+        nums(n.path("queries")),
+        entries(n.path("records")).map { case (q, r) => q -> nums(r) }.toMap)
+    }
+  }
+
+  /** The lines of `sfDir` timed by this bench's [[harness]], newest
+    * first; every gate reads history through this one parse.
+    */
+  private[graft] def history(sfDir: String, lines: Seq[String]): Seq[Run] =
+    lines.reverse.flatMap(parseRun)
+      .filter(r => r.sf == sfDir && r.harness.contains(harness))
+
+  /** Previous per-query seconds: the newest run in `hist` (cross-SF and
+    * cross-harness ratios are meaningless, so [[history]] excludes them).
+    */
+  private[graft] def previousBench(hist: Seq[Run]): Map[String, Double] =
+    hist.headOption.map(_.queries).getOrElse(Map.empty)
+
+  /** The newest `n` clean runs in `hist`. */
+  private[graft] def cleanRuns(hist: Seq[Run], n: Int): Seq[Run] =
+    hist.filter(_.clean).take(n)
+
+  /** Per canary, 1.5x its fastest valid time over `probes`, one probe's
+    * times from each clean run; a canary never validly timed gets no
+    * band. Entry and exit each get their own band: the exit probe runs on
+    * a JVM the whole sweep has warmed and reads about half the entry
+    * probe's time, so one band from both would fail most clean entries.
+    */
+  private[graft] def canaryBands(probes: Seq[Map[String, Double]]): Map[String, Double] =
+    canaries.flatMap { name =>
+      probes.flatMap(_.get(name)).filter(_ > 0).minOption.map(name -> 1.5 * _)
+    }.toMap
+
+  /** Every canary's probe time valid and within its band; None when a
+    * canary has no band.
+    */
+  private[graft] def inBand(bands: Map[String, Double],
+      probe: Map[String, Double]): Option[Boolean] =
+    if (!canaries.forall(bands.contains)) None
+    else Some(canaries.forall(name =>
+      probe.get(name).exists(t => t > 0 && t <= bands(name))))
 
   /** 1-minute loadavg from /proc/loadavg, or -1 where unreadable. */
   private def loadavg(): Double =
@@ -413,43 +412,43 @@ object Bench {
     "x_pagerank", "x_pmi_terms", "x_common_neighbors", "x_bm25",
     "x_setsim_join")
 
-  private def headline(name: String): Boolean = headlineNames.contains(name)
-
   private val historyFile = "bench_history.jsonl"
-  private val legacyHistoryFile = "bench_history.json"
 
-  private def runCount(): Int = {
+  private def historyLines(): Seq[String] = {
     val f = new java.io.File(historyFile)
-    if (!f.exists()) 0
-    else scala.io.Source.fromFile(f).getLines().count(_.trim.nonEmpty)
-  }
-
-  /** Previous per-query seconds: the LAST line of bench_history.jsonl
-    * recorded at the same SF dir (cross-SF ratios are meaningless);
-    * falls back to the pre-round-4 single-object bench_history.json.
-    * Regex parse keeps this dependency-free.
-    */
-  private def previousBench(sfDir: String): Map[String, Double] = {
-    def parse(text: String): Option[Map[String, Double]] = {
-      val sfOk = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(text)
-        .exists(_.group(1) == sfDir)
-      if (!sfOk) None
-      else Some {
-        val inner = "\"queries\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(text)
-          .map(_.group(1)).getOrElse("")
-        "\"([^\"]+)\"\\s*:\\s*(-?[0-9.eE+-]+)".r.findAllMatchIn(inner)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
+    if (!f.exists()) Nil
+    else {
+      val src = scala.io.Source.fromFile(f)
+      try src.getLines().toList finally src.close()
     }
-    val f = new java.io.File(historyFile)
-    val fromJsonl =
-      if (!f.exists()) None
-      else scala.io.Source.fromFile(f).getLines().toSeq.reverse
-        .flatMap(parse).headOption
-    fromJsonl.orElse {
-      val legacy = new java.io.File(legacyHistoryFile)
-      if (!legacy.exists()) None
-      else parse(scala.io.Source.fromFile(legacy).mkString)
-    }.getOrElse(Map.empty)
   }
+
+  /** One query's record on the history line, from its min-wall rep plus
+    * the first rep's wall (which keeps the one-time first-execution
+    * cost the min hides).
+    */
+  private[graft] def recordJson(firstWallS: Double, r: Profile.Record): String =
+    obj(Seq(
+      "first_s" -> fmt(firstWallS), "build_s" -> fmt(r.buildS),
+      "plan_s" -> fmt(r.planS), "exec_s" -> fmt(r.execS),
+      "jobs" -> r.jobs.size.toString, "tasks" -> r.tasks.toString,
+      "cpu_s" -> fmt(r.cpuS),
+      "shuffle_read_bytes" -> r.shuffleReadBytes.toString,
+      "shuffle_write_bytes" -> r.shuffleWriteBytes.toString,
+      "spill_bytes" -> r.spillBytes.toString))
+
+  /** A JSON object over already-rendered values: every map Bench emits. */
+  private[graft] def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  private def secs(kvs: Seq[(String, Double)]): String =
+    obj(kvs.map { case (k, v) => k -> fmt(v) })
+
+  private def strs(xs: Seq[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  private def json(b: Option[Boolean]): String = b.map(_.toString).getOrElse("null")
+
+  private def fmt(v: Double): String =
+    if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 }

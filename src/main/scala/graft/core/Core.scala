@@ -233,47 +233,6 @@ object Scratch {
   def fresh(prefix: String): Path = Files.createTempDirectory(root, prefix)
 }
 
-/** Per-query phase walls for composite builds (round-14 verdict ask 6):
-  * a query like x_ivfpq_incremental spends most of its wall in an
-  * in-query INDEX BUILD the search path then amortizes; pricing the
-  * whole wall as "search" misprices both. Builds record their eager
-  * phases here; graft.Bench emits the snapshot as `phase_s` in the
-  * bench artifact, the way `store_rw` splits writes from compute.
-  * Per (query, phase) BOTH the MIN and MAX across executions are kept
-  * (round-15 verdict ask 2): the max preserves the real first-execution
-  * cost the bench's min-of-reps wall hides (memoized builds report ~0 on
-  * warm reps), while the min bounds it from below — a single load-hit
-  * execution (run 81's 87.95 s append against a 4.1-5.9 s same-code
-  * band) can no longer become the sole phase figure of record. The
-  * artifact emits `{"min": …, "max": …}` per phase.
-  */
-object PhaseTiming {
-  private val m =
-    scala.collection.concurrent.TrieMap.empty[(String, String), (Double, Double)]
-
-  def time[T](query: String, phase: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    record(query, phase, (System.nanoTime() - t0) / 1e9)
-    r
-  }
-
-  def record(query: String, phase: String, sec: Double): Unit = {
-    m.updateWith((query, phase)) {
-      case Some((lo, hi)) => Some((math.min(lo, sec), math.max(hi, sec)))
-      case None => Some((sec, sec))
-    }
-    ()
-  }
-
-  /** query -> phase -> (min, max) seconds observed across executions. */
-  def snapshot(): Map[String, Map[String, (Double, Double)]] =
-    m.readOnlySnapshot().toMap.groupBy(_._1._1)
-      .map { case (q, e) => q -> e.map { case ((_, p), v) => p -> v } }
-
-  def clear(): Unit = m.clear()
-}
-
 /** Generation-bounded cache registry. Query builders that `.cache()`
   * intermediate frames register them here under a stable key; the NEXT
   * invocation of the same builder (bench reps, repeated verify runs)

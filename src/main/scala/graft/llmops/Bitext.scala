@@ -52,9 +52,11 @@ object Bitext {
   val SHARE_MAX_PAIRS = 100000000L
 
   /** (src vec_id, tgt vec_id, cos_fix) — the dense candidate grid over
-    * normalized source embeddings and the synthesized target side.
+    * normalized source embeddings and the synthesized target side — and
+    * the embeddings count the target synthesis takes (callers size the
+    * grid from it instead of counting the base again).
     */
-  def grid(s: SparkSession, dir: String): DataFrame = {
+  def grid(s: SparkSession, dir: String): (DataFrame, Long) = {
     val e = VectorSearch.embeddingsBase(s, dir).select("vec_id", "emb")
     val n = e.count()
     val nxt = e.select((col("vec_id") - 1 + n) % n as "vec_id",
@@ -78,10 +80,10 @@ object Bitext {
     val src = VectorSearch.embeddingsBase(s, dir)
       .select(col("vec_id").as("src_id"), col("n_emb").as("s_emb"))
       .repartition(s.sparkContext.defaultParallelism)
-    src.crossJoin(tgt)
+    (src.crossJoin(tgt)
       .select(col("src_id"), col("tgt_id"),
         round(VectorSearch.dot(col("s_emb"), col("t_emb")) * SCALE)
-          .cast("long").as("cos_fix"))
+          .cast("long").as("cos_fix")), n)
   }
 
   val xBitextMine = Q(
@@ -152,9 +154,8 @@ object Bitext {
     // reads the one materialized exchange; above it each of the three
     // consumers re-evaluates the grid and the TopKByScore aggs shuffle
     // only <=K rows per group per partition.
-    val n = VectorSearch.embeddingsBase(s, dir).count()
+    val (g0, n) = grid(s, dir)
     val sharedGrid = n * (n / 2) <= SHARE_MAX_PAIRS
-    val g0 = grid(s, dir)
     val g = if (sharedGrid) g0.repartition(col("src_id")) else g0
     // kNN sums via the bounded-heap TopKByScore aggregator (the
     // x_domain_cap machinery): map-side partial top-K, so each shuffle

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,6 +27,30 @@ object GhArchive {
       StructField("name", StringType),
       StructField("url", StringType)))),
     StructField("created_at", StringType)))
+
+  /** Read mode of the production silver path, batch and stream: a
+    * malformed line is dropped, as the reference's DuckDB read with
+    * ignore_errors=true drops it.
+    */
+  val DropMalformed = "DROPMALFORMED"
+
+  /** The production read of bronze JSON lines: pinned schema, malformed
+    * lines dropped.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(rawSchema).option("mode", DropMalformed).json(path)
+
+  /** The audit twin of [[read]] (PERMISSIVE): the same schema plus
+    * `_corrupt_record`, so a malformed line is kept as a row carrying its
+    * raw text instead of vanishing. Spark refuses a query whose only
+    * reference into the scan is the corrupt-record column unless the
+    * parse is cached first.
+    */
+  def readAudit(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(rawSchema.add("_corrupt_record", StringType))
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .json(path)
 
   /** Silver "clean": 9-column nested-struct projection + rename
     * (/root/reference/data_lake_transformer.py:92-104). Pure Project —

@@ -34,6 +34,16 @@ object GoldMaintenance {
 
   private val LATE_CUTOFF = "2024-01-04 00:00:00"
 
+  /** Gold rows of both maintenance stories: per (event_type, day) count
+    * and id sum, partitioned by `day` — a partition column must be a
+    * scalar path value, so the day is a DATE.
+    */
+  private def aggregate(silver: DataFrame): DataFrame = silver
+    .groupBy(col("event_type"), col("event_date"))
+    .agg(count(lit(1)).as("event_count"), sum(col("event_id")).as("id_sum"))
+    .withColumn("day", to_date(col("event_date")))
+    .drop("event_date")
+
   val xGoldIncremental = Q(
     "x_gold_incremental",
     s"""WITH gold AS (
@@ -59,13 +69,6 @@ object GoldMaintenance {
     val isLate = col("event_id") % 11 === 0 &&
       col("event_date") < lit(LATE_CUTOFF).cast("timestamp")
     val goldPath = s"${Scratch.fresh("graft_gold")}/gold"
-
-    def aggregate(silver: DataFrame): DataFrame = silver
-      .groupBy(col("event_type"), col("event_date"))
-      .agg(count(lit(1)).as("event_count"), sum(col("event_id")).as("id_sum"))
-      // partition column must be a scalar path value: day as DATE
-      .withColumn("day", to_date(col("event_date")))
-      .drop("event_date")
 
     val late = ev.filter(isLate)
     val touched = late.select(col("event_date")).distinct()
@@ -155,12 +158,6 @@ object GoldMaintenance {
       (col("event_id") % 13 === 0 &&
         col("event_date") < lit("2024-01-04").cast("timestamp"))
     val goldPath = s"${Scratch.fresh("graft_goldret")}/gold"
-
-    def aggregate(silver: DataFrame): DataFrame = silver
-      .groupBy(col("event_type"), col("event_date"))
-      .agg(count(lit(1)).as("event_count"), sum(col("event_id")).as("id_sum"))
-      .withColumn("day", to_date(col("event_date")))
-      .drop("event_date")
 
     // t0: gold over the uncorrected silver
     aggregate(ev).write.partitionBy("day").parquet(goldPath)

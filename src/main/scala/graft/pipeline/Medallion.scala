@@ -59,11 +59,8 @@ class Medallion(spark: SparkSession, config: LakeConfig) {
     val source = PathLayout.rawHourlyGlob(config.bronzeRoot, config.basePath, processDate)
     val sink = PathLayout.sinkPath(
       config.silverRoot, config.basePath, "clean", processDate, hasHourlyPartition = true)
-    val raw = spark.read
-      .schema(GhArchive.rawSchema)
-      .option("mode", "DROPMALFORMED")
-      .json(source)
-    GhArchive.clean(raw).write.mode("overwrite").parquet(sink)
+    GhArchive.clean(GhArchive.read(spark, source))
+      .write.mode("overwrite").parquet(sink)
     sink
   }
 
@@ -81,7 +78,7 @@ class Medallion(spark: SparkSession, config: LakeConfig) {
     val sink = s"${config.silverRoot}/${config.basePath}/streaming"
     val raw = spark.readStream
       .schema(GhArchive.rawSchema)
-      .option("mode", "DROPMALFORMED")
+      .option("mode", GhArchive.DropMalformed)
       .json(source)
     val query = GhArchive.clean(raw).writeStream
       .format("parquet")
@@ -156,31 +153,32 @@ object BatchKeys {
 object RunSerialise {
   def main(args: Array[String]): Unit = {
     val date = BatchKeys.parseArg(args, BatchKeys.previousHour())
-    // stop only a session this main created: Sessions.local() is
-    // getOrCreate, so under a host JVM that already owns a session
-    // (the e2e spec driving the mains in-process) stopping would kill
-    // the host's session; as a standalone binary nothing pre-exists
-    // and the stop still runs
-    val preexisting = org.apache.spark.sql.SparkSession.getDefaultSession
-      .exists(s => !s.sparkContext.isStopped)
-    val spark = graft.Sessions.local()
-    try {
-      val sink = new Medallion(spark, ConfigFromArgs(args)).serialiseRawData(date)
-      println(s"silver written: $sink")
-    } finally if (!preexisting) spark.stop()
+    val sink = WithMedallion(args)(_.serialiseRawData(date))
+    println(s"silver written: $sink")
   }
 }
 
 object RunAggregate {
   def main(args: Array[String]): Unit = {
     val date = BatchKeys.parseArg(args, BatchKeys.previousMidnight())
+    val sink = WithMedallion(args)(_.aggregateSilverData(date))
+    println(s"gold written: $sink")
+  }
+}
+
+private object WithMedallion {
+  /** Run one job on the lake the args name. Stops only a session this
+    * call created: Sessions.local() is getOrCreate, so under a host JVM
+    * that already owns a session (the e2e spec driving the mains
+    * in-process) stopping would kill the host's session; as a
+    * standalone binary nothing pre-exists and the stop still runs.
+    */
+  def apply[T](args: Array[String])(job: Medallion => T): T = {
     val preexisting = org.apache.spark.sql.SparkSession.getDefaultSession
       .exists(s => !s.sparkContext.isStopped)
     val spark = graft.Sessions.local()
-    try {
-      val sink = new Medallion(spark, ConfigFromArgs(args)).aggregateSilverData(date)
-      println(s"gold written: $sink")
-    } finally if (!preexisting) spark.stop()
+    try job(new Medallion(spark, ConfigFromArgs(args)))
+    finally if (!preexisting) spark.stop()
   }
 }
 

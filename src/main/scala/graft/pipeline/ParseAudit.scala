@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
 import graft.core.{Q, Scratch, Tables => T}
 
 /** Parse-health accounting for the error-tolerant JSON ingest (SURVEY.md
@@ -73,8 +72,7 @@ object ParseAudit {
     jsonLines(orders).write.mode("overwrite").text(out)
 
     // production arm: the silver path's semantics (rows vanish)
-    val dropped = s.read.schema(GhArchive.rawSchema)
-      .option("mode", "DROPMALFORMED").json(out)
+    val dropped = GhArchive.read(s, out)
     val dropAgg = dropped.agg(
       count(lit(1)).as("d_n"), sum(col("id")).as("d_sum"))
 
@@ -82,14 +80,7 @@ object ParseAudit {
     // cache() first: Spark disallows queries that filter ONLY on the
     // internal corrupt column of a raw JSON scan (it would need a second
     // parse); the materialized plan lifts the restriction.
-    val permSchema = StructType(
-      GhArchive.rawSchema.fields :+
-        org.apache.spark.sql.types.StructField("_corrupt_record", StringType))
-    val perm = s.read.schema(permSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(out)
-      .cache()
+    val perm = GhArchive.readAudit(s, out).cache()
     perm.agg(
         sum(when(col("_corrupt_record").isNull, 1L).otherwise(0L)).as("n_clean"),
         sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)).as("n_corrupt"),
@@ -137,21 +128,13 @@ object ParseAudit {
     // dead-letter store) and the corrected resend are three independent
     // writes to disjoint paths — overlap them (core.Par, guide §2.6):
     // silver/quarantine re-parse the same raw text, resend reads orders
-    val permSchema = StructType(
-      GhArchive.rawSchema.fields :+
-        org.apache.spark.sql.types.StructField("_corrupt_record", StringType))
     graft.core.Par.run(
-      () => s.read.schema(GhArchive.rawSchema)
-        .option("mode", "DROPMALFORMED").json(raw)
-        .write.mode("overwrite").parquet(silver),
+      () => GhArchive.read(s, raw).write.mode("overwrite").parquet(silver),
       () => {
         // the cache is LOAD-BEARING, not a perf choice: Spark refuses a
         // query whose only reference into a raw JSON scan is the
         // internal corrupt-record column unless the parse is cached
-        val perm = s.read.schema(permSchema)
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", "_corrupt_record")
-          .json(raw).cache()
+        val perm = GhArchive.readAudit(s, raw).cache()
         perm.filter(col("_corrupt_record").isNotNull)
           .select(col("_corrupt_record").as("raw_line"),
             lit("malformed_json").as("reason"))
@@ -169,8 +152,7 @@ object ParseAudit {
 
     // replay, idempotently: left-anti on the event key, then append
     def replayOnce(): Long = {
-      val fixed = s.read.schema(GhArchive.rawSchema)
-        .option("mode", "DROPMALFORMED").json(resend)
+      val fixed = GhArchive.read(s, resend)
       val novel = fixed.join(s.read.parquet(silver).select(col("id")),
         Seq("id"), "left_anti").localCheckpoint()
       val n = novel.count()

@@ -45,8 +45,7 @@ object SchemaOps {
       .write.mode("overwrite").text(raw)
 
     // production read: pinned schema, drifted rows must all survive
-    val pinned = s.read.schema(GhArchive.rawSchema)
-      .option("mode", "DROPMALFORMED").json(raw)
+    val pinned = GhArchive.read(s, raw)
     val nPinned = pinned.count()
 
     // the drift gate: raw-text path probe for fields outside the schema

@@ -165,9 +165,9 @@ object Lake {
 
   /** rename() reports failure by RETURNING false on most Hadoop
     * FileSystems (it only throws for a few error classes) — an unchecked
-    * rename can silently no-op the whole swap. Centralize the check.
+    * rename can silently no-op the whole swap. The package's one rename.
     */
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
+  private[sources] def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
       src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
     if (!fs.rename(src, dst))
       throw new IllegalStateException(s"rename $src -> $dst failed")

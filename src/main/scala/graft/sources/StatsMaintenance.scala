@@ -118,7 +118,7 @@ object StatsMaintenance {
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       for (t <- Seq("stats", "sketch")) {
         fs.delete(new org.apache.hadoop.fs.Path(s"$root/$t"), true)
-        fs.rename(new org.apache.hadoop.fs.Path(s"$root/${t}_new"),
+        Lake.renameOrThrow(fs, new org.apache.hadoop.fs.Path(s"$root/${t}_new"),
           new org.apache.hadoop.fs.Path(s"$root/$t"))
       }
       appended += 1

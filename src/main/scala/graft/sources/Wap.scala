@@ -95,9 +95,7 @@ object Wap {
     val next = baseVersion + 1
     if (!ConcurrentCommit.tryClaim(fs, root, next, writerId)) None
     else {
-      val dst = new HPath(s"$root/v=$next")
-      if (!fs.rename(new HPath(stagedPath), dst))
-        throw new IllegalStateException(s"publish rename failed: $stagedPath → $dst")
+      Lake.renameOrThrow(fs, new HPath(stagedPath), new HPath(s"$root/v=$next"))
       Some(next)
     }
   }

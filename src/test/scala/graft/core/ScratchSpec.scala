@@ -77,4 +77,10 @@ class ScratchSpec extends AnyFunSuite {
     assert(where("addSpark" + "Listener") ==
       Map("src/main/scala/graft/Profile.scala" -> 1))
   }
+
+  // an unchecked rename returns false and silently skips a swap
+  test("only sources.Lake renames files") {
+    assert(where("." + "rename(").keySet ==
+      Set("src/main/scala/graft/sources/Lake.scala"))
+  }
 }

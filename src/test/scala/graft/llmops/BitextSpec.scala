@@ -27,7 +27,7 @@ class BitextSpec extends AnyFunSuite {
 
   test("margin separation: the threshold sits in a measured dead zone") {
     val dir = "/root/testdata/sf0.01"
-    val g = Bitext.grid(spark, dir)
+    val (g, _) = Bitext.grid(spark, dir)
     val fwd = g.withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src_id"))
           .orderBy(col("cos_fix").desc, col("tgt_id"))))

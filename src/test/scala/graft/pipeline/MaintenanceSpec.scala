@@ -19,13 +19,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val out = s"${graft.core.Scratch.fresh("parseaudit_spec")}/raw"
     ParseAudit.jsonLines(orders).write.mode("overwrite").text(out)
 
-    val permSchema = org.apache.spark.sql.types.StructType(
-      GhArchive.rawSchema.fields :+ org.apache.spark.sql.types.StructField(
-        "_corrupt_record", org.apache.spark.sql.types.StringType))
-    val perm = spark.read.schema(permSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(out).cache()
+    val perm = GhArchive.readAudit(spark, out).cache()
     val nCorrupt = perm.filter(col("_corrupt_record").isNotNull).count()
     val expected = orders.filter(col("o_orderkey") % 37 === 0).count()
     assert(expected > 0, "fixture must plant at least one malformed line")
@@ -36,8 +30,7 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(sample.getAs[String]("_corrupt_record").startsWith("{\"id\":"))
     assert(sample.isNullAt(sample.fieldIndex("id")))
 
-    val dropped = spark.read.schema(GhArchive.rawSchema)
-      .option("mode", "DROPMALFORMED").json(out)
+    val dropped = GhArchive.read(spark, out)
     assert(dropped.count() == orders.count() - expected)
     perm.unpersist()
   }

@@ -57,12 +57,7 @@ class StreamingMedallionSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val dir = Scratch.fresh("graft_perm").toString
     writeGz(s"$dir/h.json.gz", Seq(event(1, 9), "not json at all"))
-    val schema = GhArchive.rawSchema
-      .add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    val df = spark.read.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(s"$dir/h.json.gz")
+    val df = GhArchive.readAudit(spark, s"$dir/h.json.gz")
       .cache() // corrupt-record column requires a materialized referenced plan
     assert(df.count() == 2)
     assert(df.filter(col("_corrupt_record").isNotNull).count() == 1)

@@ -65,7 +65,7 @@ class LakeSpec extends AnyFunSuite {
     // data stranded in __compact_old
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(dir),
+    Lake.renameOrThrow(fs, new org.apache.hadoop.fs.Path(dir),
       new org.apache.hadoop.fs.Path(dir + "__rewrite_old"))
     assert(!new java.io.File(dir).exists())
     Lake.compact(spark, dir, targetBytes = 512L << 20)

@@ -35,18 +35,20 @@ def loadavg():
     return float(open("/proc/loadavg").read().split()[0])
 
 def history_runs(sf):
-    """All same-SF bench_history.jsonl lines, oldest first. When this
-    tool runs right after the driver's bench (its intended moment), the
-    last line IS the flagged run and the one before it is the previous
-    round — the full per-query maps the driver's truncated BENCH_r{N}
-    wrapper (headline queries only) cannot provide."""
+    """Same-SF bench_history.jsonl lines of the noop harness, oldest
+    first: the lines graft.Bench itself compares against (untagged lines
+    were count()-timed, so an idle noop re-time is never judged against
+    them). When this tool runs right after the flagged bench run (its
+    intended moment), the last line IS the flagged run and the one before
+    it is the previous round — the full per-query maps the truncated
+    BENCH_r{N} wrapper (headline queries only) cannot provide."""
     runs = []
     try:
         for line in open("bench_history.jsonl"):
             if not line.strip():
                 continue
             d = json.loads(line)
-            if d.get("sf") == sf:
+            if d.get("sf") == sf and d.get("harness") == "noop":
                 runs.append(d.get("queries", {}))
     except FileNotFoundError:
         pass
