@@ -32,7 +32,7 @@ import graft.core.{Exact => E, Q, Scratch, Tables => T}
   * fast-forward is one CAS + pointer write with zero data movement;
   * the three-way is two key-partitioned joins over exactly the three
   * snapshots involved. The merge commit lands on main through the same
-  * CAS protocol as every other writer (ConcurrentCommit), so merges
+  * claimed commit as every other writer ([[Lake.commit]]), so merges
   * race appends safely.
   */
 object Branching {
@@ -46,60 +46,47 @@ object Branching {
     */
   def fork(spark: SparkSession, root: String, branch: String): Long = {
     val base = Lake.versions(spark, root).last
-    val p = new org.apache.hadoop.fs.Path(s"$root/branches/$branch/_base")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, false) // fail if the branch name is taken
-    try out.write(base.toString.getBytes("UTF-8")) finally out.close()
+    Lake.pinBase(Lake.fsOf(spark, root), root, branch, base) // fails if taken
     base
   }
 
-  /** The base version a branch was forked from (its `_base` marker). */
-  def baseOf(spark: SparkSession, root: String, branch: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/branches/$branch/_base")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-    finally in.close()
-  }
+  /** The base version a branch was forked from (its pin). */
+  def baseOf(spark: SparkSession, root: String, branch: String): Long =
+    Lake.pinnedBase(Lake.fsOf(spark, root), root, branch).getOrElse(
+      throw new IllegalStateException(s"branch $branch has no readable base pin"))
 
   /** Commit a full snapshot to the branch (branch lines are single-
-    * writer here; a contended branch would reuse the CAS protocol).
+    * writer here; the commit is still claimed, so a racing committer
+    * fails loudly instead of overwriting).
     */
   def commitToBranch(spark: SparkSession, root: String, branch: String,
-      snapshot: DataFrame): Long = {
-    val next = Lake.versions(spark, s"$root/branches/$branch")
-      .lastOption.getOrElse(-1L) + 1
-    snapshot.write.mode("overwrite")
-      .parquet(s"$root/branches/$branch/v=$next")
-    next
-  }
+      snapshot: DataFrame): Long =
+    Lake.commitNext(snapshot, Lake.branchRoot(root, branch), "branch:" + branch)
 
   /** Branch head as a DataFrame: the branch's own latest commit, or —
     * for a fresh fork with no commits yet — main's pinned base snapshot.
     * The fresh-fork path resolves the pin through [[Lake.readVersion]],
-    * which admits only committed (`_SUCCESS`-carrying) version dirs —
+    * which admits only committed (marker-carrying) version dirs —
     * the same committedness check every other read path applies; the
     * pin itself is protected from retention by Lake.writeVersioned's
-    * keep-set (pinnedBases), so the read cannot race a publish that
+    * keep-set, so the read cannot race a publish that
     * would have retired the base.
     */
   def readBranch(spark: SparkSession, root: String, branch: String): DataFrame =
-    Lake.versions(spark, s"$root/branches/$branch").lastOption match {
-      case Some(_) => Lake.readCurrent(spark, s"$root/branches/$branch")
-      case None =>
-        Lake.readVersion(spark, root, baseOf(spark, root, branch))
+    Lake.currentVersion(spark, Lake.branchRoot(root, branch)) match {
+      case Some(head) => spark.read.parquet(head)
+      case None => Lake.readVersion(spark, root, baseOf(spark, root, branch))
     }
 
-  /** Delete a branch: removes its directory — commits AND the `_base`
-    * pin marker — releasing the base version back to normal retention
+  /** Delete a branch: removes its directory — commits AND the base
+    * pin — releasing the base version back to normal retention
     * (the next publish may retire it). The merge protocol does not
     * auto-delete: a merged branch's history stays inspectable until the
     * owner deletes it, matching the Nessie/Iceberg ref lifecycle.
     */
   def deleteBranch(spark: SparkSession, root: String, branch: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/branches/$branch")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
+    Lake.fsOf(spark, root).delete(
+      new org.apache.hadoop.fs.Path(Lake.branchRoot(root, branch)), true)
   }
 
   /** Merge result: the landed main version, whether it fast-forwarded,
@@ -117,10 +104,9 @@ object Branching {
     val branchHead = readBranch(spark, root, branch)
     if (head == baseVersion) {
       // fast-forward: main has not moved since the fork
-      val ok = ConcurrentCommit.tryCommitAt(spark, root, branchHead,
-        head + 1, writerId)
-      if (!ok) throw new IllegalStateException(
-        s"fast-forward lost its CAS at v=${head + 1}; re-merge on the new head")
+      if (!Lake.commit(branchHead, root, head + 1, writerId))
+        throw new IllegalStateException(
+          s"fast-forward lost its claim on version ${head + 1}; re-merge on the new head")
       return Merge(head + 1, fastForward = true, conflicts = 0L)
     }
     val stv = struct(valCols.map(col): _*)
@@ -146,9 +132,9 @@ object Branching {
       .head.getLong(0)
     val merged = resolved.filter(col("v").isNotNull) // both-deleted keys drop
       .select(col(keyCol) +: valCols.map(c => col(s"v.$c").as(c)): _*)
-    val ok = ConcurrentCommit.tryCommitAt(spark, root, merged, head + 1, writerId)
-    if (!ok) throw new IllegalStateException(
-      s"merge lost its CAS at v=${head + 1}; re-merge on the new head")
+    if (!Lake.commit(merged, root, head + 1, writerId))
+      throw new IllegalStateException(
+        s"merge lost its claim on version ${head + 1}; re-merge on the new head")
     Merge(head + 1, fastForward = false, conflicts = conflicts)
   }
 
@@ -213,7 +199,8 @@ object Branching {
       Seq("o_totalprice"), "merger")
 
     val mainVersions = Lake.versions(s, root).size.toLong
-    val branchVersions = Lake.versions(s, s"$root/branches/feature").size.toLong
+    val branchVersions =
+      Lake.versions(s, Lake.branchRoot(root, "feature")).size.toLong
     Lake.readCurrent(s, root)
       .agg(count(lit(1)).as("n_rows"), E.sumd(col("o_totalprice")).as("total"))
       .select(lit(m.fastForward).as("fast_forward"),

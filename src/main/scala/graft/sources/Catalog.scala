@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Q, Scratch, Tables => T}
@@ -15,7 +14,7 @@ import graft.core.{Q, Scratch, Tables => T}
   * catalogs do (Iceberg REST catalog's multi-table commit,
   * Delta-on-Unity): table versions are only ADDRESSED through a
   * catalog version — one tiny manifest mapping table → version —
-  * published with the same CAS-pinned-to-base protocol as
+  * published with the same claimed commit pinned to its base as
   * ConcurrentCommit, so the pair (A@x, B@y) becomes visible in one
   * atomic step or not at all.
   *
@@ -32,7 +31,10 @@ object Catalog {
     * Un-coordinated: visibility comes only from a catalog publish.
     */
   def writeTable(df: DataFrame, root: String, table: String, v: Long): Unit =
-    df.write.mode("overwrite").parquet(s"$root/tables/$table/v=$v")
+    df.write.mode("overwrite").parquet(Lake.versionPath(tableRoot(root, table), v))
+
+  private def tableRoot(root: String, table: String): String =
+    s"$root/tables/$table"
 
   /** Committed catalog versions, oldest first. */
   def versions(spark: SparkSession, root: String): Seq[Long] =
@@ -40,38 +42,32 @@ object Catalog {
 
   /** Atomically publish a new catalog version mapping table → version.
     * `base` is the catalog version the transaction READ (−1 for an
-    * empty catalog); the CAS claim is pinned to base+1, so any
+    * empty catalog); the claimed commit is pinned to base+1, so any
     * concurrent publish since the read makes this one lose (None) —
     * the Wap.publish discipline lifted to the catalog.
     */
   def publish(spark: SparkSession, root: String,
       mapping: Map[String, Long], base: Long, writerId: String)
       : Option[Long] = {
-    val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = base + 1
-    if (!ConcurrentCommit.tryClaim(fs, s"$root/catalog", next, writerId))
-      None
-    else {
-      import spark.implicits._
-      mapping.toSeq.sortBy(_._1).toDF("table_name", "table_version")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/catalog/v=$next")
-      Some(next)
-    }
+    import spark.implicits._
+    val manifest = mapping.toSeq.sortBy(_._1)
+      .toDF("table_name", "table_version").coalesce(1)
+    Option.when(Lake.commit(manifest, s"$root/catalog", base + 1, writerId))(
+      base + 1)
   }
 
   /** The table→version mapping at a catalog version. */
   def mappingAt(spark: SparkSession, root: String, v: Long)
       : Map[String, Long] =
-    spark.read.parquet(s"$root/catalog/v=$v")
+    Lake.readVersion(spark, s"$root/catalog", v)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** Read `table` as pinned by catalog version `v`. */
   def readAt(spark: SparkSession, root: String, v: Long,
       table: String): DataFrame = {
     val tv = mappingAt(spark, root, v).getOrElse(table,
-      throw new IllegalStateException(s"catalog v=$v has no table $table"))
-    spark.read.parquet(s"$root/tables/$table/v=$tv")
+      throw new IllegalStateException(s"catalog version $v has no table $table"))
+    Lake.readVersion(spark, tableRoot(root, table), tv)
   }
 
   /** X — the two-table transaction end to end, with the consistency
@@ -141,10 +137,11 @@ object Catalog {
           col("l_orderkey") === col("o_orderkey"), "left_anti")
         .count()
     // the mixed read a non-transactional reader could observe
-    def mixedOrphans: Long = s.read.parquet(s"$root/tables/lineitem_gold/v=1")
-      .join(s.read.parquet(s"$root/tables/orders_gold/v=0"),
-        col("l_orderkey") === col("o_orderkey"), "left_anti")
-      .count()
+    def mixedOrphans: Long =
+      Lake.readVersion(s, tableRoot(root, "lineitem_gold"), 1L)
+        .join(Lake.readVersion(s, tableRoot(root, "orders_gold"), 0L),
+          col("l_orderkey") === col("o_orderkey"), "left_anti")
+        .count()
 
     import s.implicits._
     // the seven audit reads are independent snapshot reads of an

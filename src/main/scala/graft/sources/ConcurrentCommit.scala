@@ -1,48 +1,31 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Exact => E, Q, Scratch, Tables => T}
 
 /** Optimistic concurrency for the versioned lake (`Lake.writeVersioned` /
   * `readCurrent`): two writers appending against the same snapshot must
-  * BOTH land, exactly once — the naive "read current, write v=N+1" races
-  * to the same version number and the slower writer silently overwrites
-  * the faster one's files (the classic lost update; real table formats
-  * hit this on day one of multi-pipeline writes).
+  * BOTH land, exactly once — the naive "read current, write version
+  * N+1" races to the same version number and the slower writer silently
+  * overwrites the faster one's files (the classic lost update; real
+  * table formats hit this on day one of multi-pipeline writes).
   *
-  * The commit protocol here is manifest compare-and-swap over a claim
-  * file, with the atomic create-if-absent primitive chosen PER
-  * FILESYSTEM (see [[tryClaim]] — the obvious Hadoop spelling is not
-  * atomic on local disks, a bug the contention sweep caught): two
-  * racers for the same claim path get exactly one winner. A writer
-  *
-  *   1. reads the latest COMMITTED version N (dirs `v=<n>` carrying
-  *      `_SUCCESS` — `Lake.versions` semantics),
-  *   2. CAS-claims N+1 by creating the claim marker `_claim_v=<N+1>`,
-  *   3. on the claim win, writes base(N) ∪ batch as `v=<N+1>` (the
-  *      parquet committer's `_SUCCESS` is the commit point, exactly as
-  *      in `Lake.currentVersion`),
-  *   4. on a claim LOSS — the conflict detection — waits for the
-  *      claimant's commit to become visible, then retries REBASED on the
-  *      new committed version.
-  *
-  * Claims are never deleted: `v=<n>`'s claim file is the audit record of
-  * who committed it, and a version number is consumed by its claim even
-  * if the claimant dies (the next writer's read of committed versions
-  * still returns N, it re-claims N+1, fails, and waits — see the honest
-  * liveness note on [[commitAppend]]).
+  * A writer reads the latest COMMITTED version N and commits its plan
+  * over N as version N+1 through [[Lake.commit]], the claimed commit
+  * (the format, the claim and why claims are never deleted are
+  * described once, in Lake's version-store section). A claim LOSS is
+  * the conflict detection: the writer waits for the claimant's commit to
+  * become visible, then retries REBASED on the new committed version. A
+  * claimant that dies still consumes its number (see the liveness note
+  * on [[commitAppend]]).
   *
   * Scale posture: the CAS is one metadata round-trip per commit attempt;
   * the retry cost is re-running the append plan against the new base —
   * one extra pass over base ∪ batch, measured in docs/SCALING.md
   * (SCALE-CCOMMIT). Contention grows with writer count, not data size:
-  * at 100 TB the batches are large but the claim file is still one
-  * create() call. (S3 note: bare S3 lacks atomic create-no-overwrite;
-  * deployments there back the claim with a conditional PUT
-  * (If-None-Match) or a DynamoDB-style lock table — the protocol shape
-  * is unchanged.)
+  * at 100 TB the batches are large but the claim is still one create()
+  * call.
   */
 object ConcurrentCommit {
 
@@ -51,65 +34,15 @@ object ConcurrentCommit {
     */
   final case class Commit(version: Long, retries: Int)
 
-  private def fsOf(spark: SparkSession, root: String): FileSystem =
-    new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** CAS claim of version `v`: atomic create-no-overwrite of
-    * `_claim_v=<v>` (body = writerId, the audit trail). Exactly one of
-    * any number of concurrent claimants returns true.
-    *
-    * The primitive is per-filesystem, because "create if absent" is
-    * only a CAS where the filesystem makes it one:
-    *   - local (`file:`) — Hadoop's RawLocalFileSystem.create(...,
-    *     overwrite = false) is CHECK-THEN-ACT (an exists probe, then an
-    *     unconditional create): two racers can both pass the probe and
-    *     both "win". Found by the SCALE-CCOMMIT-W 8-writer sweep (two
-    *     writers trampled one v-directory's _temporary). Local claims
-    *     therefore go through NIO's CREATE_NEW = O_CREAT|O_EXCL, the
-    *     kernel-level CAS.
-    *   - HDFS — create(overwrite = false) IS atomic (one NameNode op).
-    *   - bare S3 — neither is; back the claim with a conditional PUT
-    *     (If-None-Match) or a lock table, as the class scaladoc notes.
-    */
-  private[sources] def tryClaim(fs: FileSystem, root: String, v: Long,
-      writerId: String): Boolean = {
-    val claim = new HPath(root, s"_claim_v=$v")
-    if (fs.getUri.getScheme == "file")
-      try {
-        val p = java.nio.file.Paths.get(claim.toUri.getPath)
-        java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p, writerId.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case _: java.io.IOException => false
-      }
-    else
-      try {
-        val out = fs.create(claim, false)
-        try out.write(writerId.getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-  }
-
-  /** One optimistic attempt at a PRE-COMPUTED next version: claim it,
-    * and on the win write `merged` as `v=<next>`. Returns false on a
-    * claim loss (the caller's snapshot went stale — rebase and retry).
-    * This is the seam the graded query drives directly to exhibit a
-    * DETECTED conflict deterministically; [[commitAppend]] is this in a
-    * retry loop.
+  /** One optimistic attempt at a PRE-COMPUTED next version:
+    * [[Lake.commit]] of `merged`. Returns false on a claim loss (the
+    * caller's snapshot went stale — rebase and retry). This is the seam
+    * the graded query drives directly to exhibit a DETECTED conflict
+    * deterministically; [[commitAppend]] is this in a retry loop.
     */
   def tryCommitAt(spark: SparkSession, root: String, merged: DataFrame,
-      next: Long, writerId: String): Boolean = {
-    val fs = fsOf(spark, root)
-    if (!tryClaim(fs, root, next, writerId)) false
-    else {
-      merged.write.mode("overwrite").parquet(s"$root/v=$next")
-      true
-    }
-  }
+      next: Long, writerId: String): Boolean =
+    Lake.commit(merged, root, next, writerId)
 
   /** Append `batch` to the versioned dataset at `root` under optimistic
     * concurrency; returns the committed version and the conflict/retry
@@ -123,43 +56,11 @@ object ConcurrentCommit {
     */
   def commitAppend(spark: SparkSession, root: String, batch: DataFrame,
       writerId: String, maxRetries: Int = 10,
-      claimWaitMs: Long = 30000): Commit = {
-    val fs = fsOf(spark, root)
-    var retries = 0
-    while (retries <= maxRetries) {
-      val cur = Lake.versions(spark, root).lastOption
-      val next = cur.getOrElse(-1L) + 1
-      // rebase: the merge plan is recomputed from the CURRENT committed
-      // base on every attempt — a stale snapshot can win nothing
-      val merged = cur
-        .map(v => spark.read.parquet(s"$root/v=$v").unionByName(batch))
-        .getOrElse(batch)
-      if (tryCommitAt(spark, root, merged, next, writerId))
-        return Commit(next, retries)
-      retries += 1
-      awaitCommitOf(fs, root, next, claimWaitMs)
-    }
-    throw new IllegalStateException(
-      s"writer $writerId: gave up after $maxRetries conflicts at $root")
-  }
-
-  /** Wait for claimed version `v` to commit (its `_SUCCESS` to appear).
-    * Returns early if the claim vanishes (an aborted claimant that
-    * cleaned up). Throws after `waitMs`: the claimant is presumed dead
-    * and a janitor must expire the stale claim before writers proceed.
-    */
-  private def awaitCommitOf(fs: FileSystem, root: String, v: Long,
-      waitMs: Long): Unit = {
-    val deadline = System.nanoTime() + waitMs * 1000000L
-    while (System.nanoTime() < deadline) {
-      if (fs.exists(new HPath(s"$root/v=$v/_SUCCESS"))) return
-      if (!fs.exists(new HPath(root, s"_claim_v=$v"))) return
-      Thread.sleep(10)
-    }
-    throw new IllegalStateException(
-      s"claim _claim_v=$v at $root uncommitted after ${waitMs}ms — " +
-        "claimant presumed dead; janitor must expire the stale claim")
-  }
+      claimWaitMs: Long = 30000): Commit =
+    // rebase: the merge plan is recomputed from the CURRENT committed
+    // base on every attempt — a stale snapshot can win nothing
+    retrying(spark, root, writerId, maxRetries, claimWaitMs)(
+      _.fold(batch)(v => Lake.readVersion(spark, root, v).unionByName(batch)))
 
   /** Optimistic commit of an arbitrary snapshot TRANSFORM — compaction,
     * re-clustering, schema maintenance: the OTHER conflict class, where
@@ -172,27 +73,31 @@ object ConcurrentCommit {
     */
   def commitTransform(spark: SparkSession, root: String,
       transform: DataFrame => DataFrame, writerId: String,
-      maxRetries: Int = 10, claimWaitMs: Long = 30000): Commit = {
-    val fs = fsOf(spark, root)
+      maxRetries: Int = 10, claimWaitMs: Long = 30000): Commit =
+    retrying(spark, root, writerId, maxRetries, claimWaitMs) { cur =>
+      transform(Lake.readVersion(spark, root, cur.getOrElse(
+        throw new IllegalStateException(s"no committed version under $root"))))
+    }
+
+  /** The retry loop both commits share: `plan` builds the candidate from
+    * the current committed version (None for an empty store), committed
+    * as the next one; a claim loss waits for the claimant's commit
+    * ([[Lake.awaitCommit]]) and rebases.
+    */
+  private def retrying(spark: SparkSession, root: String, writerId: String,
+      maxRetries: Int, claimWaitMs: Long)(plan: Option[Long] => DataFrame)
+      : Commit = {
     var retries = 0
     while (retries <= maxRetries) {
-      val cur = Lake.versions(spark, root).lastOption.getOrElse(
-        throw new IllegalStateException(s"no committed version under $root"))
-      val merged = transform(spark.read.parquet(s"$root/v=$cur"))
-      if (tryCommitAt(spark, root, merged, cur + 1, writerId))
-        return Commit(cur + 1, retries)
+      val cur = Lake.versions(spark, root).lastOption
+      val next = cur.fold(0L)(_ + 1)
+      if (Lake.commit(plan(cur), root, next, writerId))
+        return Commit(next, retries)
       retries += 1
-      awaitCommitOf(fs, root, cur + 1, claimWaitMs)
+      Lake.awaitCommit(spark, root, next, claimWaitMs)
     }
     throw new IllegalStateException(
       s"writer $writerId: gave up after $maxRetries conflicts at $root")
-  }
-
-  private def parquetFileCount(spark: SparkSession, dir: String): Long = {
-    val p = new HPath(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p).count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .toLong
   }
 
   /** X — the maintenance-vs-append race: a compactor snapshots v0 (16
@@ -225,11 +130,11 @@ object ConcurrentCommit {
     // v0: the small-files base the compactor wants to fix
     commitAppend(s, root,
       orders.filter(col("o_orderkey") % 3 === 0).repartition(16), "w0")
-    val nFilesBefore = parquetFileCount(s, s"$root/v=0")
+    val nFilesBefore = Lake.readVersion(s, root, 0L).inputFiles.length.toLong
 
     // the compactor snapshots v0 and builds its rewrite plan...
     val cSnap = Lake.versions(s, root).last
-    val cPlan = s.read.parquet(s"$root/v=$cSnap").repartition(4)
+    val cPlan = Lake.readVersion(s, root, cSnap).repartition(4)
 
     // ...an append lands first
     commitAppend(s, root, orders.filter(col("o_orderkey") % 3 === 1), "A")
@@ -240,7 +145,8 @@ object ConcurrentCommit {
     val cRetries = (if (cFirstWon) 0 else 1) + cC.retries
 
     val versions = Lake.versions(s, root)
-    val nFilesAfter = parquetFileCount(s, s"$root/v=${versions.last}")
+    val nFilesAfter =
+      Lake.readVersion(s, root, versions.last).inputFiles.length.toLong
     val expected = orders.filter(col("o_orderkey") % 3 <= 1).count()
     Lake.readCurrent(s, root)
       .agg(count(lit(1)).as("n_rows"), E.sumd(col("o_totalprice")).as("total"))
@@ -292,7 +198,7 @@ object ConcurrentCommit {
     // writer A reads its snapshot and builds its merged plan...
     val aSnap = Lake.versions(s, root).last
     val aBatch = orders.filter(col("o_orderkey") % 3 === 1)
-    val aMerged = s.read.parquet(s"$root/v=$aSnap").unionByName(aBatch)
+    val aMerged = Lake.readVersion(s, root, aSnap).unionByName(aBatch)
 
     // ...writer B commits first — A's snapshot is now stale
     val cB = commitAppend(s, root, orders.filter(col("o_orderkey") % 3 === 2), "B")

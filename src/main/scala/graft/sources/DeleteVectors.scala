@@ -35,30 +35,25 @@ import graft.core.{Exact => E, Q, Scratch, Tables => T}
   */
 object DeleteVectors {
 
-  /** Commit a delete sidecar of `keys` (one column, the equality key). */
-  def commitDelete(keys: DataFrame, root: String): Long = {
-    val spark = keys.sparkSession
-    val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new HPath(s"$root/deletes")
-    val next = if (!fs.exists(dir)) 0L
-      else fs.listStatus(dir).count(st => st.isDirectory &&
-        st.getPath.getName.startsWith("d=")).toLong
-    keys.coalesce(1).write.mode("overwrite").parquet(s"$root/deletes/d=$next")
-    next
-  }
+  /** The sidecars form a version store of their own under the data
+    * root: each delete commit is one claimed version, and only committed
+    * sidecars are applied or counted — a delete commit that died
+    * mid-write is neither a broken read nor a partial key set.
+    */
+  private def sidecars(root: String): String = s"$root/deletes"
 
-  /** All deleted keys (∪ of sidecars); empty frame if none. */
+  /** Commit a delete sidecar of `keys` (one column, the equality key). */
+  def commitDelete(keys: DataFrame, root: String): Long =
+    Lake.commitNext(keys.coalesce(1), sidecars(root), "delete")
+
+  /** All deleted keys (∪ of committed sidecars); None if there are none. */
   def deletedKeys(spark: SparkSession, root: String, keyCol: String)
       : Option[DataFrame] = {
-    val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new HPath(s"$root/deletes")
-    if (!fs.exists(dir)) return None
-    val dirs = fs.listStatus(dir)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("d="))
-      .map(_.getPath.toString)
-    if (dirs.isEmpty) None
-    else Some(dirs.map(spark.read.parquet(_)).reduce(_ unionByName _)
-      .select(keyCol).distinct())
+    val dir = sidecars(root)
+    Lake.committed(Lake.fsOf(spark, dir), new HPath(dir))
+      .map { case (_, p) => spark.read.parquet(p.toString) }
+      .reduceOption(_ unionByName _)
+      .map(_.select(keyCol).distinct())
   }
 
   /** Merge-on-read scan: current data version ∖ deleted keys. */
@@ -81,26 +76,13 @@ object DeleteVectors {
       base => del.map(d => base.join(broadcast(d), Seq(keyCol), "left_anti"))
         .getOrElse(base),
       writerId)
-    val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new HPath(s"$root/deletes"), true)
+    Lake.fsOf(spark, root).delete(new HPath(sidecars(root)), true)
     c.version
   }
 
-  /** Number of delete sidecars currently outstanding. */
-  def sidecarCount(spark: SparkSession, root: String): Long = {
-    val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new HPath(s"$root/deletes")
-    if (!fs.exists(dir)) 0L
-    else fs.listStatus(dir).count(st => st.isDirectory &&
-      st.getPath.getName.startsWith("d=")).toLong
-  }
-
-  private def parquetFiles(spark: SparkSession, dir: String): Long = {
-    val p = new HPath(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p)
-      .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")).toLong
-  }
+  /** Number of committed delete sidecars currently outstanding. */
+  def sidecarCount(spark: SparkSession, root: String): Long =
+    Lake.versions(spark, sidecars(root)).size.toLong
 
   /** X — the merge-on-read lifecycle end to end: v0 = orders in 8
     * immutable files; two delete commits (keys ≡0 mod 13, then mod 17 —
@@ -130,13 +112,14 @@ object DeleteVectors {
     val root = s"${Scratch.fresh("graft_eqdel")}/store"
 
     ConcurrentCommit.commitAppend(s, root, orders.repartition(8), "w0")
-    val filesV0 = parquetFiles(s, s"$root/v=0")
+    val filesV0 = Lake.readVersion(s, root, 0L).inputFiles.length.toLong
 
     commitDelete(orders.filter(col("o_orderkey") % 13 === 0)
       .select("o_orderkey"), root)
     commitDelete(orders.filter(col("o_orderkey") % 17 === 0)
       .select("o_orderkey"), root)
-    val filesAfter = parquetFiles(s, s"$root/v=0") // data immutable
+    val filesAfter = // data immutable
+      Lake.readVersion(s, root, 0L).inputFiles.length.toLong
     val sidecars = sidecarCount(s, root)
 
     val live = read(s, root, "o_orderkey")

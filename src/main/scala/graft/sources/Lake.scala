@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +37,7 @@ object Lake {
     // a previous process may have left the managed location behind while
     // the (ephemeral) catalog forgot the table — clear it so overwrite
     // semantics hold across JVMs
-    val warehouse = new org.apache.hadoop.fs.Path(
+    val warehouse = new HPath(
       spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
     val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(warehouse)) fs.delete(warehouse, true)
@@ -75,19 +76,27 @@ object Lake {
     */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 256L << 20): Long = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     recoverHalfSwap(fs, path)
-    val dataFiles = fs.listStatus(hPath)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val totalBytes = dataFiles.map(_.getLen).sum
-    val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    if (dataFiles.length <= targetFiles) return dataFiles.length.toLong
-    val df = spark.read.parquet(path)
+    val (have, targetFiles) = fileCounts(fs, path, targetBytes)
+    if (have <= targetFiles) return have.toLong
     val tmp = path + "__rewrite_tmp"
-    df.coalesce(targetFiles).write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(path).coalesce(targetFiles)
+      .write.mode("overwrite").parquet(tmp)
     swapInto(fs, tmp, path)
     targetFiles.toLong
+  }
+
+  /** (current, target) parquet file counts of `dir` for ~targetBytes
+    * outputs: the sizing compact() and compactVersioned() share.
+    */
+  private def fileCounts(fs: FileSystem, dir: String,
+      targetBytes: Long): (Int, Int) = {
+    val dataFiles = fs.listStatus(new HPath(dir))
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    val totalBytes = dataFiles.map(_.getLen).sum
+    (dataFiles.length,
+      math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt))
   }
 
   /** MERGE-by-key into a parquet dataset: rows of `updates` replace
@@ -104,8 +113,7 @@ object Lake {
     */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     recoverHalfSwap(fs, path)
     val target = spark.read.parquet(path)
     val merged = target
@@ -129,10 +137,9 @@ object Lake {
     */
   def upsertLatest(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], orderCols: Seq[Column]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     recoverHalfSwap(fs, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
+    if (!fs.exists(new HPath(path))) {
       updates.limit(0).write.mode("overwrite").parquet(path) // seed schema
     }
     val target = spark.read.parquet(path)
@@ -149,16 +156,19 @@ object Lake {
     swapInto(fs, tmp, path)
   }
 
+  private[sources] def fsOf(spark: SparkSession, path: String): FileSystem =
+    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** Roll back a half-completed swap left by a crash between the two
     * renames: source missing, data stranded in the __rewrite_old backup
     * (or the pre-round-3 __compact_old spelling — still recovered for one
     * release so an old crash's backup isn't orphaned).
     */
-  private def recoverHalfSwap(fs: org.apache.hadoop.fs.FileSystem,
+  private def recoverHalfSwap(fs: FileSystem,
       path: String): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
+    val hPath = new HPath(path)
     if (!fs.exists(hPath)) Seq("__rewrite_old", "__compact_old")
-      .map(s => new org.apache.hadoop.fs.Path(path + s))
+      .map(s => new HPath(path + s))
       .find(fs.exists)
       .foreach(bak => renameOrThrow(fs, bak, hPath))
   }
@@ -167,35 +177,73 @@ object Lake {
     * FileSystems (it only throws for a few error classes) — an unchecked
     * rename can silently no-op the whole swap. The package's one rename.
     */
-  private[sources] def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
+  private[sources] def renameOrThrow(fs: FileSystem,
+      src: HPath, dst: HPath): Unit =
     if (!fs.rename(src, dst))
       throw new IllegalStateException(s"rename $src -> $dst failed")
 
-  /** Verified directory swap: tmp must carry _SUCCESS; the old directory
-    * is kept as __rewrite_old until the new one verifies, then dropped.
-    * See compact()'s scaladoc for the honest crash-window statement.
+  /** Verified directory swap: tmp must be committed (carry the marker);
+    * the old directory, if any, is kept as __rewrite_old until the new
+    * one verifies, then dropped. See compact()'s scaladoc for the honest
+    * crash-window statement.
     */
-  private def swapInto(fs: org.apache.hadoop.fs.FileSystem,
+  private[sources] def swapInto(fs: FileSystem,
       tmpDir: String, path: String): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(tmpDir)
-    val bak = new org.apache.hadoop.fs.Path(path + "__rewrite_old")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-      throw new IllegalStateException(s"swap: $tmp missing _SUCCESS; aborting")
+    val hPath = new HPath(path)
+    val tmp = new HPath(tmpDir)
+    val bak = new HPath(path + "__rewrite_old")
+    if (!isCommitted(fs, tmp))
+      throw new IllegalStateException(s"swap: $tmp missing $Marker; aborting")
     if (fs.exists(bak)) fs.delete(bak, true)
-    renameOrThrow(fs, hPath, bak)
+    val hadOld = fs.exists(hPath)
+    if (hadOld) renameOrThrow(fs, hPath, bak)
     renameOrThrow(fs, tmp, hPath)
     // only drop the backup once the new directory is verifiably in place
-    if (fs.exists(new org.apache.hadoop.fs.Path(hPath, "_SUCCESS"))) fs.delete(bak, true)
-    else { fs.delete(hPath, true); renameOrThrow(fs, bak, hPath)
+    if (isCommitted(fs, hPath)) fs.delete(bak, true)
+    else { fs.delete(hPath, true); if (hadOld) renameOrThrow(fs, bak, hPath)
       throw new IllegalStateException(s"swap verification failed for $path; rolled back") }
   }
 
-  // ---- version-directory indirection: concurrent-reader-safe rewrites ----
+  // ---- the version store: the one description of its format ----
+  // (other modules call the members below; ScratchSpec lints the rest)
+  //   - `<root>/v=<n>` is version n, COMMITTED exactly when Spark's
+  //     committer has dropped `_SUCCESS` in it: the one atomic publication
+  //     point, so readers never resolve a missing or partly written dir
+  //     (the transient-miss window the in-place swap has). The "commit
+  //     log" of this minimal table format is the numbering plus marker.
+  //   - `<root>/_claim_v=<n>` is the compare-and-swap claim on n, taken
+  //     before n is written (tryClaim): one winner among any number of
+  //     claimants, so two writers never share a dir. Its body, the writer
+  //     id, audits who committed n. Claims are never deleted: a claim
+  //     consumes n even if its claimant dies, and deleting it would
+  //     reopen the lost update it closes.
+  //   - `<root>/branches/<name>/` is a branch's own version line; its
+  //     `_base` file pins the fork base, which retention never retires.
 
-  private def versionDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
+  private val Marker = "_SUCCESS"
+  private val ClaimPrefix = "_claim_v="
+
+  /** Directory of version `v` under `root`, committed or not. */
+  private[sources] def versionPath(root: String, v: Long): String = s"$root/v=$v"
+
+  /** The commit marker of a version (or staged) directory. */
+  private[sources] def markerOf(dir: HPath): HPath = new HPath(dir, Marker)
+
+  private def isCommitted(fs: FileSystem, dir: HPath): Boolean =
+    fs.exists(markerOf(dir))
+
+  /** Whether a root entry named `name` is a claim. */
+  private[sources] def isClaim(name: String): Boolean = name.startsWith(ClaimPrefix)
+
+  private def claimPath(root: String, v: Long): HPath =
+    new HPath(root, s"$ClaimPrefix$v")
+
+  private[sources] def claimed(fs: FileSystem, root: String, v: Long): Boolean =
+    fs.exists(claimPath(root, v))
+
+  /** Every version dir on disk, committed or not, oldest first. */
+  private def versionDirs(fs: FileSystem,
+      root: HPath): Seq[(Long, HPath)] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
@@ -206,80 +254,16 @@ object Lake {
         .map(_ -> s.getPath))
       .sortBy(_._1)
 
-  /** Highest committed version dir (`v=<n>` carrying `_SUCCESS`), if any.
-    * A version becomes visible exactly when Spark's committer drops
-    * `_SUCCESS` — the single atomic publication point — so readers never
-    * resolve a missing or partially-written directory, closing the
-    * transient-miss window the in-place swap has. This is the minimal
-    * manifest-style indirection of a table format: the "commit log" is
-    * the version numbering + _SUCCESS marker.
+  /** The one listing of COMMITTED versions, oldest first. Every read
+    * path and the orphan collector's live set come from it.
     */
-  def currentVersion(spark: SparkSession, path: String): Option[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    versionDirs(fs, root)
-      .filter { case (_, p) =>
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")) }
-      .lastOption.map(_._2.toString)
-  }
+  private[sources] def committed(fs: FileSystem,
+      root: HPath): Seq[(Long, HPath)] =
+    versionDirs(fs, root).filter { case (_, p) => isCommitted(fs, p) }
 
-  /** Publish `df` as the next version of the dataset at `path`. Older
-    * versions are retired, EXCEPT the latest previously-COMMITTED one,
-    * which is kept one extra generation as a grace window for scans that
-    * resolved it before this commit. The grace test is on committedness,
-    * not raw version number: a dead writer's uncommitted v=N must never
-    * displace the committed version in-flight readers are actually
-    * scanning (its number is still consumed, so the dead dir is simply
-    * deleted).
-    */
-  def writeVersioned(df: DataFrame, path: String): Long = {
-    val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing = versionDirs(fs, root)
-    val next = existing.lastOption.map(_._1 + 1).getOrElse(0L)
-    df.write.mode("overwrite").parquet(s"$path/v=$next")
-    val grace = existing
-      .filter { case (_, p) =>
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")) }
-      .lastOption.map(_._1)
-    // retention keep-set: versions pinned as fork bases by live branches
-    // (Branching.fork writes branches/<name>/_base) survive every
-    // publish until the branch is deleted — the Iceberg rule that a
-    // branch ref protects its snapshot from expiry. Without this, a
-    // commit-less fork's read breaks as soon as main advances two
-    // generations (the pin pointed at a retired directory).
-    val pinned = pinnedBases(fs, root)
-    existing.foreach { case (v, p) =>
-      if (!grace.contains(v) && !pinned.contains(v)) fs.delete(p, true)
-    }
-    next
-  }
-
-  /** Fork-base versions pinned by branch markers under
-    * `path/branches/<branch>/_base` — the keep-set retention consults so
-    * a branch's base snapshot stays readable while the branch lives.
-    * A marker that cannot be read or parsed pins nothing (corrupt
-    * litter must not block every future publish), but a HEALTHY marker
-    * always pins: fail-open only on the marker, never on the version.
-    */
-  private[sources] def pinnedBases(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Set[Long] = {
-    val br = new org.apache.hadoop.fs.Path(root, "branches")
-    if (!fs.exists(br)) Set.empty
-    else fs.listStatus(br).toSeq.filter(_.isDirectory).flatMap { d =>
-      val m = new org.apache.hadoop.fs.Path(d.getPath, "_base")
-      try {
-        if (!fs.exists(m)) None
-        else {
-          val in = fs.open(m)
-          try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim.toLongOption
-          finally in.close()
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }.toSet
-  }
+  /** Highest committed version dir, if any. */
+  def currentVersion(spark: SparkSession, path: String): Option[String] =
+    committed(fsOf(spark, path), new HPath(path)).lastOption.map(_._2.toString)
 
   /** Read the current committed version (fails if none committed yet). */
   def readCurrent(spark: SparkSession, path: String): DataFrame =
@@ -289,14 +273,8 @@ object Lake {
   /** Committed version numbers still on disk, oldest first (the current
     * one plus the one-generation grace window writeVersioned keeps).
     */
-  def versions(spark: SparkSession, path: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    versionDirs(fs, root)
-      .filter { case (_, p) =>
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")) }
-      .map(_._1)
-  }
+  def versions(spark: SparkSession, path: String): Seq[Long] =
+    committed(fsOf(spark, path), new HPath(path)).map(_._1)
 
   /** Time-travel read of a specific committed version. Retention here is
     * one grace generation (writeVersioned retires older dirs), so this
@@ -305,12 +283,185 @@ object Lake {
     * the same mechanism indefinitely.
     */
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame = {
-    val candidates = versions(spark, path)
-    if (!candidates.contains(version))
-      throw new IllegalStateException(
+    val have = committed(fsOf(spark, path), new HPath(path))
+    val dir = have.collectFirst { case (`version`, p) => p.toString }
+      .getOrElse(throw new IllegalStateException(
         s"version $version not on disk under $path (have: " +
-          s"${candidates.mkString(", ")})")
-    spark.read.parquet(s"$path/v=$version")
+          s"${have.map(_._1).mkString(", ")})"))
+    spark.read.parquet(dir)
+  }
+
+  /** CAS claim of version `v`: atomic create-no-overwrite of its claim
+    * file (body = writerId, the audit trail). Exactly one of any number
+    * of concurrent claimants returns true.
+    *
+    * The primitive is per-filesystem, because "create if absent" is
+    * only a CAS where the filesystem makes it one:
+    *   - local (`file:`) — Hadoop's RawLocalFileSystem.create(...,
+    *     overwrite = false) is CHECK-THEN-ACT (an exists probe, then an
+    *     unconditional create): two racers can both pass the probe and
+    *     both "win". Found by the SCALE-CCOMMIT-W 8-writer sweep (two
+    *     writers trampled one v-directory's _temporary). Local claims
+    *     therefore go through NIO's CREATE_NEW = O_CREAT|O_EXCL, the
+    *     kernel-level CAS.
+    *   - HDFS — create(overwrite = false) IS atomic (one NameNode op).
+    *   - bare S3 — neither is; back the claim with a conditional PUT
+    *     (If-None-Match) or a DynamoDB-style lock table — the protocol
+    *     shape is unchanged.
+    */
+  private[sources] def tryClaim(fs: FileSystem, root: String, v: Long,
+      writerId: String): Boolean = {
+    val claim = claimPath(root, v)
+    if (fs.getUri.getScheme == "file")
+      try {
+        val p = java.nio.file.Paths.get(claim.toUri.getPath)
+        java.nio.file.Files.createDirectories(p.getParent)
+        java.nio.file.Files.write(p, writerId.getBytes("UTF-8"),
+          java.nio.file.StandardOpenOption.CREATE_NEW,
+          java.nio.file.StandardOpenOption.WRITE)
+        true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException => false
+        case _: java.io.IOException => false
+      }
+    else
+      try {
+        val out = fs.create(claim, false)
+        try out.write(writerId.getBytes("UTF-8")) finally out.close()
+        true
+      } catch { case _: java.io.IOException => false }
+  }
+
+  /** The one claimed commit: claim version `v` of `root`, and on the win
+    * write `df` as it; the marker the write drops is the commit point.
+    * False on a lost claim — the caller's base went stale and nothing
+    * was written (rebase and retry).
+    */
+  def commit(df: DataFrame, root: String, v: Long, writerId: String): Boolean =
+    tryClaim(fsOf(df.sparkSession, root), root, v, writerId) && {
+      df.write.mode("overwrite").parquet(versionPath(root, v))
+      true
+    }
+
+  /** Commit `df` as the version after every dir on disk, so a dead
+    * writer's uncommitted number stays consumed. Throws on a lost claim
+    * rather than overwrite a version another writer holds.
+    */
+  private[sources] def commitNext(df: DataFrame, root: String,
+      writerId: String): Long = {
+    val next = versionDirs(fsOf(df.sparkSession, root), new HPath(root))
+      .lastOption.fold(0L)(_._1 + 1)
+    if (!commit(df, root, next, writerId))
+      throw new IllegalStateException(
+        s"version $next under $root is claimed by another writer")
+    next
+  }
+
+  /** Wait for claimed version `v` to commit. Returns early if the claim
+    * vanishes (an aborted claimant that cleaned up). Throws after
+    * `waitMs`: the claimant is presumed dead and a janitor must expire
+    * the stale claim before writers proceed.
+    */
+  private[sources] def awaitCommit(spark: SparkSession, root: String,
+      v: Long, waitMs: Long): Unit = {
+    val fs = fsOf(spark, root)
+    val dir = new HPath(versionPath(root, v))
+    val deadline = System.nanoTime() + waitMs * 1000000L
+    while (System.nanoTime() < deadline) {
+      if (isCommitted(fs, dir) || !claimed(fs, root, v)) return
+      Thread.sleep(10)
+    }
+    throw new IllegalStateException(
+      s"claim on version $v at $root uncommitted after ${waitMs}ms — " +
+        "claimant presumed dead; janitor must expire the stale claim")
+  }
+
+  /** Publish a staged directory as version `v` of `root`: a stage
+    * without the commit marker (a write that died partway) is refused
+    * and leaves `v`'s claim free; otherwise claim `v`, then rename the
+    * stage into place (the rename carries the marker, so readers never
+    * see a half-published version). False when the stage is incomplete
+    * or the claim is lost.
+    */
+  private[sources] def publishStaged(spark: SparkSession, staged: String,
+      root: String, v: Long, writerId: String): Boolean = {
+    val fs = fsOf(spark, root)
+    isCommitted(fs, new HPath(staged)) && tryClaim(fs, root, v, writerId) && {
+      renameOrThrow(fs, new HPath(staged), new HPath(versionPath(root, v)))
+      true
+    }
+  }
+
+  /** Retire version `v`: delete its directory. Its claim stays, so the
+    * number stays consumed. The one expiry step.
+    */
+  private[sources] def expire(fs: FileSystem, root: String, v: Long): Unit =
+    fs.delete(new HPath(versionPath(root, v)), true)
+
+  /** Publish `df` as the next version of the dataset at `path` (a
+    * claimed commit: it fails loudly rather than overwrite a version
+    * another writer has claimed). Older versions are retired, EXCEPT the
+    * latest previously-COMMITTED one, which is kept one extra generation
+    * as a grace window for scans that resolved it before this commit.
+    * The grace test is on committedness, not raw version number: a dead
+    * writer's uncommitted v=N must never displace the committed version
+    * in-flight readers are actually scanning (its number is still
+    * consumed, so the dead dir is simply deleted). Versions pinned as
+    * fork bases by live branches survive every publish until the branch
+    * is deleted — the Iceberg rule that a branch ref protects its
+    * snapshot from expiry. Without this, a commit-less fork's read breaks
+    * as soon as main advances two generations.
+    */
+  def writeVersioned(df: DataFrame, path: String): Long = {
+    val fs = fsOf(df.sparkSession, path)
+    val root = new HPath(path)
+    val next = commitNext(df, path, "writeVersioned")
+    val grace = committed(fs, root).map(_._1).filter(_ < next).lastOption
+    val pinned = pinnedBases(fs, path)
+    versionDirs(fs, root).foreach { case (v, _) =>
+      if (v < next && !grace.contains(v) && !pinned.contains(v))
+        expire(fs, path, v)
+    }
+    next
+  }
+
+  /** Root of `branch`'s own version line in the store at `root`. */
+  private[sources] def branchRoot(root: String, branch: String): String =
+    s"$root/branches/$branch"
+
+  private def pinPath(root: String, branch: String): HPath =
+    new HPath(branchRoot(root, branch), "_base")
+
+  /** Pin main version `base` as `branch`'s fork base; fails if the
+    * branch is already pinned.
+    */
+  private[sources] def pinBase(fs: FileSystem, root: String, branch: String,
+      base: Long): Unit = {
+    val out = fs.create(pinPath(root, branch), false)
+    try out.write(base.toString.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** `branch`'s pinned fork base. A pin that is missing, unreadable or
+    * unparseable is None — corrupt litter must not block every future
+    * publish — but a HEALTHY pin always pins: fail-open only on the pin,
+    * never on the version.
+    */
+  private[sources] def pinnedBase(fs: FileSystem, root: String,
+      branch: String): Option[Long] =
+    try {
+      val in = fs.open(pinPath(root, branch))
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLongOption
+      finally in.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Fork bases pinned by every branch of the store at `root`: the
+    * keep-set retention consults.
+    */
+  private def pinnedBases(fs: FileSystem, root: String): Set[Long] = {
+    val br = new HPath(root, "branches")
+    if (!fs.exists(br)) Set.empty
+    else fs.listStatus(br).toSeq.filter(_.isDirectory)
+      .flatMap(d => pinnedBase(fs, root, d.getPath.getName)).toSet
   }
 
   /** compact(), but behind the version indirection: rewrites the current
@@ -322,13 +473,8 @@ object Lake {
       targetBytes: Long = 256L << 20): Long = {
     val cur = currentVersion(spark, path).getOrElse(
       throw new IllegalStateException(s"no committed version under $path"))
-    val curPath = new org.apache.hadoop.fs.Path(cur)
-    val fs = curPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(curPath)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val totalBytes = dataFiles.map(_.getLen).sum
-    val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    if (dataFiles.length <= targetFiles) return dataFiles.length.toLong
+    val (have, targetFiles) = fileCounts(fsOf(spark, path), cur, targetBytes)
+    if (have <= targetFiles) return have.toLong
     writeVersioned(spark.read.parquet(cur).coalesce(targetFiles), path)
     targetFiles.toLong
   }
@@ -411,8 +557,8 @@ object Lake {
       .filter(col(clusterCol) >= lo && col(clusterCol) <= hi)
 
   /** (file, lo, hi) rows of a single-column stats manifest. */
-  private[graft] def manifestEntries(fs: org.apache.hadoop.fs.FileSystem,
-      mPath: org.apache.hadoop.fs.Path,
+  private[graft] def manifestEntries(fs: FileSystem,
+      mPath: HPath,
       clusterCol: String): Seq[(String, Long, Long)] = {
     val re = s"\"${java.util.regex.Pattern.quote(clusterCol)}\":\\[(-?\\d+),(-?\\d+)\\]".r
     manifestLines(fs, mPath).flatMap { line =>
@@ -439,7 +585,7 @@ object Lake {
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .toLocalIterator()
-    val mPath = new org.apache.hadoop.fs.Path(path, manifestName)
+    val mPath = new HPath(path, manifestName)
     val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(mPath, true)
     val w = new java.io.BufferedWriter(
@@ -463,8 +609,8 @@ object Lake {
     } finally w.close()
   }
 
-  private def manifestLines(fs: org.apache.hadoop.fs.FileSystem,
-      mPath: org.apache.hadoop.fs.Path): Seq[String] = {
+  private def manifestLines(fs: FileSystem,
+      mPath: HPath): Seq[String] = {
     val in = fs.open(mPath)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
@@ -482,7 +628,7 @@ object Lake {
     */
   private def prunedBase(spark: SparkSession, path: String,
       manifestName: String, bands: Seq[(String, (Long, Long))]): DataFrame = {
-    val mPath = new org.apache.hadoop.fs.Path(path, manifestName)
+    val mPath = new HPath(path, manifestName)
     val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(mPath)) spark.read.parquet(path)
     else {
@@ -508,8 +654,8 @@ object Lake {
     * prune on — a typo'd or non-clustered column degrades to a full
     * scan, never to silently-zero rows ("correctness over skips").
     */
-  private[graft] def prunedFiles(fs: org.apache.hadoop.fs.FileSystem,
-      mPath: org.apache.hadoop.fs.Path,
+  private[graft] def prunedFiles(fs: FileSystem,
+      mPath: HPath,
       bands: Seq[(String, (Long, Long))]): Seq[String] =
     manifestLines(fs, mPath).flatMap { line =>
       val ok = bands.forall { case (c, (lo, hi)) =>
@@ -552,42 +698,13 @@ object Lake {
 
   /** Write `df` z-order-clustered on two (numeric, long-castable) columns
     * with a per-file two-column [lo, hi] manifest (`_zmanifest.json`,
-    * underscore-prefixed → invisible to plain readers). One narrow pass
-    * computes the global bounds, one range-repartition+sort lays the
-    * curve onto `numFiles` files, one narrow post-write scan collects the
-    * per-file stats (a table format folds these into task commits).
+    * underscore-prefixed → invisible to plain readers); readZPruned is
+    * the query path.
     */
   def writeZOrdered(df: DataFrame, path: String, numFiles: Int,
-      colA: String, colB: String): Unit = {
-    val spark = df.sparkSession
-    val bounds = df.agg(
-      min(col(colA).cast("long")), max(col(colA).cast("long")),
-      min(col(colB).cast("long")), max(col(colB).cast("long"))).head()
-    // an empty input (or all-null cluster column) has no bounds to scale
-    // into — write the plain layout with no manifest; readZPruned falls
-    // back to a full filtered scan, so readers stay correct
-    if ((0 to 3).exists(bounds.isNullAt)) {
-      df.write.mode("overwrite").parquet(path)
-      return
-    }
-    val zv = zvalue2(col(colA), bounds.getLong(0), bounds.getLong(1),
-      col(colB), bounds.getLong(2), bounds.getLong(3))
-    df.withColumn("__zv", zv)
-      .repartitionByRange(numFiles, col("__zv"))
-      .sortWithinPartitions(col("__zv"))
-      .drop("__zv")
-      .write.mode("overwrite").parquet(path)
-    writeStatsManifest(spark, path, "_zmanifest.json", Seq(colA, colB))
-  }
-
-  /** Files of a z-ordered dataset whose per-file bands intersect EVERY
-    * given `col -> [lo, hi]` predicate band (long space). Exposed for
-    * tests/audit; readZPruned is the query path.
-    */
-  private[graft] def zPrunedFiles(fs: org.apache.hadoop.fs.FileSystem,
-      mPath: org.apache.hadoop.fs.Path,
-      bands: Seq[(String, (Long, Long))]): Seq[String] =
-    prunedFiles(fs, mPath, bands)
+      colA: String, colB: String): Unit =
+    writeCurveOrdered(df, path, numFiles, colA, colB, "_zmanifest.json")(
+      zvalue2)
 
   /** Read a z-ordered dataset keeping only the files whose stats can
     * satisfy ALL the band predicates; the residual row filter still
@@ -618,33 +735,43 @@ object Lake {
     * (manifest `_hmanifest.json`); readHPruned is the query path.
     */
   def writeHilbertOrdered(df: DataFrame, path: String, numFiles: Int,
-      colA: String, colB: String): Unit = {
-    val spark = df.sparkSession
-    val bounds = df.agg(
-      min(col(colA).cast("long")), max(col(colA).cast("long")),
-      min(col(colB).cast("long")), max(col(colB).cast("long"))).head()
-    if ((0 to 3).exists(bounds.isNullAt)) {
-      df.write.mode("overwrite").parquet(path)
-      return
-    }
-    val hv = hvalue2(col(colA), bounds.getLong(0), bounds.getLong(1),
-      col(colB), bounds.getLong(2), bounds.getLong(3))
-    df.withColumn("__hv", hv)
-      .repartitionByRange(numFiles, col("__hv"))
-      .sortWithinPartitions(col("__hv"))
-      .drop("__hv")
-      .write.mode("overwrite").parquet(path)
-    writeStatsManifest(spark, path, "_hmanifest.json", Seq(colA, colB))
-  }
-
-  private[graft] def hPrunedFiles(fs: org.apache.hadoop.fs.FileSystem,
-      mPath: org.apache.hadoop.fs.Path,
-      bands: Seq[(String, (Long, Long))]): Seq[String] =
-    prunedFiles(fs, mPath, bands)
+      colA: String, colB: String): Unit =
+    writeCurveOrdered(df, path, numFiles, colA, colB, "_hmanifest.json")(
+      (a, aLo, aHi, b, bLo, bHi) => hvalue2(a, aLo, aHi, b, bLo, bHi))
 
   def readHPruned(spark: SparkSession, path: String,
       bands: Seq[(String, (Long, Long))]): DataFrame =
     readBandPruned(spark, path, "_hmanifest.json", bands)
+
+  /** The space-filling-curve writer behind writeZOrdered and
+    * writeHilbertOrdered: one narrow pass computes the global bounds,
+    * `key` maps both columns (scaled from those bounds) onto the curve,
+    * one range-repartition+sort lays the curve onto `numFiles` files,
+    * and one narrow post-write scan collects the per-file stats into
+    * `manifest` (a table format folds these into task commits).
+    */
+  private def writeCurveOrdered(df: DataFrame, path: String, numFiles: Int,
+      colA: String, colB: String, manifest: String)(
+      key: (Column, Long, Long, Column, Long, Long) => Column): Unit = {
+    val bounds = df.agg(
+      min(col(colA).cast("long")), max(col(colA).cast("long")),
+      min(col(colB).cast("long")), max(col(colB).cast("long"))).head()
+    // an empty input (or all-null cluster column) has no bounds to scale
+    // into — write the plain layout with no manifest; the pruned readers
+    // fall back to a full filtered scan, so readers stay correct
+    if ((0 to 3).exists(bounds.isNullAt)) {
+      df.write.mode("overwrite").parquet(path)
+      return
+    }
+    val k = key(col(colA), bounds.getLong(0), bounds.getLong(1),
+      col(colB), bounds.getLong(2), bounds.getLong(3))
+    df.withColumn("__curve", k)
+      .repartitionByRange(numFiles, col("__curve"))
+      .sortWithinPartitions(col("__curve"))
+      .drop("__curve")
+      .write.mode("overwrite").parquet(path)
+    writeStatsManifest(df.sparkSession, path, manifest, Seq(colA, colB))
+  }
 
   /** Format round-trips (csv/json/orc share the same DataFrameReader/
     * Writer surface as parquet; schema must be supplied for the schemaless

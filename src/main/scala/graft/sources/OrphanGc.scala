@@ -8,19 +8,21 @@ import graft.core.{Exact => E, Q, Scratch, Tables => T}
   * beside snapshot expiry (x_vacuum_audit): expiry removes versions the
   * retention policy aged out; orphan GC removes files NO version ever
   * referenced — the droppings of dead writers and aborted jobs
-  * (an uncommitted `v=` directory whose writer died before `_SUCCESS`,
-  * an abandoned WAP staging dir, a crashed compaction's
+  * (an uncommitted version directory whose writer died before its
+  * commit marker, an abandoned WAP staging dir, a crashed compaction's
   * `__rewrite_tmp`, stray tool litter at the root). Left alone they
-  * grow without bound and, worse, a half-written `v=` dir can shadow a
-  * version number forever. Iceberg ships this as `remove_orphan_files`,
-  * separate from `expire_snapshots`, for exactly this reason.
+  * grow without bound and, worse, a half-written version dir can shadow
+  * a version number forever. Iceberg ships this as
+  * `remove_orphan_files`, separate from `expire_snapshots`, for exactly
+  * this reason.
   *
-  * The live set is derived from the commit protocol, not guesswork:
-  * committed version dirs (`v=<n>` with `_SUCCESS`) are live; claim
-  * markers (`_claim_v=<n>`) are PRESERVED even when their version died
-  * — a claim is the audit record that consumed the version number, and
-  * deleting it would re-open the lost-update window ConcurrentCommit
-  * closes. Everything else under the root is an orphan.
+  * The live set is derived from the commit protocol (Lake's
+  * version-store section), not guesswork: committed versions (the
+  * store's one listing, `Lake.committed`) are live; claims are PRESERVED even when their
+  * version died — a claim is the audit record that consumed the version
+  * number, and deleting it would re-open the lost-update window
+  * ConcurrentCommit closes. Everything else under the root is an
+  * orphan.
   *
   * Scale posture: GC is listing + deletes — metadata work proportional
   * to file count, never a data scan; the safety argument (a file is
@@ -32,7 +34,7 @@ import graft.core.{Exact => E, Q, Scratch, Tables => T}
 object OrphanGc {
 
   /** Auxiliary roots owned by sibling lake ops — live state that is NOT
-    * reachable from any `v=` manifest and must never be collected:
+    * reachable from any version manifest and must never be collected:
     * delete-vector sidecars (merge-on-read scans resolve them at read
     * time), branch lines, the catalog's table/pointer stores.
     */
@@ -51,20 +53,16 @@ object OrphanGc {
       stagedGraceMs: Long = 24L * 3600 * 1000,
       keep: Set[String] = Set.empty): (Long, Long) = {
     val rootP = new HPath(root)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Lake.fsOf(spark, root)
     val entries = fs.listStatus(rootP).toSeq
-    val live = entries.filter { st =>
-      st.isDirectory && st.getPath.getName.startsWith("v=") &&
-        st.getPath.getName.stripPrefix("v=").forall(_.isDigit) &&
-        fs.exists(new HPath(st.getPath, "_SUCCESS"))
-    }
-    val keepNames = live.map(_.getPath.getName).toSet ++ auxRoots ++ keep
+    val live = Lake.committed(fs, rootP).map(_._2.getName)
+    val keepNames = live.toSet ++ auxRoots ++ keep
     val now = System.currentTimeMillis()
     val (stagedRoot, others) =
       entries.partition(_.getPath.getName == "_staged")
     val orphans = others.filter { st =>
       val n = st.getPath.getName
-      !keepNames.contains(n) && !n.startsWith("_claim_")
+      !keepNames.contains(n) && !Lake.isClaim(n)
     }
     // inside _staged/: collect only entries past the age floor — a young
     // entry is (or may be) a writer mid-stage, not an abandonment
@@ -78,7 +76,7 @@ object OrphanGc {
   /** X — plant every orphan class a real lake accumulates, collect, and
     * prove the survivors are exactly the committed history: v0 and v1
     * committed (orders thirds ≡0,1 mod 3); then a dead writer's
-    * uncommitted v=2 (claim + files, no `_SUCCESS`), an abandoned WAP
+    * uncommitted version 2 (claim + files, no marker), an abandoned WAP
     * staging dir, a crashed rewrite's `__rewrite_tmp`, and a stray
     * root-level litter dir. GC must remove the four orphans, keep both
     * committed versions intact (exact rows + total re-read after), and
@@ -100,17 +98,18 @@ object OrphanGc {
     val orders = T(s, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
     val root = s"${Scratch.fresh("graft_orphan")}/store"
-    val fs = new HPath(root).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = Lake.fsOf(s, root)
 
     ConcurrentCommit.commitAppend(s, root,
       orders.filter(col("o_orderkey") % 3 === 0), "w0")
     ConcurrentCommit.commitAppend(s, root,
       orders.filter(col("o_orderkey") % 3 === 1), "w1")
 
-    // orphan 1: dead writer — claim taken, files written, no _SUCCESS
-    assert(ConcurrentCommit.tryClaim(fs, root, 2L, "dead"))
-    orders.limit(10).write.mode("overwrite").parquet(s"$root/v=2")
-    fs.delete(new HPath(s"$root/v=2/_SUCCESS"), false)
+    // orphan 1: dead writer — claim taken, files written, no marker
+    assert(Lake.tryClaim(fs, root, 2L, "dead"))
+    val dead = Lake.versionPath(root, 2L)
+    orders.limit(10).write.mode("overwrite").parquet(dead)
+    fs.delete(Lake.markerOf(new HPath(dead)), false)
     // orphan 2: abandoned WAP staging — aged past the grace floor
     Wap.stage(orders.limit(5), root, "abandoned")
     fs.setTimes(new HPath(s"$root/_staged/abandoned"),
@@ -122,17 +121,16 @@ object OrphanGc {
     // live state GC must NOT touch: an in-flight (young) WAP stage, a
     // delete-vector sidecar, a branch line — each owned by a sibling op
     Wap.stage(orders.limit(3), root, "inflight")
-    orders.limit(2).select(col("o_orderkey"))
-      .write.mode("overwrite").parquet(s"$root/deletes/d=0")
-    orders.limit(2).write.mode("overwrite").parquet(s"$root/branches/wip/v=0")
+    DeleteVectors.commitDelete(orders.limit(2).select(col("o_orderkey")), root)
+    Branching.commitToBranch(s, root, "wip", orders.limit(2))
 
     val (liveDirs, removed) = collect(s, root, stagedGraceMs = 3600 * 1000L)
-    val claimKept = fs.exists(new HPath(root, "_claim_v=2"))
+    val claimKept = Lake.claimed(fs, root, 2L)
     assert(fs.exists(new HPath(s"$root/_staged/inflight")),
       "young in-flight WAP stage must survive GC")
-    assert(fs.exists(new HPath(s"$root/deletes/d=0")),
+    assert(DeleteVectors.sidecarCount(s, root) == 1,
       "delete-vector sidecars must survive GC")
-    assert(fs.exists(new HPath(s"$root/branches/wip/v=0")),
+    assert(Lake.versions(s, Lake.branchRoot(root, "wip")) == Seq(0L),
       "branch lines must survive GC")
     assert(!fs.exists(new HPath(s"$root/_staged/abandoned")),
       "aged-out staged entry must be collected")
@@ -140,7 +138,7 @@ object OrphanGc {
     // number (what any correct writer's CAS probe finds) skips the dead
     // claim and lands on 3, even though v=2's data was collected
     val next = Iterator.from(Lake.versions(s, root).last.toInt + 1)
-      .find(v => !fs.exists(new HPath(root, s"_claim_v=$v"))).get.toLong
+      .find(v => !Lake.claimed(fs, root, v)).get.toLong
 
     // v1 = v0 ∪ batch, so the current committed state IS the survivors
     val state = Lake.readCurrent(s, root)

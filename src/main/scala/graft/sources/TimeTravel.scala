@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{Exact => E, Q, Tables => T}
 
@@ -31,19 +32,24 @@ import graft.core.{Exact => E, Q, Tables => T}
   * on the key with partial-agg counts — no windows, no driver state.
   * A real deployment adds a manifest listing data files per version so
   * old-version vacuuming and metadata-only diffs work; the store here
-  * keeps one directory per version, which is that manifest's simplest
-  * spelling.
+  * is the lake's version store (`Lake.commit`), one committed directory
+  * per version, which is that manifest's simplest spelling.
   */
 object TimeTravel {
 
   /** Fresh version-store root PER INVOCATION (the Compaction
     * discipline): a JVM-wide singleton store would let two concurrent
-    * sessions overwrite each other's v1/v2 between the version writes
+    * sessions overwrite each other's versions between the version writes
     * and the audit re-read. Shutdown-hook cleanup, not eager — the
     * audit DataFrame reads the store lazily.
     */
-  private def freshRoot(): java.nio.file.Path =
-    graft.core.Scratch.fresh("graft_ttravel")
+  private def freshStore(): String =
+    s"${graft.core.Scratch.fresh("graft_ttravel")}/orders"
+
+  /** Commit `df` as version `v` of a fresh store (no rival claimant). */
+  private def put(df: DataFrame, store: String, v: Long): Unit =
+    if (!Lake.commit(df, store, v, "time_travel"))
+      throw new IllegalStateException(s"version $v of $store already claimed")
 
   val xTimeTravel = Q(
     "x_time_travel",
@@ -76,13 +82,13 @@ object TimeTravel {
        ORDER BY version""") { (s, dir) =>
     val orders = T(s, dir, "orders")
       .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
-    val store = s"${freshRoot()}/orders"
+    val store = freshStore()
 
     // version 1: the full table
-    orders.write.mode("overwrite").parquet(s"$store/v1")
+    put(orders, store, 1L)
 
     // the change batch (delete wins over update on overlap)
-    val v1 = s.read.parquet(s"$store/v1")
+    val v1 = Lake.readVersion(s, store, 1L)
     val maxK = orders.agg(max(col("k"))).head().getLong(0)
     val applied = v1
       .filter(col("k") % 101 =!= 0)
@@ -90,15 +96,15 @@ object TimeTravel {
         .otherwise(col("v")))
       .unionByName(s.range(1, 4)
         .select((col("id") + maxK).as("k"), (col("id") * 100.0).as("v")))
-    applied.write.mode("overwrite").parquet(s"$store/v2")
+    put(applied, store, 2L)
 
     // the graded audit reads ONLY the store
-    def stats(ver: Int) = s.read.parquet(s"$store/v$ver")
+    def stats(ver: Int) = Lake.readVersion(s, store, ver)
       .agg(count(lit(1)).as("n_rows"), E.sumd(col("v")).as("total"))
       .select(lit(ver.toLong).as("version"), col("n_rows"), col("total"))
-    val r1 = s.read.parquet(s"$store/v1")
+    val r1 = Lake.readVersion(s, store, 1L)
       .select(col("k").as("k1"), col("v").as("va"))
-    val r2 = s.read.parquet(s"$store/v2")
+    val r2 = Lake.readVersion(s, store, 2L)
       .select(col("k").as("k2"), col("v").as("vb"))
     val diff = r1.join(r2, col("k1") === col("k2"), "full_outer")
       .agg(sum(when(col("k1").isNull, 1L).otherwise(0L)).as("n_added"),
@@ -160,9 +166,9 @@ object TimeTravel {
        ORDER BY version""") { (s, dir) =>
     val orders = T(s, dir, "orders")
       .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
-    val store = s"${freshRoot()}/orders"
-    orders.write.mode("overwrite").parquet(s"$store/v1")
-    val v1 = s.read.parquet(s"$store/v1")
+    val store = freshStore()
+    put(orders, store, 1L)
+    val v1 = Lake.readVersion(s, store, 1L)
     val maxK = orders.agg(max(col("k"))).head().getLong(0)
     val v2 = v1
       .filter(col("k") % 101 =!= 0)
@@ -170,20 +176,17 @@ object TimeTravel {
         .otherwise(col("v")))
       .unionByName(s.range(1, 4)
         .select((col("id") + maxK).as("k"), (col("id") * 100.0).as("v")))
-    v2.write.mode("overwrite").parquet(s"$store/v2")
-    s.read.parquet(s"$store/v2").filter(col("k") % 113 =!= 0)
-      .write.mode("overwrite").parquet(s"$store/v3")
+    put(v2, store, 2L)
+    put(Lake.readVersion(s, store, 2L).filter(col("k") % 113 =!= 0), store, 3L)
 
-    // expire v1: a real prefix delete through the FileSystem
-    val conf = s.sparkContext.hadoopConfiguration
-    val p1 = new org.apache.hadoop.fs.Path(s"$store/v1")
-    val fs = p1.getFileSystem(conf)
-    fs.delete(p1, true)
+    // expire v1: the store's one expiry step, a real prefix delete
+    // through the FileSystem
+    Lake.expire(Lake.fsOf(s, store), store, 1L)
+    val live = Lake.versions(s, store).toSet
 
-    def audit(ver: Int) = {
-      val path = new org.apache.hadoop.fs.Path(s"$store/v$ver")
-      if (fs.exists(path))
-        s.read.parquet(path.toString)
+    def audit(ver: Int) =
+      if (live.contains(ver.toLong))
+        Lake.readVersion(s, store, ver)
           .agg(count(lit(1)).as("n_rows"), E.sumd(col("v")).as("total"))
           .select(lit(ver.toLong).as("version"), lit(true).as("available"),
             col("n_rows"), col("total"))
@@ -191,7 +194,6 @@ object TimeTravel {
         s.range(1).select(lit(ver.toLong).as("version"),
           lit(false).as("available"), lit(0L).as("n_rows"),
           lit(0.0).as("total"))
-    }
     audit(1).unionByName(audit(2)).unionByName(audit(3)).orderBy("version")
   }
 

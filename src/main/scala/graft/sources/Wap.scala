@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Exact => E, Q, Scratch, Tables => T}
@@ -21,16 +20,15 @@ import graft.core.{Exact => E, Q, Scratch, Tables => T}
   * (null join keys, duplicated primary keys — the classic upstream-bug
   * signatures) from becoming the current version in the first place.
   *
-  * Publish atomicity: one CAS claim (ConcurrentCommit.tryClaim — the
-  * audit trail of who published) followed by one directory rename of
-  * the staged snapshot into `v=<n>`; the rename carries the staging
-  * write's `_SUCCESS`, which is the reader-visibility point
-  * (Lake.currentVersion semantics). Readers therefore never see a
-  * half-published version. Under contention a claim loss means the
-  * staged state was computed against a stale base: the caller re-stages
-  * against the new base and re-audits (same rebase discipline as
-  * ConcurrentCommit.commitAppend); publish() returns None rather than
-  * guessing.
+  * Publish atomicity: [[Lake.publishStaged]], the version store's one
+  * staged publish (format and claim described once, in Lake's
+  * version-store section): a stage without the commit marker is
+  * refused, otherwise one claim and one directory rename of the staged
+  * snapshot into place, so readers never see a half-published version.
+  * Under contention a claim loss means the staged state was computed
+  * against a stale base: the caller re-stages against the new base and
+  * re-audits (same rebase discipline as ConcurrentCommit.commitAppend);
+  * publish() returns None rather than guessing.
   *
   * Scale posture: the audit is two hash aggregations over the staged
   * snapshot (null-key count is map-side combined; duplicate-key count
@@ -80,24 +78,19 @@ object Wap {
 
   /** Atomically publish a staged snapshot as version `baseVersion + 1`,
     * where `baseVersion` is the version the candidate was STAGED
-    * against (−1 for an empty store): CAS-claim `v=<base+1>`, then
-    * rename the staged directory into place. The claim being pinned to
-    * the staging base IS the conflict detection — if anything committed
+    * against (−1 for an empty store). The claim being pinned to the
+    * staging base IS the conflict detection — if anything committed
     * after staging, base+1 is already claimed (or the about-to-stale
     * racer loses the CAS) and publish returns None: a snapshot audited
     * against an old base must never overwrite newer commits (re-stage,
     * re-audit, retry). Claiming "current+1" instead would let the stale
-    * snapshot land as a later version and silently erase them.
+    * snapshot land as a later version and silently erase them. A stage
+    * whose write died partway is refused (None) and uses up no claim.
     */
   def publish(spark: SparkSession, root: String, stagedPath: String,
       writerId: String, baseVersion: Long): Option[Long] = {
-    val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = baseVersion + 1
-    if (!ConcurrentCommit.tryClaim(fs, root, next, writerId)) None
-    else {
-      Lake.renameOrThrow(fs, new HPath(stagedPath), new HPath(s"$root/v=$next"))
-      Some(next)
-    }
+    Option.when(Lake.publishStaged(spark, stagedPath, root, baseVersion + 1,
+      writerId))(baseVersion + 1)
   }
 
   /** X — the WAP gate end to end against real files, interleave pinned

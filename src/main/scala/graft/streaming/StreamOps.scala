@@ -885,7 +885,7 @@ object StreamOps {
   /** Apply one micro-batch of additive deltas to the versioned MV at
     * `mvDir` under exactly-once semantics: the MV snapshot CARRIES the
     * last committed batch id (every row, column `committed_batch`), so
-    * ledger and data commit in the same atomic `_SUCCESS` publication —
+    * ledger and data commit in the same atomic version commit —
     * there is no window where the delta landed but the ledger didn't
     * (or vice versa), which is precisely the crash the two-object
     * spelling (data file + separate ledger file) cannot close. A batch
@@ -971,7 +971,7 @@ object StreamOps {
     // the duplicate: batch 0 delivered again with its original id
     val dupApplied = applyAdditiveBatch(s, mvDir,
       s.read.parquet(b0Dir), 0L)
-    s.read.parquet(graft.sources.Lake.currentVersion(s, mvDir).get)
+    graft.sources.Lake.readCurrent(s, mvDir)
       .select(col("event_type"), col("n"), col("cents"),
         lit(dupApplied).as("dup_applied"),
         lit(if (dupApplied) 0L else 1L).as("dup_skips"))

@@ -50,7 +50,7 @@ object ZorderProbe {
         "o_totalprice" -> (100000L, 212000L)))
     println(s"ZPROBE files=$files rows=${orders.count()}")
     cases.foreach { case (label, bands) =>
-      val z = Lake.zPrunedFiles(fs, mPath, bands).length
+      val z = Lake.prunedFiles(fs, mPath, bands).length
       val l = linearTouched(bands)
       val full = spark.read.parquet(zdir)
       val expect = bands.foldLeft(full) { case (df, (c, (lo, hi))) =>

@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** The one scratch policy (core.Scratch), the one session builder
-  * (Sessions.local) and the one measurement tool (graft.Profile): every
-  * transient path hangs off one swept root, and no other source file
-  * builds a session, creates a temp dir, picks a tmpfs path, registers a
-  * shutdown hook or attaches a listener.
+  * (Sessions.local), the one measurement tool (graft.Profile) and the one
+  * version store (sources.Lake): every transient path hangs off one
+  * swept root, and no other source file builds a session, creates a temp
+  * dir, picks a tmpfs path, registers a shutdown hook, attaches a
+  * listener, renames a file or spells the version-store format.
   */
 class ScratchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -82,5 +83,15 @@ class ScratchSpec extends AnyFunSuite {
   test("only sources.Lake renames files") {
     assert(where("." + "rename(").keySet ==
       Set("src/main/scala/graft/sources/Lake.scala"))
+  }
+
+  // the version-store format (the version dir, its commit marker, the
+  // claim file and the branch pin) is spelled only in sources.Lake;
+  // specs may still plant dead writers by hand
+  test("only sources.Lake spells the version-store format") {
+    val lake = "src/main/scala/graft/sources/Lake.scala"
+    for (p <- Seq("_SUCCESS" + "\"", "\"_claim" + "_", "\"v" + "=",
+        "v=" + "$", "_base" + "\""))
+      assert(where(p).keySet.filter(_.startsWith("src/main")) == Set(lake), p)
   }
 }

@@ -308,9 +308,9 @@ class Round11Spec extends AnyFunSuite {
       Seq("o_totalprice" -> (400000L, 460000L)),
       Seq("o_custkey" -> (500L, 600L), "o_totalprice" -> (0L, 50000L)))
     val rows = boxes.map { box =>
-      val z = graft.sources.Lake.zPrunedFiles(fs,
+      val z = graft.sources.Lake.prunedFiles(fs,
         new Path(s"$root/z/_zmanifest.json"), box).size
-      val h = graft.sources.Lake.hPrunedFiles(fs,
+      val h = graft.sources.Lake.prunedFiles(fs,
         new Path(s"$root/h/_hmanifest.json"), box).size
       assert(z < 16 && h < 16, s"box $box prunes nothing (z=$z h=$h)")
       // correctness: pruned scans agree with the full filtered scan

@@ -23,9 +23,9 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(root))
-    assert(ConcurrentCommit.tryClaim(fs, root, 0L, "first"))
-    assert(!ConcurrentCommit.tryClaim(fs, root, 0L, "second"))
-    assert(ConcurrentCommit.tryClaim(fs, root, 1L, "second"))
+    assert(Lake.tryClaim(fs, root, 0L, "first"))
+    assert(!Lake.tryClaim(fs, root, 0L, "second"))
+    assert(Lake.tryClaim(fs, root, 1L, "second"))
   }
 
   test("pinned interleave: stale writer detects the conflict and rebases") {
@@ -108,7 +108,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a claimant that died between claim and commit
-    assert(ConcurrentCommit.tryClaim(fs, root, 1L, "dead-writer"))
+    assert(Lake.tryClaim(fs, root, 1L, "dead-writer"))
     val e = intercept[IllegalStateException] {
       ConcurrentCommit.commitAppend(spark, root,
         orders.filter(col("o_orderkey") % 3 === 1), "live",

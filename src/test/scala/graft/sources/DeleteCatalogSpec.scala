@@ -44,6 +44,25 @@ class DeleteCatalogSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet == before)
   }
 
+  test("equality deletes: a sidecar whose commit died mid-write is ignored") {
+    val root = Scratch.fresh("graft_eqdel_spec3").toString + "/s"
+    val data = (1L to 20L).map(k => (k, s"v$k")).toDF("k", "v")
+    ConcurrentCommit.commitAppend(spark, root, data, "w0")
+    DeleteVectors.commitDelete(Seq(3L).toDF("k"), root)
+    DeleteVectors.commitDelete(Seq(9L).toDF("k"), root)
+    // the second delete commit died before its marker: plant that the way
+    // OrphanGcSpec plants a dead version
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dead = fs.listStatus(new org.apache.hadoop.fs.Path(root, "deletes"))
+      .filter(_.isDirectory).map(_.getPath).maxBy(_.getName)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(dead, "_SUCCESS"), false))
+    assert(DeleteVectors.sidecarCount(spark, root) == 1)
+    val live = DeleteVectors.read(spark, root, "k")
+      .as[(Long, String)].collect().map(_._1).toSet
+    assert(live == (1L to 20L).toSet - 3L)
+  }
+
   test("catalog: versions resolve atomically; a stale publisher loses") {
     val root = Scratch.fresh("graft_cat_spec").toString + "/lake"
     Catalog.writeTable(Seq((1L, "a")).toDF("k", "v"), root, "t1", 0L)

@@ -218,9 +218,9 @@ class LakeSpec extends AnyFunSuite {
     // (custkey ~1-150, totalprice ~1k-500k)
     val ck = "o_custkey" -> (40L, 70L)
     val tp = "o_totalprice" -> (20000L, 120000L)
-    val byCust = Lake.zPrunedFiles(fs, mPath, Seq(ck)).length
-    val byPrice = Lake.zPrunedFiles(fs, mPath, Seq(tp)).length
-    val byBoth = Lake.zPrunedFiles(fs, mPath, Seq(ck, tp)).length
+    val byCust = Lake.prunedFiles(fs, mPath, Seq(ck)).length
+    val byPrice = Lake.prunedFiles(fs, mPath, Seq(tp)).length
+    val byBoth = Lake.prunedFiles(fs, mPath, Seq(ck, tp)).length
     // the z-curve gives EVERY dimension locality: each single-column
     // band must already skip files, and the conjunction skips more
     assert(byCust < files, s"custkey band touched all $files files")
@@ -254,7 +254,7 @@ class LakeSpec extends AnyFunSuite {
     // a band on a column the manifest doesn't carry degrades to a full
     // filtered scan (keeps every file) — never silently-zero rows
     val ok = "o_orderkey" -> (1L, 100L)
-    assert(Lake.zPrunedFiles(fs, mPath, Seq(ok)).length == files)
+    assert(Lake.prunedFiles(fs, mPath, Seq(ok)).length == files)
     assert(Lake.readZPruned(spark, zdir, Seq(ok)).count() ==
       orders.filter(col("o_orderkey").between(1, 100)).count())
   }

@@ -19,7 +19,7 @@ class OrphanGcSpec extends AnyFunSuite {
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "w0")
 
     // plant: a dead uncommitted v=1 (claim kept, no _SUCCESS) + litter
-    assert(ConcurrentCommit.tryClaim(fs, root, 1L, "dead"))
+    assert(Lake.tryClaim(fs, root, 1L, "dead"))
     Seq((9L, "x")).toDF("k", "v").write.parquet(s"$root/v=1")
     fs.delete(new HPath(s"$root/v=1/_SUCCESS"), false)
     fs.mkdirs(new HPath(s"$root/junk"))

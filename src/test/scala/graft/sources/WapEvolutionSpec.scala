@@ -57,6 +57,24 @@ class WapEvolutionSpec extends AnyFunSuite {
       Set((1L, "a"), (2L, "b")))
   }
 
+  test("WAP: a stage whose write died partway is refused and uses up no claim") {
+    val root = Scratch.fresh("graft_wap_spec4").toString + "/store"
+    ConcurrentCommit.commitAppend(spark, root, Seq((1L, "a")).toDF("k", "v"), "w0")
+    val staged = Wap.stage(Lake.readCurrent(spark, root)
+      .unionByName(Seq((2L, "b")).toDF("k", "v")), root, "torn")
+    // the staging write died before its commit marker landed
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(staged, "_SUCCESS"), false))
+    assert(Wap.publish(spark, root, staged, "wA", baseVersion = 0L).isEmpty)
+    // version 1 is still free: the next append takes it without waiting
+    val c = ConcurrentCommit.commitAppend(spark, root,
+      Seq((3L, "c")).toDF("k", "v"), "w1", claimWaitMs = 2000)
+    assert(c.version == 1L && c.retries == 0)
+    assert(Lake.readCurrent(spark, root).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (3L, "c")))
+  }
+
   test("x_wap_publish graded row: gates fire on the planted defects only") {
     val row = Wap.xWapPublish.build(spark, SF).collect().head
     assert(!row.getAs[Boolean]("bad_published"))
