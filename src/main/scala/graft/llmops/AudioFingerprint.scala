@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.core.Q
+import graft.core.{Q, SessionMemo}
 
 /** Audio fingerprinting — the constellation-hash near-dup detector for
   * audio corpora (Wang 2003's landmark idea, the Shazam shape), closing
@@ -110,19 +110,10 @@ object AudioFingerprint {
     * and both graded queries derive from the same peak table, so it
     * materializes once per session (localCheckpoint — tiny).
     */
-  private val peaksMemo =
-    scala.collection.concurrent.TrieMap.empty[Int, DataFrame]
+  private val peaksMemo = new SessionMemo[DataFrame]
 
-  def peaks(spark: SparkSession): DataFrame = {
-    peaksMemo.filterInPlace(
-      (_, df) => !df.sparkSession.sparkContext.isStopped)
-    val key = System.identityHashCode(spark)
-    peaksMemo.get(key).filter(_.sparkSession eq spark).getOrElse {
-      val df = peaksUncached(spark).localCheckpoint()
-      peaksMemo.put(key, df)
-      df
-    }
-  }
+  def peaks(spark: SparkSession): DataFrame =
+    peaksMemo(spark, blobDir)(peaksUncached(spark).localCheckpoint())
 
   /** Per-(file, window) spectral peak bin — exact-integer argmax. */
   private def peaksUncached(spark: SparkSession): DataFrame = {

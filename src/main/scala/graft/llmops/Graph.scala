@@ -396,8 +396,7 @@ object Graph {
       .select(shiftright(col("k"), 32).as("p1"),
         col("k").bitwiseAND(lit(0xffffffffL)).as("p2"))
       .cache()
-    graft.core.CacheBin.swap(
-      s"graph.partEdges:${System.identityHashCode(s)}:$dir", pr)
+    graft.core.CacheBin.swap(s"graph.partEdges:$dir", pr)
     pr
   }
 

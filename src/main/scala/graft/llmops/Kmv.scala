@@ -105,8 +105,7 @@ object Kmv {
     // CacheBin discipline: consecutive invocations over DIFFERENT
     // corpora (ScaleProbe replicas) must not stack cache generations;
     // same-plan re-invocations share one entry (bench warm-rep shape)
-    graft.core.CacheBin.swap(
-      s"kmv.hs:${System.identityHashCode(docs.sparkSession)}", hs)
+    graft.core.CacheBin.swap("kmv.hs", hs)
     def kth(df: org.apache.spark.sql.DataFrame, name: String) =
       df.orderBy("h").limit(K.toInt).agg(max("h").as(name))
     val na = hs.filter(col("in_a") === 1)

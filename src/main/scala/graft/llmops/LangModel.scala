@@ -1,7 +1,7 @@
 package graft.llmops
 
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, SessionMemo, Tables => T}
 
 /** Statistical language-model quality filtering — the CCNet-style
   * perplexity gate every large pretraining corpus goes through: train a
@@ -145,21 +145,17 @@ object LangModel {
     */
   /** Shared cross-perplexity scores — (doc_id, nll) under the
     * lang='en'-trained model — computed ONCE per (session, dir) and
-    * reused by x_lm_crossppl and x_ccnet_buckets (the embeddingsBase
-    * pattern: two graded queries consume the same trained-model scoring
-    * pass, and at 100 TB you score the corpus once and make both
-    * decisions from the scores, not retrain per decision).
+    * reused by x_lm_crossppl and x_ccnet_buckets: two graded queries
+    * consume the same trained-model scoring pass, and at 100 TB you
+    * score the corpus once and make both decisions from the scores, not
+    * retrain per decision.
     */
   private val crossScoredMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(Int, String), org.apache.spark.sql.DataFrame]
+    new SessionMemo[org.apache.spark.sql.DataFrame]
 
   def crossScored(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    crossScoredMemo.filterInPlace(
-      (_, df) => !df.sparkSession.sparkContext.isStopped)
-    val key = (System.identityHashCode(s), dir)
-    crossScoredMemo.get(key).filter(_.sparkSession eq s).getOrElse {
+      dir: String): org.apache.spark.sql.DataFrame =
+    crossScoredMemo(s, dir) {
       val docs = T(s, dir, "documents")
       val ref = docs.filter(col("lang") === "en").select("doc_id", "text")
       // an empty reference split would make every probability 0/0 (NULL
@@ -167,15 +163,10 @@ object LangModel {
       // NULLS-LAST noise — fail loudly instead
       require(!ref.isEmpty,
         "cross-perplexity: reference split (lang='en') is empty")
-      val df = avgNllCross(ref, docs.select("doc_id", "text"),
-          cacheKey = s"lm.cross.model:${System.identityHashCode(s)}:$dir")
+      avgNllCross(ref, docs.select("doc_id", "text"),
+          cacheKey = s"lm.cross.model:$dir")
         .cache()
-      graft.core.CacheBin.swap(
-        s"lm.cross.scored:${System.identityHashCode(s)}:$dir", df)
-      crossScoredMemo.put(key, df)
-      df
     }
-  }
 
   val xLmCrossPpl = Q(
     "x_lm_crossppl",

@@ -2,7 +2,7 @@ package graft.llmops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, SessionMemo, Tables => T}
 
 /** Near-duplicate detection via MinHash + LSH banding (SURVEY.md §2b Q33).
   *
@@ -77,25 +77,10 @@ object MinHashLSH {
     * silently fork the cache. At scale this is the corpus' one condensed
     * shingle pass — the most expensive narrow stage of every LSH query.
     */
-  private val wordSetsBases =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
+  private val wordSetsBases = new SessionMemo[DataFrame]
 
-  def wordSetsBase(s: SparkSession, dir: String): DataFrame = {
-    // same discipline as VectorSearch.embeddingsBase: sweep stopped
-    // sessions' entries, eq-check the served frame's session, and scope
-    // the bin key to the session so parallel live sessions sharing one
-    // CacheManager never unpersist each other's generation
-    wordSetsBases.filterInPlace(
-      (_, df) => !df.sparkSession.sparkContext.isStopped)
-    val key = (System.identityHashCode(s), dir)
-    wordSetsBases.get(key).filter(_.sparkSession eq s).getOrElse {
-      val sets = wordSets(T(s, dir, "documents"), 3).cache()
-      graft.core.CacheBin.swap(
-        s"lsh.wordsets:${System.identityHashCode(s)}:$dir", sets)
-      wordSetsBases.put(key, sets)
-      sets
-    }
-  }
+  def wordSetsBase(s: SparkSession, dir: String): DataFrame =
+    wordSetsBases(s, dir)(wordSets(T(s, dir, "documents"), 3).cache())
 
   def wordSets(documents: DataFrame, k: Int): DataFrame =
     documents

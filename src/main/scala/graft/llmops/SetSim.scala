@@ -2,7 +2,7 @@ package graft.llmops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, SessionMemo, Tables => T}
 
 /** Exact set-similarity self-join via PREFIX FILTERING (AllPairs /
   * PPJoin, Bayardo et al. WWW'07; Chaudhuri et al. ICDE'06) — the other
@@ -75,24 +75,14 @@ object SetSim {
     * `documents` table: computed and cached once per (session, dir) and
     * reused by x_setsim_join AND x_containment_join (their thresholds
     * differ, but the df dictionary and the per-doc re-sort — the two
-    * wide stages — do not). Same memo discipline as
-    * MinHashLSH.wordSetsBase / VectorSearch.embeddingsBase.
+    * wide stages — do not).
     */
-  private val orderedBases =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
+  private val orderedBases = new SessionMemo[DataFrame]
 
-  def orderedBase(s: SparkSession, dir: String): DataFrame = {
-    orderedBases.filterInPlace(
-      (_, df) => !df.sparkSession.sparkContext.isStopped)
-    val key = (System.identityHashCode(s), dir)
-    orderedBases.get(key).filter(_.sparkSession eq s).getOrElse {
-      val ord = orderedSets(elements(MinHashLSH.wordSetsBase(s, dir))).cache()
-      graft.core.CacheBin.swap(
-        s"setsim.ordered:${System.identityHashCode(s)}:$dir", ord)
-      orderedBases.put(key, ord)
-      ord
+  def orderedBase(s: SparkSession, dir: String): DataFrame =
+    orderedBases(s, dir) {
+      orderedSets(elements(MinHashLSH.wordSetsBase(s, dir))).cache()
     }
-  }
 
   /** PREFIX elements of a df-ordered base: the first L − ⌈t·L⌉ + 1 of
     * each set, with ⌈t·L⌉ = (num·L + den − 1) div den — the rarest

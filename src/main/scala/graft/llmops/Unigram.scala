@@ -2,7 +2,7 @@ package graft.llmops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, SessionMemo, Tables => T}
 
 /** Unigram-LM (SentencePiece-style) tokenizer — the second tokenizer
   * family real pipelines use beside BPE (Kudo 2018: seed a substring
@@ -95,27 +95,19 @@ object Unigram {
       .select(col("w"), col("cnt"), col("r.n_pieces").as("n_pieces"),
         col("r.score_fix").as("score_fix"), col("r.seg").as("seg"))
 
-  /** Session-memoized trained model per lake dir (the wordSetsBase /
-    * pqIndex discipline: a tokenizer is trained once and applied many
-    * times; the three graded queries share one training run). The
-    * returned segmentation frame is localCheckpoint'd — the unrolled
-    * Viterbi lineage is enormous, and every downstream action would
-    * otherwise re-analyze it (the FullCuration lesson).
+  /** Session-memoized trained model per lake dir: a tokenizer is
+    * trained once and applied many times; the three graded queries
+    * share one training run. The returned segmentation frame is
+    * localCheckpoint'd — the unrolled Viterbi lineage is enormous, and
+    * every downstream action would otherwise re-analyze it (the
+    * FullCuration lesson).
     */
-  private val trainMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (Seq[(String, Long, Long)], DataFrame)]
+  private val trainMemo =
+    new SessionMemo[(Seq[(String, Long, Long)], DataFrame)]
 
   def trainedModel(s: SparkSession, dir: String)
-      : (Seq[(String, Long, Long)], DataFrame) = {
-    trainMemo.filterInPlace(
-      (_, v) => !v._2.sparkSession.sparkContext.isStopped)
-    val key = (System.identityHashCode(s), dir)
-    trainMemo.get(key).filter(_._2.sparkSession eq s).getOrElse {
-      val m = train(T(s, dir, "documents"))
-      trainMemo.put(key, m)
-      m
-    }
-  }
+      : (Seq[(String, Long, Long)], DataFrame) =
+    trainMemo(s, dir)(train(T(s, dir, "documents")))
 
   /** The trained model: (vocab rows (piece, usage, lp_fix) sorted by
     * piece, and the final-segmentation frame over the histogram).

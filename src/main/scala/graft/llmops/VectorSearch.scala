@@ -3,7 +3,7 @@ package graft.llmops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{Q, Scratch, Tables => T}
+import graft.core.{Q, Scratch, SessionMemo, Tables => T}
 
 /** Similarity search over an embedding column (SURVEY.md §2b Q34 + the
   * training-data-ops extensions).
@@ -37,38 +37,22 @@ object VectorSearch {
     * also the scale posture: the normalized base is the vector index's one
     * full pass over the corpus, and every search derives from it.
     */
-  private val bases =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
+  private val bases = new SessionMemo[DataFrame]
 
-  def embeddingsBase(s: SparkSession, dir: String): DataFrame = {
-    // entries of stopped sessions are dead weight (each pins the dead
-    // session's plan state) — sweep them on every lookup; the map holds
-    // at most live-sessions × dirs entries
-    bases.filterInPlace((_, df) => !df.sparkSession.sparkContext.isStopped)
-    val key = (System.identityHashCode(s), dir)
-    // eq-check the memoized frame's session: identityHashCode can recur
-    // after the original session is stopped and collected, and a frame
-    // bound to a dead session must never be served
-    bases.get(key).filter(_.sparkSession eq s).getOrElse {
+  def embeddingsBase(s: SparkSession, dir: String): DataFrame =
+    bases(s, dir) {
       // NOTE (round 16): repartitioning this base to defaultParallelism
       // was tried and REVERTED — it parallelizes the few compute-heavy
       // consumers but taxes the many small/iterative ones (coreset,
       // semdedup, embed_neardup ran 1.5-2.5x slower paying 32 tasks per
       // tiny job). Heavy consumers spread the base themselves at their
       // own entry (silhouette grid, bitext grid, the ivfpq append batch).
-      val df = T(s, dir, "embeddings")
+      T(s, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           col("embedding").cast("array<double>").as("emb"),
           graft.functions.ArrayOps.l2normalize(col("embedding")).as("n_emb"))
         .cache()
-      // the bin key is SESSION-scoped: two live sessions sharing one
-      // CacheManager must not unpersist each other's base generation
-      graft.core.CacheBin.swap(
-        s"vector.base:${System.identityHashCode(s)}:$dir", df)
-      bases.put(key, df)
-      df
     }
-  }
 
   /** cosine(a, b) — mirrors DuckDB's dot/(sqrt(na)*sqrt(nb)) shape. */
   def cosine(a: Column, b: Column): Column =
@@ -568,21 +552,15 @@ object VectorSearch {
     * base — computing it once per data dir halves the driver-synchronized
     * iteration jobs, and keeps both queries' assignments consistent (the
     * ANN lists ARE the cluster assignment). Bounded driver state: k×dim
-    * doubles. Same sweep/eq-check discipline as embeddingsBase.
+    * doubles.
     */
-  private val centroidMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (SparkSession, Array[Array[Double]])]
+  private val centroidMemo = new SessionMemo[Array[Array[Double]]]
 
-  def sharedCentroids(s: SparkSession, dir: String): Array[Array[Double]] = {
-    centroidMemo.filterInPlace((_, v) => !v._1.sparkContext.isStopped)
-    val key = (System.identityHashCode(s), dir)
-    centroidMemo.get(key).filter(_._1 eq s).map(_._2).getOrElse {
-      val e = embeddingsBase(s, dir).select(col("vec_id"), col("n_emb"))
-      val c = kmeansCentroids(e, ANN_K, 2)
-      centroidMemo.put(key, (s, c))
-      c
+  def sharedCentroids(s: SparkSession, dir: String): Array[Array[Double]] =
+    centroidMemo(s, dir) {
+      kmeansCentroids(
+        embeddingsBase(s, dir).select(col("vec_id"), col("n_emb")), ANN_K, 2)
     }
-  }
 
   /** Gate bars for x_embed_cluster, chosen with slack under the measured
     * values at sf0.001/0.01/0.1 (see scaladoc below) so last-ulp centroid
@@ -872,29 +850,21 @@ object VectorSearch {
   }
 
   /** The built PQ index — (codebooks, code table with coarse cid) —
-    * memoized per (session, dir) with the embeddingsBase discipline: an
-    * index is built ONCE and searched many times; a bench rep or a
-    * second query re-building codebooks from scratch would measure
-    * index construction, not search.
+    * memoized per (session, dir): an index is built ONCE and searched
+    * many times; a bench rep or a second query re-building codebooks
+    * from scratch would measure index construction, not search.
     */
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (DataFrame, DataFrame)]
+  private val pqMemo = new SessionMemo[(DataFrame, DataFrame)]
 
-  def pqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    pqMemo.filterInPlace((_, v) => !v._1.sparkSession.sparkContext.isStopped)
-    val key = (System.identityHashCode(s), dir)
-    pqMemo.get(key).filter(_._1.sparkSession eq s).getOrElse {
+  def pqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    pqMemo(s, dir) {
       val e = embeddingsBase(s, dir).select("vec_id", "n_emb")
       val resid = coarseResiduals(s, dir, e)
       val cb = pqCodebooks(resid.select("vec_id", "n_emb"), PQ_ITERS).cache()
       val codes = assignCodes(subvectors(resid.select("vec_id", "n_emb")), cb)
         .join(resid.select("vec_id", "ccid"), Seq("vec_id")).cache()
-      graft.core.CacheBin.swap(
-        s"pq.index:${System.identityHashCode(s)}:$dir", cb, codes)
-      pqMemo.put(key, (cb, codes))
       (cb, codes)
     }
-  }
 
   /** Stage 2 of every PQ-backed search + the recall audit, shared by
     * x_pq_recall and x_ivfpq_search: exact re-rank of the ADC shortlist
@@ -1107,19 +1077,10 @@ object VectorSearch {
     * x_ivfpq_incremental, or bench reps) reuses the stored files
     * instead of rewriting them.
     */
-  private val persistMemo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
+  private val persistMemo = new SessionMemo[String]
 
-  def persistPqIndex(s: SparkSession, dir: String): String = {
-    val key = (System.identityHashCode(s), dir)
-    persistMemo.get(key) match {
-      case Some(p) if !s.sparkContext.isStopped => return p
-      case _ => persistMemo.filterInPlace((k, _) => k._1 != key._1)
-    }
-    val path = persistPqIndexNow(s, dir)
-    persistMemo.put(key, path)
-    path
-  }
+  def persistPqIndex(s: SparkSession, dir: String): String =
+    persistMemo(s, dir)(persistPqIndexNow(s, dir))
 
   private def persistPqIndexNow(s: SparkSession, dir: String): String = {
     import s.implicits._

@@ -2,7 +2,7 @@ package graft.llmops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Q, Tables => T}
+import graft.core.{Q, SessionMemo, Tables => T}
 
 /** WordPiece tokenizer — the THIRD tokenizer family real pipelines ship
   * beside BPE and unigram-LM (Wu et al. 2016; BERT's tokenizer). Its
@@ -66,23 +66,14 @@ object WordPiece {
   private def coreLen = when(col("p").startsWith("##"), length(col("p")) - 2)
     .otherwise(length(col("p")))
 
-  /** Session-memoized trained model per lake dir (the unigram
-    * discipline: train once, the three graded queries share the run).
+  /** Session-memoized trained model per lake dir: train once, the
+    * three graded queries share the run.
     */
-  private val trainMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (Seq[(String, Long)], DataFrame)]
+  private val trainMemo = new SessionMemo[(Seq[(String, Long)], DataFrame)]
 
   def trainedModel(s: SparkSession, dir: String)
-      : (Seq[(String, Long)], DataFrame) = {
-    trainMemo.filterInPlace(
-      (_, v) => !v._2.sparkSession.sparkContext.isStopped)
-    val key = (System.identityHashCode(s), dir)
-    trainMemo.get(key).filter(_._2.sparkSession eq s).getOrElse {
-      val m = train(T(s, dir, "documents"))
-      trainMemo.put(key, m)
-      m
-    }
-  }
+      : (Seq[(String, Long)], DataFrame) =
+    trainMemo(s, dir)(train(T(s, dir, "documents")))
 
   /** The trained model: vocabulary rows (piece, freq) sorted by piece,
     * and the greedy-segmentation frame over the word histogram.

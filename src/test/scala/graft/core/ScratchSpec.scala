@@ -6,11 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
 /** The one scratch policy (core.Scratch), the one session builder
-  * (Sessions.local), the one measurement tool (graft.Profile) and the one
-  * version store (sources.Lake): every transient path hangs off one
-  * swept root, and no other source file builds a session, creates a temp
-  * dir, picks a tmpfs path, registers a shutdown hook, attaches a
-  * listener, renames a file or spells the version-store format.
+  * (Sessions.local), the one measurement tool (graft.Profile), the one
+  * version store (sources.Lake) and the one session memo
+  * (core.SessionMemo): every transient path hangs off one swept root,
+  * and no other source file builds a session, creates a temp dir, picks
+  * a tmpfs path, registers a shutdown hook, attaches a listener, renames
+  * a file, spells the version-store format or keys state by an identity
+  * hash.
   */
 class ScratchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -93,5 +95,15 @@ class ScratchSpec extends AnyFunSuite {
     for (p <- Seq("_SUCCESS" + "\"", "\"_claim" + "_", "\"v" + "=",
         "v=" + "$", "_base" + "\""))
       assert(where(p).keySet.filter(_.startsWith("src/main")) == Set(lake), p)
+  }
+
+  // an identity hash recurs once its session is collected, so a memo
+  // keyed by one can serve a dead session's state to a new session;
+  // per-session state goes through core.SessionMemo, keyed by the
+  // session itself, and only Scratch.path names a directory by the hash
+  test("only core keys anything by a session's identity hash") {
+    assert(where("System.identity" + "HashCode").keySet
+      .filter(_.startsWith("src/main")) ==
+      Set("src/main/scala/graft/core/Core.scala"))
   }
 }
