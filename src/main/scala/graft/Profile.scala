@@ -3,7 +3,11 @@ package graft
 import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -23,12 +27,37 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object Profile {
 
-  /** Plan nodes whose presence in any execution of a run is recorded: a
-    * cross product, a nested-loop join or a sort-based aggregate is
-    * load-independent evidence of a plan that will not survive growth.
+  /** Plan shapes whose presence in any execution of a run is recorded,
+    * each load-independent evidence of a plan that may not survive
+    * growth: a cross product, a nested-loop join, a sort-based aggregate
+    * and a single-partition stage (a shuffle to one partition, a window
+    * with no partition key). For the last two the record keeps the input
+    * rows, which tell a stage that grows with the data from a
+    * result-bounded one (a global count's partials).
     */
-  val TrackedNodes: Seq[String] =
-    Seq("CartesianProduct", "BroadcastNestedLoopJoin", "SortAggregate")
+  val TrackedNodes: Seq[String] = Seq("CartesianProduct",
+    "BroadcastNestedLoopJoin", "SortAggregate", "SinglePartitionExchange",
+    "UnpartitionedWindow")
+
+  /** The tracked shapes of an executed plan (subqueries and adaptive
+    * stages included); a single-partition stage's input rows are the
+    * numOutputRows of the nearest node below it that counts rows.
+    */
+  private object Shapes extends AdaptiveSparkPlanHelper {
+    def of(plan: SparkPlan): Seq[(String, Option[Long])] =
+      collectWithSubqueries(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
+          ("SinglePartitionExchange", rowsInto(e))
+        case w: WindowExec if w.partitionSpec.isEmpty =>
+          ("UnpartitionedWindow", rowsInto(w))
+        case p if TrackedNodes.contains(p.nodeName) => (p.nodeName, None)
+      }
+
+    private def rowsInto(p: SparkPlan): Option[Long] = allChildren(p) match {
+      case Seq(c) => c.metrics.get("numOutputRows").map(_.value).orElse(rowsInto(c))
+      case _ => None
+    }
+  }
 
   /** One Spark job: its id, the call site that launched it, its wall. */
   final case class Job(id: Int, site: String, wallS: Double)
@@ -38,21 +67,24 @@ object Profile {
     * less that action's Catalyst time), plan is the Catalyst time
     * (analysis, optimization, planning) summed over every execution in
     * the run, exec is the noop sink's wall less its own Catalyst time.
-    * Run and CPU seconds are summed over tasks.
+    * Run and CPU seconds are summed over tasks; `inputRows` is the most
+    * any instance of a tracked single-partition shape took in.
     */
   final case class Record(
       label: String,
       wallS: Double, buildS: Double, planS: Double, execS: Double,
       jobs: Seq[Job], tasks: Long, runS: Double, cpuS: Double,
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
-      nodes: Set[String], error: Option[String]) {
+      nodes: Set[String], inputRows: Map[String, Long],
+      error: Option[String]) {
 
     def show: String = {
       val head = f"== $label wall=$wallS%.3f s (build=$buildS%.3f " +
         f"plan=$planS%.3f exec=$execS%.3f) jobs=${jobs.size} tasks=$tasks " +
         f"run=$runS%.3f s cpu=$cpuS%.3f s shuffle r/w=$shuffleReadBytes/" +
         s"$shuffleWriteBytes B spill=$spillBytes B nodes=" +
-        (if (nodes.isEmpty) "-" else nodes.toSeq.sorted.mkString(","))
+        (if (nodes.isEmpty) "-" else nodes.toSeq.sorted.map(n =>
+          inputRows.get(n).fold(n)(rows => s"$n(in=$rows)")).mkString(","))
       val lines = error.map(e => s"  ERROR $e").toSeq ++
         jobs.map(j => f"  job${j.id}%5d ${j.wallS}%8.3f s  ${j.site}")
       (head +: lines).mkString("\n")
@@ -86,6 +118,7 @@ object Profile {
       val jobs = mutable.ArrayBuffer.empty[Job]
       var tasks, runMs, cpuNs, shRead, shWrite, spill, planMs = 0L
       val nodes = mutable.Set.empty[String]
+      val inputRows = mutable.Map.empty[String, Long]
     }
     // the open run's counters; null between runs, when events are dropped
     @volatile private var acc: Acc = null
@@ -132,11 +165,14 @@ object Profile {
 
     private val executions = new QueryExecutionListener {
       private def census(qe: QueryExecution): Unit = {
-        val plan = qe.executedPlan.toString
+        val shapes = Shapes.of(qe.executedPlan)
         val ms = qe.tracker.phases.values.map(p => p.endTimeMs - p.startTimeMs).sum
         open { a =>
           a.planMs += ms
-          TrackedNodes.foreach(n => if (plan.contains(n)) a.nodes += n)
+          shapes.foreach { case (n, rows) =>
+            a.nodes += n
+            rows.foreach(r => a.inputRows(n) = a.inputRows.getOrElse(n, 0L) max r)
+          }
         }
       }
       def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = census(qe)
@@ -179,7 +215,8 @@ object Profile {
         Record(label, wallNs / 1e9, buildS, planS,
           math.max(0.0, wallNs / 1e9 - buildS - planS),
           a.jobs.sortBy(_.id).toSeq, a.tasks, a.runMs / 1e3, a.cpuNs / 1e9,
-          a.shRead, a.shWrite, a.spill, a.nodes.toSet, error)
+          a.shRead, a.shWrite, a.spill, a.nodes.toSet, a.inputRows.toMap,
+          error)
       }
     }
 
@@ -191,6 +228,21 @@ object Profile {
     }
   }
 
+  /** Run each named inventory query twice through `rec` on the lake at
+    * `sfDir`, printing both records; returns each query's warm (rep 2)
+    * record. The growth census (InventoryCensus) shares this loop.
+    */
+  def reps(rec: Recorder, spark: SparkSession, sfDir: String,
+      names: Seq[String]): Seq[(String, Record)] =
+    names.map { name =>
+      val fn = SparkEntry.queries(name)
+      name -> (1 to 2).map { rep =>
+        val r = rec.run(s"$name rep $rep")(fn(spark, sfDir))
+        println(r.show)
+        r
+      }.last
+    }
+
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
       System.err.println("usage: graft.Profile <sfDir> <name> [<name> ...]")
@@ -200,12 +252,7 @@ object Profile {
     val spark = Sessions.local()
     warm(spark, sfDir)
     val rec = new Recorder(spark)
-    args.drop(1).foreach { name =>
-      val fn = SparkEntry.queries(name)
-      (1 to 2).foreach { rep =>
-        println(rec.run(s"$name rep $rep")(fn(spark, sfDir)).show)
-      }
-    }
+    reps(rec, spark, sfDir, args.toSeq.drop(1))
     rec.close()
     spark.stop()
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder: Bench, Verify, the cron mains, the test
-  * suites and the dev probes all call it, so every timed or verified run
+  * suites and the dev tools all call it, so every timed or verified run
   * uses the same engine config. UTC-pinned, AQE on, shuffle partitions
   * sized for the local core count instead of the 200 default (the one
   * local-mode knob that matters; on a real cluster this comes from the
@@ -36,6 +36,12 @@ object Sessions {
       .config("spark.local.dir", graft.core.Scratch.sparkLocalDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // FileStreamSink.hasMetadata stats a single read path for a metadata
+    // dir and WARNs, stack trace and all, when a glob path (every silver
+    // hour, gold day and blob read) fails that stat: its only warning
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

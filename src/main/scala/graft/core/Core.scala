@@ -89,10 +89,6 @@ object Tables {
         expr(s"timestamp_micros($colName div 1000)")
       case _ => col(colName).cast(org.apache.spark.sql.types.TimestampType)
     }
-
-  /** Register every table as a temp view (for spark.sql-authored queries). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }
 
 /** Cross-engine numeric determinism helpers.
@@ -112,9 +108,6 @@ object Exact {
 
   /** Order-independent, cross-engine-exact sum of a 2-decimal double. */
   def sumd(c: Column): Column = sum(dec(c)).cast("double")
-
-  /** Exact mean: exact decimal sum divided (in double) by the count. */
-  def avgd(c: Column): Column = sumd(c) / count(lit(1))
 }
 
 /** The bucket-refined GLOBAL cumsum: the one escape this engine uses for

@@ -282,7 +282,7 @@ object Chunking {
 
   /** The x_line_dedup machinery over any (doc_id, text) frame — one row
     * per input doc: (doc_id, text_clean, n_kept, n_dropped). Shared by
-    * the Q above, the full-curation DAG (stage 6), and the scale probe.
+    * the Q above and the full-curation DAG (stage 6).
     */
   def lineDedup(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -363,15 +363,7 @@ object Chunking {
               CAST(coalesce(sum(reg.e - reg.s), 0) AS BIGINT) AS n_repeated_chars
        FROM documents doc LEFT JOIN reg ON doc.doc_id = reg.doc_id
        GROUP BY 1 ORDER BY 1""") { (s, dir) =>
-    substrStats(T(s, dir, "documents")).orderBy("doc_id")
-  }
-
-  /** The x_substr_dedup machinery over any (doc_id, text) frame — one
-    * row per input doc: (doc_id, n_regions, n_repeated_chars). Shared by
-    * the Q above and the scale probe.
-    */
-  def substrStats(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+    val docs = T(s, dir, "documents")
     val wins = docs
       .filter(length(col("text")) >= SUBSTR_L)
       .select(col("doc_id"),
@@ -396,6 +388,7 @@ object Chunking {
       .groupBy(col("doc_id"))
       .agg(coalesce(count(col("isl")), lit(0L)).as("n_regions"),
         coalesce(sum(col("e") - col("s")), lit(0L)).as("n_repeated_chars"))
+      .orderBy("doc_id")
   }
 
   /** X — content-defined chunking (the rsync/LBFS boundary trick applied

@@ -42,10 +42,8 @@ object Coreset {
     * cached base (flat plan), then TakeOrdered(1) picks the farthest
     * point (min max-sim, id tiebreak).
     */
-  private[llmops] def centers(s: SparkSession, dir: String): Seq[(Int, Long, Long)] =
-    centersFrom(VectorSearch.embeddingsBase(s, dir).select("vec_id", "n_emb"))
-
-  private[graft] def centersFrom(base: DataFrame): Seq[(Int, Long, Long)] = {
+  private[llmops] def centers(s: SparkSession, dir: String): Seq[(Int, Long, Long)] = {
+    val base = VectorSearch.embeddingsBase(s, dir).select("vec_id", "n_emb")
     // One job per greedy pass (round 16): the chosen centers ride along
     // as a ≤K-vector LITERAL and the per-point max-cosine is
     // array_max(transform(...)) — no center re-fetch join, no explode,

@@ -169,8 +169,7 @@ object EntityResolution {
   }
 
   /** The exhaustively-blocked d≤1 join over a vocabulary column `w`
-    * (see xFuzzyJoin's completeness proof). Exposed for the ScaleProbe
-    * growth measurement.
+    * (see xFuzzyJoin's completeness proof). Exposed for the specs.
     */
   private[graft] def fuzzyPairs(v: DataFrame): DataFrame = {
     def arm(key: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
@@ -214,8 +213,7 @@ object EntityResolution {
 
   /** The exhaustively-blocked d≤2 join over a vocabulary column `w` —
     * SymSpell-style deletion-neighborhood blocking (see xFuzzyJoin2's
-    * completeness proof). Exposed for the SCALE-FUZZY2 growth
-    * measurement.
+    * completeness proof). Exposed for the specs.
     */
   private[graft] def fuzzyPairs2(v: DataFrame): DataFrame = {
     val nb = v.select(col("w"), explode(expr(delNbrSql("w"))).as("k"))

@@ -367,7 +367,7 @@ object Graph {
       expr("sum(d) div 2").as("n_edges"),
       sum(expr("d * (d - 1) div 2")).as("n_wedges"))
     val tri = closureCount(
-      orient(pr, deg, byDegree = true).localCheckpoint())
+      orient(pr, deg).localCheckpoint())
     counts.crossJoin(broadcast(tri))
       .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
         col("n_triangles"),
@@ -401,21 +401,18 @@ object Graph {
   }
 
   /** Node degrees of an undirected (p1 < p2) edge list. */
-  private[graft] def degreesOf(pr: DataFrame): DataFrame =
+  private def degreesOf(pr: DataFrame): DataFrame =
     pr.select(col("p1").as("p"))
       .union(pr.select(col("p2").as("p")))
       .groupBy("p").agg(count(lit(1)).as("d"))
 
-  /** Direct each undirected edge: by (degree, id) ascending when
-    * `byDegree` (the compact-forward orientation that bounds per-node
-    * fan-out), else by raw id order (the naive spelling the ScaleProbe
-    * measures against — identical triangle COUNT, unbounded hub
-    * fan-out).
+  /** Direct each undirected edge by (degree, id) ascending: the
+    * compact-forward orientation that bounds per-node fan-out (raw id
+    * order gives the same triangle COUNT with unbounded hub fan-out;
+    * docs/SCALING.md has the measured crossover).
     */
-  private[graft] def orient(
-      pr: DataFrame, deg: DataFrame, byDegree: Boolean): DataFrame =
-    if (!byDegree) pr.select(col("p1").as("u"), col("p2").as("v"))
-    else pr
+  private def orient(pr: DataFrame, deg: DataFrame): DataFrame =
+    pr
       .join(deg.select(col("p").as("p1"), col("d").as("d1")), "p1")
       .join(deg.select(col("p").as("p2"), col("d").as("d2")), "p2")
       .select(
@@ -429,7 +426,7 @@ object Graph {
   /** Count directed length-2 paths closed by a third edge — each
     * triangle exactly once at its out-degree-2 apex (any acyclic
     * orientation of a triangle has exactly one). */
-  private[graft] def closureCount(ed: DataFrame): DataFrame =
+  private def closureCount(ed: DataFrame): DataFrame =
     ed.as("e1")
       .join(ed.as("e2"), col("e1.v") === col("e2.u"))
       .join(ed.as("e3"),

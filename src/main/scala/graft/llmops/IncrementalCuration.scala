@@ -111,10 +111,8 @@ object IncrementalCuration {
   }
 
   /** The per-batch admission path: verdicts for every batch document
-    * against the persisted indexes + benchmark reference sets. Exposed
-    * separately so the SCALE-INCCUR probe can time exactly this (fixed
-    * batch, growing standing index). Returns (doc_id, lang, n_tokens,
-    * verdict).
+    * against the persisted indexes + benchmark reference sets. Returns
+    * (doc_id, lang, n_tokens, verdict).
     */
   def batchVerdicts(s: SparkSession, batch: DataFrame, scratch: String,
       benchGrams: DataFrame, benchEmb: DataFrame, eb: DataFrame): DataFrame = {

@@ -79,14 +79,7 @@ object Kmv {
                    ELSE (c * est_union) // $K END AS est_inter,
               exact_inter
        FROM est""") { (s, dir) =>
-    estimateFrom(T(s, dir, "documents"))
-  }
-
-  /** The full sketch-and-estimate pipeline over any (doc_id, text)
-    * frame — split out so ScaleProbe can drive it on replicated
-    * corpora. */
-  private[graft] def estimateFrom(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val docs = T(s, dir, "documents")
     val sh = docs
       .select((col("doc_id") % 2 === 0).as("even"),
         split(col("text"), " ").as("t"))
@@ -103,7 +96,7 @@ object Kmv {
         max(when(col("even"), 0L).otherwise(1L)).as("in_b"))
       .cache()
     // CacheBin discipline: consecutive invocations over DIFFERENT
-    // corpora (ScaleProbe replicas) must not stack cache generations;
+    // corpora (lake dirs) must not stack cache generations;
     // same-plan re-invocations share one entry (bench warm-rep shape)
     graft.core.CacheBin.swap("kmv.hs", hs)
     def kth(df: org.apache.spark.sql.DataFrame, name: String) =

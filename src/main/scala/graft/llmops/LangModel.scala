@@ -377,13 +377,7 @@ object LangModel {
        LEFT JOIN cnt USING (w1, w2)
        LEFT JOIN cont USING (w2), tot
        ORDER BY w1, w2""") { (s, dir) =>
-    knFrom(T(s, dir, "documents"))
-  }
-
-  /** The KN train/score pipeline over any (doc_id, text) frame — split
-    * out so ScaleProbe can drive it on replicated corpora. */
-  private[graft] def knFrom(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val docs = T(s, dir, "documents")
     val cut = Incremental.cutoffValue(docs)
     val words = docs.select(col("doc_id"), split(col("text"), " ").as("t"))
     val bg = bigrams(words)

@@ -141,8 +141,8 @@ object MinHashLSH {
     * its shingle-hash set and cardinality (doc_id, band, bh, hs, c), so a
     * candidate emerging from the (band, bh) join can be exact-verified
     * in place with no further lookup. The shared shape behind
-    * x_incremental_neardup's stored corpus side, x_stream_neardup's
-    * static side, and the SCALE-INC probe.
+    * x_incremental_neardup's stored corpus side and x_stream_neardup's
+    * static side.
     */
   def bandIndex(sets: DataFrame): DataFrame =
     bandKeys(signaturesFromSets(sets)).join(sets, "doc_id")

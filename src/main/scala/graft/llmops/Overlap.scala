@@ -53,8 +53,8 @@ object Overlap {
     pairsFrom(T(s, dir, "documents"))
 
   /** Per-doc clipped unigram matches m, candidate total c, ref total r. */
-  private[graft] def unigramStatsFrom(docs: DataFrame): DataFrame = {
-    val p = pairsFrom(docs)
+  private[llmops] def unigramStats(s: SparkSession, dir: String): DataFrame = {
+    val p = pairs(s, dir)
     val cu = p.select(col("doc_id"), explode(col("cw")).as("g"))
       .groupBy("doc_id", "g").agg(count(lit(1)).as("cc"))
     val ru = p.select(col("doc_id"), explode(col("rw")).as("g"))
@@ -66,9 +66,6 @@ object Overlap {
       .join(m, Seq("doc_id"), "left")
       .na.fill(0L, Seq("m1"))
   }
-
-  private[llmops] def unigramStats(s: SparkSession, dir: String): DataFrame =
-    unigramStatsFrom(T(s, dir, "documents"))
 
   /** X — ROUGE-1 per document: clipped unigram overlap precision /
     * recall / F1 between the rewrite and its source, all exact integer
@@ -104,7 +101,7 @@ object Overlap {
 
   /** The six corpus-level BLEU integers:
     * (m1, c1, m2, c2, r_len, c_len). */
-  private[graft] def bleuPartsFrom(docs: DataFrame): DataFrame = {
+  private[llmops] def bleuParts(s: SparkSession, dir: String): DataFrame = {
     // ONE tagged gram shuffle instead of six aggregate passes (measured
     // 1.73 s → 0.3 s at sf0.1, see BENCH_COMPARISON): both sides'
     // unigrams AND bigrams explode once with an (n, side) tag, one
@@ -121,7 +118,7 @@ object Overlap {
                                            element_at($c, i + 1)) AS g))
             ELSE slice(transform(sequence(1, 1),
                    i -> struct(2 AS n, '' AS g)), 1, 0) END)""")
-    val p = pairsFrom(docs)
+    val p = pairs(s, dir)
     val ex = p.select(col("doc_id"), lit(1L).as("is_cand"),
         explode(gramArray("cw")).as("e"))
       .union(p.select(col("doc_id"), lit(0L).as("is_cand"),
@@ -143,9 +140,6 @@ object Overlap {
       .select(col("m1"), col("c1"), col("m2"), col("c2"),
         col("r_len"), col("c1").as("c_len"))
   }
-
-  private[llmops] def bleuParts(s: SparkSession, dir: String): DataFrame =
-    bleuPartsFrom(T(s, dir, "documents"))
 
   /** The pre-round corpus BLEU double (for the rounding-margin audit). */
   private[llmops] def bleuRaw(s: SparkSession, dir: String): Double = {

@@ -38,10 +38,8 @@ object Quantize {
   val SIM_SCALE = 1000000000L
 
   /** (vec_id, n_emb, q): unit vectors plus their int8 code arrays. */
-  private[llmops] def codes(s: SparkSession, dir: String): DataFrame =
-    codesFrom(VectorSearch.embeddingsBase(s, dir).select("vec_id", "n_emb"))
-
-  private[graft] def codesFrom(base: DataFrame): DataFrame = {
+  private[llmops] def codes(s: SparkSession, dir: String): DataFrame = {
+    val base = VectorSearch.embeddingsBase(s, dir).select("vec_id", "n_emb")
     // per-dimension max|x|: D-bounded driver state (codebook)
     val m = base
       .select(posexplode(col("n_emb")).as(Seq("d", "x")))

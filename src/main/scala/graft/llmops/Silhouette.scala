@@ -194,16 +194,8 @@ object Silhouette {
                 AS sil_fix
        FROM own JOIN oth USING (vec_id)
        ORDER BY vec_id""") { (s, dir) =>
-    simplifiedSilhouette(VectorSearch.embeddingsBase(s, dir)
-      .select(col("vec_id"), col("label"), col("emb")))
-  }
-
-  /** The simplified-silhouette DAG over (vec_id, label, emb) — exposed
-    * so the SCALE-SIL probe can run it on replicated corpora.
-    */
-  private[graft] def simplifiedSilhouette(
-      emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val e = emb.select(col("vec_id"), col("label"),
+    val e = VectorSearch.embeddingsBase(s, dir).select(
+      col("vec_id"), col("label"),
       expr("transform(emb, c -> cast(round(1000000 * c) as bigint))").as("x"))
     val ex = e.select(col("vec_id"), col("label"),
         posexplode(col("x")).as(Seq("p", "v")))

@@ -137,21 +137,16 @@ object VectorSearch {
     // the one shared per-dir quantizer (memoized): a private per-call
     // k-means pays driver-synchronized iteration jobs on every run for a
     // quantizer that only moves pruning strength, never the exact answer
-    exactNearestNeighbor(e, quantizer = Some(sharedCentroids(s, dir)))
-      .orderBy("vec_id")
+    exactNearestNeighbor(e, sharedCentroids(s, dir)).orderBy("vec_id")
   }
 
-  /** Library form of the exact branch-and-bound NN search: input needs
-    * (vec_id, n_emb [normalized]); returns (vec_id, nn_id). Pass a
-    * precomputed `quantizer` (e.g. sharedCentroids) to skip the private
-    * k-means — centroid quality only affects pruning strength, never
-    * correctness (the radius bound adapts to loose clusters).
+  /** The exact branch-and-bound NN search: input needs (vec_id, n_emb
+    * [normalized]); returns (vec_id, nn_id). Centroid quality only
+    * affects pruning strength, never correctness (the radius bound
+    * adapts to loose clusters).
     */
-  def exactNearestNeighbor(e: DataFrame, k: Int = 16,
-      quantizer: Option[Array[Array[Double]]] = None): DataFrame = {
-    // one Lloyd iteration when self-quantizing: quality only moves
-    // pruning strength (see above)
-    val centroids = quantizer.getOrElse(kmeansCentroids(e, k, 1))
+  private def exactNearestNeighbor(
+      e: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
     val centLit = typedLit(centroids.map(_.toSeq).toSeq)
     // nearest-centroid assignment; keep csim to derive the list radius.
     // cached: feeds the radius agg, both join sides, and the bound scan
@@ -974,7 +969,7 @@ object VectorSearch {
   // COMPOSITION: probe the nprobe nearest coarse lists, ADC-score only
   // those lists' codes, exact re-rank the shortlist. Scanned codes per
   // probe = the probed lists' sizes — nprobe/nlists of the corpus on a
-  // balanced quantizer (measured in ScaleProbe section `ivfpq`), at
+  // balanced quantizer (measured, docs/SCALING.md), at
   // 8 bytes/vector; the raw corpus is touched only for the
   // PQ_SHORTLIST-sized re-rank.
 
@@ -999,7 +994,7 @@ object VectorSearch {
 
   /** The pruned code stream behind x_ivfpq_search: codes of the nprobe
     * best coarse lists per probe, (probe_id, csim, vec_id, block, cid).
-    * Exposed so ScaleProbe can count scanned codes — the quantity whose
+    * Exposed so specs can count scanned codes — the quantity whose
     * ratio to the full code table IS the IVF-PQ claim (≈ nprobe/nlists).
     */
   def ivfpqScannedCodes(
@@ -1128,7 +1123,7 @@ object VectorSearch {
 
   /** The deterministic "new crawl batch": one near-duplicate replica of
     * the corpus (0.999·v + 0.001·rotate(v), renormalized — the tight-
-    * cluster regime ScaleProbe's clustered mode uses, and the HARD case
+    * cluster regime of the clustered NN growth runs, and the HARD case
     * for an untouched quantizer: every new vector lands right on top of
     * an existing one, so the true top-10 of every probe is rewritten by
     * the batch).
@@ -1448,7 +1443,7 @@ object VectorSearch {
   }
 
   /** The probed coarse lists per probe (probe_id, ccid, csim), shared by
-    * both arms and by the FANN scanned-codes accounting in ScaleProbe.
+    * both arms and by the FANN scanned-codes accounting.
     */
   private[llmops] def probedLists(
       s: SparkSession, dir: String, nprobe: Int): DataFrame =

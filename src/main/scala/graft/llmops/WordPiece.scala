@@ -66,19 +66,15 @@ object WordPiece {
   private def coreLen = when(col("p").startsWith("##"), length(col("p")) - 2)
     .otherwise(length(col("p")))
 
-  /** Session-memoized trained model per lake dir: train once, the
-    * three graded queries share the run.
+  /** Session-memoized trained model per lake dir (train once, the three
+    * graded queries share the run): vocabulary rows (piece, freq) sorted
+    * by piece, and the greedy-segmentation frame over the word histogram.
     */
   private val trainMemo = new SessionMemo[(Seq[(String, Long)], DataFrame)]
 
   def trainedModel(s: SparkSession, dir: String)
-      : (Seq[(String, Long)], DataFrame) =
-    trainMemo(s, dir)(train(T(s, dir, "documents")))
-
-  /** The trained model: vocabulary rows (piece, freq) sorted by piece,
-    * and the greedy-segmentation frame over the word histogram.
-    */
-  def train(docs: DataFrame): (Seq[(String, Long)], DataFrame) = {
+      : (Seq[(String, Long)], DataFrame) = trainMemo(s, dir) {
+    val docs = T(s, dir, "documents")
     val hist = Unigram.wordHist(docs).cache()
     graft.core.CacheBin.swap("wordpiece.hist", hist)
     val bad = hist.filter(length(col("w")) > MAX_WORD ||

@@ -69,6 +69,14 @@ object GhArchive {
       col("repo.url").as("repo_url"),
       col("created_at").as("event_date"))
 
+  /** [[clean]]'s output schema. Silver readers pin it: inferring it from
+    * Parquet footers costs a job per read and fails on an empty sink.
+    */
+  val silverSchema: StructType = StructType.fromDDL(
+    "event_id BIGINT, user_id BIGINT, user_name STRING, " +
+    "user_display_name STRING, event_type STRING, repo_id BIGINT, " +
+    "repo_name STRING, repo_url STRING, event_date STRING")
+
   /** Gold daily aggregate: GROUP BY ALL + count(*), with the
     * string→timestamp cast happening only here — silver keeps event_date
     * as string, exactly like the reference

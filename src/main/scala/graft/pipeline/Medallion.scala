@@ -101,9 +101,7 @@ class Medallion(spark: SparkSession, config: LakeConfig) {
     import org.apache.spark.sql.streaming.Trigger
     val source = s"${config.silverRoot}/${config.basePath}/streaming"
     val sink = s"${config.goldRoot}/${config.basePath}/streaming"
-    val silver = spark.readStream
-      .schema(spark.read.parquet(source).schema)
-      .parquet(source)
+    val silver = spark.readStream.schema(GhArchive.silverSchema).parquet(source)
     val query = GhArchive.aggregate(silver).writeStream
       .outputMode("complete")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -123,7 +121,7 @@ class Medallion(spark: SparkSession, config: LakeConfig) {
     val source = PathLayout.silverDailyGlob(config.silverRoot, config.basePath, processDate)
     val sink = PathLayout.sinkPath(
       config.goldRoot, config.basePath, "agg", processDate, hasHourlyPartition = false)
-    val silver = spark.read.parquet(source)
+    val silver = spark.read.schema(GhArchive.silverSchema).parquet(source)
     GhArchive.aggregate(silver).write.mode("overwrite").parquet(sink)
     sink
   }

@@ -3,17 +3,24 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev probe (Test/runMain graft.InventoryCensus): runs the SparkEntry
-  * inventory once against sf0.1 and once against a k×-replicated lake
-  * (all ten tables, k=5 by default), each query under a
-  * [[Profile.Recorder]], and prints every query's record (wall, build /
-  * plan / exec split, jobs, task counters, node census). It then reports
-  * SHAPE FLIPS — a tracked plan node ([[Profile.TrackedNodes]]) that
-  * appears at k but not in the same query's k=1 baseline — plus any
-  * query that errors at scale. Flips are load-independent evidence of a
-  * plan that will not survive 100 TB; the walls grow a decade table when
-  * the probe is rerun once per k with SPARK_GRAFT_CENSUS_ONLY naming the
-  * queries.
+/** The repo's one growth tool:
+  *
+  *   sbt "Test/runMain graft.InventoryCensus [<query-prefix> ...]"
+  *
+  * runs the selected SparkEntry queries (all of them with no args) on
+  * sf0.1 (k=1) and on the k×-replicated lake for each k of [[Ks]], each
+  * through the per-query [[Profile.reps]] loop, and prints every record
+  * (wall, build / plan / exec split, jobs, task counters, tracked plan
+  * shapes). Then, per query and k, it prints the warm rep's growth
+  * against k=1 in the load-insensitive counters — `cpu_s`, tasks,
+  * shuffle write bytes, jobs, and the input rows of each tracked
+  * single-partition stage — and reports:
+  *   - SHAPE FLIPS: a tracked shape ([[Profile.TrackedNodes]]) present
+  *     at some k but not in the query's k=1 record;
+  *   - GROWS: a single-partition stage whose input at the largest k is
+  *     at least half linear in k — the one-reducer hazard a
+  *     result-bounded stage (a global count's partials) never shows;
+  *   - any query that errors at scale.
   *
   * Replication preserves each table's referential arithmetic:
   *   - region/nation: kept as-is (genuinely fixed-size dimensions —
@@ -26,61 +33,70 @@ import org.apache.spark.sql.functions._
   *     namespaces: cross-replica text similarity is 0).
   *   - embeddings: vec_id contiguous 0..kN-1 (bitext's (id+1) mod n
   *     pairing needs gap-free ids), dims circular-rotated per replica.
-  *
-  * Env: SPARK_GRAFT_CENSUS_K (default 5), SPARK_GRAFT_CENSUS_ONLY
-  * (prefix filter), SPARK_GRAFT_CPUS.
   */
 object InventoryCensus {
   private val OFF = 100000000L
 
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val k = sys.env.getOrElse("SPARK_GRAFT_CENSUS_K", "5").toInt
-    val spark = Sessions.local(cpus)
-    val only = sys.env.get("SPARK_GRAFT_CENSUS_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+  /** The replication ladder; k=1 is the source lake itself. */
+  private val Ks: Seq[Int] = Seq(1, 2, 5, 10)
 
+  def main(args: Array[String]): Unit = {
+    val spark = Sessions.local()
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => args.isEmpty || args.exists(n.startsWith))
     val rec = new Profile.Recorder(spark)
 
     val src = "/root/testdata/sf0.1"
-    val dir = s"/tmp/graft_census/k$k"
-    materialize(spark, src, dir, k)
-
-    def sweep(label: String, sfDir: String): Map[String, Set[String]] = {
-      val records = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-        .map { case (name, fn) =>
-          val r = rec.run(s"$label $name")(fn(spark, sfDir))
-          println(r.show)
-          name -> r
-        }
-      records.foreach { case (n, r) =>
-        r.error.foreach(m => println(s"CENSUS $label ERROR $n: $m")) }
-      records.collect { case (n, r) if r.nodes.nonEmpty => n -> r.nodes }.toMap
+    val byK = Ks.map { k =>
+      val dir = if (k == 1) src else s"/tmp/graft_census/k$k"
+      if (k > 1) materialize(spark, src, dir, k)
+      println(s"=== k=$k sweep ($dir) ===")
+      k -> Profile.reps(rec, spark, dir, names).toMap
     }
+    rec.close()
+    report(names, byK)
+    spark.stop()
+  }
 
-    println(s"=== k=1 baseline sweep ($src) ===")
-    val base = sweep("k1", src)
-    println(s"=== k=$k sweep ($dir) ===")
-    val scaled = sweep(s"k$k", dir)
-
-    println(s"=== SHAPE CENSUS (k=1 vs k=$k) ===")
-    val allQ = (base.keySet ++ scaled.keySet).toSeq.sorted
-    var flips = 0
-    allQ.foreach { q =>
-      val b = base.getOrElse(q, Set.empty)
-      val s = scaled.getOrElse(q, Set.empty)
-      val gained = s -- b
-      if (gained.nonEmpty) {
-        flips += 1
-        println(s"FLIP $q: +${gained.mkString(",")} (k1=${b.mkString("|")})")
+  /** Growth of every k's warm record against k=1, shape flips, growing
+    * single-partition stages and errors.
+    */
+  private def report(names: Seq[String],
+      byK: Seq[(Int, Map[String, Profile.Record])]): Unit = {
+    def x(a: Double, b: Double) = if (b > 0) f"x${a / b}%.2f" else "-"
+    val base = byK.head._2
+    val (kTop, top) = byK.last
+    var flips, growing = 0
+    println("=== GROWTH against k=1 (warm rep) ===")
+    names.foreach { q =>
+      val b = base(q)
+      b.error.foreach(m => println(s"CENSUS k1 ERROR $q: $m"))
+      byK.tail.foreach { case (k, recs) =>
+        val r = recs(q)
+        val rows = r.inputRows.toSeq.sorted.map { case (n, v) =>
+          s" $n ${x(v.toDouble, b.inputRows.getOrElse(n, 0L).toDouble)}" }.mkString
+        println(s"GROWTH $q k=$k cpu_s ${x(r.cpuS, b.cpuS)} " +
+          s"tasks ${x(r.tasks, b.tasks)} " +
+          s"shuffle_w ${x(r.shuffleWriteBytes, b.shuffleWriteBytes)} " +
+          s"jobs ${x(r.jobs.size, b.jobs.size)}$rows")
+        r.error.foreach(m => println(s"CENSUS k$k ERROR $q: $m"))
+        val gained = r.nodes -- b.nodes
+        if (gained.nonEmpty) {
+          flips += 1
+          println(s"FLIP $q k1->k$k: +${gained.toSeq.sorted.mkString(",")} " +
+            s"(k1=${b.nodes.toSeq.sorted.mkString("|")})")
+        }
+      }
+      top(q).inputRows.toSeq.sorted.foreach { case (n, v) =>
+        val v1 = b.inputRows.getOrElse(n, 0L)
+        if (2 * v >= kTop * math.max(v1, 1L)) {
+          growing += 1
+          println(s"GROWS $q $n in=$v1 at k1 -> $v at k$kTop")
+        }
       }
     }
-    println(s"queries with any tracked node at k=$k: ${scaled.size}; " +
-      s"shape flips k1->k$k: $flips")
-    if (flips == 0) println("NO FLIPS: every broadcast/hash-agg shape held at scale")
-    rec.close()
-    spark.stop()
+    println(s"queries: ${names.size}; shape flips: $flips; " +
+      s"growing single-partition stages: $growing")
   }
 
   /** Build the k×-replicated all-table lake at `dir` (materialize-once:

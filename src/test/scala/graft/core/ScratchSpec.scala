@@ -7,12 +7,13 @@ import graft.SparkTestSession
 
 /** The one scratch policy (core.Scratch), the one session builder
   * (Sessions.local), the one measurement tool (graft.Profile), the one
-  * version store (sources.Lake) and the one session memo
-  * (core.SessionMemo): every transient path hangs off one swept root,
-  * and no other source file builds a session, creates a temp dir, picks
-  * a tmpfs path, registers a shutdown hook, attaches a listener, renames
-  * a file, spells the version-store format or keys state by an identity
-  * hash.
+  * growth tool (graft.InventoryCensus), the one version store
+  * (sources.Lake) and the one session memo (core.SessionMemo): every
+  * transient path hangs off one swept root, and no other source file
+  * builds a session, creates a temp dir, picks a tmpfs path, registers a
+  * shutdown hook, attaches a listener, adds a dev main under src/test,
+  * renames a file, spells the version-store format or keys state by an
+  * identity hash.
   */
 class ScratchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -105,5 +106,12 @@ class ScratchSpec extends AnyFunSuite {
     assert(where("System.identity" + "HashCode").keySet
       .filter(_.startsWith("src/main")) ==
       Set("src/main/scala/graft/core/Core.scala"))
+  }
+
+  // growth is measured by one tool, through Profile.Recorder's counters;
+  // a one-off probe main beside it would be a second measurement path
+  test("src/test has one dev main") {
+    assert(where("def " + "main(").keySet.filter(_.startsWith("src/test")) ==
+      Set("src/test/scala/graft/InventoryCensus.scala"))
   }
 }

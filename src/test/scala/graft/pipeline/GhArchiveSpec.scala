@@ -30,6 +30,10 @@ class GhArchiveSpec extends AnyFunSuite {
     assert(df.columns.toSeq == Seq("event_id", "user_id", "user_name",
       "user_display_name", "event_type", "repo_id", "repo_name", "repo_url",
       "event_date"))
+    // the schema silver readers pin is clean's output over the raw schema
+    assert(GhArchive.clean(spark.createDataFrame(
+      java.util.List.of[Row](), GhArchive.rawSchema)).schema ==
+      GhArchive.silverSchema)
     val rows = df.orderBy("event_id").collect()
     assert(rows.length == 2)
     assert(rows(0) == Row(1L, 101L, "user1", "User One", "PushEvent",

@@ -53,6 +53,19 @@ class StreamingMedallionSpec extends AnyFunSuite {
     assert(gold(0).getLong(5) == 3L)
   }
 
+  test("streaming gold over a silver sink that holds no file yet ends cleanly") {
+    val root = Scratch.fresh("graft_slake_empty").toString
+    val config = LakeConfig(s"$root/bronze", s"$root/silver", s"$root/gold")
+    new java.io.File(s"${config.bronzeRoot}/${config.basePath}").mkdirs()
+    val medallion = new Medallion(spark, config)
+    val silverSink = medallion.serialiseRawDataStreaming(s"$root/ckpt")
+    assert(new java.io.File(silverSink).list().toSeq == Seq("_spark_metadata"))
+    // a schema inferred from the sink's (absent) Parquet footers throws
+    // here; the pinned silver schema needs no file
+    val goldSink = medallion.aggregateGoldStreaming(s"$root/ckpt_gold")
+    assert(!new java.io.File(goldSink).exists())
+  }
+
   test("PERMISSIVE mode surfaces malformed rows instead of dropping them") {
     import org.apache.spark.sql.functions.col
     val dir = Scratch.fresh("graft_perm").toString
