@@ -209,16 +209,12 @@ object Scratch {
     ()
   }
 
-  /** STABLE per-name path: bench reps overwrite in place (stored
-    * indexes, chunk-digest tables, sink round-trips).
-    */
-  def path(name: String): String = s"$root/$name"
-
-  /** Session-keyed stable path: two concurrent sessions in one JVM —
-    * parallel bench and verify — must not overwrite each other's staged
-    * files between a query's write and its audit re-read. Within ONE
-    * session, bench reps still rewrite in place rather than leaking a
-    * fresh dir per rep.
+  /** STABLE per-name path, keyed by session: within ONE session bench
+    * reps rewrite in place (stored indexes, chunk-digest tables, sink
+    * round-trips) rather than leaking a fresh dir per rep, while two
+    * concurrent sessions in one JVM — parallel bench and verify — must
+    * not overwrite each other's staged files between a query's write and
+    * its audit re-read.
     */
   def path(s: SparkSession, name: String): String =
     s"$root/s${System.identityHashCode(s)}/$name"

@@ -95,8 +95,7 @@ object Chunking {
       .rowsBetween(Window.unboundedPreceding, -1)
     T(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
-        expr("size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
-          .cast("long").as("n_tokens"))
+        TextStats.regexTokenCount.as("n_tokens"))
       .withColumn("bin",
         floor(coalesce(sum(col("n_tokens")).over(w), lit(0L)) / PACK_BUDGET))
       .orderBy("doc_id")
@@ -201,8 +200,7 @@ object Chunking {
       : org.apache.spark.sql.DataFrame = {
     val t = docs
       .select(col("doc_id"), col("lang"),
-        expr("size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
-          .cast("long").as("n_tokens"),
+        TextStats.regexTokenCount.as("n_tokens"),
         md5(col("doc_id").cast("string")).as("h"))
       .withColumn("bkt", substring(col("h"), 1, 2))
     val btot = t.agg(expr(s"sum(n_tokens) div $BUDGET_DEN").as("btot"))
@@ -551,7 +549,7 @@ object Chunking {
   def cdcIncremental(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
-    val path = graft.core.Scratch.path(
+    val path = graft.core.Scratch.path(s,
       s"cdc_lake_${new java.io.File(dir).getName}")
     cdcChunks(docs).write.mode("overwrite").parquet(path)
     val lake = s.read.parquet(path).select(col("h")).distinct()
@@ -617,8 +615,7 @@ object Chunking {
       : org.apache.spark.sql.DataFrame =
     graft.core.BucketCumsum.before(
       docs.select(col("doc_id"),
-        expr("size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
-          .cast("long").as("n_tokens")),
+        TextStats.regexTokenCount.as("n_tokens")),
       "doc_id", col("n_tokens"))
       .select(col("doc_id"), col("n_tokens"),
         expr(s"before div $SHARD_TOKENS").as("shard"))

@@ -3,6 +3,7 @@ package graft.llmops
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Q, Tables => T}
+import FullCuration.gramSql
 
 /** Corpus-curation operators: the decisions a training-data pipeline
   * makes AFTER dedup/quality — what the final mixture contains and
@@ -27,9 +28,6 @@ import graft.core.{Q, Tables => T}
 object Curation {
 
   private val K = 8 // contamination gram width
-
-  private def gramSql(k: Int): String =
-    (0 until k).map(j => s"t[i+$j]").mkString(" || ' ' || ")
 
   val xNgramContamination = Q(
     "x_ngram_contamination",
@@ -173,8 +171,7 @@ object Curation {
        GROUP BY lang ORDER BY lang""") { (s, dir) =>
     val t = T(s, dir, "documents").select(col("doc_id"), col("lang"),
       col("source"), md5(col("text")).as("h"),
-      expr("size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
-        .cast("long").as("n_tok"))
+      TextStats.regexTokenCount.as("n_tok"))
     val d = t.groupBy("h").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select(col("h")).withColumn("isdup", lit(1))
     t.join(d, Seq("h"), "left")
@@ -500,16 +497,14 @@ object Curation {
     * documents it fails and how many it SOLELY fails — the table that
     * says which rule is doing the work and which is redundant before
     * anyone retunes a threshold (a rule with n_sole_fail = 0 can be
-    * dropped without changing the kept corpus). Same constants as
-    * x_quality_rules / x_full_curation stage 3.
+    * dropped without changing the kept corpus).
     *
     * Pure counts from one scan + the 3-gram bag agg; the 3-row reshape
     * is a driver-side literal union, never a shuffle.
     */
   val xQualityAblation = Q(
     "x_quality_ablation", {
-      import FullCuration.{MIN_TOKENS, REP_MAX, STOP_MAX}
-      import TextStats.{sqlList, stopEn}
+      import TextStats.{MIN_TOKENS, REP_MAX, STOP_MAX, sqlList, stopEn}
       s"""WITH q AS (SELECT doc_id,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
              CAST(len(list_filter(string_split(text, ' '),
@@ -550,23 +545,15 @@ object Curation {
        SELECT 'token_floor', tok_f, tok_s, n_docs, n_pass FROM agg
        ORDER BY rule"""
     }) { (s, dir) =>
-    import FullCuration.{MIN_TOKENS, REP_MAX, STOP_MAX}
-    import TextStats.stopEn
+    import TextStats.{nTokens, repRatios, stopRatio, stopwordHeavy, tooRepetitive, tooShort}
     val docs = T(s, dir, "documents")
     val words = split(col("text"), " ")
     val q = docs.select(col("doc_id"),
-      size(words).cast("long").as("n_tokens"),
-      (size(filter(words, w => w.isInCollection(stopEn))).cast("double") /
-        size(words)).as("stop_ratio"))
-    val rep = Shingles.wordShingles(docs.select(col("doc_id"), col("text")),
-        3, distinct = false)
-      .groupBy(col("doc_id"), col("sh")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg((max(col("c")).cast("double") / sum(col("c"))).as("rep_ratio"))
-    val f = q.join(rep, Seq("doc_id"), "left")
-      .select((col("n_tokens") < MIN_TOKENS).as("f_tok"),
-        (col("stop_ratio") > STOP_MAX).as("f_stop"),
-        (coalesce(col("rep_ratio"), lit(0.0)) > REP_MAX).as("f_rep"))
+      nTokens(words).as("n_tokens"), stopRatio(words).as("stop_ratio"))
+    val f = q.join(repRatios(docs), Seq("doc_id"), "left")
+      .select(tooShort(col("n_tokens")).as("f_tok"),
+        stopwordHeavy(col("stop_ratio")).as("f_stop"),
+        tooRepetitive(coalesce(col("rep_ratio"), lit(0.0))).as("f_rep"))
     val agg = f.agg(
       count(lit(1)).as("n_docs"),
       sum(when(!col("f_tok") && !col("f_stop") && !col("f_rep"), 1L)

@@ -61,8 +61,7 @@ object Drift {
     val docs = T(s, dir, "documents")
     val cut = Incremental.cutoffValue(docs)
     val t = docs.select(
-      expr(s"size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
-        .cast("long").as("n_tok"),
+      TextStats.regexTokenCount.as("n_tok"),
       (col("doc_id") <= cut).as("ref"))
       .select(expr(s"n_tok div $PSI_BIN").as("bin"), col("ref"))
     val h = t.groupBy("bin").agg(
@@ -121,8 +120,7 @@ object Drift {
     val docs = T(s, dir, "documents")
     val cut = Incremental.cutoffValue(docs)
     val h = docs.select(
-        expr("size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
-          .cast("long").as("v"),
+        TextStats.regexTokenCount.as("v"),
         (col("doc_id") <= cut).as("ref"))
       .groupBy("v").agg(
         sum(when(col("ref"), 1L).otherwise(0L)).as("a"),

@@ -112,15 +112,12 @@ import graft.functions.{ArrayOps, TextNormalize}
 object FullCuration {
 
   private[llmops] val K_GRAM = 8
-  private[graft] val MIN_TOKENS = 20
-  private[llmops] val REP_MAX = 0.2
-  private[llmops] val STOP_MAX = 0.5
   private[llmops] val MAX_BUCKET = 10000
 
   private[llmops] def gramSql(k: Int): String =
     (0 until k).map(j => s"t[i+$j]").mkString(" || ' ' || ")
 
-  import TextStats.{sqlList, stopEn, stopDe, stopEs, stopFr}
+  import TextStats.{MIN_TOKENS, REP_MAX, STOP_MAX, sqlList, stopEn, stopDe, stopEs, stopFr}
   import Chunking.{LINE_W, LINE_DUP_K, SHARD_TOKENS}
   import Curation.TEMP_ALPHA
   import VectorSearch.COSINE_TAU
@@ -338,8 +335,8 @@ object FullCuration {
       col("doc_id"), col("source"), col("lang"), col("text"),
       score(stopEn).as("s_en"), score(stopDe).as("s_de"),
       score(stopEs).as("s_es"), score(stopFr).as("s_fr"),
-      size(words).cast("long").as("n_tokens"),
-      (score(stopEn).cast("double") / size(words)).as("stop_ratio"))
+      TextStats.nTokens(words).as("n_tokens"),
+      TextStats.stopRatio(words).as("stop_ratio"))
     val pred = scored.select(col("doc_id"), col("source"), col("lang"),
       col("text"), col("n_tokens"), col("stop_ratio"),
       when(col("s_en") >= col("s_de") && col("s_en") >= col("s_es")
@@ -348,13 +345,7 @@ object FullCuration {
         .when(col("s_es") >= col("s_fr"), "es")
         .otherwise("fr").as("lang_pred"))
 
-    // stage 3 (shuffle part) — 3-gram repetition ratio; inner join drops
-    // sub-3-word docs, all of which fail the token floor anyway
-    val rep = Shingles.wordShingles(pred.select("doc_id", "text"), 3,
-        distinct = false)
-      .groupBy(col("doc_id"), col("sh")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg((max(col("c")).cast("double") / sum(col("c"))).as("rep_ratio"))
+    // stage 3 (shuffle part) — the 3-gram repetition ratio and the gate.
     // THE first shared base: quality survivors feed the digest window,
     // the shingle sets, and the line explode. localCheckpoint, not
     // cache: the composed DAG's logical plan is enormous, and Catalyst
@@ -363,9 +354,8 @@ object FullCuration {
     // driver time per stage (FcProbe). Checkpointing materializes the
     // frame AND truncates the lineage, so every later stage plans
     // against a leaf.
-    val qual = pred.join(rep, "doc_id")
-      .filter(!(col("n_tokens") < MIN_TOKENS)
-        && !(col("rep_ratio") > REP_MAX) && !(col("stop_ratio") > STOP_MAX))
+    val qual = pred.join(TextStats.repRatios(pred), "doc_id")
+      .filter(TextStats.keep(col("n_tokens"), col("stop_ratio"), col("rep_ratio")))
       .select(col("doc_id"), col("source"), col("lang"), col("lang_pred"),
         col("text"))
       .localCheckpoint()
@@ -410,9 +400,7 @@ object FullCuration {
       .join(nd.select(col("doc_id"), col("source"), col("lang"),
         col("lang_pred")), "doc_id")
       .filter(size(split(col("text"), " ")) >= MIN_TOKENS)
-      .withColumn("n_tok",
-        expr("size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
-          .cast("long"))
+      .withColumn("n_tok", TextStats.regexTokenCount)
       .localCheckpoint()
 
     // stage 7 — verbatim 8-gram decontamination vs the holdout split

@@ -89,8 +89,8 @@ import graft.functions.ArrayOps
   */
 object IncrementalCuration {
 
-  import FullCuration.{K_GRAM, MIN_TOKENS, REP_MAX, STOP_MAX, MAX_BUCKET, gramSql}
-  import TextStats.{sqlList, stopEn}
+  import FullCuration.{K_GRAM, MAX_BUCKET, gramSql}
+  import TextStats.{MIN_TOKENS, REP_MAX, STOP_MAX, sqlList, stopEn}
 
   /** Bootstrap the standing lake's persisted indexes: the distinct
     * digest index and the (doc_id, band, bh, hs, c) band index. In
@@ -122,20 +122,11 @@ object IncrementalCuration {
     // stage 1 — quality gate, narrow work over the batch only
     val words = split(col("text"), " ")
     val scored = batch.select(col("doc_id"), col("lang"), col("text"),
-      size(words).cast("long").as("n_tokens"),
-      (size(filter(words, w => w.isInCollection(stopEn))).cast("double") /
-        size(words)).as("stop_ratio"))
-    val rep = Shingles.wordShingles(batch.select(col("doc_id"), col("text")),
-        3, distinct = false)
-      .groupBy(col("doc_id"), col("sh")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg((max(col("c")).cast("double") / sum(col("c"))).as("rep_ratio"))
-    // LEFT join + coalesce: sub-3-word docs have no shingles but must
-    // still be verdicted (they fail the token floor, not silently drop)
-    val qv = scored.join(rep, Seq("doc_id"), "left")
-      .withColumn("q_fail", col("n_tokens") < MIN_TOKENS ||
-        col("stop_ratio") > STOP_MAX ||
-        coalesce(col("rep_ratio"), lit(0.0)) > REP_MAX)
+      TextStats.nTokens(words).as("n_tokens"),
+      TextStats.stopRatio(words).as("stop_ratio"))
+    val qv = scored.join(TextStats.repRatios(batch), Seq("doc_id"), "left")
+      .withColumn("q_fail", !TextStats.keep(col("n_tokens"),
+        col("stop_ratio"), coalesce(col("rep_ratio"), lit(0.0))))
       .select(col("doc_id"), col("lang"), col("text"), col("n_tokens"),
         col("q_fail"))
       .localCheckpoint()
@@ -163,12 +154,8 @@ object IncrementalCuration {
       .join(bandIdx.select(col("band"), col("bh"), col("doc_id").as("a_id")),
         Seq("band", "bh"))
       .select(col("a_id"), col("b_id")).distinct()
-    val idxSets = bandIdx.filter(col("band") === 0)
-      .select(col("doc_id").as("a_id"), col("hs").as("ha"), col("c").as("ca"))
-    val ndCross = crossPairs.join(idxSets, "a_id")
-      .join(bSets.select(col("doc_id").as("b_id"), col("hs").as("hb"),
-        col("c").as("cb")), "b_id")
-      .withColumn("inter", ArrayOps.sortedIntersectCount(col("ha"), col("hb")))
+    val ndCross = MinHashLSH.setOverlap(crossPairs,
+        bandIdx.filter(col("band") === 0), Some(bSets))
       .filter(col("inter").cast("double") /
         (col("ca") + col("cb") - col("inter")) >= MinHashLSH.TAU)
       .select(col("b_id").as("doc_id"))

@@ -200,18 +200,32 @@ object MinHashLSH {
   def exactJaccard(cand: DataFrame, shingles: DataFrame): DataFrame =
     exactJaccardFromSets(cand, hashSets(shingles))
 
-  def exactJaccardFromSets(cand: DataFrame, sets: DataFrame): DataFrame = {
-    cand
-      .join(sets.select(col("doc_id").as("a_id"), col("hs").as("ha"),
-        col("c").as("ca")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("hs").as("hb"),
-        col("c").as("cb")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        graft.functions.ArrayOps.sortedIntersectCount(col("ha"), col("hb"))
-          .as("inter"), col("ca"), col("cb"))
+  def exactJaccardFromSets(cand: DataFrame, sets: DataFrame): DataFrame =
+    setOverlap(cand, sets)
       .select(col("a_id"), col("b_id"),
         (col("inter").cast("double") /
           (col("ca") + col("cb") - col("inter"))).as("jaccard"))
+
+  /** The exact overlap of each candidate pair: (a_id, b_id, inter, ca, cb)
+    * with inter = |A ∩ B| by merge scan and ca, cb the set sizes. `sets`
+    * and `bSets` are (doc_id, hs, c) frames in the [[wordSets]] shape;
+    * the b side reads `sets` unless `bSets` is given, as when
+    * x_incremental_curation probes the stored band index with a batch.
+    * Each caller spells its own threshold on these integers — the double
+    * ratio of [[exactJaccardFromSets]], the cross-multiplied den·i ≥
+    * num·u, or containment den·i ≥ num·ca — because each spelling is the
+    * one its oracle compares, and a ratio and a cross-multiplication
+    * can disagree at the boundary.
+    */
+  def setOverlap(cand: DataFrame, sets: DataFrame,
+      bSets: Option[DataFrame] = None): DataFrame = {
+    def side(df: DataFrame, id: String, h: String, c: String) =
+      df.select(col("doc_id").as(id), col("hs").as(h), col("c").as(c))
+    cand.join(side(sets, "a_id", "ha", "ca"), "a_id")
+      .join(side(bSets.getOrElse(sets), "b_id", "hb", "cb"), "b_id")
+      .select(col("a_id"), col("b_id"),
+        graft.functions.ArrayOps.sortedIntersectCount(col("ha"), col("hb"))
+          .as("inter"), col("ca"), col("cb"))
   }
 
   /** Q33 — the full near-dup pair query. Oracle is a brute-force shared-
@@ -309,13 +323,7 @@ object MinHashLSH {
     val cand = candidates(bandKeys(signaturesFromSets(sets)))
     val sig = sets.select(col("doc_id"),
       graft.functions.ArrayOps.minhashSignature(col("hs"), NUM_HASHES).as("sig"))
-    val withIU = cand
-      .join(sets.select(col("doc_id").as("a_id"), col("hs").as("ha"),
-        col("c").as("ca")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("hs").as("hb"),
-        col("c").as("cb")), "b_id")
-      .withColumn("inter",
-        graft.functions.ArrayOps.sortedIntersectCount(col("ha"), col("hb")))
+    val withIU = setOverlap(cand, sets)
       .withColumn("uni", col("ca") + col("cb") - col("inter"))
       .filter(col("inter").cast("double") / col("uni") >= TAU)
     withIU
@@ -594,16 +602,9 @@ object MinHashLSH {
     // if the hot-bucket cap is actually applied (round-12 advice)
     val cand = cappedCandidates(bandKeys(signaturesFromSets(sets)),
       FullCuration.MAX_BUCKET)
-    val pairs = cand
-      .join(sets.select(col("doc_id").as("a_id"), col("hs").as("ha"),
-        col("c").as("ca")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("hs").as("hb"),
-        col("c").as("cb")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        graft.functions.ArrayOps.sortedIntersectCount(col("ha"), col("hb"))
-          .as("i"), col("ca"), col("cb"))
-      .select(col("a_id"), col("b_id"), col("i"),
-        (col("ca") + col("cb") - col("i")).as("u"))
+    val pairs = setOverlap(cand, sets)
+      .select(col("a_id"), col("b_id"), col("inter").as("i"),
+        (col("ca") + col("cb") - col("inter")).as("u"))
       .filter(lit(10L) * col("i") >= lit(5L) * col("u"))
     val taus = s.range(5, 10).select(col("id").as("tau_x10"))
     val n = docs.count()
@@ -681,15 +682,9 @@ object MinHashLSH {
     def pairCount(ss: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val cand = cappedCandidates(bandKeys(signaturesFromSets(ss)),
         FullCuration.MAX_BUCKET)
-      cand
-        .join(ss.select(col("doc_id").as("a_id"), col("hs").as("ha"),
-          col("c").as("ca")), "a_id")
-        .join(ss.select(col("doc_id").as("b_id"), col("hs").as("hb"),
-          col("c").as("cb")), "b_id")
-        .select(graft.functions.ArrayOps.sortedIntersectCount(
-          col("ha"), col("hb")).as("i"), col("ca"), col("cb"))
-        .filter(lit(10L) * col("i") >=
-          lit(5L) * (col("ca") + col("cb") - col("i")))
+      setOverlap(cand, ss)
+        .filter(lit(10L) * col("inter") >=
+          lit(5L) * (col("ca") + col("cb") - col("inter")))
         .agg(count(lit(1)).as("n"))
     }
 

@@ -2,7 +2,7 @@ package graft.llmops
 
 import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables => T}
-import TextStats.{sqlList, stopEn}
+import TextStats.{MIN_TOKENS, STOP_MAX, sqlList, stopEn}
 
 /** The composed image-text curation pipeline — the multimodal twin of
   * x_full_curation: everything a pre-training pipeline runs to turn raw
@@ -16,8 +16,8 @@ import TextStats.{sqlList, stopEn}
   *      family ([[DedupFamilies.components]]);
   *   4. caption attach: join the image to its caption document
   *      (doc_id = img_id in the fixture layout);
-  *   5. caption quality: the x_quality_rules thresholds (≥ 20 tokens,
-  *      stopword ratio ≤ 0.5);
+  *   5. caption quality: the keep-gate's token floor and stopword cap
+  *      (TextStats.MIN_TOKENS, TextStats.STOP_MAX);
   *   6. manifest: every image with its family, survivor flag, caption
   *      stats, and the final ship/drop decision.
   *
@@ -63,9 +63,9 @@ object MultimodalPipeline {
               fsz.family_size,
               lab.img_id = lab.family AS is_survivor,
               cap.n_tokens,
-              (cap.n_tokens >= 20 AND cap.stop_ratio <= 0.5) AS caption_ok,
-              (lab.img_id = lab.family AND cap.n_tokens >= 20
-               AND cap.stop_ratio <= 0.5) AS ship
+              (cap.n_tokens >= $MIN_TOKENS AND cap.stop_ratio <= $STOP_MAX) AS caption_ok,
+              (lab.img_id = lab.family AND cap.n_tokens >= $MIN_TOKENS
+               AND cap.stop_ratio <= $STOP_MAX) AS ship
        FROM lab JOIN fsz USING (family)
        JOIN cap ON cap.doc_id = lab.img_id
        ORDER BY img_id""") { (s, dir) =>
@@ -81,18 +81,19 @@ object MultimodalPipeline {
     val words = split(col("text"), " ")
     val cap = T(s, dir, "documents").select(
       col("doc_id"),
-      size(words).cast("long").as("n_tokens"),
-      (size(filter(words, w => w.isInCollection(stopEn))).cast("double") /
-        size(words)).as("stop_ratio"))
+      TextStats.nTokens(words).as("n_tokens"),
+      TextStats.stopRatio(words).as("stop_ratio"))
     // stage 6: manifest
+    val survivor = col("img_id") === col("family")
+    val captionOk = !TextStats.tooShort(col("n_tokens")) &&
+      !TextStats.stopwordHeavy(col("stop_ratio"))
     lab.join(broadcast(fsz), "family")
       .join(cap, lab("img_id") === cap("doc_id"))
       .select(col("img_id"), col("family"), col("family_size"),
-        (col("img_id") === col("family")).as("is_survivor"),
+        survivor.as("is_survivor"),
         col("n_tokens"),
-        (col("n_tokens") >= 20 && col("stop_ratio") <= 0.5).as("caption_ok"),
-        (col("img_id") === col("family") && col("n_tokens") >= 20 &&
-          col("stop_ratio") <= 0.5).as("ship"))
+        captionOk.as("caption_ok"),
+        (survivor && captionOk).as("ship"))
       .orderBy("img_id")
   }
 

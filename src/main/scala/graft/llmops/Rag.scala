@@ -11,9 +11,10 @@ import graft.core.Q
   * RAG serving path does, for one query (probe doc 0):
   *
   *   1. hybrid recall   — BM25 lexical arm + single-vector semantic
-  *                        arm, fused by reciprocal rank (x_rrf_fusion's
-  *                        spelling, both arms TakeOrdered top-100),
-  *                        keep the fused top-20
+  *                        arm, fused by reciprocal rank
+  *                        (TextStats.rrfFused, x_rrf_fusion's arms,
+  *                        both TakeOrdered top-100), keep the fused
+  *                        top-20
   *   2. precision rerank — ColBERT MaxSim over the 4×16 l2-normalized
   *                        token slices, only on those 20 candidates
   *                        (x_maxsim_rerank's scorer), keep the top-10
@@ -42,33 +43,10 @@ object Rag {
   val SEL = 5
 
   /** (doc_id, r_rrf) — fused top-FUSE_TOP for probe 0. */
-  def fusedTop(s: SparkSession, dir: String): DataFrame = {
-    val T = TextStats
-    val lex = T.bm25Raw(s, dir)
-      .select(col("doc_id"), round(col("raw"), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id")).limit(T.RRF_TOPK)
-      .withColumn("r_lex", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col("r_lex"))
-    val e = VectorSearch.embeddingsBase(s, dir).select("vec_id", "n_emb")
-    val probe = e.filter(col("vec_id") === 0).select(col("n_emb").as("p_emb"))
-    val sem = e.crossJoin(broadcast(probe))
-      .select(col("vec_id").as("doc_id"),
-        round(VectorSearch.dot(col("n_emb"), col("p_emb")), 6).as("sim"))
-      .orderBy(col("sim").desc, col("doc_id")).limit(T.RRF_TOPK)
-      .withColumn("r_sem", row_number().over(
-        Window.orderBy(col("sim").desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col("r_sem"))
-    lex.join(sem, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        (coalesce(lit(1.0) / (lit(T.RRF_K) + col("r_lex")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(T.RRF_K) + col("r_sem")), lit(0.0)))
-          .as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id")).limit(FUSE_TOP)
-      .withColumn("r_rrf", row_number().over(
-        Window.orderBy(col("rrf").desc, col("doc_id"))).cast("long"))
+  def fusedTop(s: SparkSession, dir: String): DataFrame =
+    TextStats.topRanked(TextStats.rrfFused(s, dir), FUSE_TOP, "r_rrf",
+        col("rrf").desc, col("doc_id"))
       .select(col("doc_id"), col("r_rrf"))
-  }
 
   /** (doc_id, r_rrf, msraw) — raw MaxSim of each fused candidate vs
     * probe 0 (also the margin-audit source).

@@ -147,16 +147,9 @@ object SetSim {
 
   private def similarFromPrefixes(sets: DataFrame, pre: DataFrame,
       num: Int, den: Int): DataFrame = {
-    val cand = candidatePairs(pre, num, den)
-    cand
-      .join(sets.select(col("doc_id").as("a_id"), col("hs").as("ha"),
-        col("c").as("ca")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("hs").as("hb"),
-        col("c").as("cb")), "b_id")
+    MinHashLSH.setOverlap(candidatePairs(pre, num, den), sets)
       .select(col("a_id").as("doc_a"), col("b_id").as("doc_b"),
-        graft.functions.ArrayOps.sortedIntersectCount(col("ha"), col("hb"))
-          .cast("long").as("inter"),
-        col("ca"), col("cb"))
+        col("inter").cast("long").as("inter"), col("ca"), col("cb"))
       .filter(lit(den) * col("inter") >= lit(num) * (col("ca") + col("cb") - col("inter")))
       .select(col("doc_a"), col("doc_b"), col("inter"),
         (col("ca") + col("cb") - col("inter")).cast("long").as("uni"))
@@ -209,15 +202,10 @@ object SetSim {
 
   private def containedFromPrefixes(sets: DataFrame, pre: DataFrame,
       ord: DataFrame, num: Int, den: Int): DataFrame = {
-    val cand = containmentCandidates(pre, orderedElements(ord), num, den)
-    cand
-      .join(sets.select(col("doc_id").as("a_id"), col("hs").as("ha"),
-        col("c").as("ca")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("hs").as("hb")), "b_id")
+    MinHashLSH.setOverlap(
+        containmentCandidates(pre, orderedElements(ord), num, den), sets)
       .select(col("a_id").as("doc_a"), col("b_id").as("doc_b"),
-        graft.functions.ArrayOps.sortedIntersectCount(col("ha"), col("hb"))
-          .cast("long").as("inter"),
-        col("ca"))
+        col("inter").cast("long").as("inter"), col("ca"))
       .filter(lit(den) * col("inter") >= lit(num) * col("ca"))
       .select(col("doc_a"), col("doc_b"), col("inter"),
         col("ca").cast("long").as("ca"))

@@ -1,5 +1,7 @@
 package graft.llmops
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables => T}
 
@@ -83,8 +85,7 @@ object TextStats {
     val dfAll = terms.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = docs.count().toDouble // one scalar; the corpus size
     val langTf = terms.groupBy(col("lang"), col("term")).agg(count(lit(1)).as("tf"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang")).orderBy(col("score").desc, col("term"))
+    val w = Window.partitionBy(col("lang")).orderBy(col("score").desc, col("term"))
     langTf.join(dfAll, "term")
       .select(col("lang"), col("term"),
         round(col("tf") * log(lit(nDocs) / col("df")), 6).as("score"))
@@ -93,6 +94,60 @@ object TextStats {
       .select(col("lang"), col("term"), col("score"))
       .orderBy(col("lang"), col("score").desc, col("term"))
   }
+
+  /** The C4/Gopher keep-gate: a document is kept when it has at least
+    * MIN_TOKENS whitespace tokens, its most repeated word 3-gram covers at
+    * most REP_MAX of its 3-gram bag, and at most STOP_MAX of its words are
+    * stopwords. x_quality_rules grades the gate; x_quality_ablation,
+    * x_full_curation, x_incremental_curation, x_multimodal_pipeline and
+    * x_stream_curation apply it through the helpers below.
+    */
+  private[graft] val MIN_TOKENS = 20
+  private[llmops] val REP_MAX = 0.2
+  private[llmops] val STOP_MAX = 0.5
+
+  /** Token count and stopword count/ratio over a whitespace word array
+    * (`split(text, " ")`).
+    */
+  private[llmops] def nTokens(words: Column): Column = size(words).cast("long")
+  private[llmops] def stopCount(words: Column): Column =
+    size(filter(words, w => w.isInCollection(stopEn)))
+  private[llmops] def stopRatio(words: Column): Column =
+    stopCount(words).cast("double") / size(words)
+
+  /** The bag of word-3-shingle counts per document: (doc_id, sh, c). */
+  private[llmops] def shingleBag(docs: DataFrame): DataFrame =
+    Shingles.wordShingles(docs.select(col("doc_id"), col("text")), 3,
+        distinct = false)
+      .groupBy(col("doc_id"), col("sh")).agg(count(lit(1)).as("c"))
+
+  /** The repetition ratio, aggregated over a [[shingleBag]] group. */
+  private[llmops] def repRatio: Column = max(col("c")).cast("double") / sum(col("c"))
+
+  /** (doc_id, rep_ratio). A document under 3 words has no bag and so no
+    * row, and each caller's join type decides what that means: the
+    * filters (x_quality_rules, x_full_curation) join inner and drop it,
+    * as it fails the token floor anyway; the verdict tables
+    * (x_incremental_curation, x_quality_ablation) join left and read the
+    * missing ratio as 0, because every document must get a verdict.
+    */
+  private[llmops] def repRatios(docs: DataFrame): DataFrame =
+    shingleBag(docs).groupBy(col("doc_id")).agg(repRatio.as("rep_ratio"))
+
+  /** The gate's three rules, and the gate. */
+  private[llmops] def tooShort(nTokens: Column): Column = nTokens < MIN_TOKENS
+  private[llmops] def tooRepetitive(repRatio: Column): Column = repRatio > REP_MAX
+  private[llmops] def stopwordHeavy(stopRatio: Column): Column = stopRatio > STOP_MAX
+  private[llmops] def keep(nTokens: Column, stopRatio: Column,
+      repRatio: Column): Column =
+    !tooShort(nTokens) && !tooRepetitive(repRatio) && !stopwordHeavy(stopRatio)
+
+  /** The regex pre-tokenizer's token count (x_token_count), which the
+    * packing, budget, sharding, drift and dataset-card operators count in.
+    */
+  private[llmops] def regexTokenCount: Column =
+    expr("size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
+      .cast("long")
 
   /** X — quality scoring: token count, mean token length, punctuation and
     * stopword ratios per document (the usual pre-training filters).
@@ -113,13 +168,12 @@ object TextStats {
       .select(col("doc_id"), col("text"), col("n_chars"),
         split(col("text"), " ").as("w"))
       .select(col("doc_id"),
-        size(col("w")).cast("long").as("n_tokens"),
+        nTokens(col("w")).as("n_tokens"),
         (length(translate(col("text"), " ", "")).cast("double") /
           size(col("w"))).as("avg_token_len"),
         ((length(col("text")) - length(translate(col("text"), ".!?,;", "")))
           .cast("double") / col("n_chars")).as("punct_ratio"),
-        (size(filter(col("w"), x => x.isInCollection(stopEn))).cast("double") /
-          size(col("w"))).as("stop_ratio"))
+        stopRatio(col("w")).as("stop_ratio"))
       .orderBy("doc_id")
   }
 
@@ -130,9 +184,7 @@ object TextStats {
        len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_tokens
        FROM documents ORDER BY doc_id""") { (s, dir) =>
     T(s, dir, "documents")
-      .select(col("doc_id"),
-        expr("size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
-          .cast("long").as("n_tokens"))
+      .select(col("doc_id"), regexTokenCount.as("n_tokens"))
       .orderBy("doc_id")
   }
 
@@ -189,13 +241,10 @@ object TextStats {
        SELECT doc_id, max(c) AS top_ngram_count, CAST(sum(c) AS BIGINT) AS n_ngrams,
               CAST(max(c) AS DOUBLE) / sum(c) AS rep_ratio
        FROM cnt GROUP BY doc_id ORDER BY doc_id""") { (s, dir) =>
-    Shingles.wordShingles(T(s, dir, "documents"), 3, distinct = false)
-      .groupBy(col("doc_id"), col("sh"))
-      .agg(count(lit(1)).as("c"))
+    shingleBag(T(s, dir, "documents"))
       .groupBy(col("doc_id"))
-      .agg(max(col("c")).as("top_ngram_count"), sum(col("c")).as("n_ngrams"))
-      .select(col("doc_id"), col("top_ngram_count"), col("n_ngrams"),
-        (col("top_ngram_count").cast("double") / col("n_ngrams")).as("rep_ratio"))
+      .agg(max(col("c")).as("top_ngram_count"), sum(col("c")).as("n_ngrams"),
+        repRatio.as("rep_ratio"))
       .orderBy("doc_id")
   }
 
@@ -219,31 +268,24 @@ object TextStats {
                     / len(string_split(text, ' ')) AS stop_ratio
                 FROM documents)
        SELECT base.doc_id,
-              (n_tokens < 20) AS too_short,
-              (rep_ratio > 0.2) AS too_repetitive,
-              (stop_ratio > 0.5) AS stopword_heavy,
-              (NOT (n_tokens < 20) AND NOT (rep_ratio > 0.2)
-               AND NOT (stop_ratio > 0.5)) AS keep
+              (n_tokens < $MIN_TOKENS) AS too_short,
+              (rep_ratio > $REP_MAX) AS too_repetitive,
+              (stop_ratio > $STOP_MAX) AS stopword_heavy,
+              (NOT (n_tokens < $MIN_TOKENS) AND NOT (rep_ratio > $REP_MAX)
+               AND NOT (stop_ratio > $STOP_MAX)) AS keep
        FROM base JOIN rep ON base.doc_id = rep.doc_id
        ORDER BY base.doc_id""") { (s, dir) =>
     val docs = T(s, dir, "documents")
     val words = split(col("text"), " ")
     val base = docs.select(col("doc_id"),
-      size(words).cast("long").as("n_tokens"),
-      (size(filter(words, w => w.isInCollection(stopEn))).cast("double") /
-        size(words)).as("stop_ratio"))
-    val rep = Shingles.wordShingles(docs, 3, distinct = false)
-      .groupBy(col("doc_id"), col("sh"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg((max(col("c")).cast("double") / sum(col("c"))).as("rep_ratio"))
-    base.join(rep, "doc_id")
+      nTokens(words).as("n_tokens"), stopRatio(words).as("stop_ratio"))
+    val (n, stop, rep) = (col("n_tokens"), col("stop_ratio"), col("rep_ratio"))
+    base.join(repRatios(docs), "doc_id")
       .select(col("doc_id"),
-        (col("n_tokens") < 20).as("too_short"),
-        (col("rep_ratio") > 0.2).as("too_repetitive"),
-        (col("stop_ratio") > 0.5).as("stopword_heavy"),
-        (!(col("n_tokens") < 20) && !(col("rep_ratio") > 0.2)
-          && !(col("stop_ratio") > 0.5)).as("keep"))
+        tooShort(n).as("too_short"),
+        tooRepetitive(rep).as("too_repetitive"),
+        stopwordHeavy(stop).as("stopword_heavy"),
+        keep(n, stop, rep).as("keep"))
       .orderBy("doc_id")
   }
 
@@ -268,7 +310,6 @@ object TextStats {
               count(*) AS n_distinct_words
        FROM t GROUP BY doc_id
        ORDER BY doc_id""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val counts = T(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .groupBy(col("doc_id"), col("w"))
@@ -297,8 +338,8 @@ object TextStats {
     * hashes the md5 hex prefix (engine-portable, unlike xxhash64 which
     * DuckDB lacks); collisions fold counts, which the trick accepts.
     */
-  def hashEmbed(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, dim: Int): org.apache.spark.sql.DataFrame =
+  def hashEmbed(df: DataFrame, idCol: String,
+      textCol: String, dim: Int): DataFrame =
     df.select(col(idCol), explode(split(col(textCol), " ")).as("w"))
       .filter(col("w") =!= "")
       .select(col(idCol),
@@ -375,8 +416,8 @@ object TextStats {
     * could actually flip a hash). Same margin, measurement, and
     * boundary definition as the xBm25 scaladoc above.
     */
-  def bm25Raw(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  def bm25Raw(s: SparkSession,
+      dir: String): DataFrame = {
     val d = T(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"), size(col("ws")).cast("long").as("dl"),
@@ -424,11 +465,8 @@ object TextStats {
        FROM scored ORDER BY rank LIMIT 20""") { (s, dir) =>
     val scored = bm25Raw(s, dir)
       .select(col("doc_id"), round(col("raw"), 6).as("score"))
-    scored.orderBy(col("score").desc, col("doc_id")).limit(20)
-      .select(
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("doc_id"))).cast("long").as("rank"),
-        col("doc_id"), col("score"))
+    topRanked(scored, 20, "rank", col("score").desc, col("doc_id"))
+      .select(col("rank"), col("doc_id"), col("score"))
       .orderBy("rank")
   }
 
@@ -444,8 +482,8 @@ object TextStats {
     * round(1e6·ln(ratio)), and only a value within ~1 ulp of a
     * (k+0.5)·1e-6 boundary could round differently under libm wobble).
     */
-  def dsirRawWeights(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  def dsirRawWeights(s: SparkSession,
+      dir: String): DataFrame = {
     val words = T(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("w"))
@@ -604,34 +642,44 @@ object TextStats {
        SELECT CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS BIGINT) AS rank,
               doc_id, rrf
        FROM fused ORDER BY rank LIMIT 20""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val lexScored = bm25Raw(s, dir)
-      .select(col("doc_id"), round(col("raw"), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id")).limit(RRF_TOPK)
-    val lex = lexScored
-      .withColumn("r_lex", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"))).cast("long"))
+    topRanked(rrfFused(s, dir), 20, "rank", col("rrf").desc, col("doc_id"))
+      .select(col("rank"), col("doc_id"), col("rrf"))
+      .orderBy("rank")
+  }
+
+  /** The top `k` rows of `df` by `order`, numbered 1..k in column `tag`:
+    * a TakeOrdered, then a row_number over at most k rows, never a
+    * corpus-wide rank window.
+    */
+  private[llmops] def topRanked(df: DataFrame, k: Int, tag: String,
+      order: Column*): DataFrame =
+    df.orderBy(order: _*).limit(k)
+      .withColumn(tag, row_number().over(Window.orderBy(order: _*)).cast("long"))
+
+  /** Σ 1/(RRF_K + r) over the rank columns, a missing rank adding 0. */
+  private def rrfScore(ranks: Column*): Column =
+    ranks.map(r => coalesce(lit(1.0) / (lit(RRF_K) + r), lit(0.0))).reduce(_ + _)
+
+  /** (doc_id, rrf): x_rrf_fusion's two arms, each its top-RRF_TOPK
+    * (BM25 on the contract query; cosine against probe vector 0), fused.
+    * x_rag_pipeline's hybrid recall stage reads the same frame.
+    */
+  private[llmops] def rrfFused(s: SparkSession,
+      dir: String): DataFrame = {
+    val lex = topRanked(bm25Raw(s, dir)
+        .select(col("doc_id"), round(col("raw"), 6).as("score")),
+      RRF_TOPK, "r_lex", col("score").desc, col("doc_id"))
       .select(col("doc_id"), col("r_lex"))
     val e = VectorSearch.embeddingsBase(s, dir).select("vec_id", "n_emb")
     val probe = e.filter(col("vec_id") === 0)
       .select(col("n_emb").as("p_emb"))
-    val semScored = e.crossJoin(broadcast(probe))
-      .select(col("vec_id").as("doc_id"),
-        round(VectorSearch.dot(col("n_emb"), col("p_emb")), 6).as("sim"))
-      .orderBy(col("sim").desc, col("doc_id")).limit(RRF_TOPK)
-    val sem = semScored
-      .withColumn("r_sem", row_number().over(
-        Window.orderBy(col("sim").desc, col("doc_id"))).cast("long"))
+    val sem = topRanked(e.crossJoin(broadcast(probe))
+        .select(col("vec_id").as("doc_id"),
+          round(VectorSearch.dot(col("n_emb"), col("p_emb")), 6).as("sim")),
+      RRF_TOPK, "r_sem", col("sim").desc, col("doc_id"))
       .select(col("doc_id"), col("r_sem"))
     lex.join(sem, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        (coalesce(lit(1.0) / (lit(RRF_K) + col("r_lex")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RRF_K) + col("r_sem")), lit(0.0))).as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id")).limit(20)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("rrf").desc, col("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("rrf"))
-      .orderBy("rank")
+      .select(col("doc_id"), rrfScore(col("r_lex"), col("r_sem")).as("rrf"))
   }
 
   /** X — ensemble quality gate: three INDEPENDENT quality rankers fused
@@ -644,7 +692,7 @@ object TextStats {
     *   - diversity: distinct-word milli-ratio (type/token).
     *
     * Each ranker is an exact integer score → TakeOrdered top-RRF_TOPK
-    * (never a corpus window); fusion is the x_rrf_fusion spelling —
+    * (never a corpus window); fusion is x_rrf_fusion's rrfScore —
     * 1/(K+r) sums over small integers are the same IEEE expression on
     * both engines, bit-identical. Output: the top-20 keep-list with its
     * fused score.
@@ -678,30 +726,22 @@ object TextStats {
        SELECT CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS BIGINT)
                 AS rank, doc_id, rrf
        FROM fused ORDER BY rank LIMIT 20""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val ws = split(col("text"), " ")
     val m = T(s, dir, "documents").select(col("doc_id"),
-        size(ws).cast("long").as("n_tok"),
-        size(filter(ws, w => w.isInCollection(stopEn))).cast("long").as("st"),
+        nTokens(ws).as("n_tok"),
+        stopCount(ws).cast("long").as("st"),
         size(array_distinct(ws)).cast("long").as("dw"))
       .select(col("doc_id"), col("n_tok"),
         expr("(1000 * st) div n_tok").as("stop_milli"),
         expr("(1000 * dw) div n_tok").as("div_milli"))
-    def ranker(score: String, tag: String) = m
-      .orderBy(col(score).desc, col("doc_id")).limit(RRF_TOPK)
-      .withColumn(tag, row_number().over(
-        Window.orderBy(col(score).desc, col("doc_id"))).cast("long"))
-      .select(col("doc_id"), col(tag))
-    ranker("n_tok", "r1")
+    def ranker(score: String, tag: String) =
+      topRanked(m, RRF_TOPK, tag, col(score).desc, col("doc_id"))
+        .select(col("doc_id"), col(tag))
+    val fused = ranker("n_tok", "r1")
       .join(ranker("stop_milli", "r2"), Seq("doc_id"), "full_outer")
       .join(ranker("div_milli", "r3"), Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        (coalesce(lit(1.0) / (lit(RRF_K) + col("r1")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RRF_K) + col("r2")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RRF_K) + col("r3")), lit(0.0))).as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id")).limit(20)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("rrf").desc, col("doc_id"))).cast("long"))
+      .select(col("doc_id"), rrfScore(col("r1"), col("r2"), col("r3")).as("rrf"))
+    topRanked(fused, 20, "rank", col("rrf").desc, col("doc_id"))
       .select(col("rank"), col("doc_id"), col("rrf"))
       .orderBy("rank")
   }
@@ -852,7 +892,6 @@ object TextStats {
                    ELSE -CAST((-(sy::HUGEINT * den - num::HUGEINT * sx))
                           // (k::HUGEINT * den) AS BIGINT) END AS intercept_micro
        FROM f""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val c = T(s, dir, "documents")
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "")
@@ -922,7 +961,6 @@ object TextStats {
              FROM v)
        SELECT CAST(rk AS BIGINT) AS rank, word, df, tot, vmr_ppm
        FROM r WHERE rk <= 10 ORDER BY rank""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val c = T(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "")
@@ -991,7 +1029,6 @@ object TextStats {
               CAST(count(*) AS BIGINT) AS n_occur
        FROM phrases GROUP BY phrase
        ORDER BY score DESC, phrase LIMIT 10""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val tok = T(s, dir, "documents")
       .select(col("doc_id"),
         posexplode(split(col("text"), " ")).as(Seq("i", "w")))
@@ -1064,7 +1101,6 @@ object TextStats {
                         // (sy - $HILL_K * yk)
                    ELSE 0 END AS alpha_milli
        FROM s""") { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val c = T(s, dir, "documents")
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(col("word") =!= "")

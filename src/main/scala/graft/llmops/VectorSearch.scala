@@ -1059,8 +1059,8 @@ object VectorSearch {
   /** Stable per-lake path standing in for the lake's index prefix
     * (overwrite-mode writers, removed on JVM exit with the scratch root).
     */
-  def indexPath(dir: String): String =
-    Scratch.path(s"pqindex/${new java.io.File(dir).getName}")
+  def indexPath(s: SparkSession, dir: String): String =
+    Scratch.path(s, s"pqindex/${new java.io.File(dir).getName}")
 
   /** vec_id offset for the incremental batch (disjoint id space). */
   val INCR_OFFSET = 10000000L
@@ -1079,7 +1079,7 @@ object VectorSearch {
 
   private def persistPqIndexNow(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val path = indexPath(dir)
+    val path = indexPath(s, dir)
     val (cb, codes) = pqIndex(s, dir)
     // the artifact writes land on disjoint paths — overlap the
     // independent ones (core.Par, guide §2.6). The codebook write runs

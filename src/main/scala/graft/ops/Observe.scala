@@ -35,7 +35,7 @@ object Observe {
               CAST(count(*) AS BIGINT) AS rows_written
        FROM events""") { (s, dir) =>
     val obs = org.apache.spark.sql.Observation()
-    val out = Scratch.path("observe_sink")
+    val out = Scratch.path(s, "observe_sink")
     T(s, dir, "events")
       .select(col("event_id"), col("props"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))

@@ -24,9 +24,13 @@ object Timeseries {
   /** Library form: fill nulls in `valueCol` by linear interpolation
     * against a numeric `orderCol` within each `partCol` series; boundary
     * nulls take the nearest non-null neighbor (backfill at the head,
-    * forward-fill at the tail). Two window passes (one forward, one
-    * backward) over the same partitioning — Spark evaluates both frames
-    * in a single sort of the series.
+    * forward-fill at the tail). Two running windows over the same
+    * partitioning: the previous neighbour is the last non-null in
+    * ascending order, the next one the last non-null in DESCENDING
+    * order. Both frames are unbounded-preceding, so each is one pass;
+    * the oracle's `first_value` over `CURRENT ROW AND UNBOUNDED
+    * FOLLOWING` gives the same next neighbour, but Spark re-aggregates
+    * that frame's whole tail per row (O(n²) per series).
     *
     * Determinism contract: the interpolation arithmetic is written in
     * the exact same IEEE order as the oracle SQL (`prev + (next - prev)
@@ -37,15 +41,15 @@ object Timeseries {
       valueCol: String): DataFrame = {
     val wFwd = Window.partitionBy(col(partCol)).orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wBwd = Window.partitionBy(col(partCol)).orderBy(col(orderCol))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val wBwd = Window.partitionBy(col(partCol)).orderBy(col(orderCol).desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val k = col(orderCol)
     df.withColumn("__prev_v", last(col(valueCol), ignoreNulls = true).over(wFwd))
       .withColumn("__prev_k",
         last(when(col(valueCol).isNotNull, k), ignoreNulls = true).over(wFwd))
-      .withColumn("__next_v", first(col(valueCol), ignoreNulls = true).over(wBwd))
+      .withColumn("__next_v", last(col(valueCol), ignoreNulls = true).over(wBwd))
       .withColumn("__next_k",
-        first(when(col(valueCol).isNotNull, k), ignoreNulls = true).over(wBwd))
+        last(when(col(valueCol).isNotNull, k), ignoreNulls = true).over(wBwd))
       .withColumn(valueCol,
         when(col(valueCol).isNotNull, col(valueCol))
           .when(col("__prev_v").isNull, col("__next_v"))

@@ -16,8 +16,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 class Ingester(
     config: LakeConfig,
     hadoopConf: Configuration = new Configuration(),
-    sourceBaseUrl: String = "http://data.gharchive.org",
-    progressHook: () => Long => Unit = () => Ingester.logEvery64MiB()) {
+    sourceBaseUrl: String = "http://data.gharchive.org") {
 
   private val http = HttpClient.newBuilder()
     .followRedirects(HttpClient.Redirect.NORMAL)
@@ -48,7 +47,7 @@ class Ingester(
       // fresh hook per download: the hook carries a mutable high-water
       // mark, so sharing one across downloads would keep the second
       // transfer silent until it passed the first file's size
-      val onProgress = progressHook()
+      val onProgress = Ingester.logEvery64MiB()
       val in = response.body()
       val buf = new Array[Byte](1 << 16)
       var total = 0L
@@ -65,11 +64,8 @@ class Ingester(
 }
 
 object Ingester {
-  /** Default progress hook factory: one log line per 64 MiB transferred.
-    * Invoked once per DOWNLOAD (inside ingestHourlyGharchive), so every
-    * transfer gets its own high-water mark even on a shared Ingester.
-    */
-  def logEvery64MiB(): Long => Unit = {
+  /** Progress hook: one log line per 64 MiB transferred. */
+  private def logEvery64MiB(): Long => Unit = {
     val step = 64L << 20
     var nextMark = step
     total => if (total >= nextMark) {

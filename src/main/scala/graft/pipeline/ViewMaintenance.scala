@@ -64,7 +64,7 @@ object ViewMaintenance {
     val lDel = l.filter(col("l_orderkey") % 3 === 0)
 
     // the stored MV: built on the old state, persisted, read back
-    val mvPath = Scratch.path("mv_join_refresh")
+    val mvPath = Scratch.path(s, "mv_join_refresh")
     gamma(oOld, lOld).write.mode("overwrite").parquet(mvPath)
     val v0 = s.read.parquet(mvPath)
 

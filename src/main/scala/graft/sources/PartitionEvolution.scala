@@ -111,7 +111,7 @@ object PartitionEvolution {
            THEN CAST(value AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2))
            END) AS DOUBLE) AS total
        FROM events""") { (s, dir) =>
-    val root = Scratch.path("pevo")
+    val root = Scratch.path(s, "pevo")
     writeLayouts(s, dir, root)
 
     val qlo = java.time.LocalDate.parse(QLO.take(10))

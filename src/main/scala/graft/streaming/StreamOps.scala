@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import graft.core.{Q, Scratch, Tables => T}
 import graft.core.Exact.dec
+import graft.llmops.TextStats.MIN_TOKENS
 
 /** Structured Streaming operators (SURVEY.md §2b Q28–Q30).
   *
@@ -761,7 +762,7 @@ object StreamOps {
               UNION ALL
               SELECT doc_id + 100000, text FROM b1 WHERE doc_id % 10 = 0),
        s1 AS (SELECT doc_id, md5(text) AS h,
-                     len(string_split(text, ' ')) >= ${graft.llmops.FullCuration.MIN_TOKENS} AS q_ok
+                     len(string_split(text, ' ')) >= $MIN_TOKENS AS q_ok
               FROM b1),
        r1 AS (SELECT doc_id, h,
                      row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
@@ -770,7 +771,7 @@ object StreamOps {
                 WHERE rn = 1 AND h NOT IN (SELECT h FROM standing)),
        idx1 AS (SELECT h FROM standing UNION ALL SELECT h FROM adm1),
        s2 AS (SELECT doc_id, md5(text) AS h,
-                     len(string_split(text, ' ')) >= ${graft.llmops.FullCuration.MIN_TOKENS} AS q_ok
+                     len(string_split(text, ' ')) >= $MIN_TOKENS AS q_ok
               FROM b2),
        r2 AS (SELECT doc_id, h,
                      row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
@@ -821,7 +822,7 @@ object StreamOps {
       val scored = batch
         .withColumn("h", md5(col("text")))
         .withColumn("q_ok",
-          size(split(col("text"), " ")) >= graft.llmops.FullCuration.MIN_TOKENS)
+          size(split(col("text"), " ")) >= MIN_TOKENS)
       val ranked = scored.filter(col("q_ok"))
         .withColumn("rn", row_number().over(w))
       val firsts = ranked.filter(col("rn") === 1)

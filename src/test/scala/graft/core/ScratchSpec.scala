@@ -13,7 +13,8 @@ import graft.SparkTestSession
   * builds a session, creates a temp dir, picks a tmpfs path, registers a
   * shutdown hook, attaches a listener, adds a dev main under src/test,
   * renames a file, spells the version-store format or keys state by an
-  * identity hash.
+  * identity hash. No llmops file but the owning one spells the quality
+  * signals, the regex token count or the exact set-overlap verifier.
   */
 class ScratchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -24,7 +25,7 @@ class ScratchSpec extends AnyFunSuite {
     assert(a != b)
     assert(Files.isDirectory(a) && Files.isDirectory(b))
     assert(a.getParent == b.getParent)
-    assert(Paths.get(Scratch.path("x")).getParent == a.getParent)
+    assert(Paths.get(Scratch.path(spark, "x")).getParent.getParent == a.getParent)
     assert(Paths.get(Scratch.sparkLocalDir).getParent == a.getParent)
   }
 
@@ -96,6 +97,21 @@ class ScratchSpec extends AnyFunSuite {
     for (p <- Seq("_SUCCESS" + "\"", "\"_claim" + "_", "\"v" + "=",
         "v=" + "$", "_base" + "\""))
       assert(where(p).keySet.filter(_.startsWith("src/main")) == Set(lake), p)
+  }
+
+  // a curation stage has one spelling, beside the graded operator that
+  // owns it: the quality signals and the regex token count live in
+  // TextStats, the exact set-overlap verifier in MinHashLSH, and every
+  // composite calls them
+  test("llmops spells the quality signals, token count and overlap verifier once") {
+    val llmops = "src/main/scala/graft/llmops/"
+    def spelledIn(p: String) = where(p).keySet.filter(_.startsWith(llmops))
+    assert(spelledIn("size(regexp_extract_all(text, " +
+      "'[a-z]+|[0-9]+|[^a-z0-9 ]'") == Set(llmops + "TextStats.scala"))
+    assert(spelledIn("isInCollection(" + "stopEn)") ==
+      Set(llmops + "TextStats.scala"))
+    assert(spelledIn("sortedIntersect" + "Count(") ==
+      Set(llmops + "MinHashLSH.scala"))
   }
 
   // an identity hash recurs once its session is collected, so a memo
