@@ -283,18 +283,7 @@ object CacheBin {
 }
 
 /** Query registry entry: the Spark build function plus the DuckDB oracle
-  * SQL (None → the driver records a weaker rows-only check).
+  * SQL the driver hash-checks its result against.
   */
-final case class Q(
-    name: String,
-    oracle: Option[String],
-    build: (SparkSession, String) => DataFrame)
-
-object Q {
-  def apply(name: String, oracle: String)(
-      build: (SparkSession, String) => DataFrame): Q =
-    Q(name, Some(oracle), build)
-
-  def noOracle(name: String)(build: (SparkSession, String) => DataFrame): Q =
-    Q(name, None, build)
-}
+final case class Q(name: String, oracle: String)(
+    val build: (SparkSession, String) => DataFrame)

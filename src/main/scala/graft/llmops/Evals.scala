@@ -101,7 +101,7 @@ object Evals {
   }
 
   /** Conformal miscoverage α = 0.1 (the 90% interval). */
-  val CONF_ALPHA_NUM = 9 // (1-α) as 9/10
+  val CONF_ALPHA_NUM = 9L // (1-α) as 9/10
 
   /** X — split-conformal interval calibration: the predictor
     * n̂_chars = 6·n_tokens is scored on the even-doc_id calibration
@@ -112,12 +112,12 @@ object Evals {
     */
   val xConformal = Q(
     "x_conformal_interval",
-    """WITH r AS (SELECT doc_id,
+    s"""WITH r AS (SELECT doc_id,
              abs(n_chars - 6 * CAST(len(string_split(text, ' ')) AS BIGINT))
                AS res,
              doc_id % 2 = 0 AS cal FROM documents),
        mm AS (SELECT CAST(count(*) AS BIGINT) AS n_cal,
-                ((count(*) + 1) * 9 + 9) // 10 AS rank_m
+                ((count(*) + 1) * $CONF_ALPHA_NUM + 9) // 10 AS rank_m
               FROM r WHERE cal),
        h AS (SELECT res, CAST(count(*) AS BIGINT) AS c
              FROM r WHERE cal GROUP BY 1),
@@ -131,7 +131,7 @@ object Evals {
        SELECT mm.n_cal, CAST(mm.rank_m AS BIGINT) AS rank_m, q.q_hat,
               t.n_test, t.n_cov,
               (1000000 * t.n_cov) // t.n_test AS coverage_ppm,
-              (10 * t.n_cov >= 9 * t.n_test) AS covered_90
+              (10 * t.n_cov >= $CONF_ALPHA_NUM * t.n_test) AS covered_90
        FROM mm, q, t""") { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
     val r = T(s, dir, "documents").select(col("doc_id"),
@@ -140,7 +140,7 @@ object Evals {
       (col("doc_id") % 2 === 0).as("cal"))
     val mm = r.filter(col("cal"))
       .agg(count(lit(1)).as("n_cal"),
-        expr("((count(1) + 1) * 9 + 9) div 10").as("rank_m"))
+        expr(s"((count(1) + 1) * $CONF_ALPHA_NUM + 9) div 10").as("rank_m"))
     val w = r.filter(col("cal")).groupBy("res").agg(count(lit(1)).as("c"))
       .withColumn("cum", sum(col("c")).over(
         Window.orderBy("res")
@@ -155,7 +155,8 @@ object Evals {
       .select(col("n_cal"), col("rank_m"), col("q_hat"),
         col("n_test"), col("n_cov"),
         expr("(1000000 * n_cov) div n_test").as("coverage_ppm"),
-        (lit(10L) * col("n_cov") >= lit(9L) * col("n_test")).as("covered_90"))
+        (lit(10L) * col("n_cov") >= lit(CONF_ALPHA_NUM) * col("n_test"))
+          .as("covered_90"))
   }
 
   /** Hex-prefix boundaries splitting md5 space into 5 ~even folds. */

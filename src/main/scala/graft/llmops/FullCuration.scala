@@ -1,6 +1,6 @@
 package graft.llmops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables => T}
@@ -329,21 +329,14 @@ object FullCuration {
 
     // stages 2+3 (narrow part) — language vote + length/stopword signals
     val words = split(col("text"), " ")
-    def score(ws: Seq[String]): Column =
-      size(filter(words, w => w.isInCollection(ws)))
     val scored = train.select(
-      col("doc_id"), col("source"), col("lang"), col("text"),
-      score(stopEn).as("s_en"), score(stopDe).as("s_de"),
-      score(stopEs).as("s_es"), score(stopFr).as("s_fr"),
-      TextStats.nTokens(words).as("n_tokens"),
-      TextStats.stopRatio(words).as("stop_ratio"))
+      Seq(col("doc_id"), col("source"), col("lang"), col("text")) ++
+        TextStats.langVotes(words) ++
+        Seq(TextStats.nTokens(words).as("n_tokens"),
+          TextStats.stopRatio(words).as("stop_ratio")): _*)
     val pred = scored.select(col("doc_id"), col("source"), col("lang"),
       col("text"), col("n_tokens"), col("stop_ratio"),
-      when(col("s_en") >= col("s_de") && col("s_en") >= col("s_es")
-        && col("s_en") >= col("s_fr"), "en")
-        .when(col("s_de") >= col("s_es") && col("s_de") >= col("s_fr"), "de")
-        .when(col("s_es") >= col("s_fr"), "es")
-        .otherwise("fr").as("lang_pred"))
+      TextStats.langPred.as("lang_pred"))
 
     // stage 3 (shuffle part) — the 3-gram repetition ratio and the gate.
     // THE first shared base: quality survivors feed the digest window,

@@ -136,7 +136,7 @@ object Kmv {
     * array stays a visible 64-row group domain instead of an opaque blob.
     */
   val HLL_P = 6
-  val HLL_M = 64L
+  val HLL_M = 1L << HLL_P
 
   /** 2^(60−p) = 2^54: the register index is the top p bits of a 60-bit
     * (15 hex chars) md5 prefix; the remaining 54 bits feed the rank. */

@@ -110,10 +110,27 @@ object TextStats {
     * (`split(text, " ")`).
     */
   private[llmops] def nTokens(words: Column): Column = size(words).cast("long")
-  private[llmops] def stopCount(words: Column): Column =
-    size(filter(words, w => w.isInCollection(stopEn)))
+  private def stopHits(words: Column, ws: Seq[String]): Column =
+    size(filter(words, w => w.isInCollection(ws)))
+  private[llmops] def stopCount(words: Column): Column = stopHits(words, stopEn)
   private[llmops] def stopRatio(words: Column): Column =
     stopCount(words).cast("double") / size(words)
+
+  /** The stopword language vote over a whitespace word array: the four
+    * per-language stopword counts `s_en`, `s_de`, `s_es`, `s_fr`
+    * (langVotes) and the fixed en > de > es > fr tie-break over them
+    * (langPred). x_lang_id, x_code_switch and x_full_curation vote with
+    * it.
+    */
+  private[llmops] def langVotes(words: Column): Seq[Column] =
+    Seq("en" -> stopEn, "de" -> stopDe, "es" -> stopEs, "fr" -> stopFr)
+      .map { case (l, ws) => stopHits(words, ws).as(s"s_$l") }
+  private[llmops] def langPred: Column =
+    when(col("s_en") >= col("s_de") && col("s_en") >= col("s_es")
+      && col("s_en") >= col("s_fr"), "en")
+      .when(col("s_de") >= col("s_es") && col("s_de") >= col("s_fr"), "de")
+      .when(col("s_es") >= col("s_fr"), "es")
+      .otherwise("fr")
 
   /** The bag of word-3-shingle counts per document: (doc_id, sh, c). */
   private[llmops] def shingleBag(docs: DataFrame): DataFrame =
@@ -210,18 +227,9 @@ object TextStats {
          FROM scored)
        SELECT predicted, lang AS actual, count(*) AS n
        FROM pred GROUP BY predicted, lang ORDER BY predicted, actual""") { (s, dir) =>
-    val words = split(col("text"), " ")
-    def score(ws: Seq[String]) = size(filter(words, w => w.isInCollection(ws)))
     T(s, dir, "documents")
-      .select(col("lang"),
-        score(stopEn).as("s_en"), score(stopDe).as("s_de"),
-        score(stopEs).as("s_es"), score(stopFr).as("s_fr"))
-      .select(col("lang"),
-        when(col("s_en") >= col("s_de") && col("s_en") >= col("s_es")
-          && col("s_en") >= col("s_fr"), "en")
-          .when(col("s_de") >= col("s_es") && col("s_de") >= col("s_fr"), "de")
-          .when(col("s_es") >= col("s_fr"), "es")
-          .otherwise("fr").as("predicted"))
+      .select(col("lang") +: langVotes(split(col("text"), " ")): _*)
+      .select(col("lang"), langPred.as("predicted"))
       .groupBy(col("predicted"), col("lang").as("actual"))
       .agg(count(lit(1)).as("n"))
       .orderBy("predicted", "actual")
@@ -431,8 +439,8 @@ object TextStats {
       sum(when(col("tf3") > 0, 1L).otherwise(0L)).as("df3"))
     def contrib(tf: String, df: String) =
       log(lit(1.0) + (col("n").cast("double") - col(df) + lit(0.5)) / (col(df) + lit(0.5))) *
-        (col(tf) * lit(2.2)) /
-        (col(tf) + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") /
+        (col(tf) * lit(BM25_K1 + 1)) /
+        (col(tf) + lit(BM25_K1) * (lit(1 - BM25_B) + lit(BM25_B) * col("dl") /
           (col("sdl").cast("double") / col("n"))))
     d.crossJoin(broadcast(stats))
       .select(col("doc_id"),
@@ -1211,16 +1219,11 @@ object TextStats {
               CASE WHEN tot = 0 THEN false
                    ELSE 10 * (tot - mx) >= 3 * tot END AS code_switched
        FROM t ORDER BY doc_id""") { (s, dir) =>
-    val words = split(col("text"), " ")
-    def score(ws: Seq[String]) =
-      size(filter(words, w => w.isInCollection(ws))).cast("long")
+    val votes = Seq("s_en", "s_de", "s_es", "s_fr").map(col(_).cast("long"))
     T(s, dir, "documents")
-      .select(col("doc_id"),
-        score(stopEn).as("s_en"), score(stopDe).as("s_de"),
-        score(stopEs).as("s_es"), score(stopFr).as("s_fr"))
-      .select(col("doc_id"),
-        (col("s_en") + col("s_de") + col("s_es") + col("s_fr")).as("tot"),
-        greatest(col("s_en"), col("s_de"), col("s_es"), col("s_fr")).as("mx"))
+      .select(col("doc_id") +: langVotes(split(col("text"), " ")): _*)
+      .select(col("doc_id"), votes.reduce(_ + _).as("tot"),
+        greatest(votes: _*).as("mx"))
       .select(col("doc_id"), col("tot").as("n_votes"),
         col("mx").as("top_votes"),
         when(col("tot") === 0, lit(null).cast("long"))

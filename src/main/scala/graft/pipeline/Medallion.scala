@@ -3,6 +3,7 @@ package graft.pipeline
 import java.time.{LocalDateTime, ZoneOffset}
 import java.time.temporal.ChronoUnit
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Lake
 
 /** Lake zone roots (bronze/silver/gold). Any Hadoop-FS scheme works —
   * file:// in tests, s3a:// in production (credentials via the standard
@@ -48,6 +49,9 @@ object LakeConfig {
   * parquet (daily). Spark-first equivalents of the reference's serialise /
   * aggregate jobs (/root/reference/data_lake_transformer.py:35-71) — lazy
   * end-to-end: each job is one Catalyst-planned scan→transform→write.
+  * Every sink is published through Lake.replace, so a rerun that fails
+  * (a truncated bronze file, a corrupt silver file) leaves the previous
+  * output in place.
   */
 class Medallion(spark: SparkSession, config: LakeConfig) {
 
@@ -59,8 +63,7 @@ class Medallion(spark: SparkSession, config: LakeConfig) {
     val source = PathLayout.rawHourlyGlob(config.bronzeRoot, config.basePath, processDate)
     val sink = PathLayout.sinkPath(
       config.silverRoot, config.basePath, "clean", processDate, hasHourlyPartition = true)
-    GhArchive.clean(GhArchive.read(spark, source))
-      .write.mode("overwrite").parquet(sink)
+    Lake.replace(GhArchive.clean(GhArchive.read(spark, source)), sink)
     sink
   }
 
@@ -90,12 +93,13 @@ class Medallion(spark: SparkSession, config: LakeConfig) {
     sink
   }
 
-  /** Streaming gold: watermarked daily aggregation over a silver stream,
-    * landed with foreachBatch (parquet sinks can't take aggregate updates
-    * directly; foreachBatch is the standard merge pattern). Complete mode
-    * + overwrite keeps gold consistent at every trigger; a real deployment
-    * with huge key spaces would switch to update mode + dynamic partition
-    * overwrite of only the touched days.
+  /** Streaming gold: daily aggregation over a silver stream in complete
+    * mode (no watermark), landed with foreachBatch (parquet sinks can't
+    * take aggregate updates directly; foreachBatch is the standard merge
+    * pattern). Each trigger's Lake.replace replaces the whole gold dir, so
+    * gold is consistent at every trigger; a deployment with huge key
+    * spaces would switch to a watermark, update mode and a rewrite of
+    * only the touched days (ROADMAP direction 3).
     */
   def aggregateGoldStreaming(checkpoint: String): String = {
     import org.apache.spark.sql.streaming.Trigger
@@ -105,7 +109,7 @@ class Medallion(spark: SparkSession, config: LakeConfig) {
     val query = GhArchive.aggregate(silver).writeStream
       .outputMode("complete")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(sink)
+        Lake.replace(batch, sink)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -122,7 +126,7 @@ class Medallion(spark: SparkSession, config: LakeConfig) {
     val sink = PathLayout.sinkPath(
       config.goldRoot, config.basePath, "agg", processDate, hasHourlyPartition = false)
     val silver = spark.read.schema(GhArchive.silverSchema).parquet(source)
-    GhArchive.aggregate(silver).write.mode("overwrite").parquet(sink)
+    Lake.replace(GhArchive.aggregate(silver), sink)
     sink
   }
 }

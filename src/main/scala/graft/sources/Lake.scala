@@ -48,6 +48,45 @@ object Lake {
       .saveAsTable(table)
   }
 
+  /** Replace the dataset directory at `path` with `df`: the one way a
+    * dataset is replaced in place. `df` is written beside the path, to
+    * `path + "__rewrite_tmp"`, and published by a verified swap, so a
+    * write that dies partway (a truncated input, a failed task) leaves
+    * the previous generation where it was and a rerun simply replaces
+    * it. `df` may read `path` itself: its job completes before the swap
+    * touches the directory. The staging and backup names end in
+    * `__rewrite_tmp` / `__rewrite_old`, so a `*.parquet` glob over the
+    * sink's siblings never matches them.
+    *
+    * Crash semantics (honest): the swap is two directory renames
+    * (source→`__rewrite_old`, tmp→source) and HDFS/posix renames are each
+    * atomic but the PAIR is not — a crash between them leaves the source
+    * path missing with the data intact in `__rewrite_old`. That window is
+    * closed two ways: (a) on entry replace() (and every reader of the
+    * path below, before its read) detects the half-swapped state and
+    * rolls `__rewrite_old` back before doing anything else, and
+    * (b) `__rewrite_old` is only deleted after the new source directory is
+    * verified present with a `_SUCCESS` marker, so data always exists at
+    * one of the two paths. Concurrent readers during the swap can still
+    * observe a transiently missing directory — callers that need
+    * always-readable maintenance should put the dataset behind the
+    * version-directory indirection below (`writeVersioned` /
+    * `readCurrent` / `compactVersioned`), where readers never resolve a
+    * missing path; this in-place replace targets single-writer batch
+    * jobs and maintenance windows.
+    *
+    * Cost: on the local filesystem and HDFS each rename is one metadata
+    * operation. On `s3a` a directory rename is a copy, so there the swap
+    * pays a second copy of the output.
+    */
+  def replace(df: DataFrame, path: String): Unit = {
+    val fs = fsOf(df.sparkSession, path)
+    recoverHalfSwap(fs, path)
+    val tmp = path + "__rewrite_tmp"
+    df.write.mode("overwrite").parquet(tmp)
+    swapInto(fs, tmp, path)
+  }
+
   /** Compact a parquet directory's small files to ~`targetBytes` outputs.
     *
     * The small-files problem is THE operational failure mode of a
@@ -56,23 +95,7 @@ object Lake {
     * S3 GETs + footer reads. Compaction = one narrow rewrite:
     * target file count is derived from the directory's actual byte size,
     * coalesce (no shuffle) when shrinking file count, repartition only
-    * when growing it.
-    *
-    * Crash semantics (honest): the swap is two directory renames
-    * (source→`__rewrite_old`, tmp→source) and HDFS/posix renames are each
-    * atomic but the PAIR is not — a crash between them leaves the source
-    * path missing with the data intact in `__rewrite_old`. That window is
-    * closed two ways: (a) on entry compact() detects the half-swapped
-    * state and rolls `__rewrite_old` back before doing anything else, and
-    * (b) `__rewrite_old` is only deleted after the new source directory is
-    * verified present with a `_SUCCESS` marker, so data always exists at
-    * one of the two paths. Concurrent readers during the swap can still
-    * observe a transiently missing directory — callers that need
-    * always-readable maintenance should put the dataset behind the
-    * version-directory indirection below (`writeVersioned` /
-    * `readCurrent` / `compactVersioned`), where readers never resolve a
-    * missing path; this in-place helper targets single-writer batch
-    * maintenance windows.
+    * when growing it. Published through replace().
     */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 256L << 20): Long = {
@@ -80,10 +103,7 @@ object Lake {
     recoverHalfSwap(fs, path)
     val (have, targetFiles) = fileCounts(fs, path, targetBytes)
     if (have <= targetFiles) return have.toLong
-    val tmp = path + "__rewrite_tmp"
-    spark.read.parquet(path).coalesce(targetFiles)
-      .write.mode("overwrite").parquet(tmp)
-    swapInto(fs, tmp, path)
+    replace(spark.read.parquet(path).coalesce(targetFiles), path)
     targetFiles.toLong
   }
 
@@ -108,8 +128,8 @@ object Lake {
     * At scale the anti-join shuffles both sides on the key unless the
     * dataset was written with writeBucketed on that key (then both sides
     * co-locate, no exchange) or the updates set is broadcast-small.
-    * Same crash discipline as compact(): recovery on entry, backup kept
-    * until the swapped directory verifies.
+    * Published through replace(): recovery on entry, backup kept until
+    * the swapped directory verifies.
     */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String]): Unit = {
@@ -119,9 +139,7 @@ object Lake {
     val merged = target
       .join(updates.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(updates.select(target.columns.toSeq.map(col): _*))
-    val tmp = path + "__rewrite_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    swapInto(fs, tmp, path)
+    replace(merged, path)
   }
 
   /** MERGE-by-key keeping the NEWEST row per key across target ∪ updates,
@@ -151,9 +169,7 @@ object Lake {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-    val tmp = path + "__rewrite_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    swapInto(fs, tmp, path)
+    replace(merged, path)
   }
 
   private[sources] def fsOf(spark: SparkSession, path: String): FileSystem =
@@ -184,10 +200,10 @@ object Lake {
 
   /** Verified directory swap: tmp must be committed (carry the marker);
     * the old directory, if any, is kept as __rewrite_old until the new
-    * one verifies, then dropped. See compact()'s scaladoc for the honest
+    * one verifies, then dropped. See replace()'s scaladoc for the honest
     * crash-window statement.
     */
-  private[sources] def swapInto(fs: FileSystem,
+  private def swapInto(fs: FileSystem,
       tmpDir: String, path: String): Unit = {
     val hPath = new HPath(path)
     val tmp = new HPath(tmpDir)

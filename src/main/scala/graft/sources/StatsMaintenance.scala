@@ -106,17 +106,14 @@ object StatsMaintenance {
           val sk = pk.unionByName(bk).distinct().orderBy("h").limit(K)
           (merged, sk)
         }
-      // two-phase write: stage then verified swap, so the read-back above
-      // never races this append's own overwrite of the same path, and the
-      // old accumulator is dropped only once the new one is in place. The
+      // Lake.replace stages then swaps, so the read-back above never
+      // races this append's own overwrite of the same path, and the old
+      // accumulator is dropped only once the new one is in place. The
       // stats and sketch writes land on disjoint paths — overlap them
       // (core.Par, guide §2.6)
       graft.core.Par.run(
-        () => ms.write.mode("overwrite").parquet(s"$root/stats_new"),
-        () => mk.coalesce(1).write.mode("overwrite")
-          .parquet(s"$root/sketch_new"))
-      for (t <- Seq("stats", "sketch"))
-        Lake.swapInto(Lake.fsOf(s, root), s"$root/${t}_new", s"$root/$t")
+        () => Lake.replace(ms, s"$root/stats"),
+        () => Lake.replace(mk.coalesce(1), s"$root/sketch"))
       appended += 1
     }
 

@@ -12,9 +12,10 @@ import graft.SparkTestSession
   * transient path hangs off one swept root, and no other source file
   * builds a session, creates a temp dir, picks a tmpfs path, registers a
   * shutdown hook, attaches a listener, adds a dev main under src/test,
-  * renames a file, spells the version-store format or keys state by an
-  * identity hash. No llmops file but the owning one spells the quality
-  * signals, the regex token count or the exact set-overlap verifier.
+  * renames a file, swaps a dataset into place, spells the version-store
+  * format or keys state by an identity hash. No llmops file but the
+  * owning one spells the quality signals, the stopword language vote,
+  * the regex token count or the exact set-overlap verifier.
   */
 class ScratchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -89,6 +90,16 @@ class ScratchSpec extends AnyFunSuite {
       Set("src/main/scala/graft/sources/Lake.scala"))
   }
 
+  // a dataset dir is replaced in place one way, Lake.replace: it stages
+  // beside the path and swaps, so a failed rerun keeps the previous
+  // generation; a delete-first overwrite of a pipeline sink loses it
+  test("only sources.Lake swaps a dataset into place") {
+    assert(where("swap" + "Into(").keySet.filter(_.startsWith("src/main")) ==
+      Set("src/main/scala/graft/sources/Lake.scala"))
+    assert(!where("mode(\"" + "overwrite\")").contains(
+      "src/main/scala/graft/pipeline/Medallion.scala"))
+  }
+
   // the version-store format (the version dir, its commit marker, the
   // claim file and the branch pin) is spelled only in sources.Lake;
   // specs may still plant dead writers by hand
@@ -100,15 +111,15 @@ class ScratchSpec extends AnyFunSuite {
   }
 
   // a curation stage has one spelling, beside the graded operator that
-  // owns it: the quality signals and the regex token count live in
-  // TextStats, the exact set-overlap verifier in MinHashLSH, and every
-  // composite calls them
+  // owns it: the quality signals, the stopword language vote and the
+  // regex token count live in TextStats, the exact set-overlap verifier
+  // in MinHashLSH, and every composite calls them
   test("llmops spells the quality signals, token count and overlap verifier once") {
     val llmops = "src/main/scala/graft/llmops/"
     def spelledIn(p: String) = where(p).keySet.filter(_.startsWith(llmops))
     assert(spelledIn("size(regexp_extract_all(text, " +
       "'[a-z]+|[0-9]+|[^a-z0-9 ]'") == Set(llmops + "TextStats.scala"))
-    assert(spelledIn("isInCollection(" + "stopEn)") ==
+    assert(spelledIn("isIn" + "Collection(") ==
       Set(llmops + "TextStats.scala"))
     assert(spelledIn("sortedIntersect" + "Count(") ==
       Set(llmops + "MinHashLSH.scala"))
