@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * local-mode knob that matters; on a real cluster this comes from the
   * submitter). Every session it builds, and every `newSession()` of one,
   * carries graft's SQL functions and the as-of join strategy
-  * (`graft.functions.GraftExtensions`).
+  * (`graft.functions.GraftExtensions`), and its Hadoop conf selects the
+  * fork-free local filesystem (`graft.core.NioLocal`).
   */
 object Sessions {
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
@@ -34,6 +35,7 @@ object Sessions {
       // shuffle files on the fastest local scratch (tmpfs when present;
       // see core.Scratch.sparkLocalDir) — transient by definition
       .config("spark.local.dir", graft.core.Scratch.sparkLocalDir)
+      .config(graft.core.NioLocal.sparkConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // FileStreamSink.hasMetadata stats a single read path for a metadata

@@ -15,7 +15,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 class Ingester(
     config: LakeConfig,
-    hadoopConf: Configuration = new Configuration(),
+    hadoopConf: Configuration = graft.core.NioLocal.hadoopConf(),
     sourceBaseUrl: String = "http://data.gharchive.org") {
 
   private val http = HttpClient.newBuilder()

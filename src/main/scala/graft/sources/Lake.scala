@@ -52,7 +52,8 @@ object Lake {
     * dataset is replaced in place. `df` is written beside the path, to
     * `path + "__rewrite_tmp"`, and published by a verified swap, so a
     * write that dies partway (a truncated input, a failed task) leaves
-    * the previous generation where it was and a rerun simply replaces
+    * the previous generation where it was, and the staging dir is
+    * deleted before the failure propagates, so a rerun simply replaces
     * it. `df` may read `path` itself: its job completes before the swap
     * touches the directory. The staging and backup names end in
     * `__rewrite_tmp` / `__rewrite_old`, so a `*.parquet` glob over the
@@ -83,7 +84,9 @@ object Lake {
     val fs = fsOf(df.sparkSession, path)
     recoverHalfSwap(fs, path)
     val tmp = path + "__rewrite_tmp"
-    df.write.mode("overwrite").parquet(tmp)
+    // a failed job leaves its (emptied) output dir: drop it with the job
+    try df.write.mode("overwrite").parquet(tmp)
+    catch { case e: Exception => fs.delete(new HPath(tmp), true); throw e }
     swapInto(fs, tmp, path)
   }
 

@@ -13,7 +13,8 @@ import graft.SparkTestSession
   * builds a session, creates a temp dir, picks a tmpfs path, registers a
   * shutdown hook, attaches a listener, adds a dev main under src/test,
   * renames a file, swaps a dataset into place, spells the version-store
-  * format or keys state by an identity hash. No llmops file but the
+  * format, keys state by an identity hash or builds a Hadoop conf of its
+  * own (core.NioLocal picks the local filesystem). No llmops file but the
   * owning one spells the quality signals, the stopword language vote,
   * the regex token count or the exact set-overlap verifier.
   */
@@ -108,6 +109,16 @@ class ScratchSpec extends AnyFunSuite {
     for (p <- Seq("_SUCCESS" + "\"", "\"_claim" + "_", "\"v" + "=",
         "v=" + "$", "_base" + "\""))
       assert(where(p).keySet.filter(_.startsWith("src/main")) == Set(lake), p)
+  }
+
+  // Hadoop's JVM-wide FileSystem cache keeps the first `file:` instance
+  // whatever conf later asks for one, so a stock conf built elsewhere
+  // could install the forking local filesystem for the whole JVM
+  test("only core picks the local filesystem or builds a Hadoop conf") {
+    for (p <- Seq("new Configuration" + "()", "\"fs.file" + ".impl\"",
+        "\"fs.AbstractFileSystem" + ".file.impl\""))
+      assert(where(p).keySet.filter(_.startsWith("src/main"))
+        .forall(_.startsWith("src/main/scala/graft/core/")), p)
   }
 
   // a curation stage has one spelling, beside the graded operator that

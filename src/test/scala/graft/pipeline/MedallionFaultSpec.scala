@@ -10,10 +10,10 @@ import graft.SparkTestSession
 import graft.core.Scratch
 
 /** Fault injection on the medallion sinks: a silver or gold rerun that
-  * fails midway leaves the previous output byte-identical, and the rerun
-  * after the fault is cleared reproduces the first run. One lake, the
-  * gzipped bronze shape of MedallionE2ESpec; the tests run in order and
-  * share it.
+  * fails midway leaves the previous output byte-identical and no staging
+  * dir beside it, and the rerun after the fault is cleared reproduces the
+  * first run. One lake, the gzipped bronze shape of MedallionE2ESpec; the
+  * tests run in order and share it.
   */
 class MedallionFaultSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -54,6 +54,13 @@ class MedallionFaultSpec extends AnyFunSuite {
     new File(dir).listFiles().map(f =>
       f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
 
+  /** Neither the staging dir nor the swap's backup is left beside `sink`. */
+  private def assertNoStaging(sink: String): Unit = {
+    val siblings = new File(sink).getParentFile.list().toSeq
+    assert(!siblings.exists(n =>
+      n.endsWith("__rewrite_tmp") || n.endsWith("__rewrite_old")), siblings)
+  }
+
   private lazy val firstRun: Run = {
     Files.createDirectories(bronze.getParent)
     Files.write(bronze, goodBronze)
@@ -68,6 +75,7 @@ class MedallionFaultSpec extends AnyFunSuite {
     Files.write(bronze, goodBronze.take(goodBronze.length / 2))
     intercept[Exception](medallion.serialiseRawData(date))
     assert(snapshot(firstRun.silver) == before)
+    assertNoStaging(firstRun.silver)
     val gold = spark.read.parquet(medallion.aggregateSilverData(date))
     assert(gold.agg(sum("event_count")).head.getLong(0) == 300L)
   }
@@ -78,6 +86,7 @@ class MedallionFaultSpec extends AnyFunSuite {
     Files.writeString(badSilver, "this is not a parquet file")
     intercept[Exception](medallion.aggregateSilverData(date))
     assert(snapshot(firstRun.gold) == before)
+    assertNoStaging(firstRun.gold)
   }
 
   test("reruns after the faults are cleared reproduce the first run") {
@@ -88,10 +97,6 @@ class MedallionFaultSpec extends AnyFunSuite {
     val gold = medallion.aggregateSilverData(date)
     assert(rows(silver) == first.silverRows)
     assert(rows(gold) == first.goldRows)
-    for (sink <- Seq(silver, gold)) {
-      val siblings = new File(sink).getParentFile.list().toSeq
-      assert(!siblings.exists(n =>
-        n.endsWith("__rewrite_tmp") || n.endsWith("__rewrite_old")), siblings)
-    }
+    Seq(silver, gold).foreach(assertNoStaging)
   }
 }
