@@ -38,40 +38,6 @@ object Bench {
     */
   private[graft] val harness = "noop"
 
-  /** Queries whose build performs REAL store writes in-query — multi-
-    * generation commit/merge/replay sequences, staged prune layouts,
-    * format round-trips, streaming checkpoint replays, persisted index
-    * builds — while the DuckDB oracle is a no-write arithmetic recompute.
-    * Their wall contains write+commit I/O BY DESIGN, so a cross-engine
-    * ratio on them measures the asymmetry, not the engine; every round's
-    * BENCH_COMPARISON re-derives this list in prose when the driver flags
-    * one. Tagging them in the artifact (`class: "store_rw"`) ships the
-    * explanation with the flag. Membership = every Q whose build writes
-    * a store (audited sweep, round 14; new store-writing queries must be
-    * added here — BenchClassSpec cross-checks the list against the
-    * registry).
-    */
-  private[graft] val storeRwClass: Set[String] = Set(
-    // sources/: versioned-lake maintenance + commit protocol
-    "x_catalog_txn", "x_lake_branch", "x_equality_deletes", "x_wap_publish",
-    "x_orphan_gc", "x_incremental_stats", "x_concurrent_commit",
-    "x_compact_commit_race", "x_compaction_plan", "x_optimize_pipeline",
-    "x_time_travel", "x_vacuum_audit",
-    // pipeline/: medallion maintenance
-    "x_gold_incremental", "x_gold_retraction", "x_malformed_audit",
-    "x_quarantine_replay", "x_schema_drift", "x_mv_join_refresh",
-    // streaming/: checkpointed replays with store appends
-    "x_stream_upsert", "x_stream_trending", "x_stream_late",
-    "x_stream_curation", "x_stream_additive_mv",
-    // ops/: format round-trips, staged prune layouts, bucketed tables
-    "x_csv_roundtrip", "x_orc_roundtrip", "x_json_roundtrip", "x_upsert",
-    "x_manifest_prune", "x_zorder_prune", "x_hilbert_prune",
-    "x_parquet_bloom_prune", "x_parquet_page_prune", "x_schema_evolution",
-    "x_bucketed_join", "x_observe_metrics",
-    // llmops/: persisted-index builds and incremental appends
-    "x_ivfpq_search", "x_ivfpq_incremental", "x_semdedup_incremental",
-    "x_incremental_curation", "x_cdc_incremental", "x_forget_user")
-
   def main(args: Array[String]): Unit = {
     // entry loadavg, read BEFORE the session/warm-up exists: the only
     // sample that measures the BOX rather than the bench itself (any
@@ -112,6 +78,14 @@ object Bench {
     val loadStart = loadavg()
     // per query: the first rep's wall and the min-wall successful rep
     val records = mutable.Map.empty[String, (Double, Profile.Record)]
+    // Queries whose build wrote files in any sweep rep (commit/merge/
+    // replay sequences, staged layouts, format round-trips, checkpointed
+    // replays with store appends, persisted index builds), while the
+    // DuckDB oracle is a no-write recompute: their wall contains write
+    // I/O by design, so a cross-engine ratio on them measures that
+    // asymmetry, not the engine. Tagged `class: "store_rw"` in the
+    // artifact so a flag ships its explanation.
+    val storeRw = mutable.Set.empty[String]
     val results = queries.keys.toSeq.sorted
       .filter(name => only.forall(_.exists(name.startsWith)))
       .map { name =>
@@ -127,6 +101,7 @@ object Bench {
           r.error.foreach(e => System.err.println(s"BENCH ERROR $name: $e"))
           runs += r
         }
+        if (runs.exists(_.outputBytes > 0)) storeRw += name
         // a crashed query must not deflate the total: report it as -1
         if (!ok) { errors += name; name -> -1.0 }
         else {
@@ -199,7 +174,7 @@ object Bench {
     // explains its own flags; kept to the flagged set on stdout, with the
     // full class map on the history line below
     def classes(names: Seq[String]): String =
-      obj(names.filter(storeRwClass.contains).map(_ -> "\"store_rw\""))
+      obj(names.filter(storeRw.contains).map(_ -> "\"store_rw\""))
     val flagClasses = classes((regressions ++ dismissed).distinct)
     val loads = Seq(loadEntry, loadStart, loadEnd).map(fmt).mkString("[", ",", "]")
     val canaryJson = s""""canary_entry_s":${secs(canaryEntry)},"canary_exit_s":${secs(canaryExit)},"canary_in_band":${json(canaryOk)}"""

@@ -67,22 +67,24 @@ object Profile {
     * less that action's Catalyst time), plan is the Catalyst time
     * (analysis, optimization, planning) summed over every execution in
     * the run, exec is the noop sink's wall less its own Catalyst time.
-    * Run and CPU seconds are summed over tasks; `inputRows` is the most
-    * any instance of a tracked single-partition shape took in.
+    * Run and CPU seconds are summed over tasks, and so is `outputBytes`,
+    * the bytes file writes put in storage (the noop sink writes none);
+    * `inputRows` is the most any instance of a tracked single-partition
+    * shape took in.
     */
   final case class Record(
       label: String,
       wallS: Double, buildS: Double, planS: Double, execS: Double,
       jobs: Seq[Job], tasks: Long, runS: Double, cpuS: Double,
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
-      nodes: Set[String], inputRows: Map[String, Long],
+      outputBytes: Long, nodes: Set[String], inputRows: Map[String, Long],
       error: Option[String]) {
 
     def show: String = {
       val head = f"== $label wall=$wallS%.3f s (build=$buildS%.3f " +
         f"plan=$planS%.3f exec=$execS%.3f) jobs=${jobs.size} tasks=$tasks " +
         f"run=$runS%.3f s cpu=$cpuS%.3f s shuffle r/w=$shuffleReadBytes/" +
-        s"$shuffleWriteBytes B spill=$spillBytes B nodes=" +
+        s"$shuffleWriteBytes B spill=$spillBytes B out=$outputBytes B nodes=" +
         (if (nodes.isEmpty) "-" else nodes.toSeq.sorted.map(n =>
           inputRows.get(n).fold(n)(rows => s"$n(in=$rows)")).mkString(","))
       val lines = error.map(e => s"  ERROR $e").toSeq ++
@@ -116,7 +118,7 @@ object Profile {
       val execSite = mutable.Map.empty[String, String]
       val jobStart = mutable.LinkedHashMap.empty[Int, (String, Long)]
       val jobs = mutable.ArrayBuffer.empty[Job]
-      var tasks, runMs, cpuNs, shRead, shWrite, spill, planMs = 0L
+      var tasks, runMs, cpuNs, shRead, shWrite, spill, out, planMs = 0L
       val nodes = mutable.Set.empty[String]
       val inputRows = mutable.Map.empty[String, Long]
     }
@@ -159,6 +161,7 @@ object Profile {
           a.shRead += m.shuffleReadMetrics.totalBytesRead
           a.shWrite += m.shuffleWriteMetrics.bytesWritten
           a.spill += m.memoryBytesSpilled + m.diskBytesSpilled
+          a.out += m.outputMetrics.bytesWritten
         }
       }
     }
@@ -215,7 +218,7 @@ object Profile {
         Record(label, wallNs / 1e9, buildS, planS,
           math.max(0.0, wallNs / 1e9 - buildS - planS),
           a.jobs.sortBy(_.id).toSeq, a.tasks, a.runMs / 1e3, a.cpuNs / 1e9,
-          a.shRead, a.shWrite, a.spill, a.nodes.toSet, a.inputRows.toMap,
+          a.shRead, a.shWrite, a.spill, a.out, a.nodes.toSet, a.inputRows.toMap,
           error)
       }
     }

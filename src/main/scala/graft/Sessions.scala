@@ -31,6 +31,10 @@ object Sessions {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // events.ts ships as parquet TIMESTAMP(NANOS) in some lake
+      // generations, which the vectorized reader rejects: read it as raw
+      // nanos (core.Tables.normTs converts)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       // shuffle files on the fastest local scratch (tmpfs when present;
       // see core.Scratch.sparkLocalDir) — transient by definition

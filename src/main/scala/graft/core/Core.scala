@@ -73,7 +73,7 @@ object Tables {
       // micros value is unchanged). Both normalize to the same TIMESTAMP
       // column; DuckDB reads the same file natively either way, and oracle
       // SQL casts outputs to TIMESTAMP (us) to keep output types aligned.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Sessions.local reads nanos as raw longs for every session it builds.
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (name == "events") df.withColumn("ts", normTs(df, "ts")) else df
     }
@@ -89,6 +89,25 @@ object Tables {
         expr(s"timestamp_micros($colName div 1000)")
       case _ => col(colName).cast(org.apache.spark.sql.types.TimestampType)
     }
+}
+
+/** The one way a stream runs: drain the backlog its source holds now
+  * (Trigger.AvailableNow) with progress in `checkpoint`, then stop. A
+  * failed query's exception is rethrown; the finished query is returned
+  * for its progress reports. On a cluster the same writer runs under a
+  * continuous trigger instead.
+  */
+object Streams {
+  import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+
+  def drain[T](writer: DataStreamWriter[T], checkpoint: String): StreamingQuery = {
+    val q = writer
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
+  }
 }
 
 /** Cross-engine numeric determinism helpers.

@@ -85,49 +85,21 @@ object Observe {
               TRUE AS footer_matches_scan
        FROM events""") { (s, dir) =>
     import scala.jdk.CollectionConverters._
-    val path = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
     val conf = s.sparkContext.hadoopConfiguration
-    val fs = path.getFileSystem(conf)
-    // the path may be a single file OR a multi-file directory (any real
-    // lake generation is the latter, and a PARTITIONED layout nests the
-    // data files in key=value subdirectories): one footer read per data
-    // file, discovered by RECURSIVE listing so partitioned/nested
-    // layouts count every file the scan will read
-    val files =
-      if (fs.getFileStatus(path).isDirectory) {
-        // a file is visible to the scan only if NO path component under
-        // the root is hidden (_ or . prefixed) — same rule Spark's file
-        // index applies, so footer_rows counts exactly the scan's files.
-        // The walk terminates on Path equality with the QUALIFIED root:
-        // fs.listFiles returns scheme-qualified paths (file:/...), so a
-        // raw-string comparison against the unqualified input would walk
-        // past the table root and test ancestor components above it
-        // (round-15 advice).
-        val rootQ = fs.makeQualified(path)
-        def visible(p: org.apache.hadoop.fs.Path): Boolean = {
-          var cur = p
-          while (cur != null && cur != rootQ) {
-            val n = cur.getName
-            if (n.startsWith("_") || n.startsWith(".")) return false
-            cur = cur.getParent
-          }
-          true
-        }
-        val it = fs.listFiles(path, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-        while (it.hasNext) {
-          val p = it.next().getPath
-          if (p.getName.endsWith(".parquet") && visible(p)) buf += p
-        }
-        buf.toSeq
-      } else Seq(path)
+    // one footer read per data file of the scan's own file index (a
+    // single file, or every visible part file of a directory or
+    // partitioned layout), so footer_rows counts exactly the files the
+    // scan reads
+    val events = T(s, dir, "events")
+    val files = events.inputFiles.toSeq
+      .map(f => new org.apache.hadoop.fs.Path(new java.net.URI(f)))
     val footerRows = files.map { p =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
       try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
       finally reader.close()
     }.sum
-    val scanRows = T(s, dir, "events").count()
+    val scanRows = events.count()
     import s.implicits._
     Seq((footerRows, scanRows, footerRows == scanRows))
       .toDF("footer_rows", "scan_rows", "footer_matches_scan")

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.time.{LocalDateTime, ZoneOffset}
 import java.time.temporal.ChronoUnit
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Streams
 import graft.sources.Lake
 
 /** Lake zone roots (bronze/silver/gold). Any Hadoop-FS scheme works —
@@ -71,25 +72,20 @@ class Medallion(spark: SparkSession, config: LakeConfig) {
     * (SURVEY.md §7) — a file-source stream over the WHOLE bronze zone
     * replaces per-hour batch scoping. Each new bronze file is discovered
     * incrementally (checkpointed), cleaned, and appended to a silver
-    * directory. Trigger.AvailableNow processes the backlog and stops, so
-    * the same job serves both catch-up and scheduled runs; on a cluster
-    * the identical code runs with a continuous trigger.
+    * directory. Streams.drain processes the backlog and stops, so the
+    * same job serves both catch-up and scheduled runs; on a cluster the
+    * identical code runs with a continuous trigger.
     */
   def serialiseRawDataStreaming(checkpoint: String): String = {
-    import org.apache.spark.sql.streaming.Trigger
     val source = s"${config.bronzeRoot}/${config.basePath}/*/*/*"
     val sink = s"${config.silverRoot}/${config.basePath}/streaming"
     val raw = spark.readStream
       .schema(GhArchive.rawSchema)
       .option("mode", GhArchive.DropMalformed)
       .json(source)
-    val query = GhArchive.clean(raw).writeStream
+    Streams.drain(GhArchive.clean(raw).writeStream
       .format("parquet")
-      .option("path", sink)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+      .option("path", sink), checkpoint)
     sink
   }
 
@@ -102,19 +98,14 @@ class Medallion(spark: SparkSession, config: LakeConfig) {
     * only the touched days (ROADMAP direction 3).
     */
   def aggregateGoldStreaming(checkpoint: String): String = {
-    import org.apache.spark.sql.streaming.Trigger
     val source = s"${config.silverRoot}/${config.basePath}/streaming"
     val sink = s"${config.goldRoot}/${config.basePath}/streaming"
     val silver = spark.readStream.schema(GhArchive.silverSchema).parquet(source)
-    val query = GhArchive.aggregate(silver).writeStream
+    Streams.drain(GhArchive.aggregate(silver).writeStream
       .outputMode("complete")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Lake.replace(batch, sink)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+      }, checkpoint)
     sink
   }
 

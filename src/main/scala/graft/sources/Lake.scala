@@ -179,17 +179,13 @@ object Lake {
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Roll back a half-completed swap left by a crash between the two
-    * renames: source missing, data stranded in the __rewrite_old backup
-    * (or the pre-round-3 __compact_old spelling — still recovered for one
-    * release so an old crash's backup isn't orphaned).
+    * renames: source missing, data stranded in the __rewrite_old backup.
     */
   private def recoverHalfSwap(fs: FileSystem,
       path: String): Unit = {
     val hPath = new HPath(path)
-    if (!fs.exists(hPath)) Seq("__rewrite_old", "__compact_old")
-      .map(s => new HPath(path + s))
-      .find(fs.exists)
-      .foreach(bak => renameOrThrow(fs, bak, hPath))
+    val bak = new HPath(path + "__rewrite_old")
+    if (!fs.exists(hPath) && fs.exists(bak)) renameOrThrow(fs, bak, hPath)
   }
 
   /** rename() reports failure by RETURNING false on most Hadoop

@@ -1,18 +1,19 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.net.URI
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.core.{Q, Scratch, Tables => T}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.core.{Q, Scratch, SessionMemo, Streams, Tables => T}
 import graft.core.Exact.dec
 import graft.llmops.TextStats.MIN_TOKENS
 
 /** Structured Streaming operators (SURVEY.md §2b Q28–Q30).
   *
   * Each query runs a real streaming pipeline — file source →
-  * watermark/window/state → memory sink — driven to completion with
-  * Trigger.AvailableNow, then returns the sink table as a batch
+  * watermark/window/state → memory sink — drained to completion by
+  * core.Streams, then returns the sink table as a batch
   * DataFrame. The oracle is the equivalent batch SQL over the same rows
   * (the streaming/batch-equivalence contract).
   *
@@ -22,109 +23,61 @@ import graft.llmops.TextStats.MIN_TOKENS
   */
 object StreamOps {
 
-  /** Streaming view of the events table (nanos ts → micros timestamp,
-    * same normalization as the batch loader). `copies` > 1 exposes the
-    * file N times through one source directory — N× duplicated rows from
-    * a SINGLE source, cheaper than unioning N streaming sources (each
-    * source pays its own per-batch planning and offset tracking).
-    */
-  /** The streaming file source wants a DIRECTORY; expose a single parquet
-    * file through temp-dir symlinks (`copies` > 1 = N× duplicated rows
-    * from one source, cheaper than unioning N streaming sources). Returns
-    * the raw file stream with the file's batch-read schema — shared by
-    * eventsStream and the documents stream in x_stream_neardup.
-    */
-  /** Memoized batch-read schema per (path, mtime): every replay otherwise
-    * pays a fresh footer-probing batch datasource just to pin the stream
-    * schema. The mtime in the key invalidates the entry if a file is
-    * rewritten in place with a different schema. The conf caveat remains:
-    * eventsStream sets nanosAsLong before the events path is ever probed,
-    * so the memoized schema is the nanos-aware one; a foreign session
-    * probing the same path without that conf would see the same schema
-    * only because the conf is global to this JVM's graft sessions.
-    */
-  private val fileSchemas = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), org.apache.spark.sql.types.StructType]
+  // one batch read per (session, table path): its file index supplies
+  // both the data files a replay links and the schema it pins. Lakes are
+  // read-only for a session's life (core.Tables' invariant), so the
+  // listing and the footer-probing schema inference run once
+  private val tableReads = new SessionMemo[DataFrame]
 
+  /** The streaming file source wants a DIRECTORY; expose a table (one
+    * parquet file, or a directory of part files) through symlinks to
+    * its data files in a fresh dir, and return the raw file stream with
+    * the table's batch-read schema. `copies` > 1 links every file N
+    * times (N× duplicated rows from one source, cheaper than unioning N
+    * streaming sources). The files are the batch scan's own: Spark's
+    * file index skips hidden (`_`/`.`) paths and recurses into
+    * `key=value` dirs, which are mirrored here so the pinned schema's
+    * partition columns are not read as null. Shared by eventsStream and
+    * the documents stream in x_stream_neardup.
+    */
   private def fileStream(s: SparkSession, path: String, prefix: String,
       copies: Int = 1): DataFrame = {
+    val table = tableReads(s, path)(s.read.parquet(path))
+    val root = Paths.get(path).toAbsolutePath.normalize
+    val dataFiles = table.inputFiles.sorted.map(f => Paths.get(new URI(f)))
+    require(dataFiles.nonEmpty, s"no visible data files under $path")
     val streamDir = Scratch.fresh(prefix)
-    val src = new java.io.File(path)
-    // the table may be a single parquet FILE (the driver's fixture
-    // lakes) or a DIRECTORY of part files (every real lake generation —
-    // the k=5 census caught the single-file assumption: a symlink to a
-    // directory matches zero files in the streaming source, the replay
-    // delivers zero batches, and every downstream read of the staged
-    // output fails). Listing is RECURSIVE (round-15 advice: a
-    // PARTITIONED table nests its part files in key=value
-    // subdirectories, which the flat listing matched as zero files —
-    // the same failure class one level deeper), with the same
-    // hidden-component visibility rule the batch scan applies, and an
-    // empty data-file list fails loudly instead of replaying nothing.
-    def listData(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles).toSeq.flatten
-        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-        .flatMap {
-          case f if f.isDirectory => listData(f)
-          case f if f.isFile && f.getName.endsWith(".parquet") => Seq(f)
-          case _ => Seq.empty
-        }
-    val dataFiles: Seq[java.io.File] =
-      if (src.isDirectory) {
-        val fs = listData(src)
-        require(fs.nonEmpty, s"no visible .parquet data files under $path")
-        fs
-      } else Seq(src)
-    (1 to copies).foreach { i =>
-      dataFiles.zipWithIndex.foreach { case (f, j) =>
-        // mirror any key=value partition subdirectories between the table
-        // root and each data file (round-16 advice): the pinned schema
-        // derives partition columns from those path components, and a FLAT
-        // symlink layout would silently read them as null in every
-        // streamed row
-        val destDir = Option(src.toPath.relativize(f.toPath).getParent)
-          .filter(_ => src.isDirectory)
-          .fold(streamDir)(rel => streamDir.resolve(rel))
-        Files.createDirectories(destDir)
-        Files.createSymbolicLink(
-          destDir.resolve(s"${i}_${j}_${f.getName}"), f.toPath)
-      }
+    for (i <- 1 to copies; (f, j) <- dataFiles.zipWithIndex) {
+      val destDir = Option(root.relativize(f).getParent)
+        .fold(streamDir)(streamDir.resolve)
+      Files.createDirectories(destDir)
+      Files.createSymbolicLink(
+        destDir.resolve(s"${i}_${j}_${f.getFileName}"), f)
     }
-    // directory sources key the schema memo on the max DATA-FILE mtime
-    // (round-16 advice): the root dir's mtime only moves when direct
-    // children are added/removed, so an in-place part-file rewrite one
-    // level down would keep serving the stale memoized schema
-    val mtime =
-      if (src.isDirectory) dataFiles.map(_.lastModified).max
-      else src.lastModified
-    s.readStream
-      .schema(fileSchemas.getOrElseUpdate((path, mtime),
-        s.read.parquet(path).schema))
-      .parquet(streamDir.toString)
+    s.readStream.schema(table.schema).parquet(streamDir.toString)
   }
 
+  /** Streaming view of the events table (nanos ts → micros timestamp,
+    * same normalization as the batch loader); `copies` as in fileStream.
+    */
   private def eventsStream(s: SparkSession, dir: String, copies: Int = 1): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val st = fileStream(s, s"$dir/events.parquet", "graft_stream_events", copies)
     // same lake-generation schema drift as Tables.apply: raw-long nanos
     // vs native timestamp — normalize identically
     st.withColumn("ts", graft.core.Tables.normTs(st, "ts"))
   }
 
-  /** Run a streaming DataFrame into a memory sink to completion; return
-    * the sink contents.
-    */
   /** Run `body` with shuffle/state partitioning pinned to 1 and a fresh
-    * checkpoint dir, restoring the conf and deleting the checkpoint
-    * (state store + offsets, the bulk of the tmpfs footprint) when the
-    * replay terminates. State-store commit cost scales with partition
-    * count and these replays move a few hundred KB per batch — a real
-    * deployment sizes this to keyspace ÷ executor memory and keeps the
-    * checkpoint on durable shared storage. No-data micro-batches are
-    * disabled for the replay: every append-mode query here emits eagerly
-    * (dedup on first sight, inner interval join on match) and the
-    * aggregations run Complete mode, so the extra watermark-flush batch
-    * per query is pure scheduling floor.
+    * checkpoint dir to drain its streams with, restoring the conf and
+    * deleting the checkpoint (state store + offsets, the bulk of the
+    * tmpfs footprint) when the replay terminates. State-store commit
+    * cost scales with partition count and these replays move a few
+    * hundred KB per batch — a real deployment sizes this to keyspace ÷
+    * executor memory and keeps the checkpoint on durable shared storage.
+    * No-data micro-batches are disabled for the replay: every
+    * append-mode query here emits eagerly (dedup on first sight, inner
+    * interval join on match) and the aggregations run Complete mode, so
+    * the extra watermark-flush batch per query is pure scheduling floor.
     *
     * The session conf is GLOBAL, so replays are serialized under a lock —
     * two interleaved replays (parallel test suites sharing the session)
@@ -155,16 +108,15 @@ object StreamOps {
     }
   }
 
+  /** Run a streaming DataFrame into a memory sink to completion; return
+    * the sink contents.
+    */
   private def runToMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
     val spark = df.sparkSession
     withPinnedReplay(spark, s"graft_ckpt_$name") { ckpt =>
-      val q = df.writeStream
+      Streams.drain(df.writeStream
         .format("memory").queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .outputMode(mode), ckpt)
     }
     spark.table(name)
   }
@@ -428,14 +380,14 @@ object StreamOps {
                                                 event_id DESC) AS rn
              FROM events)
        WHERE rn = 1 ORDER BY user_id""") { (s, dir) =>
-    val stage = upsertStage(dir)
+    val stage = upsertStage(s, dir)
     val stream = eventsStream(s, dir, copies = 2)
       .select(col("user_id"), col("event_id"), col("ts"))
     // same pinned state/shuffle width as runToMemory: the per-batch
     // window + merge move a few hundred rows — wide shuffles and
     // many-file stage rewrites per batch are pure overhead
     withPinnedReplay(s, "graft_ckpt_upsert") { ckpt =>
-      val q = stream.writeStream
+      Streams.drain(stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           // per-batch pre-aggregation: only one candidate row per key
           // reaches the merge (batch is a plain DataFrame here, so a
@@ -447,11 +399,7 @@ object StreamOps {
             .filter(col("rn") === 1).drop("rn")
           graft.sources.Lake.upsertLatest(batch.sparkSession, stage, latest,
             Seq("user_id"), Seq(col("ts"), col("event_id")))
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckpt)
     }
     s.read.parquet(stage)
       .select(col("user_id"), col("event_id").as("last_event"),
@@ -459,15 +407,14 @@ object StreamOps {
       .orderBy("user_id")
   }
 
-  /** Stable per-(JVM, data-dir) stage for x_stream_upsert: persisting
-    * across reps is the point — the second rep's whole replay is a
-    * duplicate and the merge must absorb it. Keyed by dir so one JVM
-    * touching two SFs never merges their histories together.
+  /** Stable per-(session, data-dir) stage for x_stream_upsert:
+    * persisting across reps is the point — the second rep's whole replay
+    * is a duplicate and the merge must absorb it. Keyed by dir so one
+    * session touching two SFs never merges their histories together.
     */
-  private val upsertStages =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def upsertStage(dir: String): String =
-    upsertStages.getOrElseUpdate(dir,
+  private val upsertStages = new SessionMemo[String]
+  private def upsertStage(s: SparkSession, dir: String): String =
+    upsertStages(s, dir)(
       Scratch.fresh("graft_upsert_stage").toString + "/latest")
 
   /** X — streaming drift gate: the per-ingest dataset-QA check
@@ -607,12 +554,13 @@ object StreamOps {
     */
   private def stageLateFile(root: java.nio.file.Path, df: DataFrame,
       name: String): Unit = {
-    val tmp = Scratch.fresh(s"graft_late_tmp_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = new java.io.File(tmp.toString).listFiles()
-      .find(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet")).get
-    Files.copy(part.toPath, root.resolve(s"$name.parquet"))
+    val tmp = Scratch.fresh(s"graft_late_tmp_$name").toString
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    // the written schema is df's, so the file index lists without a
+    // footer-probing inference job
+    val Array(part) = df.sparkSession.read.schema(df.schema).parquet(tmp)
+      .inputFiles
+    Files.copy(Paths.get(new URI(part)), root.resolve(s"$name.parquet"))
     ()
   }
 
@@ -695,20 +643,15 @@ object StreamOps {
       // memory sinks can't resume a checkpoint; foreachBatch can, and
       // appending each emitted micro-batch to parquet is the real
       // incremental-gold shape anyway
-      def runOnce(): Long = {
-        val q = agg.writeStream
+      def runOnce(): Long =
+        Streams.drain(agg.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.write.mode("append").parquet(out)
           }
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.recentProgress
+          .outputMode(OutputMode.Append()), ckpt)
+          .recentProgress
           .flatMap(p => p.stateOperators.map(_.numRowsDroppedByWatermark))
           .sum
-      }
       runOnce() // run 1: on-time history; watermark lands in the ckpt
       stageLateFile(stage, ev.filter(lateC), "late")
       dropped = runOnce() // run 2: the late arrivals, dropped + counted
@@ -866,15 +809,12 @@ object StreamOps {
       val wsDigest = org.apache.spark.sql.expressions.Window
         .partitionBy(col("h")).orderBy(col("doc_id"))
       def runOnce(): Unit = {
-        val q = s.readStream.schema(sch).parquet(stage.toString)
+        Streams.drain(s.readStream.schema(sch).parquet(stage.toString)
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             admitBatch(batch, wsDigest)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          }, ckpt)
+        ()
       }
       runOnce() // batch 1: admissions append to the index
       stageLateFile(stage, b2, "batch2")
@@ -956,18 +896,14 @@ object StreamOps {
     val mvDir = Scratch.fresh("graft_addmv").toString + "/mv"
     val b0Dir = Scratch.fresh("graft_addmv_b0").toString + "/b0"
     withPinnedReplay(s, "graft_ckpt_addmv") { ckpt =>
-      val q = stream.writeStream
+      Streams.drain(stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val ss = batch.sparkSession
           if (batchId == 0L) // record the replay candidate
             batch.write.mode("overwrite").parquet(b0Dir)
           applyAdditiveBatch(ss, mvDir, batch, batchId)
           ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }, ckpt)
     }
     // the duplicate: batch 0 delivered again with its original id
     val dupApplied = applyAdditiveBatch(s, mvDir,

@@ -197,8 +197,8 @@ class BenchGateSpec extends AnyFunSuite {
     val r = Profile.Record("x_q", wallS = 0.9, buildS = 0.1, planS = 0.2,
       execS = 0.6, jobs = Seq(Profile.Job(1, "a", 0.3), Profile.Job(2, "b", 0.2)),
       tasks = 12, runS = 1.0, cpuS = 0.75, shuffleReadBytes = 1024,
-      shuffleWriteBytes = 2048, spillBytes = 0, nodes = Set.empty,
-      inputRows = Map.empty, error = None)
+      shuffleWriteBytes = 2048, spillBytes = 0, outputBytes = 0,
+      nodes = Set.empty, inputRows = Map.empty, error = None)
     val text = line(0.9, records = Bench.obj(Seq("x_q" -> Bench.recordJson(1.5, r))))
     val Some(run) = Bench.parseRun(text)
     assert(run.queries == Map("q01_clean" -> 0.9))

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** graft.Profile's recorder: a labelled run records the plan nodes and
   * jobs of what it ran, and the run after it none of them, however late
   * the asynchronous listener bus delivers the first run's events. A
-  * single-partition stage is recorded with its input rows.
+  * single-partition stage is recorded with its input rows, and a file
+  * write with the bytes it wrote.
   */
 class ProfileSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark.newSession()
@@ -54,6 +55,21 @@ class ProfileSpec extends AnyFunSuite {
       val c = rec.run("C")(rows.groupBy().count())
       assert(c.nodes == Set("SinglePartitionExchange"))
       assert(c.inputRows == Map("SinglePartitionExchange" -> 4L))
+    } finally rec.close()
+  }
+
+  // Bench derives its store_rw class from this counter
+  test("a parquet write records its output bytes and a noop run none") {
+    val rec = new Profile.Recorder(spark)
+    try {
+      val dir = graft.core.Scratch.fresh("profile_out").toString + "/t"
+      val w = rec.run("write") {
+        spark.range(1000).toDF("x").write.parquet(dir)
+        spark.read.parquet(dir)
+      }
+      assert(w.error.isEmpty && w.outputBytes > 0)
+      val r = rec.run("read")(spark.read.parquet(dir))
+      assert(r.error.isEmpty && r.jobs.nonEmpty && r.outputBytes == 0L)
     } finally rec.close()
   }
 }

@@ -14,9 +14,13 @@ import graft.SparkTestSession
   * shutdown hook, attaches a listener, adds a dev main under src/test,
   * renames a file, swaps a dataset into place, spells the version-store
   * format, keys state by an identity hash or builds a Hadoop conf of its
-  * own (core.NioLocal picks the local filesystem). No llmops file but the
-  * owning one spells the quality signals, the stopword language vote,
-  * the regex token count or the exact set-overlap verifier.
+  * own (core.NioLocal picks the local filesystem). Streams drain through
+  * one runner (core.Streams), tables list their files only through
+  * Spark's file index, per-session state lives only in core's memo, and
+  * the nanos read conf is set only where the session is built. No llmops
+  * file but the owning one spells the quality signals, the stopword
+  * language vote, the regex token count or the exact set-overlap
+  * verifier.
   */
 class ScratchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -151,5 +155,31 @@ class ScratchSpec extends AnyFunSuite {
   test("src/test has one dev main") {
     assert(where("def " + "main(").keySet.filter(_.startsWith("src/test")) ==
       Set("src/test/scala/graft/InventoryCensus.scala"))
+  }
+
+  private def inMain(pattern: String): Set[String] =
+    where(pattern).keySet.filter(_.startsWith("src/main"))
+
+  // a JVM-wide map outlives the session whose state it holds; state that
+  // lives longer than one call goes through core.SessionMemo
+  test("only core holds a concurrent map") {
+    assert(inMain("Trie" + "Map") == Set("src/main/scala/graft/core/Core.scala"))
+  }
+
+  // a hand-rolled walk has to copy Spark's hidden-path rule and its
+  // partition-dir recursion; a table's files are its scan's inputFiles
+  test("no source walks a directory by hand") {
+    assert(inMain("listFiles" + "(").isEmpty)
+  }
+
+  test("every stream drains through core.Streams") {
+    for (p <- Seq("awaitTermination" + "(", "Trigger" + ".AvailableNow"))
+      assert(inMain(p) == Set("src/main/scala/graft/core/Core.scala"), p)
+  }
+
+  // a conf flipped at run time holds for whoever reads next; set where
+  // the session is built, it holds for every session from the start
+  test("only Sessions sets the parquet nanos conf") {
+    assert(inMain("nanos" + "AsLong") == Set("src/main/scala/graft/Sessions.scala"))
   }
 }

@@ -62,7 +62,7 @@ class LakeSpec extends AnyFunSuite {
     events.repartition(8).write.parquet(dir)
     val n = events.count()
     // simulate a crash between the two swap renames: source gone,
-    // data stranded in __compact_old
+    // data stranded in __rewrite_old
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
     Lake.renameOrThrow(fs, new org.apache.hadoop.fs.Path(dir),
