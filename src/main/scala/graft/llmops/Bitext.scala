@@ -173,7 +173,7 @@ object Bitext {
     // argmax via the native two-long-buffer declarative aggregate: the
     // max(struct) spelling planned a SortAggregate pair (full sort of the
     // 2M-row margin grid, partial AND final — measured ~3 s of the 5 s
-    // wall at sf0.1); ArgMaxLongPair keeps the same (margin DESC, tgt
+    // wall at sf0.1); ArgMaxPair keeps the same (margin DESC, tgt
     // ASC) tie rule inside codegen'd HashAggregate with map-side partials
     g.join(broadcast(fwd), "src_id").join(broadcast(bwd), "tgt_id")
       .select(col("src_id"),

@@ -65,19 +65,13 @@ object LateInteraction {
   def maxsimRaw(s: SparkSession, dir: String): DataFrame = {
     val e = VectorSearch.embeddingsBase(s, dir)
       .select(col("vec_id"), col("label"), col("emb"), col("n_emb"))
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("n_emb").as("p_emb"))
-    val coarse = e.join(broadcast(probes))
+    val probes = VectorSearch.probes(e, 5, col("n_emb").as("p_emb"))
+    val coarse = VectorSearch.topPerProbe(e.join(broadcast(probes))
       .select(col("probe_id"), col("vec_id"), col("label"),
-        round(VectorSearch.dot(col("n_emb"), col("p_emb")), 6).as("sim"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy(col("probe_id"))
-          .orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("crn") <= POOL)
+        round(VectorSearch.dot(col("n_emb"), col("p_emb")), 6).as("sim")), POOL)
       .select(col("probe_id"), col("vec_id"), col("label"))
     val dt = withToks(e).select(col("vec_id"), col("toks").as("dtoks"))
-    val pt = withToks(e).filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("toks").as("ptoks"))
+    val pt = VectorSearch.probes(withToks(e), 5, col("toks").as("ptoks"))
     coarse
       .join(broadcast(pt), "probe_id")
       .join(dt, "vec_id")

@@ -42,8 +42,7 @@ object Mmr {
     */
   def pool(s: SparkSession, dir: String): DataFrame = {
     val e = VectorSearch.embeddingsBase(s, dir).select("vec_id", "n_emb")
-    val probes = e.filter(col("vec_id") < NPROBE)
-      .select(col("vec_id").as("probe_id"), col("n_emb").as("p_emb"))
+    val probes = VectorSearch.probes(e, NPROBE, col("n_emb").as("p_emb"))
     e.join(broadcast(probes))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), col("n_emb"),

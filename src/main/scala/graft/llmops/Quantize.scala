@@ -58,35 +58,15 @@ object Quantize {
     """SELECT vec_id AS probe_id, TRUE AS recall_ok
        FROM embeddings WHERE vec_id < 5 ORDER BY probe_id""") { (s, dir) =>
     val c = codes(s, dir)
-    val probes = c.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"),
-        col("n_emb").as("p_emb"), col("q").as("pq"))
-    val scored = c.crossJoin(broadcast(probes))
-      .select(col("probe_id"), col("vec_id"), col("n_emb"), col("p_emb"),
-        expr("""aggregate(zip_with(q, pq, (a, b) -> cast(a as bigint) * b),
-                0L, (acc, v) -> acc + v)""").as("iscore"),
-        (round(VectorSearch.dot(col("n_emb"), col("p_emb")) * SIM_SCALE))
-          .cast("long").as("fsim"))
-    val topC = graft.functions.TopKByScore.topK(CAND)
-    val top10 = graft.functions.TopKByScore.topK(TOPK)
+    val probes = VectorSearch.probes(c, 5, col("n_emb").as("p_emb"), col("q").as("pq"))
     // SQ path: integer-dot candidates, then exact re-rank of the pool
-    val cand = scored.groupBy("probe_id")
-      .agg(topC(col("iscore"), col("vec_id")).as("top"))
-      .select(col("probe_id"), explode(col("top.id")).as("vec_id"))
-    val sq = cand
-      .join(scored.select("probe_id", "vec_id", "fsim"),
-        Seq("probe_id", "vec_id"))
-      .groupBy("probe_id")
-      .agg(top10(col("fsim"), col("vec_id")).as("t"))
-      .select(col("probe_id"), col("t.id").as("sq_ids"))
-    // ground truth: exact top-10 over the full corpus
-    val exact = scored.groupBy("probe_id")
-      .agg(top10(col("fsim"), col("vec_id")).as("t"))
-      .select(col("probe_id"), col("t.id").as("exact_ids"))
-    sq.join(exact, "probe_id")
-      .select(col("probe_id"),
-        (size(array_intersect(col("sq_ids"), col("exact_ids"))) >= 9)
-          .as("recall_ok"))
+    val scored = c.crossJoin(broadcast(probes))
+      .select(col("probe_id"), col("vec_id"),
+        expr("""aggregate(zip_with(q, pq, (a, b) -> cast(a as bigint) * b),
+                0L, (acc, v) -> acc + v)""").as("cheap"),
+        (round(VectorSearch.dot(col("n_emb"), col("p_emb")) * SIM_SCALE))
+          .cast("long").as("exact"))
+    poolOverlap(scored, CAND).select(col("probe_id"), col("recall_ok"))
       .orderBy("probe_id")
   }
 
@@ -96,6 +76,30 @@ object Quantize {
     * assumed: see the per-variant scaladocs.
     */
   val BQ_POOL = 200
+
+  /** Oracle side of the funnel over an `sc(probe_id, vec_id, asym, sim)`
+    * CTE of 6-decimal scores: pool by asym, re-rank by sim, overlap with
+    * the exact top-TOPK.
+    */
+  private val funnelSql =
+    s"""cand AS (SELECT probe_id, vec_id, sim,
+                  row_number() OVER (PARTITION BY probe_id
+                    ORDER BY asym DESC, vec_id) AS crn
+                FROM sc),
+       rr AS (SELECT probe_id, vec_id,
+                row_number() OVER (PARTITION BY probe_id
+                  ORDER BY sim DESC, vec_id) AS rrn
+              FROM cand WHERE crn <= $BQ_POOL),
+       ex AS (SELECT probe_id, vec_id,
+                row_number() OVER (PARTITION BY probe_id
+                  ORDER BY sim DESC, vec_id) AS ern
+              FROM sc)
+       SELECT r.probe_id, CAST(count(*) AS BIGINT) AS n_overlap,
+              count(*) >= 9 AS recall_ok
+       FROM (SELECT probe_id, vec_id FROM rr WHERE rrn <= $TOPK) r
+       JOIN (SELECT probe_id, vec_id FROM ex WHERE ern <= $TOPK) x
+         USING (probe_id, vec_id)
+       GROUP BY 1 ORDER BY 1"""
 
   /** X — binary (1-bit) quantization search, the extreme end of the
     * quantization ladder (RaBitQ / "binary embeddings"): each dimension
@@ -128,24 +132,7 @@ object Quantize {
                 round(list_dot_product(s.se, p.pe), 6) AS asym,
                 round(list_cosine_similarity(s.ee, p.pe), 6) AS sim
               FROM s CROSS JOIN p),
-       cand AS (SELECT probe_id, vec_id, sim,
-                  row_number() OVER (PARTITION BY probe_id
-                    ORDER BY asym DESC, vec_id) AS crn
-                FROM sc),
-       rr AS (SELECT probe_id, vec_id,
-                row_number() OVER (PARTITION BY probe_id
-                  ORDER BY sim DESC, vec_id) AS rrn
-              FROM cand WHERE crn <= $BQ_POOL),
-       ex AS (SELECT probe_id, vec_id,
-                row_number() OVER (PARTITION BY probe_id
-                  ORDER BY sim DESC, vec_id) AS ern
-              FROM sc)
-       SELECT r.probe_id, CAST(count(*) AS BIGINT) AS n_overlap,
-              count(*) >= 9 AS recall_ok
-       FROM (SELECT probe_id, vec_id FROM rr WHERE rrn <= $TOPK) r
-       JOIN (SELECT probe_id, vec_id FROM ex WHERE ern <= $TOPK) x
-         USING (probe_id, vec_id)
-       GROUP BY 1 ORDER BY 1""") { (s, dir) =>
+       $funnelSql""") { (s, dir) =>
     funnel(s, dir,
       (se, _, pe) => graft.functions.ArrayOps.dot(se, pe))
   }
@@ -177,31 +164,14 @@ object Quantize {
                   AS asym,
                 round(list_cosine_similarity(s.ee, p.pe), 6) AS sim
               FROM s CROSS JOIN p),
-       cand AS (SELECT probe_id, vec_id, sim,
-                  row_number() OVER (PARTITION BY probe_id
-                    ORDER BY asym DESC, vec_id) AS crn
-                FROM sc),
-       rr AS (SELECT probe_id, vec_id,
-                row_number() OVER (PARTITION BY probe_id
-                  ORDER BY sim DESC, vec_id) AS rrn
-              FROM cand WHERE crn <= $BQ_POOL),
-       ex AS (SELECT probe_id, vec_id,
-                row_number() OVER (PARTITION BY probe_id
-                  ORDER BY sim DESC, vec_id) AS ern
-              FROM sc)
-       SELECT r.probe_id, CAST(count(*) AS BIGINT) AS n_overlap,
-              count(*) >= 9 AS recall_ok
-       FROM (SELECT probe_id, vec_id FROM rr WHERE rrn <= $TOPK) r
-       JOIN (SELECT probe_id, vec_id FROM ex WHERE ern <= $TOPK) x
-         USING (probe_id, vec_id)
-       GROUP BY 1 ORDER BY 1""") { (s, dir) =>
+       $funnelSql""") { (s, dir) =>
     funnel(s, dir,
       (_, ee, pe) => VectorSearch.cosine(slice(ee, 1, 32), slice(pe, 1, 32)))
   }
 
-  /** Shared cheap-stage→exact-re-rank funnel: `cheap(signs, emb, probe)`
-    * scores the candidate stage; pool + re-rank + exact arm + overlap
-    * are identical across the quantization variants.
+  /** The 1-bit and prefix funnels: `cheap(signs, emb, probe)` scores the
+    * candidate stage, both scores in 1e-6 fixed point; poolOverlap does
+    * the rest.
     */
   private def funnel(
       s: SparkSession, dir: String,
@@ -212,33 +182,43 @@ object Quantize {
     val e = base.select(col("vec_id"), col("emb"))
       .withColumn("se",
         transform(col("emb"), x => when(x > 0, 1.0).otherwise(-1.0)))
-    val probes = base.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("emb").as("pe"))
+    val probes = VectorSearch.probes(base, 5, col("emb").as("pe"))
     val scored = e.crossJoin(broadcast(probes)).select(
       col("probe_id"), col("vec_id"),
       round(cheap(col("se"), col("emb"), col("pe")) * 1e6).cast("long")
-        .as("asym_fix"),
+        .as("cheap"),
       round(VectorSearch.cosine(col("emb"), col("pe")) * 1e6).cast("long")
-        .as("sim_fix"))
-    val topP = graft.functions.TopKByScore.topK(BQ_POOL)
+        .as("exact"))
+    poolOverlap(scored, BQ_POOL).orderBy("probe_id")
+  }
+
+  /** The funnel every quantized search shares, over a scored (probe_id,
+    * vec_id, cheap, exact) frame of long scores: the top-`pool` by cheap
+    * per probe, re-ranked by exact to the top-TOPK, against the exact
+    * top-TOPK of the whole frame: (probe_id, n_overlap, recall_ok =
+    * n_overlap ≥ 9). Every top-k is a bounded-heap TopKByScore with the
+    * lower vec_id winning ties.
+    */
+  private def poolOverlap(scored: DataFrame, pool: Int): DataFrame = {
+    val topP = graft.functions.TopKByScore.topK(pool)
     val top10 = graft.functions.TopKByScore.topK(TOPK)
     val cand = scored.groupBy("probe_id")
-      .agg(topP(col("asym_fix"), col("vec_id")).as("t"))
+      .agg(topP(col("cheap"), col("vec_id")).as("t"))
       .select(col("probe_id"), explode(col("t.id")).as("vec_id"))
     val rr = cand
-      .join(scored.select("probe_id", "vec_id", "sim_fix"),
+      .join(scored.select("probe_id", "vec_id", "exact"),
         Seq("probe_id", "vec_id"))
-      .groupBy("probe_id").agg(top10(col("sim_fix"), col("vec_id")).as("t"))
+      .groupBy("probe_id").agg(top10(col("exact"), col("vec_id")).as("t"))
       .select(col("probe_id"), col("t.id").as("pool_ids"))
+    // ground truth: exact top-10 over the full corpus
     val exact = scored.groupBy("probe_id")
-      .agg(top10(col("sim_fix"), col("vec_id")).as("t"))
+      .agg(top10(col("exact"), col("vec_id")).as("t"))
       .select(col("probe_id"), col("t.id").as("exact_ids"))
     rr.join(exact, "probe_id")
       .select(col("probe_id"),
         size(array_intersect(col("pool_ids"), col("exact_ids")))
           .cast("long").as("n_overlap"))
       .withColumn("recall_ok", col("n_overlap") >= 9)
-      .orderBy("probe_id")
   }
 
   val all: Seq[Q] = Seq(xSq8Search, xBinaryQuantize, xMatryoshkaRecall)

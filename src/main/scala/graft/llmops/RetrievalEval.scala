@@ -63,16 +63,12 @@ object RetrievalEval {
        ORDER BY probe_id""") { (s, dir) =>
     val e = VectorSearch.embeddingsBase(s, dir)
       .select("vec_id", "label", "n_emb")
-    val probes = e.filter(col("vec_id") < NPROBE)
-      .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-        col("n_emb").as("p_emb"))
-    val ranked = e.join(broadcast(probes))
+    val probes = VectorSearch.probes(e, NPROBE, col("label").as("p_label"),
+      col("n_emb").as("p_emb"))
+    val ranked = VectorSearch.topPerProbe(e.join(broadcast(probes))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("p_label"), col("vec_id"), col("label"),
-        round(VectorSearch.dot(col("n_emb"), col("p_emb")), 6).as("sim"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rn") <= TOPK)
+        round(VectorSearch.dot(col("n_emb"), col("p_emb")), 6).as("sim")), TOPK)
     val rel = e.join(broadcast(probes), col("label") === col("p_label"))
       .filter(col("vec_id") =!= col("probe_id"))
       .groupBy(col("probe_id")).agg(count(lit(1)).as("n_rel"))
@@ -80,7 +76,7 @@ object RetrievalEval {
       .agg(
         sum(when(col("label") === col("p_label"), 1L).otherwise(0L))
           .as("hits_at_k"),
-        coalesce(min(when(col("label") === col("p_label"), col("rn"))), lit(0))
+        coalesce(min(when(col("label") === col("p_label"), col("rank"))), lit(0))
           .cast("long").as("first_rel_rank"))
     m.join(rel, "probe_id")
       .select(col("probe_id"), col("n_rel"), col("hits_at_k"),
@@ -134,9 +130,8 @@ object RetrievalEval {
        FROM m ORDER BY probe_id""") { (s, dir) =>
     val e = VectorSearch.embeddingsBase(s, dir)
       .select("vec_id", "label", "n_emb")
-    val probes = e.filter(col("vec_id") < NPROBE)
-      .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-        col("n_emb").as("p_emb"))
+    val probes = VectorSearch.probes(e, NPROBE, col("label").as("p_label"),
+      col("n_emb").as("p_emb"))
     val ranked = e.join(broadcast(probes))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"),
@@ -207,17 +202,13 @@ object RetrievalEval {
        ORDER BY probe_id""") { (s, dir) =>
     val e = VectorSearch.embeddingsBase(s, dir)
       .select("vec_id", "label", "n_emb")
-    val probes = e.filter(col("vec_id") < NPROBE)
-      .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-        col("n_emb").as("p_emb"))
-    val w = round(lit(1000000.0) / log2(col("rn") + 1)).cast("long")
-    val dcg = e.join(broadcast(probes))
+    val probes = VectorSearch.probes(e, NPROBE, col("label").as("p_label"),
+      col("n_emb").as("p_emb"))
+    val w = round(lit(1000000.0) / log2(col("rank") + 1)).cast("long")
+    val dcg = VectorSearch.topPerProbe(e.join(broadcast(probes))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("p_label"), col("vec_id"), col("label"),
-        round(VectorSearch.dot(col("n_emb"), col("p_emb")), 6).as("sim"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rn") <= TOPK)
+        round(VectorSearch.dot(col("n_emb"), col("p_emb")), 6).as("sim")), TOPK)
       .groupBy(col("probe_id"))
       .agg(sum(when(col("label") === col("p_label"), w).otherwise(0L))
         .as("dcg_fix"))

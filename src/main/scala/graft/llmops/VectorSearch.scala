@@ -58,6 +58,36 @@ object VectorSearch {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
+  // ---- The stages every search in llmops evaluates through: one
+  // spelling each, so the probe set, the tie rule and the list pick
+  // cannot drift between a query and the exact twin it is graded by.
+
+  /** The probe set: the vectors of `e` with vec_id < n, keyed probe_id,
+    * carrying `cols`.
+    */
+  private[llmops] def probes(e: DataFrame, n: Int, cols: Column*): DataFrame =
+    e.filter(col("vec_id") < n).select(col("vec_id").as("probe_id") +: cols: _*)
+
+  /** Per-probe top-k of a scored (probe_id, vec_id, sim) frame: `rank`
+    * by sim DESC, ties to the lower vec_id (SQL's `row_number() OVER
+    * (PARTITION BY probe_id ORDER BY sim DESC, vec_id)`), rank ≤ k kept.
+    */
+  private[llmops] def topPerProbe(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id"))))
+      .filter(col("rank") <= k)
+
+  /** The `nprobe` coarse lists each probe searches, from its coarse LUT
+    * (probe_id, ccid, csim): best csim first, ties to the lower ccid.
+    */
+  private def topLists(coarseLut: DataFrame, nprobe: Int): DataFrame =
+    coarseLut
+      .withColumn("crank", row_number().over(
+        Window.partitionBy(col("probe_id")).orderBy(col("csim").desc, col("ccid"))))
+      .filter(col("crank") <= nprobe)
+      .drop("crank")
+
   /** Q34 — exact top-10 cosine neighbors for probe vectors (vec_id < 5).
     * Similarity is used only for ranking (with vec_id tiebreak), never
     * output. The two engines compute cosine with structurally different
@@ -67,30 +97,31 @@ object VectorSearch {
     * a true value lands within ~1 ulp of a rounding boundary (residual
     * risk, not zero — the x_bm25 caveat).
     */
-  val q34 = Q(
-    "q34_vector_topk",
-    """SELECT probe_id, rn AS rank, vec_id, label FROM (
-         SELECT p.vec_id AS probe_id, e.vec_id AS vec_id, e.label,
+  /** Oracle side of the exact probe ranking: every (probe, candidate)
+    * pair over the 5 probes, `rn` by the 6-decimal cosine DESC with the
+    * lower vec_id first, the pairs restricted by `where`.
+    */
+  private def exactRankSql(where: String): String =
+    s"""SELECT p.vec_id AS probe_id, e.vec_id AS vec_id, e.label,
                 row_number() OVER (
                   PARTITION BY p.vec_id
                   ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
                                                         CAST(p.embedding AS DOUBLE[])), 6) DESC,
                            e.vec_id) AS rn
          FROM embeddings e
-         CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 5) p)
+         CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 5) p$where"""
+
+  val q34 = Q(
+    "q34_vector_topk",
+    s"""SELECT probe_id, rn AS rank, vec_id, label FROM (
+         ${exactRankSql("")})
        WHERE rn <= 10 ORDER BY probe_id, rank""") { (s, dir) =>
     // normalize once per vector => each candidate pair costs ONE dot
     val e = embeddingsBase(s, dir).select("vec_id", "label", "n_emb")
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("n_emb").as("p_emb"))
-    val scored = e.crossJoin(broadcast(probes))
+    val scored = e.crossJoin(broadcast(probes(e, 5, col("n_emb").as("p_emb"))))
       .select(col("probe_id"), col("vec_id"), col("label"),
         round(dot(col("n_emb"), col("p_emb")), 6).as("sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
+    topPerProbe(scored, 10)
       .select(col("probe_id"), col("rank"), col("vec_id"), col("label"))
       .orderBy("probe_id", "rank")
   }
@@ -174,7 +205,7 @@ object VectorSearch {
         dot(col("n_emb"), col("m_emb")).as("sim"),
         (-col("m_id")).as("neg_id"))
     // phase 1: own-list seed (map-side argmax reduction per vector —
-    // ArgMaxDoubleLongPair keeps it in codegen'd HashAggregate; the
+    // ArgMaxPair keeps it in codegen'd HashAggregate; the
     // max(struct) spelling silently planned SortAggregate)
     val argmax = graft.functions.ArgMax.argmaxDoubleLong _
     val seed = best(own.join(members, Seq("cid")))
@@ -468,35 +499,35 @@ object VectorSearch {
       .drop("cent", "csim", "crank")
 
     val lists = topClusters(1) // every vector lives in exactly one list
-    val probes = topClusters(nprobe).filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("n_emb").as("p_emb"), col("cid"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val approx = lists.join(broadcast(probes), Seq("cid"))
+    val probeLists = probes(topClusters(nprobe), 5, col("n_emb").as("p_emb"), col("cid"))
+    val approx = topPerProbe(lists.join(broadcast(probeLists), Seq("cid"))
       .select(col("probe_id"), col("vec_id"),
-        dot(col("n_emb"), col("p_emb")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
+        dot(col("n_emb"), col("p_emb")).as("sim")), 10)
       .select(col("probe_id"), col("vec_id"))
-    // exact twin over the same cached vectors: broadcast probes × one scan
-    val exact = e.crossJoin(broadcast(
-        e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("probe_id"), col("n_emb").as("p_emb"))))
+    recallAgainstExact(e, approx, ANN_RECALL_BAR)
+  }
+
+  /** Per-probe recall@10 of an approximate top-10 (probe_id, vec_id)
+    * against the exact twin over `e` (vec_id, n_emb): (probe_id, recall,
+    * recall_ok = recall ≥ bar). The twin is the broadcast probe set × one
+    * scan of `e`.
+    */
+  private def recallAgainstExact(
+      e: DataFrame, approx: DataFrame, bar: Double): DataFrame = {
+    val exact = topPerProbe(e.crossJoin(broadcast(probes(e, 5, col("n_emb").as("p_emb"))))
       .select(col("probe_id"), col("vec_id"),
-        dot(col("n_emb"), col("p_emb")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
+        dot(col("n_emb"), col("p_emb")).as("sim")), 10)
       .select(col("probe_id"), col("vec_id"))
     val hits = approx.join(exact, Seq("probe_id", "vec_id"), "inner")
       .groupBy(col("probe_id"))
       .agg((count(lit(1)) / 10.0).as("recall"))
     // left join from the probe set so a zero-recall probe still reports
     // (as false) instead of vanishing from the output
-    e.filter(col("vec_id") < 5).select(col("vec_id").as("probe_id"))
+    probes(e, 5)
       .join(hits, Seq("probe_id"), "left")
       .select(col("probe_id"),
         coalesce(col("recall"), lit(0.0)).as("recall"),
-        (coalesce(col("recall"), lit(0.0)) >= ANN_RECALL_BAR).as("recall_ok"))
+        (coalesce(col("recall"), lit(0.0)) >= bar).as("recall_ok"))
       .orderBy("probe_id")
   }
 
@@ -626,16 +657,8 @@ object VectorSearch {
     */
   val xKnnLabel = Q(
     "x_knn_label",
-    """WITH nb AS (
-         SELECT p.vec_id AS probe_id, e.label, e.vec_id,
-                row_number() OVER (
-                  PARTITION BY p.vec_id
-                  ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                                        CAST(p.embedding AS DOUBLE[])), 6) DESC,
-                           e.vec_id) AS rn
-         FROM embeddings e
-         CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 5) p
-         WHERE e.vec_id <> p.vec_id),
+    s"""WITH nb AS (
+         ${exactRankSql("\n         WHERE e.vec_id <> p.vec_id")}),
        v AS (SELECT probe_id, label, count(*) AS c FROM nb
              WHERE rn <= 10 GROUP BY probe_id, label)
        SELECT probe_id, label AS pred_label, c AS n_votes FROM (
@@ -645,16 +668,10 @@ object VectorSearch {
          FROM v)
        WHERE rr = 1 ORDER BY probe_id""") { (s, dir) =>
     val e = embeddingsBase(s, dir).select("vec_id", "label", "n_emb")
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("n_emb").as("p_emb"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val votes = e.crossJoin(broadcast(probes))
+    val votes = topPerProbe(e.crossJoin(broadcast(probes(e, 5, col("n_emb").as("p_emb"))))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), col("label"),
-        round(dot(col("n_emb"), col("p_emb")), 6).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 10)
+        round(dot(col("n_emb"), col("p_emb")), 6).as("sim")), 10)
       .groupBy(col("probe_id"), col("label"))
       .agg(count(lit(1)).as("c"))
     votes
@@ -868,36 +885,20 @@ object VectorSearch {
     */
   private def rerankAndRecall(
       e: DataFrame, short: DataFrame, bar: Double): DataFrame = {
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val approx = short
+    val approx = topPerProbe(short
       .join(e, Seq("vec_id"))
-      .join(broadcast(e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("n_emb").as("q_emb"))),
-        Seq("probe_id"))
+      .join(broadcast(probes(e, 5, col("n_emb").as("q_emb"))), Seq("probe_id"))
       .select(col("probe_id"), col("vec_id"),
-        dot(col("n_emb"), col("q_emb")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
+        dot(col("n_emb"), col("q_emb")).as("sim")), 10)
       .select(col("probe_id"), col("vec_id"))
-    val exact = e.crossJoin(broadcast(
-        e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("probe_id"), col("n_emb").as("p_emb"))))
-      .select(col("probe_id"), col("vec_id"),
-        dot(col("n_emb"), col("p_emb")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
-      .select(col("probe_id"), col("vec_id"))
-    val hits = approx.join(exact, Seq("probe_id", "vec_id"), "inner")
-      .groupBy(col("probe_id"))
-      .agg((count(lit(1)) / 10.0).as("recall"))
-    e.filter(col("vec_id") < 5).select(col("vec_id").as("probe_id"))
-      .join(hits, Seq("probe_id"), "left")
-      .select(col("probe_id"),
-        coalesce(col("recall"), lit(0.0)).as("recall"),
-        (coalesce(col("recall"), lit(0.0)) >= bar).as("recall_ok"))
-      .orderBy("probe_id")
+    recallAgainstExact(e, approx, bar)
   }
+
+  /** The probe set as the vector frame (vec_id, n_emb) the LUT builders
+    * below take.
+    */
+  private def probeVectors(e: DataFrame): DataFrame =
+    probes(e, 5, col("vec_id"), col("n_emb"))
 
   /** Probe-side residual-codebook LUT: (probe_id, block, cid, psim) —
     * probes × PQ_BLOCKS × PQ_K rows behind a broadcast.
@@ -932,21 +933,17 @@ object VectorSearch {
     // probe-side tables, both broadcast: the residual-codebook LUT
     // (probes x PQ_BLOCKS x PQ_K) and the coarse term dot(p, ccent)
     // (probes x ANN_K)
-    val probeFrame = e.filter(col("vec_id") < 5)
+    val probeFrame = probeVectors(e)
     val lut = pqProbeLut(probeFrame, cb)
     val coarseLut = pqCoarseLut(s, dir, probeFrame)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
     // stage 1: ADC shortlist off the compressed codes (no raw vectors):
     // sim ~ dot(p, ccent[v]) + sum_b dot(p_b, residCodebook[b, code_b])
-    val short = codes.join(broadcast(lut), Seq("block", "cid"))
+    val short = topPerProbe(codes.join(broadcast(lut), Seq("block", "cid"))
       .groupBy(col("probe_id"), col("vec_id"), col("ccid"))
       .agg(sum(col("psim")).as("rsim"))
       .join(broadcast(coarseLut), Seq("probe_id", "ccid"))
       .select(col("probe_id"), col("vec_id"),
-        (col("rsim") + col("csim")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= PQ_SHORTLIST)
+        (col("rsim") + col("csim")).as("sim")), PQ_SHORTLIST)
       .select(col("probe_id"), col("vec_id"))
     rerankAndRecall(e, short, PQ_RECALL_BAR)
   }
@@ -999,36 +996,31 @@ object VectorSearch {
     */
   def ivfpqScannedCodes(
       s: SparkSession, dir: String, nprobe: Int): DataFrame = {
-    val e = embeddingsBase(s, dir).select("vec_id", "n_emb")
     val (_, codes) = pqIndex(s, dir)
-    val probed = pqCoarseLut(s, dir, e.filter(col("vec_id") < 5))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("probe_id"))
-          .orderBy(col("csim").desc, col("ccid"))))
-      .filter(col("crank") <= nprobe)
-      .drop("crank")
     // the equi-join against the broadcast probed-list table IS the
     // prune: a code row is read once per probe that probes its list,
     // never for the (nlists - nprobe) unprobed lists
-    codes.join(broadcast(probed), Seq("ccid"))
+    codes.join(broadcast(probedLists(s, dir, nprobe)), Seq("ccid"))
   }
+
+  /** Stage 1 of the IVF-PQ searches: ADC-score the scanned codes of the
+    * probed lists (probe_id, vec_id, block, cid, csim) against the probe
+    * LUT and keep each probe's top `k` (probe_id, vec_id). csim rides
+    * the probed-list table (it was computed to RANK the lists), so the
+    * coarse term costs no second join; max() collapses the constant.
+    */
+  private def adcShortlist(scanned: DataFrame, lut: DataFrame, k: Int): DataFrame =
+    topPerProbe(scanned
+      .join(broadcast(lut), Seq("probe_id", "block", "cid"))
+      .groupBy(col("probe_id"), col("vec_id"))
+      .agg((sum(col("psim")) + max(col("csim"))).as("sim")), k)
+      .select(col("probe_id"), col("vec_id"))
 
   def ivfpqRecall(s: SparkSession, dir: String, nprobe: Int): DataFrame = {
     val e = embeddingsBase(s, dir).select("vec_id", "n_emb")
-    val (cb, codes) = pqIndex(s, dir)
-    val lut = pqProbeLut(e.filter(col("vec_id") < 5), cb)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    // stage 1: ADC over the probed lists' codes ONLY. csim rides the
-    // probed-list table (it was computed to RANK the lists), so the
-    // coarse term costs no second join; max() collapses the constant.
-    val short = ivfpqScannedCodes(s, dir, nprobe)
-      .join(broadcast(lut), Seq("probe_id", "block", "cid"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg((sum(col("psim")) + max(col("csim"))).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= PQ_SHORTLIST)
-      .select(col("probe_id"), col("vec_id"))
+    val (cb, _) = pqIndex(s, dir)
+    val short = adcShortlist(ivfpqScannedCodes(s, dir, nprobe),
+      pqProbeLut(probeVectors(e), cb), PQ_SHORTLIST)
     rerankAndRecall(e, short, IVFPQ_RECALL_BAR)
   }
 
@@ -1192,23 +1184,10 @@ object VectorSearch {
       .unionByName(s.read.parquet(s"$path/codes_incr"))
     val eAll = embeddingsBase(s, dir).select(col("vec_id"), col("n_emb"))
       .unionByName(batch)
-    val probeFrame = eAll.filter(col("vec_id") < 5)
-    val lut = pqProbeLut(probeFrame, cbL)
-    val probed = pqCoarseLutFrom(cents, probeFrame)
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("probe_id"))
-          .orderBy(col("csim").desc, col("ccid"))))
-      .filter(col("crank") <= IVFPQ_INCR_NPROBE)
-      .drop("crank")
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val short = codesAll.join(broadcast(probed), Seq("ccid"))
-      .join(broadcast(lut), Seq("probe_id", "block", "cid"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg((sum(col("psim")) + max(col("csim"))).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 2 * PQ_SHORTLIST)
-      .select(col("probe_id"), col("vec_id"))
+    val probeFrame = probeVectors(eAll)
+    val probed = topLists(pqCoarseLutFrom(cents, probeFrame), IVFPQ_INCR_NPROBE)
+    val short = adcShortlist(codesAll.join(broadcast(probed), Seq("ccid")),
+      pqProbeLut(probeFrame, cbL), 2 * PQ_SHORTLIST)
     rerankAndRecall(eAll, short, IVFPQ_INCR_RECALL_BAR)
   }
 
@@ -1318,11 +1297,7 @@ object VectorSearch {
     val (cents, _, codesL) = loadPqIndex(s, path)
     val e = embeddingsBase(s, dir).select(col("vec_id"), col("n_emb"))
     val batch = incrementalScreenBatch(s, dir)
-    val probed = pqCoarseLutFrom(cents, batch)
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("probe_id"))
-          .orderBy(col("csim").desc, col("ccid"))))
-      .filter(col("crank") <= SEMDEDUP_NPROBE)
+    val probed = topLists(pqCoarseLutFrom(cents, batch), SEMDEDUP_NPROBE)
       .select(col("probe_id"), col("ccid"))
     // candidate corpus vectors = members of the probed lists (ids from
     // the STORED code table; one row per vector at block 0)
@@ -1350,30 +1325,17 @@ object VectorSearch {
     */
   val xHardNegatives = Q(
     "x_hard_negatives",
-    """SELECT probe_id, rn AS rank, vec_id, label FROM (
-         SELECT p.vec_id AS probe_id, e.vec_id AS vec_id, e.label,
-                row_number() OVER (
-                  PARTITION BY p.vec_id
-                  ORDER BY round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                                        CAST(p.embedding AS DOUBLE[])), 6) DESC,
-                           e.vec_id) AS rn
-         FROM embeddings e
-         CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 5) p
-         WHERE e.label <> p.label)
+    s"""SELECT probe_id, rn AS rank, vec_id, label FROM (
+         ${exactRankSql("\n         WHERE e.label <> p.label")})
        WHERE rn <= 5 ORDER BY probe_id, rank""") { (s, dir) =>
     val e = embeddingsBase(s, dir).select("vec_id", "label", "n_emb")
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-        col("n_emb").as("p_emb"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    e.crossJoin(broadcast(probes))
+    val probeSet = probes(e, 5, col("label").as("p_label"), col("n_emb").as("p_emb"))
+    topPerProbe(e.crossJoin(broadcast(probeSet))
       .filter(col("label") =!= col("p_label"))
       .select(col("probe_id"), col("vec_id"), col("label"),
-        round(dot(col("n_emb"), col("p_emb")), 6).as("sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("probe_id"), col("rank"), col("vec_id"), col("label"))
+        round(dot(col("n_emb"), col("p_emb")), 6).as("sim")), 5)
+      .select(col("probe_id"), col("rank").cast("long").as("rank"), col("vec_id"),
+        col("label"))
       .orderBy("probe_id", "rank")
   }
 
@@ -1398,9 +1360,7 @@ object VectorSearch {
     * "my language" shape — per-probe predicate, 10% selective here).
     */
   private def probeConstraints(e: DataFrame): DataFrame =
-    e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("label").as("p_label"),
-        col("n_emb").as("q_emb"))
+    probes(e, 5, col("label").as("p_label"), col("n_emb").as("q_emb"))
 
   /** Exact filtered twin + per-probe hit accounting, the rerankAndRecall
     * contract under a per-probe predicate: ground truth = exact cosine
@@ -1411,30 +1371,24 @@ object VectorSearch {
     */
   private def filteredRecallStats(e: DataFrame, short: DataFrame,
       strategy: String): DataFrame = {
-    val probes = probeConstraints(e)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
-    val approx = short
+    val probeSet = probeConstraints(e)
+    val approx = topPerProbe(short
       .join(e, Seq("vec_id"))
-      .join(broadcast(probes), Seq("probe_id"))
+      .join(broadcast(probeSet), Seq("probe_id"))
       .filter(col("label") === col("p_label")) // no-op for the pre-filter arm
       .select(col("probe_id"), col("vec_id"),
-        dot(col("n_emb"), col("q_emb")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
+        dot(col("n_emb"), col("q_emb")).as("sim")), 10)
       .select(col("probe_id"), col("vec_id"))
-    val exact = e
-      .join(broadcast(probes), e("label") === probes("p_label"))
+    val exact = topPerProbe(e
+      .join(broadcast(probeSet), e("label") === probeSet("p_label"))
       .select(col("probe_id"), col("vec_id"),
-        dot(col("n_emb"), col("q_emb")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 10)
+        dot(col("n_emb"), col("q_emb")).as("sim")), 10)
       .select(col("probe_id"), col("vec_id"))
     val kTrue = exact.groupBy(col("probe_id"))
       .agg(count(lit(1)).as("k_true"))
     val hits = approx.join(exact, Seq("probe_id", "vec_id"))
       .groupBy(col("probe_id")).agg(count(lit(1)).as("hits"))
-    probes.select(col("probe_id"))
+    probeSet.select(col("probe_id"))
       .join(kTrue, Seq("probe_id"), "left")
       .join(hits, Seq("probe_id"), "left")
       .select(col("probe_id"), lit(strategy).as("strategy"),
@@ -1447,13 +1401,7 @@ object VectorSearch {
     */
   private[llmops] def probedLists(
       s: SparkSession, dir: String, nprobe: Int): DataFrame =
-    pqCoarseLut(s, dir,
-      embeddingsBase(s, dir).select("vec_id", "n_emb").filter(col("vec_id") < 5))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("probe_id"))
-          .orderBy(col("csim").desc, col("ccid"))))
-      .filter(col("crank") <= nprobe)
-      .drop("crank")
+    topLists(pqCoarseLut(s, dir, probeVectors(embeddingsBase(s, dir))), nprobe)
 
   /** Pre-filter arm's scanned code stream: label-matching codes of the
     * probed lists ONLY — the count of these rows vs the unfiltered
@@ -1479,20 +1427,10 @@ object VectorSearch {
     */
   private def fannShortlist(s: SparkSession, dir: String,
       nprobe: Int, shortK: Int, prefiltered: Boolean): DataFrame = {
-    val e = embeddingsBase(s, dir).select("vec_id", "n_emb")
     val (cb, _) = pqIndex(s, dir)
-    val lut = pqProbeLut(e.filter(col("vec_id") < 5), cb)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id"))
     val scanned = if (prefiltered) filteredScannedCodes(s, dir, nprobe)
       else ivfpqScannedCodes(s, dir, nprobe)
-    scanned
-      .join(broadcast(lut), Seq("probe_id", "block", "cid"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg((sum(col("psim")) + max(col("csim"))).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= shortK)
-      .select(col("probe_id"), col("vec_id"))
+    adcShortlist(scanned, pqProbeLut(probeVectors(embeddingsBase(s, dir)), cb), shortK)
   }
 
   /** The filtered search's probe budget — the first finding this

@@ -178,8 +178,7 @@ object GoldMaintenance {
       r.getTimestamp(0).toLocalDateTime.toLocalDate.toString)
     val presentDays = recomputed.select(col("day")).distinct().collect()
       .map(_.getDate(0).toString).toSet
-    val fs = new org.apache.hadoop.fs.Path(goldPath)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = graft.sources.Lake.fsOf(s, goldPath)
     val vanished = touchedDays.filterNot(presentDays)
     vanished.foreach { d =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$goldPath/day=$d"), true); ()

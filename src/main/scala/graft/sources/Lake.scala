@@ -1,5 +1,6 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,7 +40,7 @@ object Lake {
     // semantics hold across JVMs
     val warehouse = new HPath(
       spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, warehouse.toString)
     if (fs.exists(warehouse)) fs.delete(warehouse, true)
     df.write.mode("overwrite")
       .bucketBy(buckets, key)
@@ -175,7 +176,10 @@ object Lake {
     replace(merged, path)
   }
 
-  private[sources] def fsOf(spark: SparkSession, path: String): FileSystem =
+  /** The session's FileSystem for `path`: the one lookup every caller in
+    * the program goes through (the Ingester alone uses its own conf).
+    */
+  private[graft] def fsOf(spark: SparkSession, path: String): FileSystem =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Roll back a half-completed swap left by a crash between the two
@@ -575,12 +579,11 @@ object Lake {
   private[graft] def manifestEntries(fs: FileSystem,
       mPath: HPath,
       clusterCol: String): Seq[(String, Long, Long)] = {
-    val re = s"\"${java.util.regex.Pattern.quote(clusterCol)}\":\\[(-?\\d+),(-?\\d+)\\]".r
-    manifestLines(fs, mPath).flatMap { line =>
+    manifest(fs, mPath).flatMap { line =>
       for {
         f <- fileOf(line)
-        m <- re.findFirstMatchIn(line)
-      } yield (f, m.group(1).toLong, m.group(2).toLong)
+        (lo, hi) <- bandOf(line, clusterCol)
+      } yield (f, lo, hi)
     }
   }
 
@@ -601,40 +604,46 @@ object Lake {
       .agg(aggs.head, aggs.tail: _*)
       .toLocalIterator()
     val mPath = new HPath(path, manifestName)
-    val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(mPath, true)
+    val out = fsOf(spark, path).create(mPath, true)
     val w = new java.io.BufferedWriter(
       new java.io.OutputStreamWriter(out, "UTF-8"))
     try {
       while (stats.hasNext) {
         val r = stats.next()
-        val f = r.getString(0).replace("\\", "\\\\").replace("\"", "\\\"")
-        val bands = cols.zipWithIndex.map { case (c, i) =>
+        val line = json.createObjectNode().put("file", r.getString(0))
+        cols.zipWithIndex.foreach { case (c, i) =>
           // a file whose cluster column is all null has no band: publish
           // the full range so no predicate ever prunes it
           val (lo, hi) =
             if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i))
               (Long.MinValue, Long.MaxValue)
             else (r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))
-          s""""$c":[$lo,$hi]"""
+          line.putArray(c).add(lo).add(hi)
         }
-        w.write(s"""{"file":"$f",${bands.mkString(",")}}""")
+        w.write(json.writeValueAsString(line))
         w.write("\n")
       }
     } finally w.close()
   }
 
-  private def manifestLines(fs: FileSystem,
-      mPath: HPath): Seq[String] = {
+  /** The manifest's JSON codec: one object per line, written and read
+    * by Jackson (it ships in the Spark jars).
+    */
+  private val json = new ObjectMapper()
+
+  private def manifest(fs: FileSystem, mPath: HPath): Seq[JsonNode] = {
     val in = fs.open(mPath)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
-    text.linesIterator.filter(_.nonEmpty).toSeq
+    text.linesIterator.filter(_.nonEmpty).map(l => json.readTree(l)).toSeq
   }
 
-  private def fileOf(line: String): Option[String] =
-    "\"file\":\"(.*?)\"".r.findFirstMatchIn(line).map(m =>
-      m.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
+  private def fileOf(line: JsonNode): Option[String] =
+    Option(line.get("file")).map(_.asText)
+
+  /** A manifest line's [lo, hi] band for column `c`, if it carries one. */
+  private def bandOf(line: JsonNode, c: String): Option[(Long, Long)] =
+    Option(line.get(c)).map(b => (b.get(0).asLong, b.get(1).asLong))
 
   /** File-skipping only: the dataset restricted to files whose stats can
     * satisfy ALL the band predicates (no residual row filter — callers
@@ -644,7 +653,7 @@ object Lake {
   private def prunedBase(spark: SparkSession, path: String,
       manifestName: String, bands: Seq[(String, (Long, Long))]): DataFrame = {
     val mPath = new HPath(path, manifestName)
-    val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, path)
     if (!fs.exists(mPath)) spark.read.parquet(path)
     else {
       val keep = prunedFiles(fs, mPath, bands)
@@ -672,11 +681,9 @@ object Lake {
   private[graft] def prunedFiles(fs: FileSystem,
       mPath: HPath,
       bands: Seq[(String, (Long, Long))]): Seq[String] =
-    manifestLines(fs, mPath).flatMap { line =>
+    manifest(fs, mPath).flatMap { line =>
       val ok = bands.forall { case (c, (lo, hi)) =>
-        s"\"${java.util.regex.Pattern.quote(c)}\":\\[(-?\\d+),(-?\\d+)\\]".r
-          .findFirstMatchIn(line)
-          .forall(m => m.group(2).toLong >= lo && m.group(1).toLong <= hi)
+        bandOf(line, c).forall { case (flo, fhi) => fhi >= lo && flo <= hi }
       }
       if (ok) fileOf(line) else None
     }

@@ -61,7 +61,7 @@ object PartitionEvolution {
   private def partValues(s: SparkSession, genRoot: String,
       key: String): Seq[String] = {
     val p = new HPath(genRoot)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = Lake.fsOf(s, genRoot)
     fs.listStatus(p).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$key="))
       .map(_.getPath.getName.stripPrefix(s"$key="))

@@ -140,6 +140,22 @@ class ScratchSpec extends AnyFunSuite {
       Set(llmops + "MinHashLSH.scala"))
   }
 
+  // a search stage has one spelling, in VectorSearch: the probe set,
+  // the per-probe (sim DESC, vec_id) ranker and the coarse-list pick, so
+  // a query and the exact twin it is graded by cannot drift apart
+  // (LabelProp's `< cut` is a train/test split, not a probe set)
+  test("llmops spells the probe set, the per-probe ranker and the list pick once") {
+    val llmops = "src/main/scala/graft/llmops/"
+    def spelledIn(p: String) = where(p).filter(_._1.startsWith(llmops))
+    assert(spelledIn("col(\"vec_id\") " + "< ") ==
+      Map(llmops + "VectorSearch.scala" -> 1, llmops + "LabelProp.scala" -> 1))
+    for (p <- Seq("col(\"vec_id\") < " + "5", "col(\"vec_id\") < " + "NPROBE"))
+      assert(spelledIn(p).isEmpty, p)
+    for (p <- Seq("orderBy(col(\"sim\").desc, " + "col(\"vec_id\"))",
+        "orderBy(col(\"csim\").desc, " + "col(\"ccid\"))"))
+      assert(spelledIn(p) == Map(llmops + "VectorSearch.scala" -> 1), p)
+  }
+
   // an identity hash recurs once its session is collected, so a memo
   // keyed by one can serve a dead session's state to a new session;
   // per-session state goes through core.SessionMemo, keyed by the
@@ -164,6 +180,15 @@ class ScratchSpec extends AnyFunSuite {
   // lives longer than one call goes through core.SessionMemo
   test("only core holds a concurrent map") {
     assert(inMain("Trie" + "Map") == Set("src/main/scala/graft/core/Core.scala"))
+  }
+
+  // a FileSystem looked up by hand can miss the session's conf; the
+  // Ingester alone runs on its own Hadoop conf
+  test("only Lake.fsOf and the Ingester look up a FileSystem") {
+    assert(inMain("getFile" + "System(") == Set(
+      "src/main/scala/graft/sources/Lake.scala",
+      "src/main/scala/graft/pipeline/Ingester.scala"))
+    assert(where("getFile" + "System(")("src/main/scala/graft/sources/Lake.scala") == 1)
   }
 
   // a hand-rolled walk has to copy Spark's hidden-path rule and its

@@ -36,6 +36,18 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(math.abs(df(3L) + 1.0) < 1e-12)
   }
 
+  test("topPerProbe keeps k per probe, the lower vec_id winning a sim tie " +
+      "at the k boundary; a probe with fewer than k rows keeps them all") {
+    val scored = Seq(
+      (1L, 7L, 0.8), (1L, 5L, 0.9), (1L, 3L, 0.8), (1L, 2L, 0.5),
+      (2L, 9L, 0.1)
+    ).toDF("probe_id", "vec_id", "sim")
+    val got = VectorSearch.topPerProbe(scored, 2)
+      .select(col("probe_id"), col("rank"), col("vec_id"))
+      .as[(Long, Int, Long)].collect().toSet
+    assert(got == Set((1L, 1, 5L), (1L, 2, 3L), (2L, 1, 9L)))
+  }
+
   test("semantic dedup survivors equal ids minus higher-id cosine partners (brute force)") {
     val sf = "/root/testdata/sf0.001"
     val got = VectorSearch.xSemDedup.build(spark, sf).as[Long].collect().toSet
